@@ -360,12 +360,11 @@ def _full_frame(cat, d: MvDef, version: int, dim_versions: "dict | None" = None)
 
 
 def _writer(cat, name: str, d: MvDef) -> LakeWriter:
-    # r14: small-table fast path ON (it was forced off). An MV under the
-    # 32 MB gate merges as ONE rewrite-all window job — tombstones ride
-    # the same window (a winning tombstone deletes its key), identical
-    # row semantics to the pruning path's anti-join, at a third of the
-    # jobs. MVs past the gate take the pruning path automatically, so
-    # the scale story is unchanged.
+    # An MV small enough for the driver-side Arrow merge refreshes in
+    # ONE Spark job — dead groups are tombstones there too (a winning
+    # tombstone deletes its key), identical row semantics to the pruning
+    # merge's anti-join. Larger MVs take the pruning merge
+    # automatically, so the scale story is unchanged.
     return LakeWriter(cat.table(name), pk=list(d.groups))
 
 

@@ -32,9 +32,9 @@ reference only the target alias.
 Execution is Spark-first, not row-at-a-time: the clauses compile to ONE
 projection over ``source LEFT JOIN target`` (matched-ness from a
 sentinel), and the resulting frame goes through the existing
-``LakeWriter.merge`` — so the adaptive merge planning (small-table /
-window / broadcast+Bloom file pruning, the Arrow fast path, group
-commit) is reused verbatim, ``WHEN MATCHED … DELETE`` rides the
+``LakeWriter.merge`` — so the merge executors (the driver-side Arrow
+merge for small tables, the Spark pruning merge with window /
+broadcast+Bloom file pruning, group commit) are reused verbatim, ``WHEN MATCHED … DELETE`` rides the
 tombstone channel, and ``_inserted_at`` keeps the stamp-only-on-insert
 invariant. When the statement is the reference's exact shape —
 ``UPDATE SET *`` + ``INSERT *``, no extra conditions — the join is

@@ -2480,23 +2480,19 @@ class LakeTable:
                 pf_key = (
                     "spark.sql.adaptive.coalescePartitions.parallelismFirst"
                 )
-                sized = os.environ.get("DUCKLAKE_WRITE_SIZED_FILES", "1") != "0"
                 conf = self.spark.conf
-                old_pf = None
-                if sized:
-                    try:
-                        old_pf = conf.get(pf_key)
-                    except Exception:
-                        old_pf = None
-                    conf.set(pf_key, "false")
+                try:
+                    old_pf = conf.get(pf_key)
+                except Exception:
+                    old_pf = None
+                conf.set(pf_key, "false")
                 try:
                     writer.parquet(stage_abs)
                 finally:
-                    if sized:
-                        if old_pf is None:
-                            conf.unset(pf_key)
-                        else:
-                            conf.set(pf_key, old_pf)
+                    if old_pf is None:
+                        conf.unset(pf_key)
+                    else:
+                        conf.set(pf_key, old_pf)
             else:
                 writer.parquet(stage_abs)
 

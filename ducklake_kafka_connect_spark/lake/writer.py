@@ -10,18 +10,31 @@ Parity targets (reference ``ingestor/DucklakeWriter.java``):
 - D5: batch consolidation is ``unionByName`` / a single micro-batch;
 - C8-C11: auto-create + ADD COLUMN + widening via ``schema/reconcile.py``.
 
-MERGE physical strategy (the 100 TB design):
+MERGE runs on one of two copy-on-write executors, or as merge-on-read:
 
-The source micro-batch is small relative to the table, so every join
-broadcasts the source — the target is **never shuffled**. (Batches
-above MERGE_BROADCAST_ROWS — bulk backfills — degrade to ordinary
-shuffle joins instead of OOMing the driver as a broadcast.) Affected
-partitions are computed from (a) the source rows' partition values and
-(b) a column-pruned scan of target (pk + partition columns) semi-joined
-against the broadcast source keys — so keys whose update moves them
-across partitions delete their old copy. Only affected partitions are
-re-read (file pruning happens driver-side against the manifest) and
-rewritten; untouched partitions keep their immutable files. Plan shape:
+- **Driver-side Arrow merge** (``_merge_arrow``) for tables with one
+  partition dir, at most MERGE_SMALL_MANIFEST_FILES files and
+  ARROW_MERGE_MAX_BYTES, no merge-on-read state, and a batch that does
+  not evolve the schema: one Spark job evaluates the batch, the merge,
+  parquet write and stats harvest run in-process — the latency shape of
+  the reference's in-process DuckDB ``MERGE INTO``. Every decline is a
+  named check (``merge.arrowSkip.<reason>`` before the batch is
+  evaluated, ``merge.arrowFallback.<reason>`` after).
+- **Spark pruning merge** (``_merge_once``) for everything else.
+- **Merge-on-read** (``_merge_mor_once``) under
+  ``write.merge.mode=merge-on-read``: delta + tombstone files, no rewrite.
+
+The pruning merge is the 100 TB design. The source micro-batch is small
+relative to the table, so every join broadcasts the source — the target
+is **never shuffled**. (Batches above MERGE_BROADCAST_ROWS — bulk
+backfills — degrade to ordinary shuffle joins instead of OOMing the
+driver as a broadcast.) Affected partitions are computed from (a) the
+source rows' partition values and (b) a column-pruned scan of target
+(pk + partition columns) semi-joined against the broadcast source keys —
+so keys whose update moves them across partitions delete their old
+copy. Only affected partitions are re-read (file pruning happens
+driver-side against the manifest) and rewritten; untouched partitions
+keep their immutable files. Plan shape:
 
     scan(target, affected-partitions only)  ──┐
     broadcast(src) ── left_anti (untouched) ──┤
@@ -71,10 +84,8 @@ MERGE_BROADCAST_ROWS = 4_000_000
 MERGE_BLOOM_PROBE_KEYS = 100_000
 # Manifests at or below this many data files skip partition/outside-file
 # pruning entirely: bloom-probing and rewriting a handful of files is
-# cheaper than any extra planning job.
+# cheaper than any extra planning job. Also the Arrow merge's file cap.
 MERGE_SMALL_MANIFEST_FILES = 8
-# A concurrent commit between planning and the table lock forces a replan
-# (the rewrite set was chosen against a stale file list).
 # Merges whose rewrite-set + batch estimate fits one output file take the
 # single-shuffle window-merge plan and write exactly one file.
 SMALL_OUTPUT_BYTES = 64 * 1024 * 1024
@@ -108,30 +119,17 @@ def _range_file_count(est_rows: int, est_bytes: int) -> int:
 # post-commit auto-compact — a SECOND full rewrite (measured 2.2 s of the
 # 7.6 s wide26 bench merge). Above the gate the shuffle would move the
 # whole rewrite set, and scan splits are ~maxPartitionBytes there anyway,
-# which already IS the right output file size — natural stays. Tunable
-# for clusters where shuffling more before the write is cheaper than the
-# small files (Iceberg write.distribution-mode=hash makes the same call).
-MERGE_REBALANCE_MAX_BYTES = int(
-    os.environ.get("DUCKLAKE_MERGE_REBALANCE_MAX_BYTES", 1024 * 1024 * 1024)
-)
-# Tables at or below this total size take the zero-planning-job fast path
-# (rewrite-all window-merge; the merge is the write job).
-MERGE_SMALL_TABLE_BYTES = 32 * 1024 * 1024
+# which already IS the right output file size — natural stays (Iceberg
+# write.distribution-mode=hash makes the same call).
+MERGE_REBALANCE_MAX_BYTES = 1024 * 1024 * 1024
 
 # Merge batches whose optimizer size estimate is at or below this are
 # coalesced to 4 partitions before toArrow (stream-count overhead wins);
 # larger/unknown estimates keep their parallelism (compute wins)
 EVAL_COALESCE_MAX_BYTES = 4 * 1024 * 1024
 
-# Within the small-table window-merge, unions at or below this many rows
-# run as ONE shuffle-free task; above it the window distributes across a
-# pk-hash shuffle (serial sort+write dominates past a few hundred k rows)
-SMALL_MERGE_SINGLE_TASK_ROWS = 300_000
-# Within the small-table path, tables whose whole content fits in the
-# driver comfortably are merged DRIVER-SIDE over Arrow (one Spark job to
-# evaluate the batch, zero to merge/write) — the latency analogue of the
-# reference's in-process DuckDB MERGE. Guarded by strict eligibility
-# checks with transparent fallback to the Spark plan.
+# Tables (and target + batch in memory) at or below this size merge
+# DRIVER-SIDE over Arrow — see _merge_arrow.
 ARROW_MERGE_MAX_BYTES = 32 * 1024 * 1024
 # {table_dir: (version, pyarrow.Table)} — contents as of that committed
 # version, populated by successful Arrow merges. Bounded (≤4 tables, each
@@ -157,18 +155,14 @@ def _window_merge(
     pk: Sequence[str],
     out_cols: Sequence[str],
     order_col: str | None,
-    dead_col: str | None = None,
-    single_partition: bool = False,
 ) -> DataFrame:
     """Small-merge plan: union(target-rewrite-rows, un-deduped batch) →
     one row_number window per PK picks the winner (batch over target,
     newest batch row over older by order_col / arrival). ``_inserted_at``
     of a matched key survives via a min-over-partition (target rows carry
-    it, batch rows carry NULL); fresh keys get NOW(). With ``dead_col``,
-    batch rows flagged true are tombstones: they compete in the same
-    last-write-wins order and a winning tombstone deletes its key. One
-    shuffle total, no joins, no broadcasts — the latency-optimal shape
-    when the rewrite set is small.
+    it, batch rows carry NULL); fresh keys get NOW(). One shuffle total,
+    no joins, no broadcasts — the latency-optimal shape when the rewrite
+    set is small.
 
     ``order_col`` may be a column absent from ``out_cols`` (merge_many's
     ephemeral batch ordinal): it rides the union as an extra column —
@@ -188,17 +182,12 @@ def _window_merge(
         ],
         F.lit(0).alias("__pri"),
         F.lit(None).cast("long").alias("__mono"),
-        F.lit(False).alias("__dead"),
-    )
-    dead = (
-        F.coalesce(F.col(dead_col), F.lit(False)) if dead_col else F.lit(False)
     )
     src_side = raw.withColumn(INSERTED_AT, F.lit(None).cast("timestamp")).select(
         *[F.col(c) for c in out_cols],
         *[F.col(c) for c in carry_order],
         F.lit(1).alias("__pri"),
         F.monotonically_increasing_id().alias("__mono"),
-        dead.alias("__dead"),
     )
     order = [F.col("__pri").desc()]
     if order_col:
@@ -210,51 +199,106 @@ def _window_merge(
     # full pass over the union).
     wo = W.partitionBy(*pk).orderBy(*order)
     full_frame = wo.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    u = tgt_side.unionByName(src_side)
-    if single_partition:
-        # SinglePartition satisfies the window's ClusteredDistribution,
-        # so the whole merge collapses to ONE stage (scan → union → sort
-        # → window → write in a single task) with no shuffle at all —
-        # worth ~0.2-0.3 s of stage scheduling + shuffle I/O per merge
-        # when the union is small. coalesce, not repartition: a
-        # repartition(1) is itself an exchange. __mono stays faithful to
-        # arrival order (the coalesced task reads parent partitions in
-        # order, assigning sequential ids).
-        u = u.coalesce(1)
     return (
-        u.withColumn("__rn", F.row_number().over(wo))
+        tgt_side.unionByName(src_side)
+        .withColumn("__rn", F.row_number().over(wo))
         .withColumn("__ts0", F.min(INSERTED_AT).over(full_frame))
-        .filter((F.col("__rn") == 1) & ~F.col("__dead"))
+        .filter(F.col("__rn") == 1)
         .withColumn(INSERTED_AT, F.coalesce(F.col("__ts0"), F.current_timestamp()))
         .select(*[_qcol(c) for c in out_cols])
     )
 
 
-def _stats_columns_arrow(schema, pk: list[str]) -> list[str]:
-    """Arrow-schema twin of ``table._stats_columns``: scalar columns
-    worth footer-stat-ing, PK first, same cap — so manifests written by
-    the driver-side Arrow merge prune identically to Spark-written ones."""
+def _out_cols(final_logical: T.StructType, part_cols: Sequence[str]) -> list[str]:
+    """Column order of every merge output: the physical table columns,
+    ``_inserted_at``, then derived partition columns."""
+    names = final_logical.fieldNames()
+    return (
+        [f.name for f in to_physical_schema(final_logical).fields]
+        + [INSERTED_AT]
+        + [c for c in part_cols if c not in names]
+    )
+
+
+# derived partition fn → Spark SQL function (partitioning._FNS twin)
+_PART_SQL = {"year": "year", "month": "month", "day": "dayofmonth"}
+
+
+def _est_plan_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate for ``df`` (no Spark job)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _arrow_write_schema(schema, nullable: bool = False):
+    """Arrow schema the driver-side writers emit: timestamps as MICROS —
+    Spark reads TIMESTAMP (MICROS) everywhere, and a ns column (INT96
+    files surface as ns in Arrow) written back as nanos would not
+    round-trip through the engine's reader. ``nullable`` relaxes every
+    field, so NULLs from a batch fit a column the target file declared
+    NOT NULL."""
     import pyarrow as pa
 
-    from .table import MAX_STATS_COLUMNS
+    return pa.schema(
+        [
+            pa.field(
+                f.name,
+                pa.timestamp("us", tz=f.type.tz)
+                if pa.types.is_timestamp(f.type)
+                else f.type,
+                nullable or f.nullable,
+            )
+            for f in schema
+        ]
+    )
 
-    def scalar(t) -> bool:
-        return (
-            pa.types.is_integer(t)
-            or pa.types.is_floating(t)
-            or pa.types.is_boolean(t)
-            or pa.types.is_string(t)
-            or pa.types.is_large_string(t)
-            or pa.types.is_timestamp(t)
-            or pa.types.is_date(t)
-            or pa.types.is_decimal(t)
+
+def _arrow_fallback(reason: str) -> None:
+    """Count an Arrow-merge decline taken after the batch was evaluated
+    (the pruning executor re-evaluates it); returns None for the caller."""
+    REGISTRY.inc("merge.arrowFallback")
+    REGISTRY.inc(f"merge.arrowFallback.{reason}")
+    return None
+
+
+def _arrow_merge_skip(
+    manifest: Manifest,
+    final_logical: T.StructType,
+    part_cols: list[str],
+) -> str | None:
+    """Manifest-only half of the copy-on-write executor choice, checked
+    before the batch is evaluated: the reason this merge cannot run on
+    the driver-side Arrow executor (``LakeWriter._merge_arrow``), or
+    None if it may."""
+    from .mor import mor_state
+
+    if len(manifest.files) > 1:
+        return "multi_dir"
+    if part_cols and not manifest.files:
+        return "no_dir"  # no existing dir token to reuse
+    files = manifest.all_files()
+    if len(files) > MERGE_SMALL_MANIFEST_FILES:
+        return "file_count"
+    table_bytes = sum(
+        int(
+            (manifest.file_stats.get(f) or {}).get("__bytes")
+            or ARROW_MERGE_MAX_BYTES
         )
-
-    names = [
-        f.name for f in schema if scalar(f.type) and f.name != INSERTED_AT
+        for f in files
+    )
+    if table_bytes > ARROW_MERGE_MAX_BYTES:
+        return "table_size"
+    if mor_state(manifest)[1]:
+        # the Arrow executor reads files raw — live tombstones need
+        # the visibility-applying read of the pruning executor
+        return "mor_state"
+    existing = [
+        (f.name, f.dataType)
+        for f in manifest.schema.fields
+        if f.name != INSERTED_AT
     ]
-    ordered = [c for c in pk if c in names] + [c for c in names if c not in pk]
-    return ordered[:MAX_STATS_COLUMNS]
+    if [(f.name, f.dataType) for f in final_logical.fields] != existing:
+        return "schema_change"
+    return None
 
 
 def _qcol(name: str) -> Column:
@@ -394,7 +438,6 @@ class LakeWriter:
         pk: Sequence[str] | None = None,
         partition_by: str | list[str] | None = None,
         auto_create: bool = True,
-        small_table_fast_path: bool = True,
         auto_compact: bool = True,
         check_constraints: dict[str, str] | None = None,
         max_retry_count: int = 10,
@@ -427,11 +470,6 @@ class LakeWriter:
         # materialized-view layer rides its base-version watermark here
         # so data + marker land in ONE atomic commit (lake/matview.py)
         self.extra_commit_props: dict = {}
-        # Rewrite-all window-merge for tables under MERGE_SMALL_TABLE_BYTES
-        # (single partition dir only): trades a little write amplification
-        # on tiny tables for a zero-planning-job merge. Off → every merge
-        # takes the pruning path (file-level rewrite minimization).
-        self.small_table_fast_path = small_table_fast_path
 
     # ---------- public API ----------
 
@@ -679,9 +717,7 @@ class LakeWriter:
             # fast reject on a RELIABLE big estimate; unknown estimates
             # fall through to the bounded probe instead
             try:
-                est = int(
-                    out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-                )
+                est = _est_plan_bytes(out)
             except Exception:
                 est = None
             if est is not None and (1 << 60) > est > self.ARROW_APPEND_MAX_BYTES:
@@ -1141,25 +1177,21 @@ class LakeWriter:
     # Appends whose optimizer-estimated batch size is at or below this
     # take the driver-side Arrow path: ONE Spark job (toArrow), then the
     # partition split, parquet write, stats harvest, and commit happen
-    # in-process — the same latency shape as _merge_small_table_arrow.
-    # Large appends never reach it, and any doubt (escaped partition
-    # tokens, nulls in partition values, harvest failure) falls back to
-    # the Spark write path.
+    # in-process — the same latency shape as _merge_arrow. Large appends
+    # never reach it, and any doubt (escaped partition tokens, nulls in
+    # partition values, harvest failure) falls back to the Spark write
+    # path.
     ARROW_APPEND_MAX_BYTES = 16 * 1024 * 1024
     _SIMPLE_TOKEN = re.compile(r"^[A-Za-z0-9._-]+$")
 
     def _append_small_arrow(self, out: DataFrame, df: DataFrame, manifest) -> bool:
         """Driver-side Arrow append for small batches. Returns True when
         the batch was written and committed; False → Spark path runs."""
-        import datetime
-        import uuid as _uuid
-
         try:
             import pyarrow as pa
-            import pyarrow.parquet as pq
 
             from .relation_cache import local_plan_arrow
-            from .table import _harvest_one, _stats_columns, _bloom_column
+            from .table import _bloom_column, _stats_columns
 
             with REGISTRY.timer("append.arrowBatchEval"):
                 # LocalRelation-folded micro-batches evaluate driver-
@@ -1179,12 +1211,7 @@ class LakeWriter:
                     if batch.nbytes > self.ARROW_APPEND_MAX_BYTES:
                         return False  # one huge file helps nobody
                 else:
-                    est = int(
-                        out._jdf.queryExecution()
-                        .optimizedPlan()
-                        .stats()
-                        .sizeInBytes()
-                    )
+                    est = _est_plan_bytes(out)
                     if est > self.ARROW_APPEND_MAX_BYTES:
                         return False
                     eval_df = (
@@ -1217,27 +1244,12 @@ class LakeWriter:
                     groups.setdefault(key, []).append(i)
             else:
                 groups[""] = list(range(batch.num_rows))
-            # match the Spark reader/writer: timestamps as MICROS
-            out_fields = [
-                pa.field(f.name, pa.timestamp("us", tz=f.type.tz))
-                if pa.types.is_timestamp(f.type)
-                else f
-                for f in batch.schema
-            ]
-            batch = batch.cast(pa.schema(out_fields))
+            parts = {
+                k: [batch if len(groups) == 1 else batch.take(pa.array(idxs))]
+                for k, idxs in groups.items()
+            }
             stat_cols = _stats_columns(out.schema, self.pk)
             bloom_col = _bloom_column(out.schema, self.pk)
-            # write boundary of metadata-only RENAME COLUMN: files carry
-            # PHYSICAL names (zero-copy pyarrow rename — the Arrow path
-            # stays live after a rename), manifest stats stay logical
-            ren = manifest.column_renames
-            inv_ren = {p: l for l, p in ren.items()}
-            if ren:
-                batch = batch.rename_columns(
-                    [ren.get(n, n) for n in batch.schema.names]
-                )
-                stat_cols = [ren.get(c, c) for c in stat_cols]
-                bloom_col = ren.get(bloom_col, bloom_col) if bloom_col else None
         except Exception:
             REGISTRY.inc("append.arrowFallback")
             return False
@@ -1250,49 +1262,16 @@ class LakeWriter:
         try:
             with self.table.lock():
                 current = self.table.manifest()
-                if current.column_renames != ren:
+                if current.column_renames != manifest.column_renames:
                     # a RENAME COLUMN landed after the batch was prepared
-                    # — physical names are stale; let the Spark path
+                    # — its logical names are stale; let the Spark path
                     # re-read and translate
                     REGISTRY.inc("append.arrowFallback")
                     return False
-                stage_rel = os.path.join(
-                    "data", f"s{current.version + 1}-{_uuid.uuid4().hex[:8]}"
-                )
-                new_files: dict[str, list[str]] = {}
-                new_stats: dict = {}
                 with REGISTRY.timer("append.arrowWrite"):
-                    for part_key, idxs in groups.items():
-                        rel_dir = (
-                            os.path.join(stage_rel, part_key)
-                            if part_key
-                            else stage_rel
-                        )
-                        self.table.fs.ensure_dir(
-                            os.path.join(self.table.dir, rel_dir)
-                        )
-                        fn = f"part-00000-{_uuid.uuid4().hex[:8]}.parquet"
-                        rel_file = os.path.join(rel_dir, fn)
-                        abs_file = os.path.join(self.table.dir, rel_file)
-                        sub = (
-                            batch
-                            if len(groups) == 1
-                            else batch.take(pa.array(idxs))
-                        )
-                        pq.write_table(
-                            sub, abs_file,
-                            compression=manifest.props.get(
-                                "tblproperties", {}
-                            ).get("write.compression", "snappy"),
-                        )
-                        new_files.setdefault(part_key, []).append(rel_file)
-                        s = _harvest_one(abs_file, stat_cols, bloom_col)
-                        if s:
-                            new_stats[rel_file] = (
-                                {inv_ren.get(c, c): v for c, v in s.items()}
-                                if inv_ren
-                                else s
-                            )
+                    new_files, new_stats = self._write_arrow_files(
+                        current, parts, stat_cols, bloom_col
+                    )
                 merged_files = {k: list(v) for k, v in current.files.items()}
                 for k, paths in new_files.items():
                     merged_files.setdefault(k, []).extend(paths)
@@ -1316,6 +1295,73 @@ class LakeWriter:
         # append via the False fallback.
         self._maybe_auto_compact(merged_files, stats)
         return True
+
+    def _write_arrow_files(
+        self,
+        manifest: Manifest,
+        parts: "dict[str, list]",
+        stat_cols: list[str],
+        bloom_col: str | None,
+    ) -> tuple[dict[str, list[str]], dict]:
+        """Driver-side parquet writer shared by the Arrow append and the
+        Arrow merge. ``parts`` maps a partition dir key to the Arrow
+        tables (logical column names) to write there, one file each,
+        staged under version ``manifest.version + 1``. Each file is cast
+        to micro timestamps, renamed to PHYSICAL column names (the write
+        boundary of metadata-only RENAME COLUMN; zero-copy), written and
+        its footer stats harvested — threaded when there is more than one
+        file (parquet encoding releases the GIL). Returns
+        ({part_key: [rel_file]}, {rel_file: stats under LOGICAL names})."""
+        import uuid
+
+        import pyarrow.parquet as pq
+
+        from .table import _harvest_one
+
+        ren = manifest.column_renames
+        inv_ren = {p: l for l, p in ren.items()}
+        stat_cols = [ren.get(c, c) for c in stat_cols]
+        bloom_col = ren.get(bloom_col, bloom_col) if bloom_col else None
+        codec = manifest.props.get("tblproperties", {}).get(
+            "write.compression", "snappy"
+        )
+        stage_rel = os.path.join(
+            "data", f"s{manifest.version + 1}-{uuid.uuid4().hex[:8]}"
+        )
+        files: dict[str, list[str]] = {}
+        jobs = []
+        for part_key, tables in parts.items():
+            rel_dir = os.path.join(stage_rel, part_key) if part_key else stage_rel
+            self.table.fs.ensure_dir(os.path.join(self.table.dir, rel_dir))
+            for tbl in tables:
+                rel = os.path.join(
+                    rel_dir, f"part-{len(jobs):05d}-{uuid.uuid4().hex[:8]}.parquet"
+                )
+                files.setdefault(part_key, []).append(rel)
+                jobs.append((rel, tbl))
+
+        def write_one(job) -> dict:
+            rel, tbl = job
+            tbl = tbl.cast(_arrow_write_schema(tbl.schema))
+            if ren:
+                tbl = tbl.rename_columns([ren.get(n, n) for n in tbl.column_names])
+            abs_file = os.path.join(self.table.dir, rel)
+            pq.write_table(tbl, abs_file, compression=codec)
+            return _harvest_one(abs_file, stat_cols, bloom_col)
+
+        if len(jobs) == 1:
+            harvested = [write_one(jobs[0])]
+        else:
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=min(8, len(jobs))) as ex:
+                harvested = list(ex.map(write_one, jobs))
+        stats = {
+            rel: {inv_ren.get(c, c): v for c, v in h.items()}
+            for (rel, _), h in zip(jobs, harvested)
+            if h
+        }
+        return files, stats
 
     def _maybe_auto_compact(self, files: dict, stats: dict) -> None:
         """Post-commit trigger (runs OUTSIDE the table lock — compact
@@ -1498,34 +1544,17 @@ class LakeWriter:
                 part_cols, order_col, tombstone_col, ephemeral_order,
             )
 
-        # ---- small-table fast path: zero planning jobs ----
-        # While the whole table fits a few small files in at most ONE
-        # partition dir, pruning machinery has nothing to prune: rewrite
-        # everything through ONE window-merge job (DuckDB's MERGE
-        # effectively rewrites such tables too). No cache, no planning
-        # aggregate, no bloom probe — the merge IS the write job. Multi-
-        # partition tables always take the pruning path below, preserving
-        # the untouched-partitions-keep-their-files contract.
-        n_files_total = sum(len(v) for v in manifest.files.values())
-        if (
-            self.small_table_fast_path
-            and len(manifest.files) <= 1
-            and n_files_total <= MERGE_SMALL_MANIFEST_FILES
-        ):
-            table_bytes = sum(
-                int((manifest.file_stats.get(f) or {}).get("__bytes") or MERGE_SMALL_TABLE_BYTES)
-                for f in manifest.all_files()
+        # ---- executor choice: driver-side Arrow, else Spark pruning ----
+        skip = _arrow_merge_skip(manifest, final_logical, part_cols)
+        if skip is None:
+            done = self._merge_arrow(
+                df, manifest, final_logical, exprs, part_cols,
+                order_col, tombstone_col, ephemeral_order,
             )
-            # No rows gate here: a measured 110k-row/2 MB table merges in
-            # ~1.0 s via this single-job rewrite-all vs ~2.0 s through the
-            # pruning path (planning collect + bloom probe + range-split
-            # write are three extra jobs that dwarf the rows saved at
-            # this size). Bytes is the right proxy for when pruning wins.
-            if table_bytes <= MERGE_SMALL_TABLE_BYTES:
-                return self._merge_small_table(
-                    df, manifest, planned_version, final_logical, exprs,
-                    part_cols, order_col, tombstone_col, ephemeral_order,
-                )
+            if done is not None:
+                return done
+        else:
+            REGISTRY.inc(f"merge.arrowSkip.{skip}")
 
         if tombstone_col:
             # Tombstones need last-write-wins resolution BEFORE the
@@ -1726,11 +1755,7 @@ class LakeWriter:
         # added columns, cast widened ones; keep system/partition columns.
         passthrough = [INSERTED_AT] + [c for c in part_cols if c not in final_logical.fieldNames()]
         target = _conform(target, final_logical, extra=passthrough)
-        out_cols = (
-            [f.name for f in to_physical_schema(final_logical).fields]
-            + [INSERTED_AT]
-            + [c for c in part_cols if c not in final_logical.fieldNames()]
-        )
+        out_cols = _out_cols(final_logical, part_cols)
 
         # ---- physical strategy: window-merge vs broadcast 3-join ----
         # The rewrite set's size is known from the manifest (__bytes per
@@ -1972,11 +1997,7 @@ class LakeWriter:
             else:
                 out = live.withColumn(INSERTED_AT, F.current_timestamp())
                 matched_keys = None
-            out_cols = (
-                [f.name for f in to_physical_schema(final_logical).fields]
-                + [INSERTED_AT]
-                + [c for c in part_cols if c not in final_logical.fieldNames()]
-            )
+            out_cols = _out_cols(final_logical, part_cols)
             out = out.select(*[_qcol(c) for c in out_cols])
             est_bytes = n_src * EST_ROW_BYTES
             n_out = max(
@@ -2038,283 +2059,177 @@ class LakeWriter:
                 compact(self.table)
         return True
 
-    def _merge_small_table(
+    def _merge_arrow(
         self,
         df: DataFrame,
         manifest: Manifest,
-        planned_version: int,
         final_logical: T.StructType,
         exprs,
         part_cols: list[str],
         order_col: str | None,
         tombstone_col: str | None,
-        ephemeral_order: bool = False,
-    ) -> bool:
-        """Zero-planning-job merge for tables that fit a few small files:
-        union(whole table, batch) → one window sweep → rewrite everything.
-        Exactly one Spark job (the write); AQE sizes the output files.
-        Tombstones ride the same window (a winning tombstone deletes its
-        key), so this path needs no eager dedup or live/dead split."""
-        extra = tuple(c for c in (tombstone_col,) if c)
-        if ephemeral_order and order_col:
-            extra = extra + (order_col,)
-        # conform + derived partition columns as ONE selectExpr (one
-        # Py4J round trip on the per-batch hot path). Derived exprs wrap
-        # the conform cast of their source column so they see the same
-        # value a post-conform withColumn would.
-        proj = _conform_exprs(
-            df, final_logical, extra=extra,
-            defaults=column_defaults(manifest),
-        )
-        logical_types = {f.name: f for f in to_physical_schema(final_logical).fields}
-        _part_sql = {"year": "year", "month": "month", "day": "dayofmonth"}
-        if all(
-            (not e.is_derived) or e.column in logical_types for e in exprs
-        ):
-            for e in exprs:
-                if e.is_derived:
-                    ddl = logical_types[e.column].dataType.simpleString()
-                    proj.append(
-                        f"{_part_sql[e.fn]}(CAST({_bt(e.column)} AS {ddl}))"
-                        f" AS {_bt(e.output_name)}"
-                    )
-            raw = df.selectExpr(*proj)
-        else:
-            raw = with_partition_columns(df.selectExpr(*proj), exprs)
-        out_cols = (
-            [f.name for f in to_physical_schema(final_logical).fields]
-            + [INSERTED_AT]
-            + [c for c in part_cols if c not in final_logical.fieldNames()]
-        )
-        from .mor import mor_state
-
-        if tombstone_col is None and not mor_state(manifest)[1]:
-            # the Arrow fast path reads files raw (no tombstone
-            # visibility) — a table carrying merge-on-read state takes
-            # the Spark window path below, whose _read_files applies it
-            done = self._merge_small_table_arrow(
-                raw, manifest, planned_version, final_logical,
-                exprs, part_cols, order_col, ephemeral_order, out_cols,
-            )
-            if done is not None:
-                return done
-        # target is only needed by the Spark window plan — building the
-        # read + conform DataFrames costs ~60 ms of Py4J per call, so it
-        # waits until the Arrow path has actually declined the batch
-        rewrite_files = manifest.all_files()
-        target = self._read_files(manifest, rewrite_files)
-        passthrough = [INSERTED_AT] + [
-            c for c in part_cols if c not in final_logical.fieldNames()
-        ]
-        target = _conform(target, final_logical, extra=passthrough)
-        # single_partition: the whole table is ≤ MERGE_SMALL_TABLE_BYTES
-        # by this path's gate, so the union usually fits one task and the
-        # merge runs as ONE shuffle-free stage (also subsumes the old
-        # coalesce(np_cap) cap on merge_many's N×32 micro-partitions).
-        # ADAPTIVE: near the top of the size gate (≳ a few hundred k
-        # rows) one serial task becomes the bottleneck — a pk-hash
-        # shuffle across cores wins there (measured at the 1M-row sf1
-        # rehearsal: 1.65 s serial vs 1.32 s distributed, and the
-        # multi-file output reads back faster too).
-        # Gate on table AND batch size (mirrors the + n_src term in the
-        # pruning path's gate): a huge batch into a small table must not
-        # serial-sort the whole union in one task. No planning job here,
-        # so the batch side comes from the optimizer's size estimate.
-        est_rows = self._est_rewrite_rows(manifest, manifest.all_files())
-        try:
-            batch_bytes = int(
-                raw._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-            est_rows += batch_bytes // EST_ROW_BYTES
-        except Exception:
-            pass
-        merged = _window_merge(
-            target, raw, self.pk, out_cols, order_col, dead_col=tombstone_col,
-            single_partition=est_rows <= SMALL_MERGE_SINGLE_TASK_ROWS,
-        )
-        with self.table.lock():
-            # cheap tip check; unchanged ⇒ planning manifest is tip
-            if self._chain_advanced(planned_version):
-                return False  # concurrent commit — replan against it
-            current = manifest
-            # skip_bloom: a table this small is read whole for any point
-            # lookup, so a sidecar buys nothing; once the table graduates
-            # past the size gate, the first pruning-path rewrite restores
-            # sidecars (missing ones are conservatively kept anyway).
-            new_files, new_stats = self.table.write_data_files(
-                # single-partition windows emit exactly one right-sized
-                # file naturally; the distributed window would emit one
-                # sub-MB file per shuffle partition — rebalance those
-                merged, current.version + 1,
-                layout=(
-                    "natural"
-                    if est_rows <= SMALL_MERGE_SINGLE_TASK_ROWS
-                    else "rebalance"
-                ),
-                skip_bloom=True,
-                manifest=current,
-            )
-            self._commit_next(current, new_files, final_logical, new_stats, op="MERGE")
-        return True
-
-    def _merge_small_table_arrow(
-        self,
-        raw: DataFrame,
-        manifest: Manifest,
-        planned_version: int,
-        final_logical: T.StructType,
-        exprs,
-        part_cols: list[str],
-        order_col: str | None,
         ephemeral_order: bool,
-        out_cols: list[str],
     ):
-        """Driver-side Arrow merge for tables the small-table gate already
-        proved tiny (≤ MERGE_SMALL_TABLE_BYTES): ONE Spark job evaluates
-        the conformed batch (``toArrow``), then the whole merge — union,
-        last-write-wins winner selection, ``_inserted_at`` carry-over,
-        parquet write, stats harvest — happens in-process. This is the
-        latency shape of the reference's MERGE (an in-process DuckDB
-        statement, ``ingestor/DucklakeWriter.java:98-187``): a 10k-row
-        merge drops from ~0.9 s (Spark plan analysis + codegen + job
-        scheduling on every fresh plan) to the batch-evaluation job plus
-        ~50 ms of Arrow work. At scale nothing changes — tables past the
-        size gate never reach this method, and ANY eligibility doubt
-        (multi-dir manifests, batch rows outside the existing partition,
-        unsortable order columns, null PKs, schema drift between batch
-        and files) returns None → the Spark plan runs instead.
+        """Driver-side Arrow copy-on-write executor, for tables
+        :func:`_arrow_merge_skip` admits: ONE Spark job evaluates the
+        conformed batch (``toArrow``), then the whole merge — union,
+        last-write-wins winner selection (a winning tombstone drops its
+        key), ``_inserted_at`` carry-over, parquet write, stats harvest —
+        happens in-process. This is the latency shape of the reference's
+        MERGE (an in-process DuckDB statement,
+        ``ingestor/DucklakeWriter.java:98-187``): a 10k-row merge costs
+        the batch-evaluation job plus ~50 ms of Arrow work instead of
+        Spark plan analysis + codegen + job scheduling per merge.
 
-        Returns True (committed), False (version conflict → replan), or
-        None (ineligible / any failure → Spark fallback)."""
-        import datetime
+        Returns True (committed), False (version conflict → replan) or
+        None (declined → the pruning executor runs). Target files that
+        predate a metadata-only ADD COLUMN decline before the batch is
+        evaluated (``merge.arrowSkip.schema_change``); every decline
+        after it is named and counted by :func:`_arrow_fallback`. Errors
+        at or after the table lock propagate: the commit itself refused,
+        and re-running the merge on Spark would only repeat the refusal."""
+        import time
 
+        import numpy as np
+        import pandas as pd
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        # metadata-only RENAME COLUMN support: run the merge entirely in
-        # LOGICAL column space (targets renamed physical→logical right
-        # after the file read, zero-copy), translate back at the write
-        # boundary — the fast path stays live after a rename
-        ren = manifest.column_renames
-        inv_ren = {p: l for l, p in ren.items()}
+        from .relation_cache import local_plan_arrow
+        from .table import _stats_columns
+
+        out_cols = _out_cols(final_logical, part_cols)
+        part_key = next(iter(manifest.files), "")
+        pk = list(self.pk)
         try:
-            import pandas as pd
+            # conform + derived partition columns as ONE selectExpr (one
+            # Py4J round trip on the per-batch hot path). Derived exprs
+            # wrap the conform cast of their source column so they see
+            # the same value a post-conform withColumn would.
+            extra = tuple(c for c in (tombstone_col,) if c)
+            if ephemeral_order and order_col:
+                extra += (order_col,)
+            proj = _conform_exprs(
+                df, final_logical, extra=extra,
+                defaults=column_defaults(manifest),
+            )
+            physical = {
+                f.name: f.dataType for f in to_physical_schema(final_logical).fields
+            }
+            if all(e.column in physical for e in exprs if e.is_derived):
+                proj += [
+                    f"{_PART_SQL[e.fn]}(CAST({_bt(e.column)} AS "
+                    f"{physical[e.column].simpleString()})) AS {_bt(e.output_name)}"
+                    for e in exprs
+                    if e.is_derived
+                ]
+                raw = df.selectExpr(*proj)
+            else:
+                raw = with_partition_columns(df.selectExpr(*proj), exprs)
 
-            part_keys = list(manifest.files.keys())
-            if len(part_keys) > 1:
-                return None
-            if part_cols and not part_keys:
-                return None  # no existing dir token to reuse for new dirs
-            part_key = part_keys[0] if part_keys else ""
-            with REGISTRY.timer("merge.arrowBatchEval"):
-                # coalesce: a small batch often arrives in 32 map
-                # partitions; collecting 32 near-empty Arrow streams is
-                # pure task-scheduling overhead (~70→30 ms for 10k rows).
-                # coalesce merges ADJACENT partitions, so the concat
-                # order (the __mono arrival order below) is unchanged.
-                # Gate on the optimizer's size estimate: coalescing a
-                # COMPUTE-heavy batch (e.g. a JSON-decode pipeline)
-                # would serialize that compute onto 4 cores — only
-                # plans the optimizer thinks are tiny qualify.
-                eval_df = raw
-                try:
-                    est = int(
-                        raw._jdf.queryExecution()
-                        .optimizedPlan()
-                        .stats()
-                        .sizeInBytes()
-                    )
-                    if est <= EVAL_COALESCE_MAX_BYTES:
-                        eval_df = raw.coalesce(4)
-                except Exception:
-                    pass
-                from .relation_cache import local_plan_arrow
-
-                # zero-job eval when the batch folded to a LocalRelation
-                batch = local_plan_arrow(raw)
-                if batch is None:
-                    batch = eval_df.toArrow()  # the ONE Spark job
-            # batch rows must all land in the single existing partition
-            # dir — otherwise Spark's partitionBy must create new dirs
-            if part_cols and batch.num_rows:
-                want = dir_key_to_canon_tuple(part_key, exprs)
-                for e, w in zip(exprs, want):
-                    vals = pc.unique(batch.column(e.output_name)).to_pylist()
-                    if any(canon_partition_value(v) != w for v in vals):
-                        return None
-
-            files = manifest.all_files()
-            # in-process target cache (the embedded-engine buffer-pool
-            # analogue): a successful Arrow merge KNOWS the table's full
-            # contents at the version it just committed, so the next
-            # merge skips re-reading every target file. Version-keyed —
-            # any write through another path bumps the version and the
-            # entry just misses.
+            # ---- target: the version-keyed cache, else the files ----
+            # A successful Arrow merge KNOWS the table's full contents at
+            # the version it committed (the embedded-engine buffer-pool
+            # analogue), so the next merge skips re-reading the files.
+            # The merge runs in LOGICAL column space: file tables are
+            # renamed physical→logical right after the read (zero-copy).
             cached = _ARROW_TARGET_CACHE.get(self.table.dir)
             if cached is not None and cached[0] == manifest.version:
                 target = cached[1]
-                if (
-                    target is not None
-                    and target.nbytes + batch.nbytes > ARROW_MERGE_MAX_BYTES
-                ):
-                    return None
             else:
-                targets = [
-                    pq.read_table(os.path.join(self.table.dir, f)) for f in files
-                ]
-                if inv_ren:
-                    targets = [
-                        t.rename_columns(
+                inv_ren = {p: l for l, p in manifest.column_renames.items()}
+                targets, common = [], None
+                for f in manifest.all_files():
+                    t = pq.read_table(os.path.join(self.table.dir, f))
+                    if inv_ren:
+                        t = t.rename_columns(
                             [inv_ren.get(n, n) for n in t.column_names]
                         )
-                        for t in targets
-                    ]
-                if (
-                    sum(t.nbytes for t in targets) + batch.nbytes
-                    > ARROW_MERGE_MAX_BYTES
-                ):
-                    return None
+                    if sorted(t.column_names) != sorted(out_cols):
+                        REGISTRY.inc("merge.arrowSkip.schema_change")
+                        return None
+                    t = t.select(out_cols)
+                    if common is None:
+                        common = _arrow_write_schema(t.schema, nullable=True)
+                    targets.append(t.cast(common))
                 target = pa.concat_tables(targets) if targets else None
 
-            # ---- align both sides to out_cols with one common schema ----
+            with REGISTRY.timer("merge.arrowBatchEval"):
+                # zero-job eval when the batch folded to a LocalRelation;
+                # else coalesce: a small batch often arrives in 32 map
+                # partitions, and collecting 32 near-empty Arrow streams
+                # is pure task-scheduling overhead (~70→30 ms for 10k
+                # rows). coalesce merges ADJACENT partitions, so the
+                # concat order (the arrival order below) is unchanged.
+                # Gated on the optimizer's size estimate: coalescing a
+                # COMPUTE-heavy batch (e.g. a JSON-decode pipeline) would
+                # serialize that compute onto 4 cores.
+                batch = local_plan_arrow(raw)
+                if batch is None:
+                    small = _est_plan_bytes(raw) <= EVAL_COALESCE_MAX_BYTES
+                    batch = (raw.coalesce(4) if small else raw).toArrow()
+
+            dead = None
+            live = batch
+            if tombstone_col:
+                dead = pc.fill_null(batch.column(tombstone_col), False)
+                live = batch.filter(pc.invert(dead))
+            # live rows must all land in the single existing partition
+            # dir — otherwise Spark's partitionBy must create new dirs
+            if part_cols and live.num_rows:
+                want = dir_key_to_canon_tuple(part_key, exprs)
+                for e, w in zip(exprs, want):
+                    vals = pc.unique(live.column(e.output_name)).to_pylist()
+                    if any(canon_partition_value(v) != w for v in vals):
+                        return _arrow_fallback("outside_dir")
+            n_t = target.num_rows if target is not None else 0
+            if (target.nbytes if n_t else 0) + batch.nbytes > ARROW_MERGE_MAX_BYTES:
+                return _arrow_fallback("size_cap")
+
+            # ---- align the batch to the target's (nullable) schema ----
             if target is not None:
-                if sorted(target.column_names) != sorted(out_cols):
-                    return None
-                target = target.select(out_cols)
                 common = target.schema
             else:
-                fields = []
-                for c in out_cols:
-                    if c == INSERTED_AT:
-                        fields.append(pa.field(c, pa.timestamp("us", tz="UTC")))
-                    else:
-                        fields.append(pa.field(c, batch.schema.field(c).type))
-                common = pa.schema(fields)
-            b_arrays = []
-            for f in common:
-                if f.name in batch.column_names:
-                    b_arrays.append(batch.column(f.name).cast(f.type))
-                elif f.name == INSERTED_AT:
-                    b_arrays.append(pa.nulls(batch.num_rows, type=f.type))
-                else:
-                    return None
-            bt = pa.table(b_arrays, schema=common)
-            combined = pa.concat_tables([target, bt]) if target is not None else bt
-            n_t = target.num_rows if target is not None else 0
+                common = _arrow_write_schema(
+                    pa.schema(
+                        [
+                            pa.field(c, pa.timestamp("us", tz="UTC"))
+                            if c == INSERTED_AT
+                            else batch.schema.field(c)
+                            for c in out_cols
+                        ]
+                    ),
+                    nullable=True,
+                )
+            bt = pa.table(
+                [
+                    pa.nulls(batch.num_rows, type=f.type)
+                    if f.name == INSERTED_AT
+                    else batch.column(f.name).cast(f.type)
+                    for f in common
+                ],
+                schema=common,
+            )
+            combined = pa.concat_tables([target, bt]) if n_t else bt
             n_b = bt.num_rows
+            if any(combined.column(k).null_count for k in pk):
+                return _arrow_fallback("null_pk")  # window null-group semantics
 
             # ---- winner selection (the row_number window, in pandas) ----
-            if any(combined.column(k).null_count for k in self.pk):
-                return None  # window null-group semantics — let Spark do it
-            import numpy as _np0
+            key_df = combined.select(pk).to_pandas()
 
-            key_df = combined.select(self.pk).to_pandas()
-            key_df["__pri"] = _np0.repeat(
-                _np0.array([0, 1], dtype="int8"), [n_t, n_b]
-            )
+            def keys_of(frame):
+                if len(pk) == 1:
+                    return pd.Index(frame[pk[0]].values)
+                return pd.MultiIndex.from_frame(frame[pk])
 
-            def _batch_only(series: "pd.Series") -> "pd.Series":
+            t_index = keys_of(key_df.iloc[:n_t])
+            if not t_index.is_unique:
+                return _arrow_fallback("dup_target_keys")
+            key_df["__pri"] = np.repeat(np.array([0, 1], dtype="int8"), [n_t, n_b])
+
+            def batch_only(series: "pd.Series") -> "pd.Series":
                 # full-length object column, null on the target side —
                 # nulls only ever compare within the __pri=0 group (where
                 # every value is null), so object-dtype sorting is safe
@@ -2325,107 +2240,61 @@ class LakeWriter:
             sort_cols = ["__pri"]
             if order_col and ephemeral_order:
                 st = batch.column(order_col)
-                s_pd = pc.struct_field(st, "s").to_pandas()
                 o_pd = pc.struct_field(st, "o").to_pandas()
                 if o_pd.dtype == object:
-                    return None
-                key_df["__s"] = _batch_only(s_pd)
-                key_df["__o"] = _batch_only(o_pd)
+                    return _arrow_fallback("unsortable_order")
+                key_df["__s"] = batch_only(pc.struct_field(st, "s").to_pandas())
+                key_df["__o"] = batch_only(o_pd)
                 sort_cols += ["__s", "__o"]
             elif order_col:
                 o_pd = combined.column(order_col).to_pandas()
                 if o_pd.dtype == object:
-                    return None
+                    return _arrow_fallback("unsortable_order")
                 key_df["__ord"] = o_pd
                 sort_cols.append("__ord")
             # arrival order within the batch (monotonically_increasing_id
             # twin: toArrow concatenates partitions in order); numpy —
             # a 100k-element Python list costs ~15 ms in sanitize alone
-            import numpy as _np
-
-            key_df["__mono"] = _np.concatenate(
-                [_np.arange(-n_t, 0), _np.arange(n_b)]
-            )
+            key_df["__mono"] = np.concatenate([np.arange(-n_t, 0), np.arange(n_b)])
             sort_cols.append("__mono")
-            key_df["__idx"] = _np.arange(len(key_df))
-            pk_cols = list(self.pk)
+            key_df["__idx"] = np.arange(len(key_df))
             if sort_cols == ["__pri", "__mono"]:
                 # no order column → winner is simply the LAST batch
                 # occurrence of a key, else the (unique-keyed) target
                 # row. Hash-based: O(n) vs the O(n log n) full sort.
-                b_w = key_df.iloc[n_t:].drop_duplicates(
-                    subset=pk_cols, keep="last"
-                )
-                if n_t:
-                    t_keys = key_df.iloc[:n_t]
-                    if len(pk_cols) == 1:
-                        keep = ~t_keys[pk_cols[0]].isin(b_w[pk_cols[0]]).values
-                    else:
-                        keep = ~pd.MultiIndex.from_frame(
-                            t_keys[pk_cols]
-                        ).isin(pd.MultiIndex.from_frame(b_w[pk_cols]))
-                    winners = pd.concat([t_keys[keep], b_w])
-                else:
-                    winners = b_w
+                b_w = key_df.iloc[n_t:].drop_duplicates(subset=pk, keep="last")
+                keep = ~t_index.isin(keys_of(b_w))
+                winners = pd.concat([key_df.iloc[:n_t][keep], b_w])
             else:
-                winners = (
-                    key_df.sort_values(
-                        sort_cols, ascending=False, kind="stable",
-                        na_position="last",
-                    )
-                    .drop_duplicates(subset=pk_cols, keep="first")
-                )
+                winners = key_df.sort_values(
+                    sort_cols, ascending=False, kind="stable", na_position="last"
+                ).drop_duplicates(subset=pk, keep="first")
+            if dead is not None:
+                # a winning tombstone deletes its key (target rows have
+                # __idx < n_t and are never tombstones)
+                b_dead = dead.to_numpy(zero_copy_only=False)
+                idx = winners["__idx"].to_numpy()
+                w_dead = np.zeros(len(idx), dtype=bool)
+                w_dead[idx >= n_t] = b_dead[idx[idx >= n_t] - n_t]
+                winners = winners[~w_dead]
             out_tbl = combined.take(pa.array(winners["__idx"].to_numpy()))
 
             # ---- _inserted_at: keep the matched key's original stamp ----
+            # computed on int64 epoch-µs values (common is µs): vectorized
+            # and immune to pandas' unit/tz dtype variation
             ts_type = common.field(INSERTED_AT).type
-            now = datetime.datetime.now(datetime.timezone.utc)
-            if ts_type.tz is None:
-                now = now.replace(tzinfo=None)
-            # carry-over computed on int64 epoch-µs values: vectorized,
-            # and immune to pandas' unit/tz dtype variation (ns vs us vs
-            # Arrow-backed) across files written by Spark (INT96→ns) and
-            # the Arrow fast paths (us)
-            import numpy as np
-
-            us_type = pa.timestamp("us", tz=ts_type.tz)
-            ts_us = (
-                out_tbl.column(INSERTED_AT).cast(us_type).cast(pa.int64()).to_pandas()
-            )
+            ts_us = out_tbl.column(INSERTED_AT).cast(pa.int64()).to_pandas()
             if ts_us.isna().any():
-                if now.tzinfo is not None:
-                    now_us = int(now.timestamp() * 1_000_000)
-                else:
-                    now_us = int(
-                        (now - datetime.datetime(1970, 1, 1)).total_seconds()
-                        * 1_000_000
-                    )
+                now_us = time.time_ns() // 1000
                 if n_t:
-                    # target keys are unique (merge invariant) → an
-                    # Index lookup replaces the pandas join: O(n_t)
-                    # build + O(|winners|) probe, no row realignment
+                    # target keys are unique (checked above) → an Index
+                    # lookup replaces a join: O(|winners|) probe
                     old_us = (
-                        target.column(INSERTED_AT)
-                        .cast(us_type)
-                        .cast(pa.int64())
-                        .to_pandas()
-                        .values
+                        target.column(INSERTED_AT).cast(pa.int64()).to_pandas().values
                     )
-                    if len(self.pk) == 1:
-                        old_index = pd.Index(key_df[self.pk[0]].values[:n_t])
-                        w_keys = winners[self.pk[0]].values
-                    else:
-                        old_index = pd.MultiIndex.from_frame(
-                            key_df.iloc[:n_t][list(self.pk)]
-                        )
-                        w_keys = pd.MultiIndex.from_frame(
-                            winners[list(self.pk)]
-                        )
-                    pos = old_index.get_indexer(w_keys)
+                    pos = t_index.get_indexer(keys_of(winners))
                     m_vals = np.where(
-                        pos >= 0,
-                        old_us[np.maximum(pos, 0)].astype("float64"),
-                        np.nan,
+                        pos >= 0, old_us[np.maximum(pos, 0)].astype("float64"), np.nan
                     )
                     filled = np.where(
                         ts_us.notna(),
@@ -2437,135 +2306,53 @@ class LakeWriter:
                 out_tbl = out_tbl.set_column(
                     out_tbl.column_names.index(INSERTED_AT),
                     pa.field(INSERTED_AT, ts_type),
-                    pa.array(filled).cast(us_type).cast(ts_type),
+                    pa.array(filled).cast(ts_type),
                 )
 
-            # ---- write + commit (same protocol as the Spark path) ----
-            import uuid as _uuid
-
-            from .table import _harvest_one
-
-            with self.table.lock():
-                # cheap tip check; unchanged ⇒ planning manifest is tip
-                if self._chain_advanced(planned_version):
-                    return False
-                current = manifest
-                stage_rel = os.path.join(
-                    "data", f"s{current.version + 1}-{_uuid.uuid4().hex[:8]}"
-                )
-                rel_dir = os.path.join(stage_rel, part_key) if part_key else stage_rel
-                self.table.fs.ensure_dir(os.path.join(self.table.dir, rel_dir))
-                with REGISTRY.timer("merge.arrowWrite"):
-                    # micro-precision timestamps: Spark reads TIMESTAMP
-                    # (MICROS) everywhere; a ns-unit column (INT96 files
-                    # surface as ns in Arrow) written back as nanos
-                    # would NOT round-trip through the engine's reader
-                    out_fields = [
-                        pa.field(f.name, pa.timestamp("us", tz=f.type.tz))
-                        if pa.types.is_timestamp(f.type)
-                        else f
-                        for f in out_tbl.schema
-                    ]
-                    out_tbl = out_tbl.cast(pa.schema(out_fields))
-                    stat_cols = _stats_columns_arrow(common, list(self.pk))
-                    # write boundary: files carry PHYSICAL names
-                    # (zero-copy rename); the cache and stats stay logical
-                    write_tbl = (
-                        out_tbl.rename_columns(
-                            [ren.get(n, n) for n in out_tbl.column_names]
-                        )
-                        if ren
-                        else out_tbl
+            # Range-split: outputs past 2 × MERGE_TARGET_FILE_ROWS are
+            # pk-sorted and written as N files — per-file pk ranges are
+            # disjoint, so the NEXT merge's overlap prune has something
+            # to prune, and the files encode in parallel. Same rows-vs-
+            # bytes balance as the Spark range layout (Arrow nbytes
+            # overestimate parquet — errs toward fewer, larger files).
+            n_rows = out_tbl.num_rows
+            slices = [out_tbl]
+            if n_rows > 2 * MERGE_TARGET_FILE_ROWS:
+                out_tbl = out_tbl.take(
+                    pc.sort_indices(
+                        out_tbl, sort_keys=[(k, "ascending") for k in pk]
                     )
-                    stat_cols = [ren.get(c, c) for c in stat_cols]
-                    # Range-split: tables past one MERGE_TARGET_FILE_ROWS
-                    # chunk are pk-sorted and written as N files — (a)
-                    # per-file pk ranges are disjoint, so the NEXT
-                    # merge's overlap prune has something to prune, and
-                    # (b) the parquet encoding (GIL-released) runs in a
-                    # thread pool instead of one serial write_table.
-                    n_rows = write_tbl.num_rows
-                    if n_rows > 2 * MERGE_TARGET_FILE_ROWS:
-                        # write_tbl carries PHYSICAL names — translate
-                        # the logical pk through the rename map or a
-                        # renamed-pk table would fail the sort and
-                        # silently bounce the merge to the Spark path
-                        order = pc.sort_indices(
-                            write_tbl,
-                            sort_keys=[
-                                (ren.get(k, k), "ascending") for k in self.pk
-                            ],
-                        )
-                        write_tbl = write_tbl.take(order)
-                        out_tbl = (
-                            out_tbl.take(order) if ren else write_tbl
-                        )
-                        # same rows-vs-bytes balance as the Spark range
-                        # layout (Arrow nbytes overestimate parquet —
-                        # errs toward fewer, larger files)
-                        n_files = max(
-                            1,
-                            min(
-                                MERGE_RANGE_MAX_FILES,
-                                _range_file_count(n_rows, write_tbl.nbytes),
-                            ),
-                        )
-                        step = -(-n_rows // n_files)
-                        slices = [
-                            write_tbl.slice(i * step, step)
-                            for i in range(n_files)
-                            if i * step < n_rows
-                        ]
-                    else:
-                        slices = [write_tbl]
-                    rel_files, abs_files = [], []
-                    for _ in slices:
-                        fn = f"part-{len(rel_files):05d}-{_uuid.uuid4().hex[:8]}.parquet"
-                        rel_files.append(os.path.join(rel_dir, fn))
-                        abs_files.append(
-                            os.path.join(self.table.dir, rel_files[-1])
-                        )
-
-                    _codec = current.props.get("tblproperties", {}).get(
-                        "write.compression", "snappy"
-                    )
-
-                    def _write_one(i: int):
-                        pq.write_table(
-                            slices[i], abs_files[i], compression=_codec
-                        )
-                        return _harvest_one(abs_files[i], stat_cols, None)
-
-                    if len(slices) == 1:
-                        harvested = [_write_one(0)]
-                    else:
-                        from concurrent.futures import ThreadPoolExecutor
-
-                        with ThreadPoolExecutor(
-                            max_workers=min(8, len(slices))
-                        ) as ex:
-                            harvested = list(
-                                ex.map(_write_one, range(len(slices)))
-                            )
-                    stats = {
-                        rf: (
-                            {inv_ren.get(c, c): v for c, v in h.items()}
-                            if inv_ren
-                            else h
-                        )
-                        for rf, h in zip(rel_files, harvested)
-                        if h
-                    }
-                self._commit_next(
-                    current, {part_key: rel_files}, final_logical, stats
                 )
-            if len(_ARROW_TARGET_CACHE) >= 4:
-                _ARROW_TARGET_CACHE.clear()
-            _ARROW_TARGET_CACHE[self.table.dir] = (current.version + 1, out_tbl)
-            return True
+                n_files = max(
+                    1,
+                    min(
+                        MERGE_RANGE_MAX_FILES,
+                        _range_file_count(n_rows, out_tbl.nbytes),
+                    ),
+                )
+                step = -(-n_rows // n_files)
+                slices = [out_tbl.slice(i, step) for i in range(0, n_rows, step)]
+            stat_cols = _stats_columns(
+                T.StructType([f for f in raw.schema.fields if f.name in out_cols]),
+                pk,
+            )
         except Exception:
-            REGISTRY.inc("merge.arrowFallback")
-            return None
+            return _arrow_fallback("error")
+
+        # ---- write + commit (same protocol as the Spark path) ----
+        with self.table.lock():
+            # cheap tip check; unchanged ⇒ planning manifest is tip
+            if self._chain_advanced(manifest.version):
+                return False
+            with REGISTRY.timer("merge.arrowWrite"):
+                new_files, stats = self._write_arrow_files(
+                    manifest, {part_key: slices}, stat_cols, None
+                )
+            self._commit_next(manifest, new_files, final_logical, stats, op="MERGE")
+        if len(_ARROW_TARGET_CACHE) >= 4:
+            _ARROW_TARGET_CACHE.clear()
+        _ARROW_TARGET_CACHE[self.table.dir] = (manifest.version + 1, out_tbl)
+        return True
 
     # ---------- internals ----------
 

@@ -1,7 +1,7 @@
-"""Driver-side Arrow small-merge fast path: must be semantics-identical
-to the Spark window-merge plan it replaces (lake/writer.py
-``_merge_small_table_arrow``), and must fall back transparently whenever
-an eligibility gate trips."""
+"""Driver-side Arrow merge executor (lake/writer.py ``_merge_arrow``):
+must be semantics-identical to the Spark pruning merge, and must hand
+the batch to it — named and counted — whenever an eligibility check
+trips."""
 
 import os
 import tempfile
@@ -32,7 +32,7 @@ def _base(spark, n=200):
 
 def _spark_only(monkeypatch):
     monkeypatch.setattr(
-        wmod.LakeWriter, "_merge_small_table_arrow", lambda self, *a, **k: None
+        wmod.LakeWriter, "_merge_arrow", lambda self, *a, **k: None
     )
 
 
@@ -448,3 +448,39 @@ def test_arrow_paths_stay_live_after_rename_column(spark, lake):
     )
     rows = {r["id"]: r["label"] for r in t.read().collect()}
     assert rows[15] == "cache" and rows[60] == "r60"
+
+
+def test_commit_refusal_is_not_rerun_on_spark(spark, tmp_path):
+    """A merge into a fenced replication mirror is refused by the commit
+    itself. The Arrow merge must raise that refusal as-is — not count a
+    fallback and re-run the whole merge on the Spark executor (whose
+    write_data_files job would only hit the same fence)."""
+    from ducklake_kafka_connect_spark.lake.replicate import replicate
+    from ducklake_kafka_connect_spark.metrics import REGISTRY
+
+    cat = LakeCatalog(spark, str(tmp_path / "primary"))
+    t = cat.table("f")
+    LakeWriter(t, pk=["id"]).write(
+        spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
+    )
+    replicate(t, str(tmp_path / "mirror"))
+    mt = LakeCatalog(spark, str(tmp_path / "mirror")).table("f")
+
+    def counts():
+        s = REGISTRY.snapshot()
+        return (
+            s["counters"].get("merge.arrowFallback", 0),
+            s["operations"].get("write.dataFiles", {}).get("count", 0),
+            s["operations"].get("merge.arrowWrite", {}).get("count", 0),
+        )
+
+    fb0, wd0, aw0 = counts()
+    with pytest.raises(ValueError, match="replication mirror"):
+        LakeWriter(mt, pk=["id"]).write(
+            spark.createDataFrame([(9, "z")], "id long, s string")
+        )
+    fb1, wd1, aw1 = counts()
+    assert aw1 == aw0 + 1, "the Arrow executor should have run the merge"
+    assert fb1 == fb0, "a commit refusal is not an Arrow fallback"
+    assert wd1 == wd0, "the refused merge was re-run on Spark"
+    assert mt.read().count() == 2

@@ -2,15 +2,23 @@
 must keep non-overlapping files out of the rewrite set (their relpaths
 survive the commit unchanged), while results stay correct."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from ducklake_kafka_connect_spark.lake import LakeCatalog, LakeWriter
+from ducklake_kafka_connect_spark.lake import writer as wmod
+
+
+@pytest.fixture(autouse=True)
+def _pruning_executor(monkeypatch):
+    # every merge here runs on the pruning executor: the Arrow merge is barred
+    monkeypatch.setattr(wmod.LakeWriter, "_merge_arrow", lambda self, *a, **k: None)
 
 
 def _setup(spark, tmp_path, name):
     cat = LakeCatalog(spark, str(tmp_path))
     t = cat.table(name)
-    w = LakeWriter(t, pk=["id"], small_table_fast_path=False, auto_compact=False)  # pruning path; keep files accreted
+    w = LakeWriter(t, pk=["id"], auto_compact=False)  # keep files accreted
     # 4 appends with disjoint key ranges → ≥4 files with tight stats
     for base in (0, 1000, 2000, 3000):
         w.append(
@@ -61,7 +69,7 @@ def test_compact_range_layout_tightens_pruning(spark, tmp_path):
 
     cat = LakeCatalog(spark, str(tmp_path))
     t = cat.table("fpc")
-    w = LakeWriter(t, pk=["id"], small_table_fast_path=False, auto_compact=False)  # pruning path; keep files accreted
+    w = LakeWriter(t, pk=["id"], auto_compact=False)  # keep files accreted
     # interleaved appends: every file spans nearly the whole key space
     for off in range(10):
         w.append(
@@ -110,7 +118,7 @@ def test_merge_bloom_probe_shrinks_rewrite_set(spark, tmp_path):
     cut the rewrite set to the files actually holding the keys."""
     cat = LakeCatalog(spark, str(tmp_path))
     t = cat.table("fpb")
-    w = LakeWriter(t, pk=["id"], small_table_fast_path=False, auto_compact=False)  # pruning path; keep files accreted
+    w = LakeWriter(t, pk=["id"], auto_compact=False)  # keep files accreted
     # 4 files, each spanning [off, 4000+off] with stride 4 — all overlap
     for off in range(4):
         w.append(

@@ -100,38 +100,6 @@ class TestMerge:
         assert upd["name"] == "upd_50"
 
 
-    def test_distributed_window_merge_branch(self, spark, catalog, monkeypatch):
-        # Force the >SMALL_MERGE_SINGLE_TASK_ROWS branch (pk-hash
-        # distributed window) that normally only triggers at rehearsal
-        # scale: same results as the single-task plan, incl. stable
-        # _inserted_at and last-write-wins within the batch.
-        from ducklake_kafka_connect_spark.lake import writer as wmod
-
-        monkeypatch.setattr(wmod, "SMALL_MERGE_SINGLE_TASK_ROWS", 0)
-        # also bar the Arrow fast path so the Spark window plan runs
-        monkeypatch.setattr(
-            wmod.LakeWriter, "_merge_small_table_arrow", lambda self, *a, **k: None
-        )
-        w = LakeWriter(catalog.table("users_dist"), pk=["id"])
-        w.write(users_df(spark, [(i, f"base_{i}", TS) for i in range(1, 201)]))
-        first = {
-            r["id"]: r["_inserted_at"]
-            for r in catalog.table("users_dist").read().collect()
-        }
-        w.write(
-            users_df(
-                spark,
-                [(i, f"upd_{i}", TS) for i in range(1, 51)]
-                + [(300, "dup_a", TS), (300, "dup_b", TS)],
-            )
-        )
-        rows = {r["id"]: r for r in catalog.table("users_dist").read().collect()}
-        assert len(rows) == 201
-        assert rows[50]["name"] == "upd_50" and rows[200]["name"] == "base_200"
-        assert rows[300]["name"] == "dup_b"  # in-batch last write wins
-        assert rows[50]["_inserted_at"] == first[50]  # stamp stable
-
-
 class TestPartitioned:
     def events_df(self, spark, rows):
         return spark.createDataFrame(rows, "event_id int, ts timestamp, kind string")
@@ -625,7 +593,7 @@ class TestSingleManifestResolve:
     def test_one_resolve_per_write(self, spark, catalog):
         w = LakeWriter(catalog.table("one"), pk=["id"])
         w.write(spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"))
-        # small-table merge path
+        # Arrow merge executor
         n = self._count(
             lambda: w.write(spark.createDataFrame([(3, "c")], "id long, v string"))
         )

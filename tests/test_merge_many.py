@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ducklake_kafka_connect_spark.lake import LakeCatalog, LakeWriter
+from ducklake_kafka_connect_spark.lake import writer as wmod
 
 
 def _rows(t):
@@ -54,8 +55,10 @@ class TestMergeManyEquivalence:
         ])
         assert cat.table("one").current_version() == v0 + 1
 
-    def test_pruning_path_matches_sequential(self, spark, cat):
-        # large enough (and multi-file) to leave the small-table fast path
+    def test_pruning_path_matches_sequential(self, spark, cat, monkeypatch):
+        # the pruning executor, with the Arrow merge barred
+        monkeypatch.setattr(wmod.LakeWriter, "_merge_arrow", lambda self, *a, **k: None)
+
         def big(tag, lo, hi, v):
             return spark.range(lo, hi).select(
                 F.col("id"),
@@ -67,11 +70,9 @@ class TestMergeManyEquivalence:
 
         seq_w = LakeWriter(
             cat.table("pseq"), pk=["id"], partition_by="month(created_at)",
-            small_table_fast_path=False,
         )
         grp_w = LakeWriter(
             cat.table("pgrp"), pk=["id"], partition_by="month(created_at)",
-            small_table_fast_path=False,
         )
         base = big("base", 0, 5000, 0)
         b1, b2 = big("b1", 1000, 2000, 7), big("b2", 1500, 6000, 13)

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ducklake_kafka_connect_spark.lake import LakeCatalog, LakeWriter
+from ducklake_kafka_connect_spark.lake import writer as wmod
 from ducklake_kafka_connect_spark.lake.maintenance import compact, vacuum
 from ducklake_kafka_connect_spark.lake.mor import (
     MODE_MOR,
@@ -184,12 +185,13 @@ def test_rename_interop_with_live_tombstones(spark, tmp_path):
     assert got[3] == "uu3" and len(got) == 10
 
 
-def test_cow_merge_on_mor_state_materializes_incrementally(spark, tmp_path):
+def test_cow_merge_on_mor_state_materializes_incrementally(spark, tmp_path, monkeypatch):
     _, t, w = _mk(spark, tmp_path, rows=10)
     w.merge(spark.createDataFrame([(3, "u3", 9)], "id int, val string, grp int"))
     assert mor_state(t.manifest())[1]
     # copy-on-write merge over the same table reads only VISIBLE rows
-    cow = LakeWriter(t, pk=["id"], small_table_fast_path=False)
+    monkeypatch.setattr(wmod.LakeWriter, "_merge_arrow", lambda self, *a, **k: None)
+    cow = LakeWriter(t, pk=["id"])
     cow.merge(spark.createDataFrame([(4, "c4", 9)], "id int, val string, grp int"))
     vals = _vals(t)
     assert vals[3] == "u3" and vals[4] == "c4" and len(vals) == 10
@@ -199,7 +201,7 @@ def test_cow_merge_on_mor_state_materializes_incrementally(spark, tmp_path):
 def test_small_table_cow_path_respects_visibility(spark, tmp_path):
     _, t, w = _mk(spark, tmp_path, rows=10)
     w.merge(spark.createDataFrame([(3, "u3", 9)], "id int, val string, grp int"))
-    # default writer (small-table fast path eligible) must not take the
+    # default writer (otherwise Arrow-merge eligible) must not take the
     # raw Arrow rewrite while tombstones are live
     cow = LakeWriter(t, pk=["id"])
     cow.merge(spark.createDataFrame([(5, "c5", 9)], "id int, val string, grp int"))

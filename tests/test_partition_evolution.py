@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ducklake_kafka_connect_spark.lake import LakeCatalog, LakeWriter
+from ducklake_kafka_connect_spark.lake import writer as wmod
 
 
 @pytest.fixture()
@@ -39,19 +40,20 @@ class TestPartitionEvolution:
         assert new_dirs and all("_pd_year_ts=" in d for d in new_dirs)
         assert t.read().count() == 20
 
-    def test_merge_finds_old_copies_across_spec_boundary(self, spark, cat):
+    def test_merge_finds_old_copies_across_spec_boundary(self, spark, cat, monkeypatch):
         """The partition-evolution correctness trap: an upsert after
         evolution must rewrite keys whose old copies sit in old-spec
         dirs, not silently insert duplicates."""
         t = cat.table("t")
         w = LakeWriter(t, pk=["k"], partition_by="month(ts)")
         w.write(_batch(spark, 0, 50, 1, "old"))
-        # push past the small-table rewrite-all fast path so the pruning
-        # path (the one with the partition-membership logic) runs
+        # several partition dirs: the pruning merge (the one with the
+        # partition-membership logic) runs
         for i in range(3):
             w.write(_batch(spark, 1000 + 50 * i, 1050 + 50 * i, 1, "fill"))
         t.evolve_partition_spec("year(ts), month(ts)")
-        w2 = LakeWriter(t, pk=["k"], small_table_fast_path=False)
+        monkeypatch.setattr(wmod.LakeWriter, "_merge_arrow", lambda self, *a, **k: None)
+        w2 = LakeWriter(t, pk=["k"])
         w2.merge(_batch(spark, 25, 75, 2, "new"))
         rows = {r.k: r.payload for r in t.read().select("k", "payload").collect()}
         assert t.read().count() == len(rows), "duplicate keys after evolution"

@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ducklake_kafka_connect_spark.lake import LakeCatalog, LakeWriter
+from ducklake_kafka_connect_spark.lake import writer as wmod
 from ducklake_kafka_connect_spark.lake.bloom import (
     membership_filter,
     membership_filter_spark,
@@ -158,21 +159,22 @@ class TestMergeReplansOnConcurrentCommit:
 
 
 class TestBloomTypeGuard:
-    def _setup(self, spark, catalog, name="bt"):
-        w = LakeWriter(catalog.table(name), pk=["id"], small_table_fast_path=False, auto_compact=False)
+    def _setup(self, spark, catalog, monkeypatch, name="bt"):
+        monkeypatch.setattr(wmod.LakeWriter, "_merge_arrow", lambda self, *a, **k: None)
+        w = LakeWriter(catalog.table(name), pk=["id"], auto_compact=False)
         w.write(spark.createDataFrame([(i, f"v{i}") for i in range(1, 6)], "id int, v string"))
         w.write(spark.createDataFrame([(i, f"v{i}") for i in range(10, 15)], "id int, v string"))
         return catalog.table(name)
 
-    def test_float_literal_on_int_pk_not_probed(self, spark, catalog):
-        t = self._setup(spark, catalog)
+    def test_float_literal_on_int_pk_not_probed(self, spark, catalog, monkeypatch):
+        t = self._setup(spark, catalog, monkeypatch)
         # pk = 5.0 is true in SQL for pk=5; bloom hashes '5.0' vs stored '5'
         kept, _ = t.prune_files("id = 5.0")
         assert any("s1-" in f for f in kept), "float literal must not bloom-prune the id=5 file"
         assert t.read(where="id = 5.0").count() == t.read().filter("id = 5.0").count() == 1
 
-    def test_matching_int_literal_still_probes(self, spark, catalog):
-        t = self._setup(spark, catalog, "bt2")
+    def test_matching_int_literal_still_probes(self, spark, catalog, monkeypatch):
+        t = self._setup(spark, catalog, monkeypatch, "bt2")
         kept_eq, pruned_eq = t.prune_files("id = 5")
         assert pruned_eq >= 1, "well-typed equality keeps bloom pruning active"
         assert t.read(where="id = 5").count() == 1

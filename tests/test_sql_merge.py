@@ -121,6 +121,40 @@ class TestGeneralPath:
         assert got[25] == (250, None), "unlisted column NULL on insert"
         assert got[5] == (10, "base")
 
+    def test_partial_set_nulls_take_the_arrow_merge(self, cat, monkeypatch):
+        """An INSERT that leaves ``s`` NULL against files declaring it NOT
+        NULL stays on the Arrow executor (the merge works on nullable
+        fields) and equals the pruning executor's result."""
+        from ducklake_kafka_connect_spark.lake import writer as wmod
+        from ducklake_kafka_connect_spark.metrics import REGISTRY
+
+        stmt = (
+            "MERGE INTO {t} USING sv_null AS s2 ON {t}.pk = s2.k "
+            "WHEN MATCHED THEN UPDATE SET v = s2.val "
+            "WHEN NOT MATCHED THEN INSERT (pk, v) VALUES (s2.k, s2.val)"
+        )
+        _src_view(cat, "sv_null", 10, 30)
+
+        def counts():
+            s = REGISTRY.snapshot()
+            return (
+                s["operations"].get("merge.arrowWrite", {}).get("count", 0),
+                s["counters"].get("merge.arrowFallback", 0),
+            )
+
+        _seed(cat, "t_arrow")
+        a0, f0 = counts()
+        cat.sql(stmt.format(t="t_arrow"))
+        a1, f1 = counts()
+        assert a1 == a0 + 1 and f1 == f0
+        monkeypatch.setattr(
+            wmod.LakeWriter, "_merge_arrow", lambda self, *a, **k: None
+        )
+        _seed(cat, "t_spark")
+        cat.sql(stmt.format(t="t_spark"))
+        assert _rows(cat, "t_arrow") == _rows(cat, "t_spark")
+        assert _rows(cat, "t_arrow")[25] == (250, None)
+
     def test_set_expr_may_reference_target(self, cat):
         _seed(cat)
         _src_view(cat, "sv2", 15, 25)
