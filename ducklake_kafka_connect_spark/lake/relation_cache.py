@@ -29,6 +29,8 @@ from weakref import WeakKeyDictionary
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..metrics import REGISTRY
+
 _MAX_ENTRIES = 512
 
 _CACHE: "WeakKeyDictionary[SparkSession, OrderedDict]" = WeakKeyDictionary()
@@ -68,54 +70,111 @@ def schema_relation(
     return df
 
 
-def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """``spark.createDataFrame(rows, schema)`` for driver-local rows
-    that builds an Arrow-backed LocalRelation instead of parallelizing
-    an RDD: collecting a 1-row status frame costs ~310 ms through the
-    RDD path but ~35 ms through Arrow, and the lake SQL surface returns
-    such frames from every DDL/DML statement. Result-identical: the
-    logical schema is checked against the requested one and ANY
-    mismatch (or any type Arrow cannot map — nested rows, raw
-    timestamps, dict rows) falls back to the plain path."""
-    try:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        st = T._parse_datatype_string(schema) if isinstance(schema, str) else schema
-        if not isinstance(st, T.StructType):
-            raise ValueError("not a struct schema")
-        rows = list(rows)
-        if not all(isinstance(r, (tuple, list)) for r in rows):
-            raise ValueError("rows must be tuples")
-        try:
-            arrow_schema = to_arrow_schema(st, timestamp_utc=True)
-        except TypeError:
-            arrow_schema = to_arrow_schema(st)
-        cols = list(zip(*rows)) if rows else [[] for _ in st.fields]
-        if len(cols) != len(st.fields):
-            raise ValueError("row arity mismatch")
-        tbl = pa.table(
-            {
-                f.name: pa.array(list(c), type=f.type)
-                for f, c in zip(arrow_schema, cols)
-            }
-        )
-        df = spark.createDataFrame(tbl)
-        if df.schema != st:
-            raise ValueError("arrow roundtrip changed the schema")
-        return df
-    except Exception:
-        return spark.createDataFrame(rows, schema)
+def _fallback(reason: str) -> None:
+    REGISTRY.inc(f"localPlan.fallback.{reason}")
 
 
 # Types whose collect()-value → pyarrow mapping is pinned by
 # tests/test_arrow_checks.py (incl. a non-UTC driver TZ run). Anything
-# else — nested rows, maps, intervals — falls back to toArrow.
+# else — nested rows, maps, intervals, arrays of timestamps — takes the
+# plain Spark path.
 _LOCAL_ARROW_SIMPLE = (
     T.LongType, T.IntegerType, T.ShortType, T.ByteType, T.DoubleType,
     T.FloatType, T.StringType, T.BooleanType, T.BinaryType, T.DateType,
     T.DecimalType,
 )
+
+
+def _arrow_mappable(st: T.StructType) -> bool:
+    for f in st.fields:
+        t = f.dataType
+        if isinstance(t, T.ArrayType):
+            if not isinstance(t.elementType, _LOCAL_ARROW_SIMPLE):
+                return False
+        elif not isinstance(
+            t, _LOCAL_ARROW_SIMPLE + (T.TimestampType, T.TimestampNTZType)
+        ):
+            return False
+    return True
+
+
+def _utc(vals: list) -> list:
+    """Naive datetimes are driver-local wall clock (the TimestampType
+    contract of both createDataFrame and collect()); pyarrow would read
+    them as UTC, so anchor them first."""
+    import datetime as _dt
+
+    return [
+        v.astimezone(_dt.timezone.utc)
+        if v is not None and v.tzinfo is None
+        else v
+        for v in vals
+    ]
+
+
+def _to_arrow(st: T.StructType, rows: list):
+    """Row tuples → pyarrow Table under the session's Arrow mapping of
+    ``st`` (nullability kept)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    asch = to_arrow_schema(st)  # timestamps as UTC, like toArrow()
+    cols = list(zip(*rows)) if rows else [() for _ in st.fields]
+    arrays = [
+        pa.array(
+            _utc(list(c)) if isinstance(sf.dataType, T.TimestampType) else list(c),
+            type=af.type,
+        )
+        for af, sf, c in zip(asch, st.fields, cols)
+    ]
+    return pa.Table.from_arrays(arrays, schema=asch)
+
+
+def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` for driver-local rows
+    that builds an Arrow-backed LocalRelation instead of parallelizing
+    an RDD: collecting a 1-row status frame costs ~310 ms through the
+    RDD path but ~35 ms through Arrow, and the lake SQL surface returns
+    such frames from every DDL/DML statement. Result-identical: rows
+    that are not tuples, types outside the pinned Arrow mapping, values
+    Arrow cannot convert, or a schema the round trip changes take the
+    plain path, each counted as ``localPlan.fallback.<reason>``; any
+    other error propagates."""
+    import pyarrow as pa
+
+    st = T._parse_datatype_string(schema) if isinstance(schema, str) else schema
+    rows = list(rows)
+    if not isinstance(st, T.StructType) or not _arrow_mappable(st):
+        _fallback("type")
+        return spark.createDataFrame(rows, schema)
+    if not all(
+        isinstance(r, (tuple, list)) and len(r) == len(st.fields) for r in rows
+    ):
+        _fallback("rows")
+        return spark.createDataFrame(rows, schema)
+    try:
+        tbl = _to_arrow(st, rows)
+    except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError):
+        tbl = None
+    if tbl is None or any(
+        not af.nullable and tbl.column(af.name).null_count for af in tbl.schema
+    ):
+        _fallback("values")
+        return spark.createDataFrame(rows, schema)
+    df = spark.createDataFrame(tbl)
+    if df.schema != st:
+        _fallback("schema")
+        return spark.createDataFrame(rows, schema)
+    return df
+
+
+def is_local_plan(df: DataFrame) -> bool:
+    """True when ``df``'s optimized plan folded to one LocalRelation:
+    its rows sit in the driver and every action on it runs no Spark
+    job. Optimizing evaluates the folded projections, so the check costs
+    what one driver-side evaluation of the frame costs."""
+    op = df._jdf.queryExecution().optimizedPlan()
+    return op.getClass().getSimpleName() == "LocalRelation"
 
 
 def local_plan_arrow(df: DataFrame):
@@ -130,52 +189,17 @@ def local_plan_arrow(df: DataFrame):
     are converted with the session's Arrow schema mapping; timestamps
     come back from collect() as driver-local naive datetimes and are
     re-anchored via astimezone(UTC), matching toArrow's UTC storage.
-    Any unexpected type/shape returns None (caller falls back)."""
-    try:
-        import datetime as _dt
-
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        op = df._jdf.queryExecution().optimizedPlan()
-        if op.getClass().getSimpleName() != "LocalRelation":
-            return None
-        st = df.schema
-        for f in st.fields:
-            t = f.dataType
-            if isinstance(t, T.ArrayType):
-                t = t.elementType
-            if not isinstance(
-                t, _LOCAL_ARROW_SIMPLE + (T.TimestampType, T.TimestampNTZType)
-            ) or (
-                isinstance(f.dataType, T.ArrayType)
-                and isinstance(t, (T.TimestampType, T.TimestampNTZType))
-            ):
-                return None
-        try:
-            asch = to_arrow_schema(st, timestamp_utc=True)
-        except TypeError:
-            asch = to_arrow_schema(st)
-        rows = df.collect()  # LocalTableScan executeCollect: zero jobs
-        cols = (
-            list(zip(*[tuple(r) for r in rows]))
-            if rows
-            else [[] for _ in st.fields]
-        )
-        arrays = []
-        for af, sf, c in zip(asch, st.fields, cols):
-            vals = list(c)
-            if isinstance(sf.dataType, T.TimestampType):
-                vals = [
-                    v.astimezone(_dt.timezone.utc)
-                    if v is not None and v.tzinfo is None
-                    else v
-                    for v in vals
-                ]
-            arrays.append(pa.array(vals, type=af.type))
-        return pa.Table.from_arrays(arrays, schema=asch)
-    except Exception:
+    A plan that is not a LocalRelation or a type outside the pinned
+    mapping returns None (counted as ``localPlan.fallback.<reason>``;
+    the caller falls back); any other error propagates."""
+    if not is_local_plan(df):
+        _fallback("not_local")
         return None
+    st = df.schema
+    if not _arrow_mappable(st):
+        _fallback("type")
+        return None
+    return _to_arrow(st, df.collect())  # LocalTableScan: zero jobs
 
 
 def empty_relation(spark: SparkSession, schema: T.StructType) -> DataFrame:

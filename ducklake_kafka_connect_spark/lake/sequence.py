@@ -14,8 +14,9 @@ A sequence is an unversioned catalog object: a CAS chain of
 Every allocation publishes generation N+1 with create-if-absent (the
 same lock-free protocol as the refs chain) and retries on conflict, so
 concurrent writers on EITHER backend (posix or object-store CAS) never
-hand out overlapping values. Superseded generations keep a short tail
-for racing readers and are GC'd opportunistically.
+hand out overlapping values. Superseded generations keep a short tail,
+and at least a minute, for racing readers and are GC'd
+opportunistically.
 
 Scale design
 ------------
@@ -40,10 +41,13 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 SEQ_DIR = "_sequences"
 #: superseded generations kept for racing readers
 GC_TAIL = 8
+#: and kept at least this long (see ``_gc``)
+GC_MIN_AGE_S = 60.0
 _DEFAULTS = {"increment": 1, "start": None, "min": None, "max": None,
              "cycle": False}
 
@@ -60,24 +64,32 @@ def _gen_path(root: str, name: str, gen: int) -> str:
     return os.path.join(_dir(root), f"{name}.g{gen:08d}.json")
 
 
-def _scan(fs, root: str, name: str) -> "tuple[int, dict] | None":
-    """(tip generation, state) or None if the sequence does not exist."""
+def _gens(fs, root: str, name: str) -> list[int]:
+    """The sequence's stored generations, ascending."""
     try:
         names = fs.list_names(_dir(root))
     except FileNotFoundError:
-        return None
+        return []
     pre, suf = f"{name}.g", ".json"
-    gens = sorted(
+    return sorted(
         int(n[len(pre):-len(suf)])
         for n in names
         if n.startswith(pre) and n.endswith(suf)
         and n[len(pre):-len(suf)].isdigit()
     )
-    for g in reversed(gens):  # tolerate a GC race: fall back one gen
-        payload = fs.try_read_bytes(_gen_path(root, name, g))
+
+
+def _scan(fs, root: str, name: str) -> "tuple[int, dict] | None":
+    """(tip generation, state) or None if the sequence does not exist.
+    A tip that GC removed between the LIST and the read means the LIST
+    was stale: list again."""
+    while True:
+        gens = _gens(fs, root, name)
+        if not gens:
+            return None
+        payload = fs.try_read_bytes(_gen_path(root, name, gens[-1]))
         if payload is not None:
-            return g, json.loads(payload)
-    return None
+            return gens[-1], json.loads(payload)
 
 
 def list_sequences(fs, root: str) -> list[str]:
@@ -217,19 +229,23 @@ def allocate(fs, root: str, name: str, count: int) -> int:
 
 
 def _gc(fs, root: str, name: str, tip: int) -> None:
-    floor = tip - GC_TAIL
-    if floor <= 0:
-        return
-    try:
-        names = fs.list_names(_dir(root))
-    except FileNotFoundError:
-        return
-    pre, suf = f"{name}.g", ".json"
-    for n in names:
-        if n.startswith(pre) and n.endswith(suf):
-            g = n[len(pre):-len(suf)]
-            if g.isdigit() and int(g) < floor:
-                fs.delete(os.path.join(_dir(root), n), missing_ok=True)
+    """Delete generations below ``tip - GC_TAIL`` that are at least
+    GC_MIN_AGE_S old. Deleting frees a generation's NAME: a caller
+    stalled between reading generation N and creating N+1 would succeed
+    on a freed N+1 and hand out a block the chain already gave away.
+    Threads contending for the GIL stall for dozens of generations, so
+    only a stall longer than the age floor can do that."""
+    now = time.time()
+    for g in _gens(fs, root, name):
+        if g >= tip - GC_TAIL:
+            break
+        path = _gen_path(root, name, g)
+        try:
+            if now - fs.file_mtime(path) < GC_MIN_AGE_S:
+                break  # younger generations are younger still
+        except FileNotFoundError:
+            continue
+        fs.delete(path, missing_ok=True)
 
 
 def partition_counts(df) -> list[int]:

@@ -21,25 +21,61 @@ decoupled offset commits (E8b).
 Config parity (``connect/DucklakeSinkConfig.java``): topic→table map
 with identity fallback (A2), per-table id-columns (D2), partition-by
 expressions (B12), auto-create flag default false (C8).
+
+Small micro-batches take one Spark job. ``process_batch`` persists the
+batch and probes it with ``limit(LOCAL_BATCH_MAX_ROWS + 1).toArrow()``
+(the job that fills the cache). A batch that fits is rebuilt on the
+driver as an Arrow-backed LocalRelation, and the unchanged decode → DLQ
+split → write code runs on it: Spark's ``ConvertToLocalRelation`` folds
+``from_json``, the split and the topic filters into local data, so the
+inference sample, the DLQ emptiness check and the Arrow merge's batch
+eval read driver-side rows with no job. Folded frames are not persisted
+(a persist would stop the folding) and skip the dedup window when their
+keys are already unique. Counters: ``ingest.localBatch`` per batch on
+the local path, ``ingest.localSkip.<reason>`` per batch that keeps the
+distributed path (``rows`` over the gate, ``schema`` the Arrow round
+trip cannot carry, ``not_local`` a rebuild that did not plan as a
+LocalRelation).
 """
 
 from __future__ import annotations
 
+import json
 import re
 from dataclasses import dataclass, field
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..lake import LakeCatalog, LakeWriter
+from ..lake.relation_cache import is_local_plan, local_plan_arrow, local_rows_df
 from ..lake.writer import _dedup_last_wins
+from ..metrics import REGISTRY
 from ..schema.reconcile import ReconcileError
 from ..sources.json_decode import CORRUPT_COL, decode_json, split_dlq
-from ..lake.relation_cache import local_rows_df
 
 _TOPIC_RE = re.compile(r"^[A-Za-z0-9._-]+$")
 
 DEFAULT_INLINING_ROW_LIMIT = 10_000
+
+# Largest batch process_batch runs on folded local plans. The folded
+# path evaluates the decode projection interpreted on one driver thread
+# each time a plan is optimized, so its cost grows with rows while the
+# jobs it saves are a fixed cost. Warm process_batch ms (JSON events
+# with 10 % updates, one topic, into a PK table created with 1k rows;
+# local[2] on a 4-core host; median of 5 batches per run, the range
+# over 1-3 runs):
+#     rows    local path   distributed path
+#      200     737 - 910        1063 - 1147
+#       1k     650 - 684         964 - 1108
+#       2k           926               1113
+#       4k     907 - 1044         798 - 1232
+#      10k    1509 - 1889         871 - 878
+# The break-even lies between 2k and 4k rows.
+LOCAL_BATCH_MAX_ROWS = 2048
 
 
 def parse_inlining_limit(value) -> int | None:
@@ -173,6 +209,53 @@ class IngestConfig:
         return self.tables.get(table, TableSpec())
 
 
+def _local_skip(reason: str) -> None:
+    REGISTRY.inc(f"ingest.localSkip.{reason}")
+
+
+def _local_batch(batch: DataFrame):
+    """→ (LocalRelation rebuild of ``batch``, its rows as pyarrow) when
+    the batch holds at most LOCAL_BATCH_MAX_ROWS rows, else None with
+    the decline counted. The bounded probe is the batch's one Spark job;
+    on a persisted batch it also fills the cache, so a large batch pays
+    for moving at most N+1 rows and its later readers hit the cache."""
+    try:
+        to_arrow_schema(batch.schema)
+    except TypeError:  # a type the Arrow round trip cannot carry
+        _local_skip("schema")
+        return None
+    rows = batch.limit(LOCAL_BATCH_MAX_ROWS + 1).toArrow()
+    if rows.num_rows > LOCAL_BATCH_MAX_ROWS:
+        _local_skip("rows")
+        return None
+    local = batch.sparkSession.createDataFrame(rows, schema=batch.schema)
+    # the Python frame echoes the requested schema; ask the JVM
+    if T.StructType.fromJson(json.loads(local._jdf.schema().json())) != batch.schema:
+        _local_skip("schema")
+        return None
+    if not is_local_plan(local):
+        _local_skip("not_local")
+        return None
+    REGISTRY.inc("ingest.localBatch")
+    return local, rows
+
+
+def _unique_keys(df: DataFrame, id_columns: list[str]) -> bool:
+    """True when folded ``df`` holds no duplicate ``id_columns`` key —
+    null keys count as equal, as in the dedup window's grouping. Read
+    from driver-side rows, no Spark job. Float keys (NaN and -0.0
+    group differently in Arrow and Spark) and array keys (Arrow cannot
+    group them) always take the window."""
+    keys = df.select(*id_columns)
+    window_only = (T.FloatType, T.DoubleType, T.ArrayType)
+    if any(isinstance(f.dataType, window_only) for f in keys.schema):
+        return False
+    tbl = local_plan_arrow(keys)
+    return tbl is not None and (
+        tbl.group_by(id_columns).aggregate([]).num_rows == tbl.num_rows
+    )
+
+
 class IngestPipeline:
     """foreachBatch sink writing decoded records into lake tables."""
 
@@ -190,11 +273,20 @@ class IngestPipeline:
         Topic slices are grouped by TARGET table first: N topics mapped
         onto one table land as ONE group commit (write_many) instead of
         N sequential merges — the reference consolidates cross-topic
-        batches per table the same way (BatchConsolidation)."""
+        batches per table the same way (BatchConsolidation).
+
+        Small batches run as one Spark job: a bounded probe collects at
+        most ``LOCAL_BATCH_MAX_ROWS + 1`` rows, and a batch that fits is
+        rebuilt as a LocalRelation. Decode, DLQ split, topic filters and
+        the Arrow merge's batch eval then fold into driver-side local
+        data (``ingest.localBatch``). A batch over the gate, a schema the
+        Arrow round trip changes, or a rebuild that is not a
+        LocalRelation keep the distributed path
+        (``ingest.localSkip.<reason>``)."""
         # r14 (guide §5 cache only what's reused): the incoming frame is
-        # consumed by the topic scan AND each topic slice's decode — an
-        # expensive source (a decoder/synthesizer upstream) would
-        # otherwise re-execute per consumer. Micro-batches are
+        # consumed by the probe, the topic scan AND each topic slice's
+        # decode — an expensive source (a decoder/synthesizer upstream)
+        # would otherwise re-execute per consumer. Micro-batches are
         # threshold-bounded (E1), so one persist for the duration of the
         # batch is safe; released in the finally.
         persisted = False
@@ -204,7 +296,18 @@ class IngestPipeline:
             else:
                 batch = batch.persist()
                 persisted = True
-            if "topic" in batch.columns:
+            local = _local_batch(batch)
+            if local is not None:
+                if persisted:
+                    batch.unpersist()
+                    persisted = False
+                batch, rows = local
+                topics = (
+                    pc.unique(rows.column("topic")).to_pylist()
+                    if "topic" in batch.columns
+                    else [None]
+                )
+            elif "topic" in batch.columns:
                 topics = [
                     r[0] for r in batch.select("topic").distinct().collect()
                 ]
@@ -233,21 +336,30 @@ class IngestPipeline:
         for part in parts:
             keep = [c for c in ("offset",) if c in part.columns]
             good, bad = self._decode(part, spec, keep, cached=cached)
+            # a decode that folded to local data re-evaluates driver-
+            # side for free; a persist would swap in an InMemoryRelation
+            # and stop every later fold
+            folded = is_local_plan(good)
             order_col = "offset" if "offset" in good.columns else None
-            if order_col and spec.id_columns:
+            if (
+                order_col
+                and spec.id_columns
+                and not (folded and _unique_keys(good, spec.id_columns))
+            ):
                 # offset orders last-write-wins dedup within the batch
                 # (SURVEY risk #2); it is a transport column — dedup
                 # here, then drop it so it never enters the table schema.
                 good = _dedup_last_wins(good, spec.id_columns, order_col)
-            # multi-consumer point: the decoded frame feeds the MERGE
-            # planning aggregate, the write, the constraint split, and
-            # the DLQ append — each is its own Spark job, and without a
-            # persist every one re-runs the full decode. Micro-batches
-            # are threshold-bounded (E1), so MEMORY_AND_DISK is safe;
-            # released in the finally below.
-            good = good.persist()
-            bad = bad.persist()
-            cached += [good, bad]
+            if not folded:
+                # multi-consumer point: the decoded frame feeds the MERGE
+                # planning aggregate, the write, the constraint split,
+                # and the DLQ append — each is its own Spark job, and
+                # without a persist every one re-runs the full decode.
+                # Micro-batches are threshold-bounded (E1), so
+                # MEMORY_AND_DISK is safe; released in the finally below.
+                good = good.persist()
+                bad = bad.persist()
+                cached += [good, bad]
             if spec.check_constraints:
                 good, bad = self._route_constraint_violations(good, bad, spec)
             if spec.transform is not None:
@@ -363,10 +475,12 @@ class IngestPipeline:
         to re-run the whole decode to materialize. Persisting the
         pre-split decoded frame (appended to ``cached`` so the caller's
         finally releases it) makes both sides cache reads — one decode
-        pass per batch part instead of two."""
+        pass per batch part instead of two. A decoded frame that folded
+        to a LocalRelation is left unpersisted: both sides re-evaluate
+        it driver-side with no job."""
 
         def _split(decoded, **kw):
-            if cached is not None:
+            if cached is not None and not is_local_plan(decoded):
                 decoded = decoded.persist()
                 cached.append(decoded)
             return split_dlq(decoded, **kw)

@@ -11,10 +11,12 @@ table content whether the fast path or the Spark path wrote it."""
 import datetime
 import decimal
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F, types as T
 
 from ducklake_kafka_connect_spark.lake import LakeCatalog, LakeWriter
+from ducklake_kafka_connect_spark.metrics import REGISTRY
 from ducklake_kafka_connect_spark.lake.relation_cache import (
     local_plan_arrow,
     local_rows_df,
@@ -79,22 +81,58 @@ def test_zero_jobs(spark):
     assert after == before, "local_plan_arrow scheduled a Spark job"
 
 
+def _fallbacks(reason):
+    return REGISTRY.counters.get(f"localPlan.fallback.{reason}", 0)
+
+
 def test_non_local_plan_falls_back(spark):
+    before = _fallbacks("not_local")
     assert local_plan_arrow(spark.range(10)) is None  # Range, not LocalRelation
-    ev = spark.range(5).selectExpr("id", "cast(id as string) s")
-    assert local_plan_arrow(ev.filter("id > 1")) is None or True  # may fold
+    assert _fallbacks("not_local") == before + 1
+    ev = spark.range(5).selectExpr("id", "cast(id as string) s").filter("id > 1")
+    got = local_plan_arrow(ev)  # may fold; if it does, it must be exact
+    assert got is None or got.equals(ev.toArrow())
     # a distributed scan never qualifies
     assert local_plan_arrow(spark.range(100).repartition(4)) is None
 
 
 def test_unsupported_type_falls_back(spark):
-    df = local_rows_df(
-        spark, [({"k": 1},)],
-        T.StructType(
-            [T.StructField("m", T.MapType(T.StringType(), T.LongType()))]
-        ),
+    # a map projected over a LocalRelation folds, but maps are outside
+    # the pinned type mapping
+    df = local_rows_df(spark, [(1,)], "id long").select(
+        F.create_map(F.lit("k"), F.col("id")).alias("m")
     )
+    before = _fallbacks("type")
     assert local_plan_arrow(df) is None
+    assert _fallbacks("type") == before + 1
+
+
+def test_py4j_error_surfaces(spark, monkeypatch):
+    """An error that is not a named decline propagates instead of
+    silently taking the fallback path."""
+    from py4j.protocol import Py4JError
+    from pyspark.sql import SparkSession
+
+    df = local_rows_df(spark, [(1, "a")], "id long, s string")
+
+    class _Broken:
+        def queryExecution(self):
+            raise Py4JError("injected")
+
+    df._jdf = _Broken()
+    with pytest.raises(Py4JError, match="injected"):
+        local_plan_arrow(df)
+
+    plain = SparkSession.createDataFrame
+
+    def arrow_breaks(self, data, *a, **kw):
+        if isinstance(data, pa.Table):
+            raise Py4JError("injected")
+        return plain(self, data, *a, **kw)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", arrow_breaks)
+    with pytest.raises(Py4JError, match="injected"):
+        local_rows_df(spark, [(1, "a")], "id long, s string")
 
 
 def test_append_fast_path_content_equal(spark, tmp_path):
