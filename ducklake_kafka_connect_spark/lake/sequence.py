@@ -14,9 +14,21 @@ A sequence is an unversioned catalog object: a CAS chain of
 Every allocation publishes generation N+1 with create-if-absent (the
 same lock-free protocol as the refs chain) and retries on conflict, so
 concurrent writers on EITHER backend (posix or object-store CAS) never
-hand out overlapping values. Superseded generations keep a short tail,
-and at least a minute, for racing readers and are GC'd
-opportunistically.
+hand out overlapping values. Superseded generations keep a short tail
+for racing readers and are GC'd opportunistically.
+
+GC frees a generation's NAME: a writer stalled between reading
+generation N and creating N+1 can succeed on a freed N+1 after the
+chain moved on, landing below the tip with a block the chain already
+gave away. Such a create implies a live generation >= N+1+GC_TAIL, and
+the live maximum only grows, so every allocation lists again after its
+create; when it finds one that far up whose ancestor-id ring
+(``ANCESTOR_RING`` ids per generation object, as in the refs chain)
+does not prove descent from its own object, it retracts the create and
+retries. A create that did become the tip and then saw GC_TAIL
+descendants before that LIST is proved by the ring and kept; only
+beyond ``ANCESTOR_RING`` descendants is it retracted, which leaves a
+gap in the sequence but never a duplicate.
 
 Scale design
 ------------
@@ -41,13 +53,13 @@ from __future__ import annotations
 
 import json
 import os
-import time
+import uuid
 
 SEQ_DIR = "_sequences"
 #: superseded generations kept for racing readers
 GC_TAIL = 8
-#: and kept at least this long (see ``_gc``)
-GC_MIN_AGE_S = 60.0
+#: ancestor ids each generation object carries (see the module docstring)
+ANCESTOR_RING = 64
 _DEFAULTS = {"increment": 1, "start": None, "min": None, "max": None,
              "cycle": False}
 
@@ -90,6 +102,34 @@ def _scan(fs, root: str, name: str) -> "tuple[int, dict] | None":
         payload = fs.try_read_bytes(_gen_path(root, name, gens[-1]))
         if payload is not None:
             return gens[-1], json.loads(payload)
+
+
+def _payload(state: dict, prev: "dict | None") -> "tuple[str, str]":
+    """(object id, JSON) of a generation holding ``state`` that follows
+    ``prev``, the tip generation's object it was computed from."""
+    my_id = uuid.uuid4().hex
+    ancestors = []
+    if prev is not None and prev.get("id"):
+        ancestors = [prev["id"], *prev.get("ancestors", [])][:ANCESTOR_RING]
+    return my_id, json.dumps({**state, "id": my_id, "ancestors": ancestors})
+
+
+def _orphaned(fs, root: str, name: str, gen: int, gen_id: str) -> bool:
+    """True when the object ``gen_id`` just created at ``gen`` may sit
+    below the tip on a GC-freed name: a generation at least GC_TAIL
+    above it exists whose ancestor ring does not prove descent from it
+    (see the module docstring). A tip GC'd between the LIST and the
+    read means the LIST was stale: list again."""
+    while True:
+        gens = _gens(fs, root, name)
+        top = gens[-1] if gens else gen
+        if top < gen + GC_TAIL:
+            return False
+        raw = fs.try_read_bytes(_gen_path(root, name, top))
+        if raw is not None:
+            anc = json.loads(raw).get("ancestors") or []
+            d = top - gen
+            return not (d <= len(anc) and anc[d - 1] == gen_id)
 
 
 def list_sequences(fs, root: str) -> list[str]:
@@ -157,7 +197,8 @@ def create_sequence(
     }
     fs.ensure_dir(_dir(root))
     gen = existing[0] + 1 if existing is not None else 0
-    while not fs.put_if_absent(_gen_path(root, name, gen), json.dumps(state)):
+    _, payload = _payload(state, existing[1] if existing is not None else None)
+    while not fs.put_if_absent(_gen_path(root, name, gen), payload):
         gen += 1
     _gc(fs, root, name, gen)
 
@@ -219,33 +260,24 @@ def allocate(fs, root: str, name: str, count: int) -> int:
                     f"nextval('{name}'): block of {count} larger than "
                     f"the sequence's full cycle"
                 )
-        new_state = {**state, "next": last + inc}
-        if fs.put_if_absent(
-            _gen_path(root, name, gen + 1), json.dumps(new_state)
-        ):
-            _gc(fs, root, name, gen + 1)
-            return first
-        # lost the CAS — another writer advanced the chain; replan
+        # _payload replaces the copied id and ancestors
+        my_id, payload = _payload({**state, "next": last + inc}, state)
+        target = gen + 1
+        if not fs.put_if_absent(_gen_path(root, name, target), payload):
+            continue  # lost the CAS — another writer advanced; replan
+        if _orphaned(fs, root, name, target, my_id):
+            # created a GC-freed name below the tip: retract, replan
+            fs.delete(_gen_path(root, name, target), missing_ok=True)
+            continue
+        _gc(fs, root, name, target)
+        return first
 
 
 def _gc(fs, root: str, name: str, tip: int) -> None:
-    """Delete generations below ``tip - GC_TAIL`` that are at least
-    GC_MIN_AGE_S old. Deleting frees a generation's NAME: a caller
-    stalled between reading generation N and creating N+1 would succeed
-    on a freed N+1 and hand out a block the chain already gave away.
-    Threads contending for the GIL stall for dozens of generations, so
-    only a stall longer than the age floor can do that."""
-    now = time.time()
     for g in _gens(fs, root, name):
         if g >= tip - GC_TAIL:
             break
-        path = _gen_path(root, name, g)
-        try:
-            if now - fs.file_mtime(path) < GC_MIN_AGE_S:
-                break  # younger generations are younger still
-        except FileNotFoundError:
-            continue
-        fs.delete(path, missing_ok=True)
+        fs.delete(_gen_path(root, name, g), missing_ok=True)
 
 
 def partition_counts(df) -> list[int]:

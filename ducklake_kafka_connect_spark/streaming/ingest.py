@@ -31,11 +31,15 @@ split → write code runs on it: Spark's ``ConvertToLocalRelation`` folds
 inference sample, the DLQ emptiness check and the Arrow merge's batch
 eval read driver-side rows with no job. Folded frames are not persisted
 (a persist would stop the folding) and skip the dedup window when their
-keys are already unique. Counters: ``ingest.localBatch`` per batch on
+keys are already unique. The probe is bounded in bytes as well
+as rows: it ships a row's values only when the row is at most
+``ARROW_MERGE_MAX_BYTES // (LOCAL_BATCH_MAX_ROWS + 1)`` bytes (nulls
+otherwise), so it never moves more than about the Arrow merge's own
+byte cap to the driver. Counters: ``ingest.localBatch`` per batch on
 the local path, ``ingest.localSkip.<reason>`` per batch that keeps the
-distributed path (``rows`` over the gate, ``schema`` the Arrow round
-trip cannot carry, ``not_local`` a rebuild that did not plan as a
-LocalRelation).
+distributed path (``rows`` over the gate, ``bytes`` a row over the
+per-row byte cap, ``schema`` the Arrow round trip cannot carry,
+``not_local`` a rebuild that did not plan as a LocalRelation).
 """
 
 from __future__ import annotations
@@ -44,6 +48,7 @@ import json
 import re
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,7 +57,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..lake import LakeCatalog, LakeWriter
 from ..lake.relation_cache import is_local_plan, local_plan_arrow, local_rows_df
-from ..lake.writer import _dedup_last_wins
+from ..lake.writer import ARROW_MERGE_MAX_BYTES, _dedup_last_wins
 from ..metrics import REGISTRY
 from ..schema.reconcile import ReconcileError
 from ..sources.json_decode import CORRUPT_COL, decode_json, split_dlq
@@ -213,21 +218,84 @@ def _local_skip(reason: str) -> None:
     REGISTRY.inc(f"ingest.localSkip.{reason}")
 
 
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _has_map(dt: T.DataType) -> bool:
+    if isinstance(dt, T.ArrayType):
+        return _has_map(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return any(_has_map(f.dataType) for f in dt.fields)
+    return isinstance(dt, T.MapType)
+
+
+def _value_bytes(expr: str, dt: T.DataType, depth: int = 0) -> str:
+    """SQL for the driver bytes ``expr`` costs in one row: octets of
+    its strings and binaries, nested ones included, plus 8 per
+    fixed-width value (maps never get here, see ``_has_map``). Built as
+    one SQL string: a Column tree costs a Py4J round trip per node,
+    about 80 ms per probe."""
+    if isinstance(dt, (T.StringType, T.BinaryType)):
+        return f"coalesce(octet_length({expr}), 0)"
+    if isinstance(dt, T.ArrayType):
+        acc, x = f"acc{depth}", f"x{depth}"
+        inner = _value_bytes(x, dt.elementType, depth + 1)
+        return f"coalesce(aggregate({expr}, 0L, ({acc}, {x}) -> {acc} + {inner}), 0L)"
+    if isinstance(dt, T.StructType):
+        return " + ".join(
+            [_value_bytes(f"{expr}.{_quote(f.name)}", f.dataType, depth) for f in dt.fields]
+        ) or "0"
+    return "8"
+
+
 def _local_batch(batch: DataFrame):
     """→ (LocalRelation rebuild of ``batch``, its rows as pyarrow) when
-    the batch holds at most LOCAL_BATCH_MAX_ROWS rows, else None with
-    the decline counted. The bounded probe is the batch's one Spark job;
-    on a persisted batch it also fills the cache, so a large batch pays
-    for moving at most N+1 rows and its later readers hit the cache."""
+    the batch holds at most LOCAL_BATCH_MAX_ROWS rows of at most
+    ``ARROW_MERGE_MAX_BYTES // (LOCAL_BATCH_MAX_ROWS + 1)`` bytes each,
+    else None with the decline counted. The bounded probe is the
+    batch's one Spark job; on a persisted batch it also fills the
+    cache, so a large batch pays for moving at most N+1 rows and its
+    later readers hit the cache. A row over the byte cap ships nulls
+    and a flag instead of its values, so the probe moves at most about
+    ARROW_MERGE_MAX_BYTES (the most the Arrow merge takes) whatever the
+    record size."""
     try:
         to_arrow_schema(batch.schema)
     except TypeError:  # a type the Arrow round trip cannot carry
         _local_skip("schema")
         return None
-    rows = batch.limit(LOCAL_BATCH_MAX_ROWS + 1).toArrow()
+    if _has_map(batch.schema):
+        # createDataFrame from Arrow reads a null map<_, array<_>> as {}
+        _local_skip("schema")
+        return None
+    row_cap = ARROW_MERGE_MAX_BYTES // (LOCAL_BATCH_MAX_ROWS + 1)
+    size = " + ".join(
+        _value_bytes(_quote(f.name), f.dataType) for f in batch.schema.fields
+    )
+    over = f"({size}) > {row_cap}"
+    probe = batch.selectExpr(
+        over,
+        *[f"if({over}, null, {_quote(c)}) AS {_quote(c)}" for c in batch.columns],
+    )
+    rows = probe.limit(LOCAL_BATCH_MAX_ROWS + 1).toArrow()
     if rows.num_rows > LOCAL_BATCH_MAX_ROWS:
         _local_skip("rows")
         return None
+    if pc.any(rows.column(0)).as_py():
+        _local_skip("bytes")
+        return None
+    # the flag's projection made every column nullable; restore the
+    # source's nullability (no row was nulled past this point)
+    rows = pa.Table.from_arrays(
+        rows.columns[1:],
+        schema=pa.schema(
+            [
+                af.with_nullable(sf.nullable)
+                for af, sf in zip(list(rows.schema)[1:], batch.schema.fields)
+            ]
+        ),
+    )
     local = batch.sparkSession.createDataFrame(rows, schema=batch.schema)
     # the Python frame echoes the requested schema; ask the JVM
     if T.StructType.fromJson(json.loads(local._jdf.schema().json())) != batch.schema:
@@ -276,13 +344,13 @@ class IngestPipeline:
         batches per table the same way (BatchConsolidation).
 
         Small batches run as one Spark job: a bounded probe collects at
-        most ``LOCAL_BATCH_MAX_ROWS + 1`` rows, and a batch that fits is
-        rebuilt as a LocalRelation. Decode, DLQ split, topic filters and
-        the Arrow merge's batch eval then fold into driver-side local
-        data (``ingest.localBatch``). A batch over the gate, a schema the
-        Arrow round trip changes, or a rebuild that is not a
-        LocalRelation keep the distributed path
-        (``ingest.localSkip.<reason>``)."""
+        most ``LOCAL_BATCH_MAX_ROWS + 1`` rows, each capped in bytes, and
+        a batch that fits is rebuilt as a LocalRelation. Decode, DLQ
+        split, topic filters and the Arrow merge's batch eval then fold
+        into driver-side local data (``ingest.localBatch``). A batch over
+        the gate, a row over the byte cap, a schema the Arrow round trip
+        changes, or a rebuild that is not a LocalRelation keep the
+        distributed path (``ingest.localSkip.<reason>``)."""
         # r14 (guide §5 cache only what's reused): the incoming frame is
         # consumed by the probe, the topic scan AND each topic slice's
         # decode — an expensive source (a decoder/synthesizer upstream)
@@ -335,11 +403,10 @@ class IngestPipeline:
         cached: list[DataFrame] = []
         for part in parts:
             keep = [c for c in ("offset",) if c in part.columns]
-            good, bad = self._decode(part, spec, keep, cached=cached)
             # a decode that folded to local data re-evaluates driver-
             # side for free; a persist would swap in an InMemoryRelation
             # and stop every later fold
-            folded = is_local_plan(good)
+            good, bad, folded = self._decode(part, spec, keep, cached=cached)
             order_col = "offset" if "offset" in good.columns else None
             if (
                 order_col
@@ -468,7 +535,8 @@ class IngestPipeline:
     ):
         """Per-table format dispatch (the reference's value.converter
         choice: JsonConverter / AvroConverter / ArrowIpcConverter, plus
-        the mixed per-batch sniff of A7).
+        the mixed per-batch sniff of A7) → (good, bad, folded), where
+        ``folded`` says the decoded frame planned as a LocalRelation.
 
         ``cached`` (r14, guide §2.4): the good/bad DLQ split consumes
         the SAME decoded frame twice, and each side's own persist used
@@ -480,10 +548,11 @@ class IngestPipeline:
         it driver-side with no job."""
 
         def _split(decoded, **kw):
-            if cached is not None and not is_local_plan(decoded):
+            folded = is_local_plan(decoded)
+            if cached is not None and not folded:
                 decoded = decoded.persist()
                 cached.append(decoded)
-            return split_dlq(decoded, **kw)
+            return (*split_dlq(decoded, **kw), folded)
 
         if spec.format == "json":
             from ..sources.json_decode import conflict_note
@@ -551,7 +620,7 @@ class IngestPipeline:
             bad = local_rows_df(good.sparkSession, 
                 [], "raw_value string, error string, _dlq_at timestamp"
             )
-            return good, bad
+            return good, bad, False
         from ..sources.mixed_format import decode_mixed
 
         decoded = decode_mixed(part, value_col="value")
@@ -560,7 +629,7 @@ class IngestPipeline:
         bad = local_rows_df(decoded.sparkSession, 
             [], "raw_value string, error string, _dlq_at timestamp"
         )
-        return decoded, bad
+        return decoded, bad, False
 
     # -- DLQ reprocessing (operational replay loop) --
 

@@ -8,7 +8,9 @@ across malformed/empty/null payloads, in-batch duplicate keys, schema
 evolution, two topics → two tables, a CHECK constraint plus an SMT, a
 decode that does not fold (proto: persisted, decoded once) and a
 replayed epoch; (c) a batch one row over the gate keeps the distributed
-path and counts ``ingest.localSkip.rows``."""
+path and counts ``ingest.localSkip.rows``, and a batch with one record
+over the per-row byte cap keeps it too and counts
+``ingest.localSkip.bytes``."""
 
 import json
 
@@ -178,3 +180,32 @@ def test_gate(spark, tmp_path, monkeypatch, over):
     assert delta("ingest.localSkip.rows") == over
     assert delta("ingest.localBatch") == 1 - over
     assert cat.table("events").row_count() == 3 + over
+
+
+def test_large_record_keeps_distributed_path(spark, tmp_path):
+    """The probe ships no row over the per-row byte cap: a batch with
+    one large record declines on bytes, and every record still lands."""
+    cap = ingest.ARROW_MERGE_MAX_BYTES // (ingest.LOCAL_BATCH_MAX_ROWS + 1)
+    big = {"id": 99, "name": "x" * (cap + 1)}
+    cat = LakeCatalog(spark, str(tmp_path))
+    before = dict(REGISTRY.counters)
+    _pipeline(cat).process_batch(
+        spark.createDataFrame(_trickle(range(3)) + [_json("t1", 99, big)], KAFKA), 0
+    )
+
+    def delta(name):
+        return REGISTRY.counters.get(name, 0) - before.get(name, 0)
+
+    assert delta("ingest.localSkip.bytes") == 1
+    assert delta("ingest.localBatch") == 0
+    got = {r["id"]: r["name"] for r in cat.table("events").read().collect()}
+    assert got == {0: "n0", 1: "n1", 2: "n2", 99: big["name"]}
+
+
+def test_map_column_declines(spark):
+    """A null map<_, array<_>> comes back from the Arrow rebuild as {}:
+    such batches keep the distributed path."""
+    before = REGISTRY.counters.get("ingest.localSkip.schema", 0)
+    df = spark.createDataFrame([(1, None)], "k int, m map<string,array<string>>")
+    assert ingest._local_batch(df) is None
+    assert REGISTRY.counters.get("ingest.localSkip.schema", 0) == before + 1

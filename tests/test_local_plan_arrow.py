@@ -97,8 +97,17 @@ def test_non_local_plan_falls_back(spark):
 
 
 def test_unsupported_type_falls_back(spark):
-    # a map projected over a LocalRelation folds, but maps are outside
-    # the pinned type mapping
+    # local_rows_df: a map schema takes the plain createDataFrame
+    before = _fallbacks("type")
+    map_schema = T.StructType(
+        [T.StructField("m", T.MapType(T.StringType(), T.LongType()))]
+    )
+    plain = local_rows_df(spark, [({"k": 1},)], map_schema)
+    assert _fallbacks("type") == before + 1
+    assert plain.schema == map_schema
+    assert [r["m"] for r in plain.collect()] == [{"k": 1}]
+    # local_plan_arrow: a map projected over a LocalRelation folds, but
+    # maps are outside the pinned type mapping
     df = local_rows_df(spark, [(1,)], "id long").select(
         F.create_map(F.lit("k"), F.col("id")).alias("m")
     )

@@ -227,3 +227,59 @@ class TestConcurrentAllocation:
         assert len(out) == 4 * 20 * 5
         assert len(set(out)) == len(out)  # no block ever handed out twice
         assert sorted(out) == list(range(1, 1 + len(out)))
+
+
+class _StallOnce:
+    """The catalog fs, except that the first ``put_if_absent`` runs
+    ``stall`` before (``when="pre"``) or after (``"post"``) the create:
+    the other writer's progress while this one is stalled."""
+
+    def __init__(self, fs, stall, when):
+        self._fs, self._stall, self._when = fs, stall, when
+
+    def __getattr__(self, attr):
+        return getattr(self._fs, attr)
+
+    def put_if_absent(self, path, data):
+        stall, self._stall = self._stall, None
+        if stall and self._when == "pre":
+            stall()
+        ok = self._fs.put_if_absent(path, data)
+        if stall and self._when == "post":
+            stall()
+        return ok
+
+
+class TestAllocationInterleave:
+    """Deterministic interleaves of one allocation against another
+    writer that advances the chain past GC_TAIL while it is stalled."""
+
+    def _run(self, cat, when):
+        seq.create_sequence(cat.fs, cat.root, "c")
+        other: list[int] = []
+
+        def interloper():
+            for _ in range(seq.GC_TAIL + 2):
+                other.append(seq.allocate(cat.fs, cat.root, "c", 5))
+
+        stalled = _StallOnce(cat.fs, interloper, when)
+        mine = seq.allocate(stalled, cat.root, "c", 5)
+        values = [v for lo in [*other, mine] for v in range(lo, lo + 5)]
+        return mine, values
+
+    def test_create_on_a_freed_name_is_retracted(self, cat):
+        """Read the tip, stall while GC frees the next generation's
+        name, then create it: the create landed below the tip with a
+        block already given away, so it is retracted and replanned."""
+        mine, values = self._run(cat, "pre")
+        assert len(set(values)) == len(values), "a block was handed out twice"
+        assert sorted(values) == list(range(1, 1 + len(values)))
+        assert mine == 1 + 5 * (seq.GC_TAIL + 2)
+
+    def test_create_with_later_descendants_is_kept(self, cat):
+        """Create the tip, then stall while GC_TAIL+2 descendants land
+        before the check: the ancestor ring proves descent, so the block
+        is kept (no retraction, no gap)."""
+        mine, values = self._run(cat, "post")
+        assert mine == 1
+        assert sorted(values) == list(range(1, 1 + len(values)))
