@@ -1566,10 +1566,12 @@ class LakeTable:
                 keys = list(src_files)
                 abs_paths = list(src_files)
             stats = dict(m.file_stats)
-            for key, ap in zip(keys, abs_paths):
-                s = _harvest_one(ap, stat_cols, None)
-                if s:
-                    stats[key] = {inv.get(c, c): v for c, v in s.items()}
+            harvested = _count_harvest(
+                (key, *_harvest_one(ap, stat_cols, None))
+                for key, ap in zip(keys, abs_paths)
+            )
+            for key, s in harvested.items():
+                stats[key] = {inv.get(c, c): v for c, v in s.items()}
             new_files = {k: list(v) for k, v in m.files.items()}
             new_files.setdefault("", []).extend(keys)
             nm = Manifest(
@@ -2557,22 +2559,17 @@ class LakeTable:
         if not abs_files or (not stat_cols and not bloom_col):
             return {}
         if len(abs_files) <= self.HARVEST_SPARK_THRESHOLD:
-            return {
-                rel: s
-                for rel, s in zip(
-                    rel_files,
-                    (_harvest_one(p, stat_cols, bloom_col) for p in abs_files),
-                )
-                if s
-            }
+            return _count_harvest(
+                (rel, *_harvest_one(p, stat_cols, bloom_col))
+                for p, rel in zip(abs_files, rel_files)
+            )
         sc = self.spark.sparkContext
         pairs = list(zip(abs_files, rel_files))
-        results = (
+        return _count_harvest(
             sc.parallelize(pairs, min(len(pairs), sc.defaultParallelism))
-            .map(lambda t: (t[1], _harvest_one(t[0], stat_cols, bloom_col)))
+            .map(lambda t: (t[1], *_harvest_one(t[0], stat_cols, bloom_col)))
             .collect()
         )
-        return {rel: s for rel, s in results if s}
 
 
 MAX_STATS_COLUMNS = 12
@@ -2589,7 +2586,9 @@ def _bloom_column(schema: T.StructType, pk: list[str]) -> str | None:
     return pk[0] if ok else None
 
 
-def _harvest_one(abs_path: str, stat_cols: list[str], bloom_col: str | None) -> dict:
+def _harvest_one(
+    abs_path: str, stat_cols: list[str], bloom_col: str | None
+) -> tuple[dict, bool]:
     """Footer stats + bloom sidecar for one data file (runs on the driver
     for small commits, inside an executor task for large ones). One
     ParquetFile open serves both passes: stats come from the footer
@@ -2597,41 +2596,61 @@ def _harvest_one(abs_path: str, stat_cols: list[str], bloom_col: str | None) -> 
     file open (on an object store: one GET for the footer, one ranged
     GET for the column chunk). The reserved ``__bytes`` entry records
     the file size so later merges can size their rewrite set from the
-    manifest alone — no per-file stat calls in the planning path."""
-    try:
-        import pyarrow.parquet as pq
+    manifest alone — no per-file stat calls in the planning path.
 
+    Returns (stats, bloom_skipped): stats are {} when the file cannot be
+    opened as parquet, and bloom_skipped says a wanted sidecar was not
+    written. Both are counted on the driver by :func:`_count_harvest`."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
         pf = pq.ParquetFile(abs_path)
-    except Exception:
-        return {}
+    except (OSError, pa.ArrowInvalid):
+        return {}, bool(bloom_col)
     s = _footer_stats_of(pf, stat_cols)
     try:
         s["__bytes"] = os.path.getsize(abs_path)
     except OSError:
         pass
-    if bloom_col:
-        _write_bloom_sidecar(pf, abs_path, bloom_col)
-    return s
+    return s, bool(bloom_col) and not _write_bloom_sidecar(pf, abs_path, bloom_col)
 
 
-def _write_bloom_sidecar(pf, path: str, column: str) -> None:
+def _count_harvest(results) -> dict:
+    """{rel: stats} from (rel, stats, bloom_skipped) harvest results.
+    A file with no stats is never pruned — and prices at the Arrow
+    merge's byte cap — so each is counted (``write.harvestSkip``), as is
+    each missing Bloom sidecar (``write.bloomSkip``)."""
+    out = {}
+    for rel, s, bloom_skipped in results:
+        if s:
+            out[rel] = s
+        else:
+            REGISTRY.inc("write.harvestSkip")
+        if bloom_skipped:
+            REGISTRY.inc("write.bloomSkip")
+    return out
+
+
+def _write_bloom_sidecar(pf, path: str, column: str) -> bool:
+    """Write ``path``'s PK Bloom sidecar; False when it was skipped (the
+    column is absent, or the file or sidecar could not be read or
+    written). A missing sidecar only costs pruning: probes keep the file."""
+    import pyarrow as pa
+
+    from .bloom import write_sidecar
+
+    if pf.schema_arrow.get_field_index(column) < 0:
+        return False
     try:
-        from .bloom import write_sidecar
-
-        if pf.schema_arrow.get_field_index(column) < 0:
-            return
-        tbl = pf.read(columns=[column])
-        if tbl.num_columns != 1:
-            return
-        col = tbl.column(0)
-        import pyarrow as pa
-
+        col = pf.read(columns=[column]).column(0)
         if col.null_count == 0 and pa.types.is_integer(col.type):
             write_sidecar(path, col.combine_chunks().to_numpy())
         else:
             write_sidecar(path, col.to_pylist())
-    except Exception:
-        pass  # blooms are an optimization; never fail a write over one
+    except (OSError, pa.ArrowInvalid):
+        return False
+    return True
 
 
 def _stats_columns(schema: T.StructType, pk: list[str]) -> list[str]:

@@ -12,13 +12,14 @@ Parity targets (reference ``ingestor/DucklakeWriter.java``):
 
 MERGE runs on one of two copy-on-write executors, or as merge-on-read:
 
-- **Driver-side Arrow merge** (``_merge_arrow``) for tables with one
-  partition dir, at most MERGE_SMALL_MANIFEST_FILES files and
-  ARROW_MERGE_MAX_BYTES, no merge-on-read state, and a batch that does
-  not evolve the schema: one Spark job evaluates the batch, the merge,
-  parquet write and stats harvest run in-process — the latency shape of
-  the reference's in-process DuckDB ``MERGE INTO``. Every decline is a
-  named check (``merge.arrowSkip.<reason>`` before the batch is
+- **Driver-side Arrow merge** (``_merge_arrow``) for tables of at most
+  ARROW_MERGE_MAX_BYTES, partitioned or not, with no merge-on-read state
+  and a batch that does not evolve the schema: one Spark job evaluates
+  the batch, the merge, parquet write and stats harvest run in-process —
+  the latency shape of the reference's in-process DuckDB ``MERGE INTO``.
+  It rewrites only the files holding a key the batch updates or deletes
+  and writes one file per partition dir it lands rows in. Every decline
+  is a named check (``merge.arrowSkip.<reason>`` before the batch is
   evaluated, ``merge.arrowFallback.<reason>`` after).
 - **Spark pruning merge** (``_merge_once``) for everything else.
 - **Merge-on-read** (``_merge_mor_once``) under
@@ -73,7 +74,6 @@ from .table import CommitConflict, LakeTable, Manifest, is_complex, to_physical_
 class ConstraintViolation(ValueError):
     """A batch failed a writer CHECK constraint; nothing was written."""
 
-HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 # Above this many affected partitions, skip per-partition pruning and
 # rewrite via a full-table pass (the OR-filter would not be worth it).
 MAX_PRUNED_PARTITIONS = 1024
@@ -83,8 +83,8 @@ MERGE_BROADCAST_ROWS = 4_000_000
 # rewrite set (keys already collected by the summarize job)
 MERGE_BLOOM_PROBE_KEYS = 100_000
 # Manifests at or below this many data files skip partition/outside-file
-# pruning entirely: bloom-probing and rewriting a handful of files is
-# cheaper than any extra planning job. Also the Arrow merge's file cap.
+# pruning in the pruning merge: bloom-probing and rewriting a handful of
+# files is cheaper than any extra planning job.
 MERGE_SMALL_MANIFEST_FILES = 8
 # Merges whose rewrite-set + batch estimate fits one output file take the
 # single-shuffle window-merge plan and write exactly one file.
@@ -131,11 +131,12 @@ EVAL_COALESCE_MAX_BYTES = 4 * 1024 * 1024
 # Tables (and target + batch in memory) at or below this size merge
 # DRIVER-SIDE over Arrow — see _merge_arrow.
 ARROW_MERGE_MAX_BYTES = 32 * 1024 * 1024
-# {table_dir: (version, pyarrow.Table)} — contents as of that committed
-# version, populated by successful Arrow merges. Bounded (≤4 tables, each
-# ≤ARROW_MERGE_MAX_BYTES); any non-Arrow write bumps the version so the
-# entry just misses. In-process analogue of an embedded engine's buffer
-# pool: sequential small merges stop re-reading the whole table.
+# {table_dir: (version, files, pyarrow.Table, row→file index)} — contents
+# as of that committed version, with the index into ``files`` of the file
+# each row lives in, populated by successful Arrow merges. Bounded (≤4
+# tables, each ≤ARROW_MERGE_MAX_BYTES); any non-Arrow write bumps the
+# version so the entry just misses. In-process analogue of an embedded
+# engine's buffer pool: sequential small merges stop re-reading the table.
 _ARROW_TARGET_CACHE: dict = {}
 # merge_many's synthetic (batch ordinal, order) column — rides the merge
 # plan, never enters the table schema
@@ -261,9 +262,7 @@ def _arrow_fallback(reason: str) -> None:
 
 
 def _arrow_merge_skip(
-    manifest: Manifest,
-    final_logical: T.StructType,
-    part_cols: list[str],
+    manifest: Manifest, final_logical: T.StructType
 ) -> str | None:
     """Manifest-only half of the copy-on-write executor choice, checked
     before the batch is evaluated: the reason this merge cannot run on
@@ -271,19 +270,12 @@ def _arrow_merge_skip(
     None if it may."""
     from .mor import mor_state
 
-    if len(manifest.files) > 1:
-        return "multi_dir"
-    if part_cols and not manifest.files:
-        return "no_dir"  # no existing dir token to reuse
-    files = manifest.all_files()
-    if len(files) > MERGE_SMALL_MANIFEST_FILES:
-        return "file_count"
     table_bytes = sum(
         int(
             (manifest.file_stats.get(f) or {}).get("__bytes")
             or ARROW_MERGE_MAX_BYTES
         )
-        for f in files
+        for f in manifest.all_files()
     )
     if table_bytes > ARROW_MERGE_MAX_BYTES:
         return "table_size"
@@ -299,6 +291,102 @@ def _arrow_merge_skip(
     if [(f.name, f.dataType) for f in final_logical.fields] != existing:
         return "schema_change"
     return None
+
+
+_SIMPLE_TOKEN = re.compile(r"^[A-Za-z0-9._-]+$")
+
+
+def _partition_dirs(tbl, exprs, existing) -> "tuple[dict | None, str | None]":
+    """Rows of ``tbl`` grouped by the partition dir they belong in →
+    ({dir_key: row indices}, None). A row whose partition already has a
+    dir among ``existing`` keys (matched canonically) lands in it; a new
+    dir is named the way Spark's ``partitionBy`` names it. Tokens are
+    computed once per distinct partition tuple. Returns
+    (None, "partition_token") when a new dir's token would be null or
+    need Hive escaping — only Spark's writer names those."""
+    import numpy as np
+    import pyarrow as pa
+
+    if not exprs:
+        return ({"": pa.array(np.arange(tbl.num_rows))} if tbl.num_rows else {}), None
+    cols = [e.output_name for e in exprs]
+    known: dict = {}
+    for k in existing:
+        known.setdefault(dir_key_to_canon_tuple(k, exprs), k)
+    grouped = (
+        tbl.select(cols)
+        .append_column("__row", pa.array(np.arange(tbl.num_rows)))
+        .group_by(cols, use_threads=False)
+        .aggregate([("__row", "list")])
+    )
+    dirs: dict = {}
+    values = zip(*(grouped.column(c).to_pylist() for c in cols))
+    for vals, rows in zip(values, grouped.column("__row_list")):
+        canon = tuple(canon_partition_value(v) for v in vals)
+        key = known.get(canon)
+        if key is None:
+            toks = [v if isinstance(v, str) else c for v, c in zip(vals, canon)]
+            if any(t is None or not _SIMPLE_TOKEN.match(t) for t in toks):
+                return None, "partition_token"
+            key = "/".join(f"{e.dir_name}={t}" for e, t in zip(exprs, toks))
+        dirs.setdefault(key, []).append(rows.values)
+    return {k: pa.concat_arrays(v) for k, v in dirs.items()}, None
+
+
+def _thread_map(fn, items: list) -> list:
+    """``map`` over ``items``, on threads when there is more than one
+    (parquet encode and decode release the GIL)."""
+    if len(items) <= 1:
+        return [fn(x) for x in items]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=min(8, len(items))) as ex:
+        return list(ex.map(fn, items))
+
+
+def _dictionary_columns(tbl) -> list[str]:
+    """Parquet leaf paths worth dictionary-encoding in ``tbl``: a flat
+    column whose distinct count is at most half its rows (parquet-mr's
+    fallback keeps unique columns PLAIN, which pyarrow would otherwise
+    dictionary-encode at a loss), and every nested leaf (the default)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def leaves(path, t):  # pyarrow's parquet names for nested leaves
+        if pa.types.is_struct(t):
+            kids = [(f.name, f.type) for f in t]
+        elif pa.types.is_map(t):
+            kids = [("key_value.key", t.key_type), ("key_value.value", t.item_type)]
+        elif pa.types.is_list(t) or pa.types.is_large_list(t):
+            kids = [("list.element", t.value_type)]
+        else:
+            return [path]
+        return [p for n, k in kids for p in leaves(f"{path}.{n}", k)]
+
+    return [
+        p
+        for f in tbl.schema
+        if pa.types.is_nested(f.type)
+        or pc.count_distinct(tbl.column(f.name)).as_py() <= tbl.num_rows // 2
+        for p in leaves(f.name, f.type)
+    ]
+
+
+def _replace_files(
+    manifest: Manifest, rewritten: set, new_files: dict, new_stats: dict
+) -> tuple[dict, dict]:
+    """(files, file_stats) of a copy-on-write commit: every file not in
+    ``rewritten`` keeps its dir and stats, ``new_files`` join their dirs,
+    and a dir left with no file drops out."""
+    files = {
+        k: [f for f in v if f not in rewritten] for k, v in manifest.files.items()
+    }
+    files = {k: v for k, v in files.items() if v}
+    for k, paths in new_files.items():
+        files.setdefault(k, []).extend(paths)
+    stats = {f: s for f, s in manifest.file_stats.items() if f not in rewritten}
+    stats.update(new_stats)
+    return files, stats
 
 
 def _qcol(name: str) -> Column:
@@ -1178,18 +1266,15 @@ class LakeWriter:
     # take the driver-side Arrow path: ONE Spark job (toArrow), then the
     # partition split, parquet write, stats harvest, and commit happen
     # in-process — the same latency shape as _merge_arrow. Large appends
-    # never reach it, and any doubt (escaped partition tokens, nulls in
-    # partition values, harvest failure) falls back to the Spark write
-    # path.
+    # never reach it, and any doubt (a new dir whose token needs escaping
+    # or is null, counted as append.arrowFallback.partition_token; an
+    # evaluation error) falls back to the Spark write path.
     ARROW_APPEND_MAX_BYTES = 16 * 1024 * 1024
-    _SIMPLE_TOKEN = re.compile(r"^[A-Za-z0-9._-]+$")
 
     def _append_small_arrow(self, out: DataFrame, df: DataFrame, manifest) -> bool:
         """Driver-side Arrow append for small batches. Returns True when
         the batch was written and committed; False → Spark path runs."""
         try:
-            import pyarrow as pa
-
             from .relation_cache import local_plan_arrow
             from .table import _bloom_column, _stats_columns
 
@@ -1222,30 +1307,15 @@ class LakeWriter:
                     batch = eval_df.toArrow()  # the ONE Spark job
             if batch.num_rows == 0:
                 return False
-            exprs = manifest.partition_exprs
-            part_cols = [e.output_name for e in exprs]
-            dir_names = [e.dir_name for e in exprs]
-            # partition → row-index groups, with dir tokens formatted the
-            # way Spark's partitionBy would write them (fall back on any
-            # token needing Hive escaping or a null partition value)
-            groups: dict[str, list[int]] = {}
-            if exprs:
-                cols = [batch.column(c).to_pylist() for c in part_cols]
-                for i in range(batch.num_rows):
-                    toks = []
-                    for vals in cols:
-                        t = canon_partition_value(vals[i])
-                        if t is None or not self._SIMPLE_TOKEN.match(t):
-                            return False
-                        toks.append(t)
-                    key = "/".join(
-                        f"{d}={t}" for d, t in zip(dir_names, toks)
-                    )
-                    groups.setdefault(key, []).append(i)
-            else:
-                groups[""] = list(range(batch.num_rows))
+            groups, reason = _partition_dirs(
+                batch, manifest.partition_exprs, manifest.files
+            )
+            if reason:
+                REGISTRY.inc("append.arrowFallback")
+                REGISTRY.inc(f"append.arrowFallback.{reason}")
+                return False
             parts = {
-                k: [batch if len(groups) == 1 else batch.take(pa.array(idxs))]
+                k: [batch if len(groups) == 1 else batch.take(idxs)]
                 for k, idxs in groups.items()
             }
             stat_cols = _stats_columns(out.schema, self.pk)
@@ -1310,13 +1380,14 @@ class LakeWriter:
         to micro timestamps, renamed to PHYSICAL column names (the write
         boundary of metadata-only RENAME COLUMN; zero-copy), written and
         its footer stats harvested — threaded when there is more than one
-        file (parquet encoding releases the GIL). Returns
+        file. Only columns where it pays are dictionary-encoded
+        (:func:`_dictionary_columns`). Returns
         ({part_key: [rel_file]}, {rel_file: stats under LOGICAL names})."""
         import uuid
 
         import pyarrow.parquet as pq
 
-        from .table import _harvest_one
+        from .table import _count_harvest, _harvest_one
 
         ren = manifest.column_renames
         inv_ren = {p: l for l, p in ren.items()}
@@ -1346,20 +1417,16 @@ class LakeWriter:
             if ren:
                 tbl = tbl.rename_columns([ren.get(n, n) for n in tbl.column_names])
             abs_file = os.path.join(self.table.dir, rel)
-            pq.write_table(tbl, abs_file, compression=codec)
-            return _harvest_one(abs_file, stat_cols, bloom_col)
+            pq.write_table(
+                tbl, abs_file, compression=codec,
+                use_dictionary=_dictionary_columns(tbl),
+            )
+            return (rel, *_harvest_one(abs_file, stat_cols, bloom_col))
 
-        if len(jobs) == 1:
-            harvested = [write_one(jobs[0])]
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(8, len(jobs))) as ex:
-                harvested = list(ex.map(write_one, jobs))
+        harvested = _count_harvest(_thread_map(write_one, jobs))
         stats = {
             rel: {inv_ren.get(c, c): v for c, v in h.items()}
-            for (rel, _), h in zip(jobs, harvested)
-            if h
+            for rel, h in harvested.items()
         }
         return files, stats
 
@@ -1545,7 +1612,7 @@ class LakeWriter:
             )
 
         # ---- executor choice: driver-side Arrow, else Spark pruning ----
-        skip = _arrow_merge_skip(manifest, final_logical, part_cols)
+        skip = _arrow_merge_skip(manifest, final_logical)
         if skip is None:
             done = self._merge_arrow(
                 df, manifest, final_logical, exprs, part_cols,
@@ -1846,17 +1913,9 @@ class LakeWriter:
                     )
                 # keep every file that was not rewritten (including
                 # non-overlapping files inside affected partitions)
-                merged_files = {
-                    k: [f for f in v if f not in rewrite_set]
-                    for k, v in manifest.files.items()
-                }
-                merged_files = {k: v for k, v in merged_files.items() if v}
-                for k, paths in new_files.items():
-                    merged_files.setdefault(k, []).extend(paths)
-                stats = {
-                    f: s for f, s in manifest.file_stats.items() if f not in rewrite_set
-                }
-                stats.update(new_stats)
+                merged_files, stats = _replace_files(
+                    manifest, rewrite_set, new_files, new_stats
+                )
                 self._commit_next(manifest, merged_files, final_logical, stats, op="MERGE")
         finally:
             raw.unpersist()
@@ -2081,6 +2140,14 @@ class LakeWriter:
         the batch-evaluation job plus ~50 ms of Arrow work instead of
         Spark plan analysis + codegen + job scheduling per merge.
 
+        Only the files holding a row whose key the batch updates or
+        deletes are rewritten; every other file keeps its path and stats.
+        The rewritten files' surviving rows and the batch's winning rows
+        are written one file per partition dir (range-split past
+        2 × MERGE_TARGET_FILE_ROWS), so a key whose update moves it to
+        another partition leaves its old file; a dir left with no rows
+        drops out of the manifest.
+
         Returns True (committed), False (version conflict → replan) or
         None (declined → the pruning executor runs). Target files that
         predate a metadata-only ADD COLUMN decline before the batch is
@@ -2097,10 +2164,9 @@ class LakeWriter:
         import pyarrow.parquet as pq
 
         from .relation_cache import local_plan_arrow
-        from .table import _stats_columns
+        from .table import _bloom_column, _stats_columns
 
         out_cols = _out_cols(final_logical, part_cols)
-        part_key = next(iter(manifest.files), "")
         pk = list(self.pk)
         try:
             # conform + derived partition columns as ONE selectExpr (one
@@ -2132,28 +2198,39 @@ class LakeWriter:
             # A successful Arrow merge KNOWS the table's full contents at
             # the version it committed (the embedded-engine buffer-pool
             # analogue), so the next merge skips re-reading the files.
-            # The merge runs in LOGICAL column space: file tables are
-            # renamed physical→logical right after the read (zero-copy).
+            # ``row_file`` is each row's index into ``files``. The merge
+            # runs in LOGICAL column space: file tables are renamed
+            # physical→logical right after the read (zero-copy).
+            files = manifest.all_files()
             cached = _ARROW_TARGET_CACHE.get(self.table.dir)
-            if cached is not None and cached[0] == manifest.version:
-                target = cached[1]
+            if (
+                cached is not None
+                and cached[0] == manifest.version
+                and set(cached[1]) == set(files)
+            ):
+                _, files, target, row_file = cached
             else:
                 inv_ren = {p: l for l, p in manifest.column_renames.items()}
-                targets, common = [], None
-                for f in manifest.all_files():
+
+                def read_one(f):
                     t = pq.read_table(os.path.join(self.table.dir, f))
-                    if inv_ren:
-                        t = t.rename_columns(
-                            [inv_ren.get(n, n) for n in t.column_names]
-                        )
-                    if sorted(t.column_names) != sorted(out_cols):
-                        REGISTRY.inc("merge.arrowSkip.schema_change")
-                        return None
-                    t = t.select(out_cols)
-                    if common is None:
-                        common = _arrow_write_schema(t.schema, nullable=True)
-                    targets.append(t.cast(common))
-                target = pa.concat_tables(targets) if targets else None
+                    return t.rename_columns([inv_ren.get(n, n) for n in t.column_names])
+
+                tables = _thread_map(read_one, files)
+                if any(sorted(t.column_names) != sorted(out_cols) for t in tables):
+                    REGISTRY.inc("merge.arrowSkip.schema_change")
+                    return None
+                target = None
+                if tables:
+                    common = _arrow_write_schema(
+                        tables[0].select(out_cols).schema, nullable=True
+                    )
+                    target = pa.concat_tables(
+                        [t.select(out_cols).cast(common) for t in tables]
+                    )
+                row_file = np.repeat(
+                    np.arange(len(files)), [t.num_rows for t in tables]
+                )
 
             with REGISTRY.timer("merge.arrowBatchEval"):
                 # zero-job eval when the batch folded to a LocalRelation;
@@ -2171,18 +2248,8 @@ class LakeWriter:
                     batch = (raw.coalesce(4) if small else raw).toArrow()
 
             dead = None
-            live = batch
             if tombstone_col:
                 dead = pc.fill_null(batch.column(tombstone_col), False)
-                live = batch.filter(pc.invert(dead))
-            # live rows must all land in the single existing partition
-            # dir — otherwise Spark's partitionBy must create new dirs
-            if part_cols and live.num_rows:
-                want = dir_key_to_canon_tuple(part_key, exprs)
-                for e, w in zip(exprs, want):
-                    vals = pc.unique(live.column(e.output_name)).to_pylist()
-                    if any(canon_partition_value(v) != w for v in vals):
-                        return _arrow_fallback("outside_dir")
             n_t = target.num_rows if target is not None else 0
             if (target.nbytes if n_t else 0) + batch.nbytes > ARROW_MERGE_MAX_BYTES:
                 return _arrow_fallback("size_cap")
@@ -2269,14 +2336,21 @@ class LakeWriter:
                 winners = key_df.sort_values(
                     sort_cols, ascending=False, kind="stable", na_position="last"
                 ).drop_duplicates(subset=pk, keep="first")
+            # ---- rewrite set: files of the target rows that lost ----
+            # A target row loses when the batch updates or deletes its
+            # key; its file is rewritten with the file's winning rows.
+            # Every other file (and the rows in it) stays as it is.
+            idx = winners["__idx"].to_numpy()
+            emit = idx >= n_t
             if dead is not None:
                 # a winning tombstone deletes its key (target rows have
                 # __idx < n_t and are never tombstones)
-                b_dead = dead.to_numpy(zero_copy_only=False)
-                idx = winners["__idx"].to_numpy()
-                w_dead = np.zeros(len(idx), dtype=bool)
-                w_dead[idx >= n_t] = b_dead[idx[idx >= n_t] - n_t]
-                winners = winners[~w_dead]
+                emit[emit] = ~dead.to_numpy(zero_copy_only=False)[idx[emit] - n_t]
+            won = np.zeros(n_t, dtype=bool)
+            won[idx[idx < n_t]] = True
+            kept_file = np.bincount(row_file[~won], minlength=len(files)) == 0
+            emit[idx < n_t] = ~kept_file[row_file[idx[idx < n_t]]]
+            winners = winners[emit]
             out_tbl = combined.take(pa.array(winners["__idx"].to_numpy()))
 
             # ---- _inserted_at: keep the matched key's original stamp ----
@@ -2309,32 +2383,43 @@ class LakeWriter:
                     pa.array(filled).cast(ts_type),
                 )
 
-            # Range-split: outputs past 2 × MERGE_TARGET_FILE_ROWS are
+            # ---- output: one file per partition dir ----
+            # Range-split: a dir past 2 × MERGE_TARGET_FILE_ROWS is
             # pk-sorted and written as N files — per-file pk ranges are
             # disjoint, so the NEXT merge's overlap prune has something
             # to prune, and the files encode in parallel. Same rows-vs-
             # bytes balance as the Spark range layout (Arrow nbytes
             # overestimate parquet — errs toward fewer, larger files).
-            n_rows = out_tbl.num_rows
-            slices = [out_tbl]
-            if n_rows > 2 * MERGE_TARGET_FILE_ROWS:
-                out_tbl = out_tbl.take(
-                    pc.sort_indices(
-                        out_tbl, sort_keys=[(k, "ascending") for k in pk]
+            groups, reason = _partition_dirs(out_tbl, exprs, manifest.files)
+            if reason:
+                return _arrow_fallback(reason)
+            parts = {}
+            for key, rows in groups.items():
+                part = out_tbl if len(groups) == 1 else out_tbl.take(rows)
+                n = part.num_rows
+                parts[key] = [part]
+                if n > 2 * MERGE_TARGET_FILE_ROWS:
+                    part = part.take(
+                        pc.sort_indices(part, sort_keys=[(k, "ascending") for k in pk])
                     )
-                )
-                n_files = max(
-                    1,
-                    min(
-                        MERGE_RANGE_MAX_FILES,
-                        _range_file_count(n_rows, out_tbl.nbytes),
-                    ),
-                )
-                step = -(-n_rows // n_files)
-                slices = [out_tbl.slice(i, step) for i in range(0, n_rows, step)]
-            stat_cols = _stats_columns(
-                T.StructType([f for f in raw.schema.fields if f.name in out_cols]),
-                pk,
+                    n_files = min(MERGE_RANGE_MAX_FILES, _range_file_count(n, part.nbytes))
+                    step = -(-n // max(1, n_files))
+                    parts[key] = [part.slice(i, step) for i in range(0, n, step)]
+            slices = [t for v in parts.values() for t in v]
+            out_schema = T.StructType([f for f in raw.schema.fields if f.name in out_cols])
+            stat_cols = _stats_columns(out_schema, pk)
+            # a sidecar prunes only between files: none for a one-file table
+            n_after = int(kept_file.sum()) + len(slices)
+            bloom_col = _bloom_column(out_schema, pk) if n_after > 1 else None
+            # the next version's contents for the target cache: the kept
+            # files' rows, then the new files'; ``slot`` indexes ``files``
+            # followed by the new files in write order
+            keep_rows = np.flatnonzero(kept_file[row_file])
+            pieces = ([target.take(keep_rows)] if target is not None else []) + slices
+            next_tbl = pa.concat_tables(pieces) if pieces else None
+            slot = np.concatenate(
+                [row_file[keep_rows]]
+                + [np.full(t.num_rows, len(files) + j) for j, t in enumerate(slices)]
             )
         except Exception:
             return _arrow_fallback("error")
@@ -2345,13 +2430,26 @@ class LakeWriter:
             if self._chain_advanced(manifest.version):
                 return False
             with REGISTRY.timer("merge.arrowWrite"):
-                new_files, stats = self._write_arrow_files(
-                    manifest, {part_key: slices}, stat_cols, None
+                new_files, new_stats = self._write_arrow_files(
+                    manifest, parts, stat_cols, bloom_col
                 )
-            self._commit_next(manifest, new_files, final_logical, stats, op="MERGE")
+            merged_files, stats = _replace_files(
+                manifest, {f for f, k in zip(files, kept_file) if not k},
+                new_files, new_stats,
+            )
+            self._commit_next(manifest, merged_files, final_logical, stats, op="MERGE")
         if len(_ARROW_TARGET_CACHE) >= 4:
             _ARROW_TARGET_CACHE.clear()
-        _ARROW_TARGET_CACHE[self.table.dir] = (manifest.version + 1, out_tbl)
+        if next_tbl is not None:
+            next_files = [f for v in merged_files.values() for f in v]
+            pos = {f: i for i, f in enumerate(next_files)}
+            written = [f for v in new_files.values() for f in v]
+            remap = np.array([pos.get(f, -1) for f in files + written])
+            _ARROW_TARGET_CACHE[self.table.dir] = (
+                manifest.version + 1, next_files, next_tbl, remap[slot],
+            )
+        # insert-only dirs gained a file
+        self._maybe_auto_compact(merged_files, stats)
         return True
 
     # ---------- internals ----------

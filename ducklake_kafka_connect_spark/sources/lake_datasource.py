@@ -930,7 +930,7 @@ class _WriterBase:
         entries: "list[tuple[str, str]]" = []
         stats: "dict[str, dict]" = {}
         for key, (_, abs_p, rel) in writers.items():
-            harvested = _harvest_one(abs_p, stat_cols, None)
+            harvested, _ = _harvest_one(abs_p, stat_cols, None)
             # stats keys are LOGICAL names (manifest convention)
             stats[rel] = {back.get(k, k): v for k, v in harvested.items()}
             entries.append((key, rel))

@@ -65,7 +65,9 @@ def test_arrow_merge_range_splits_large_output(spark, lake, monkeypatch):
     # pins the range-split mechanics, so drop the floor too
     monkeypatch.setattr(wmod, "MERGE_TARGET_FILE_BYTES", 1)
     cat = LakeCatalog(spark, lake)
-    w = LakeWriter(cat.table("t_rs"), pk=["id"])
+    # auto_compact off: with the bytes floor dropped the split emits 16
+    # small files, which the post-commit auto-compact would fold into one
+    w = LakeWriter(cat.table("t_rs"), pk=["id"], auto_compact=False)
     w.write(spark.range(450).select(F.col("id"), F.lit("a").alias("name")))
     w.write(
         spark.range(100, 200).select(F.col("id"), F.lit("b").alias("name"))
@@ -103,7 +105,7 @@ def test_arrow_merge_range_split_on_renamed_table(spark, lake, monkeypatch):
     t.rename_column("name", "label")
     ev = REGISTRY.ops.get("merge.arrowWrite")
     n0 = ev.count if ev else 0
-    w2 = LakeWriter(cat.table("t_rrs"), pk=["id"])
+    w2 = LakeWriter(cat.table("t_rrs"), pk=["id"], auto_compact=False)
     w2.write(
         spark.range(100, 200).select(F.col("id"), F.lit("b").alias("label"))
     )
@@ -181,9 +183,15 @@ def test_arrow_merge_many_group_commit(spark, lake):
         assert got[i] == exp, f"id={i}"
 
 
-def test_arrow_fallback_on_new_partition_value(spark, lake):
-    """A batch whose rows land outside the single existing partition dir
-    must fall back to the Spark path (which creates the new dir)."""
+def test_arrow_merge_creates_new_partition_dir(spark, lake):
+    """A batch whose rows land outside the table's existing partition
+    dir stays on the Arrow executor, which writes the new dir itself."""
+    from ducklake_kafka_connect_spark.metrics import REGISTRY
+
+    def arrow_merges():
+        ops = REGISTRY.snapshot()["operations"]
+        return ops.get("merge.arrowWrite", {}).get("count", 0)
+
     cat = LakeCatalog(spark, lake)
     w = LakeWriter(cat.table("t"), pk=["id"], partition_by="month(created_at)")
     w.write(spark.range(50).select(
@@ -192,7 +200,9 @@ def test_arrow_fallback_on_new_partition_value(spark, lake):
     batch = spark.range(10).select(
         F.col("id"), F.lit("feb").alias("name"),
         F.timestamp_seconds(F.lit(1706832000)).alias("created_at"))  # Feb
+    n0 = arrow_merges()
     w.write(batch)
+    assert arrow_merges() == n0 + 1
     m = cat.table("t").manifest()
     assert len(m.files) == 2, f"expected two partition dirs, got {list(m.files)}"
     got = {r["id"]: r["name"] for r in cat.table("t").read().collect()}
@@ -215,6 +225,60 @@ def test_arrow_written_file_prunes_and_rereads(spark, lake):
     kept, pruned = cat.table("t").prune_files("id > 1000")
     assert kept == [] and pruned == 1
     assert cat.table("t").read(where="id < 5").count() == 5
+
+
+def test_arrow_write_dictionary_encodes_low_cardinality_only(spark, lake):
+    """Driver-side files dictionary-encode a column only where it pays,
+    like parquet-mr's fallback: a unique long column is PLAIN, a
+    low-cardinality string column keeps RLE_DICTIONARY."""
+    import pyarrow.parquet as pq
+
+    from ducklake_kafka_connect_spark.metrics import REGISTRY
+
+    def arrow_appends():
+        ops = REGISTRY.snapshot()["operations"]
+        return ops.get("append.arrowWrite", {}).get("count", 0)
+
+    cat = LakeCatalog(spark, lake)
+    t = cat.table("t")
+    n0 = arrow_appends()
+    LakeWriter(t, pk=["id"]).append(spark.range(1000).select(
+        F.col("id"), (F.col("id") % 3).cast("string").alias("kind")))
+    assert arrow_appends() == n0 + 1
+    (f,) = t.manifest().all_files()
+    md = pq.ParquetFile(os.path.join(t.dir, f)).metadata
+    enc = {
+        md.schema.column(i).name: md.row_group(0).column(i).encodings
+        for i in range(md.num_columns)
+    }
+    assert "PLAIN" in enc["id"] and "RLE_DICTIONARY" not in enc["id"]
+    assert "RLE_DICTIONARY" in enc["kind"]
+
+
+def test_harvest_skips_are_counted(tmp_path):
+    """A file whose footer cannot be read, or whose Bloom sidecar cannot
+    be written, is counted on the driver instead of passing silently."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ducklake_kafka_connect_spark.lake.table import _count_harvest, _harvest_one
+    from ducklake_kafka_connect_spark.metrics import REGISTRY
+
+    def counts():
+        c = REGISTRY.snapshot()["counters"]
+        return c.get("write.harvestSkip", 0), c.get("write.bloomSkip", 0)
+
+    bad = tmp_path / "bad.parquet"
+    bad.write_bytes(b"not parquet")
+    good = tmp_path / "good.parquet"
+    pq.write_table(pa.table({"id": [1, 2, 3]}), good)
+    (tmp_path / "good.parquet.bloom.tmp").mkdir()  # the sidecar cannot land
+    h0, b0 = counts()
+    got = _count_harvest(
+        (str(p), *_harvest_one(str(p), ["id"], "id")) for p in (bad, good)
+    )
+    assert list(got) == [str(good)] and got[str(good)]["__rows"] == 3
+    assert counts() == (h0 + 1, b0 + 2)
 
 
 # ---------------------------------------------------------------------------

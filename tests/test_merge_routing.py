@@ -6,7 +6,8 @@ Arrow merge (``LakeWriter._merge_arrow``) or the Spark pruning merge
 tombstone files instead. Each row below names an input class and the
 executor it must take (read off ``metrics.REGISTRY``), and its result
 must equal the pruning executor's on the same inputs — including which
-matched keys keep their original ``_inserted_at``."""
+matched keys keep their original ``_inserted_at``, the table's partition
+dirs, and every pre-merge file the pruning executor leaves in place."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -69,19 +70,71 @@ def _new_partition_value(spark, w, t):
 
 
 def _multi_dir(spark, w, t):
-    w.merge(_batch(spark, 35, 45, "feb", ts=FEB))  # second dir (pruning)
+    w.merge(_batch(spark, 35, 45, "feb", ts=FEB))  # second dir
     w.merge(_batch(spark, 0, 10, "upd"))  # the routed merge
 
 
-# (case, merge step, partitioned, writer merge_mode, executor)
+def _partition_drift(spark, w, t):
+    w.merge(_batch(spark, 40, 45, "feb", ts=FEB))
+    # 0..9 move into the existing February dir, 40..41 back to January
+    w.merge(_batch(spark, 0, 10, "moved", ts=FEB)
+            .unionByName(_batch(spark, 40, 42, "back")))
+
+
+def _tombstone_empties_dir(spark, w, t):
+    w.merge(_batch(spark, 40, 46, "feb", ts=FEB))
+    w.merge(_batch(spark, 40, 46, "x", ts=FEB).withColumn("del", F.lit(True)),
+            tombstone_col="del")
+
+
+def _untouched_dir_kept(spark, w, t):
+    w.merge(_batch(spark, 40, 50, "feb", ts=FEB))
+    w.merge(_batch(spark, 45, 55, "feb2", ts=FEB))  # January untouched
+
+
+def _null_partition_value(spark, w, t):
+    w.merge(_batch(spark, 30, 35, "nul")
+            .withColumn("created_at", F.lit(None).cast("timestamp")))
+
+
+def _one_row_per_key(r):
+    ids = [row[0] for row in r["rows"]]
+    assert len(ids) == len(set(ids)) == 45
+    moved = {row[0]: row[1] for row in r["rows"] if row[0] < 10 or row[0] >= 40}
+    assert moved == {**{i: "moved" for i in range(10)},
+                     40: "back", 41: "back", 42: "feb", 43: "feb", 44: "feb"}
+
+
+def _dir_dropped(r):
+    assert sorted(r["files_after"]) == sorted(r["files_before"])
+    assert [row[0] for row in r["rows"]] == list(range(40))
+
+
+def _dir_files_unchanged(r):
+    (jan,) = r["files_before"]
+    assert r["files_after"][jan] == r["files_before"][jan]
+
+
+def _token_declined(r):
+    assert r["delta"]["token"] == 1
+
+
+# (case, merge step, partitioned, writer merge_mode, executor, extra check)
 CASES = [
-    ("small_unpartitioned", _small, False, None, "arrow"),
-    ("small_with_tombstones", _tombstones, False, None, "arrow"),
-    ("merge_many_ephemeral_order", _merge_many, False, None, "arrow"),
-    ("schema_evolving_batch", _schema_change, False, None, "pruning"),
-    ("new_partition_value", _new_partition_value, True, None, "pruning"),
-    ("multi_dir_table", _multi_dir, True, None, "pruning"),
-    ("merge_on_read", _small, False, "merge-on-read", "mor"),
+    ("small_unpartitioned", _small, False, None, "arrow", None),
+    ("small_with_tombstones", _tombstones, False, None, "arrow", None),
+    ("merge_many_ephemeral_order", _merge_many, False, None, "arrow", None),
+    ("schema_evolving_batch", _schema_change, False, None, "pruning", None),
+    ("new_partition_value", _new_partition_value, True, None, "arrow", None),
+    ("multi_dir_table", _multi_dir, True, None, "arrow", None),
+    ("partition_drift", _partition_drift, True, None, "arrow", _one_row_per_key),
+    ("tombstone_empties_dir", _tombstone_empties_dir, True, None, "arrow",
+     _dir_dropped),
+    ("untouched_dir_kept", _untouched_dir_kept, True, None, "arrow",
+     _dir_files_unchanged),
+    ("null_partition_value", _null_partition_value, True, None, "pruning",
+     _token_declined),
+    ("merge_on_read", _small, False, "merge-on-read", "mor", None),
 ]
 
 
@@ -92,6 +145,7 @@ def _snapshot():
         "arrow": ops.get("merge.arrowWrite", {}).get("count", 0),
         "pruning": ops.get("merge.planAgg", {}).get("count", 0),
         "mor": ctr.get("merge.morCommits", 0),
+        "token": ctr.get("merge.arrowFallback.partition_token", 0),
     }
 
 
@@ -101,6 +155,15 @@ def _executor(before, after):
         if after[name] > before[name]:
             return name
     return None
+
+
+def _file_ids(m, files):
+    """Executor-independent identity of data files: (dir, id range, rows)."""
+    by_dir = {f: k for k, v in m.files.items() for f in v}
+    return {
+        (by_dir[f], tuple(m.file_stats[f]["id"][:2]), m.file_stats[f]["__rows"])
+        for f in files
+    }
 
 
 def _run(spark, root, step, partitioned, mode):
@@ -115,9 +178,11 @@ def _run(spark, root, step, partitioned, mode):
         r["id"]: r["_inserted_at"]
         for r in t.read().select("id", "_inserted_at").collect()
     }
+    m0 = t.manifest()
     before = _snapshot()
     step(spark, w, t)
-    ran = _executor(before, _snapshot())
+    after = _snapshot()
+    m1 = t.manifest()
     rows = sorted(
         (r["id"], r["name"], r["seq"], r["created_at"],
          r["_inserted_at"] == stamps[r["id"]] if r["id"] in stamps else None)
@@ -125,24 +190,36 @@ def _run(spark, root, step, partitioned, mode):
     )
     extra = sorted(c for c in t.read().columns if c not in (
         "id", "name", "seq", "created_at", "_inserted_at"))
-    return ran, rows, extra
+    kept = set(m0.all_files()) & set(m1.all_files())
+    return {
+        "ran": _executor(before, after),
+        "delta": {k: after[k] - before[k] for k in after},
+        "rows": rows,
+        "extra": extra,
+        "files_before": m0.files,
+        "files_after": m1.files,
+        "kept": _file_ids(m0, kept),
+    }
 
 
 @pytest.mark.parametrize(
-    "case,step,partitioned,mode,executor", CASES, ids=[c[0] for c in CASES]
+    "case,step,partitioned,mode,executor,check", CASES, ids=[c[0] for c in CASES]
 )
 def test_merge_routing_decision_table(
-    spark, tmp_path, monkeypatch, case, step, partitioned, mode, executor
+    spark, tmp_path, monkeypatch, case, step, partitioned, mode, executor, check
 ):
-    ran, rows, extra = _run(spark, str(tmp_path / "routed"), step, partitioned, mode)
+    got = _run(spark, str(tmp_path / "routed"), step, partitioned, mode)
     # the reference: copy-on-write on the pruning executor
     monkeypatch.setattr(wmod.LakeWriter, "_merge_arrow", lambda self, *a, **k: None)
-    ref_ran, ref_rows, ref_extra = _run(
-        spark, str(tmp_path / "pruning"), step, partitioned, None
-    )
-    assert ran == executor, f"{case}: ran on {ran}, expected {executor}"
-    assert ref_ran == "pruning"
-    assert rows == ref_rows and extra == ref_extra
+    ref = _run(spark, str(tmp_path / "pruning"), step, partitioned, None)
+    assert got["ran"] == executor, f"{case}: ran on {got['ran']}, expected {executor}"
+    assert ref["ran"] == "pruning"
+    assert got["rows"] == ref["rows"] and got["extra"] == ref["extra"]
+    assert sorted(got["files_after"]) == sorted(ref["files_after"])
+    if mode is None:
+        assert ref["kept"] <= got["kept"], f"{case}: rewrote a file the pruning merge keeps"
+    if check:
+        check(got)
 
 
 def test_small_upsert_from_non_local_frame_is_one_spark_job(spark, tmp_path):

@@ -315,11 +315,12 @@ class TestMergeRangeSplitOutput:
     so later merges rewrite only the files their batch keys overlap
     (bounded rewrite amplification on hot tables)."""
 
-    def test_range_split_bounds_later_rewrites(self, spark, tmp_path):
+    @staticmethod
+    def _ten_range_files(spark, tmp_path):
         cat = LakeCatalog(spark, str(tmp_path / "lake"))
         # auto_compact off: this test NEEDS the 10 accreted range files
         w = LakeWriter(cat.table("t"), pk=["id"], auto_compact=False)
-        for i in range(10):  # >8 disjoint-range files → pruning path
+        for i in range(10):  # >8 disjoint-range files
             w.append(
                 spark.range(i * 10_000, (i + 1) * 10_000).select(
                     F.col("id"), F.lit(f"v{i}").alias("name")
@@ -328,6 +329,12 @@ class TestMergeRangeSplitOutput:
         t = cat.table("t")
         before = set(t.manifest().all_files())
         assert len(before) == 10
+        return t, w, before
+
+    def test_range_split_bounds_later_rewrites(self, spark, tmp_path, monkeypatch):
+        # pins the pruning executor's estimate-based range layout
+        monkeypatch.setattr(wmod.LakeWriter, "_merge_arrow", lambda self, *a, **k: None)
+        t, w, before = self._ten_range_files(spark, tmp_path)
 
         # merge spanning files 0-2 → rewrites those, range-splits output
         w.write(
@@ -354,4 +361,39 @@ class TestMergeRangeSplitOutput:
         assert t.read().filter("id = 50 AND name = 'upd2'").count() == 1
         assert t.read().filter("id = 20000 AND name = 'upd'").count() == 1
         assert t.read().filter("id = 80000 AND name = 'v8'").count() == 1
+        assert t.read().filter("id = 95000 AND name = 'v9'").count() == 1
+
+    def test_arrow_merge_keeps_files_without_batch_keys(self, spark, tmp_path):
+        """The Arrow executor's twin: it rewrites exactly the files that
+        hold a batch key; every other file survives with its path."""
+        from ducklake_kafka_connect_spark.metrics import REGISTRY
+
+        def arrow_merges():
+            ops = REGISTRY.snapshot()["operations"]
+            return ops.get("merge.arrowWrite", {}).get("count", 0)
+
+        def holding(m, files, hi):
+            return {f for f in files if m.file_stats[f]["id"][0] < hi}
+
+        t, w, before = self._ten_range_files(spark, tmp_path)
+        n0 = arrow_merges()
+        m0 = t.manifest()
+        w.write(
+            spark.range(0, 25_000).select(F.col("id"), F.lit("upd").alias("name"))
+        )
+        m1 = t.manifest()
+        assert set(m1.all_files()) & before == before - holding(m0, before, 25_000)
+        assert len(before - set(m1.all_files())) == 3
+
+        w.write(
+            spark.range(0, 100).select(F.col("id"), F.lit("upd2").alias("name"))
+        )
+        files1 = set(m1.all_files())
+        m2 = set(t.manifest().all_files())
+        assert m2 & files1 == files1 - holding(m1, files1, 100)
+        assert arrow_merges() == n0 + 2
+        assert t.read().count() == 100_000
+        assert t.read().filter("id = 50 AND name = 'upd2'").count() == 1
+        assert t.read().filter("id = 20000 AND name = 'upd'").count() == 1
+        assert t.read().filter("id = 29999 AND name = 'v2'").count() == 1
         assert t.read().filter("id = 95000 AND name = 'v9'").count() == 1
