@@ -326,17 +326,14 @@ def split_harness(spark, sf_dir: str) -> dict:
     return out
 
 
-# The same-host A/B triple: one lake-write op, one retrieval op, one
-# dedup op — shared by every round since r3, mid-cost, stable plans.
-AB_QUERIES = ["merge_upsert_events", "hybrid_rrf_retrieval", "dedup_minhash_lsh"]
-# r13+: the three Python-worker-heavy outliers the r12 artifact flagged —
-# the dedicated r11-tip A/B (BENCH_LOCAL.ab_r13_suspect_investigation)
-# proved them host noise (sign flips with order, medians ≤1.1×); kept in
-# the per-round A/B so any FUTURE drift on the applyInPandas/codec path
-# is attributed the same round it appears.
-AB_QUERIES += [
-    "arrow_ipc_ingest_roundtrip", "matryoshka_recall_eval",
-    "rm3_query_expansion",
+# The same-host A/B set: lake-write ops (MERGE upsert, the medallion
+# bronze→silver→gold chain, the matview refresh over a star join, the
+# DLQ replay loop), one dedup op and one Arrow-IPC ingest round trip —
+# mid-cost, stable plans.
+AB_QUERIES = [
+    "merge_upsert_events", "dedup_minhash_lsh", "arrow_ipc_ingest_roundtrip",
+    "medallion_incremental_pipeline", "matview_star_join",
+    "dlq_reprocess_pipeline",
 ]
 
 
@@ -994,28 +991,16 @@ SF1_QUERIES = [  # r3's 10 most expensive, cheap/stable first
     "dedup_cluster_keep_best",
     "dedup_embedding_cosine",
     "dedup_simhash_hamming",
-    # round-5 additions: iterative algorithm, CDC-maintained aggregate,
-    # shared-exchange windows, and the linear chunker
-    "kmeans_embedding_clusters",
+    # round-5 additions: CDC-maintained aggregate and shared-exchange
+    # windows
     "incremental_agg_view",
     "window_rank_suite",
-    "chunk_documents_overlap",
-    # round-5 second wave: the corpus-heavy LM/sketch stages (two corpus
-    # shuffles each; the sketch should be flat — mergeable KB state)
-    "unigram_logprob_quality",
-    "bigram_lm_quality",
-    "cms_heavy_hitters",
-    # round-5 third wave: iterative graph ranking, the exact-distinct
-    # profiler (shuffle ∝ distinct values), corpus-sized sessionization,
-    # and the full ingest dataflow (decode→DLQ→merge write path)
-    "textrank_keywords",
+    # round-5 third wave: the exact-distinct profiler (shuffle ∝ distinct
+    # values), corpus-sized sessionization, and the full ingest dataflow
+    # (decode→DLQ→merge write path)
     "table_profile_lineitem",
     "session_assembly",
     "ingest_replay_pipeline",
-    # round-7 additions: sparse retrieval (corpus shuffle + broadcast
-    # stats) and the gram-keyed novelty self-aggregation
-    "bm25_retrieval_topk",
-    "ngram_novelty_curve",
     # round-9 addition: the DLQ replay loop (two full connector
     # dataflows + the single-commit swap — the heaviest e2e query)
     "dlq_reprocess_pipeline",
@@ -1024,19 +1009,6 @@ SF1_QUERIES = [  # r3's 10 most expensive, cheap/stable first
     # manifest-pruned ADC probe — the corpus-size-independent path)
     "semdedup_prune",
     "ann_ivfpq_topk",
-    # round-9 second wave: in-engine training loops (per-iteration scan
-    # cost should be flat-ish) and the perceptual-hash media pipeline
-    # (two Arrow boundaries, linear)
-    "quality_classifier_logreg",
-    "embedding_pca_power",
-    "image_phash_dedup",
-    # round-10 wave: the stride-1 span pipeline (token-linear), the
-    # standing-index novelty probe (distinct-text collapse should hold
-    # it sub-linear under replication), and the calibration curve
-    # (fixed-size sample → the wall should be FLAT across scales)
-    "dedup_span_maximal",
-    "incremental_minhash_novelty",
-    "minhash_calibration_curve",
 ]
 # >12x wall on 10x data (the VERDICT gate) earns a plan note
 SF1_RATIO_FLAG = 12.0

@@ -13,9 +13,9 @@ Spark DataFrame / Structured Streaming stack:
                    this image, so copy-on-write merge is built here).
 - ``sources/``   — decode paths: schemaless JSON, Avro, Arrow IPC, Kafka.
 - ``streaming/`` — foreachBatch ingestion pipeline with DLQ routing.
-- ``operators/`` — beyond-parity LLM-pipeline operators: dedup (exact,
-                   MinHash-LSH, SimHash), similarity search, text analysis,
-                   multimodal column plumbing.
+- ``operators/`` — beyond-parity operators: dedup (exact, MinHash-LSH,
+                   SimHash), similarity search, text analysis, as-of and
+                   range joins, salted skew aggregation.
 - ``functions/`` — scalar helpers (ISO-8601 timestamp sniff/parse, JSON
                    canonicalization) as Catalyst column expressions.
 - ``plans/``     — the named query surface exposed to the driver oracle.

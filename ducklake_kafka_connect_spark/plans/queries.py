@@ -2324,66 +2324,6 @@ def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "multimodal_pipeline",
-    """
-    WITH m AS (
-      SELECT doc_id AS media_id,
-             CASE WHEN doc_id % 3 = 0 THEN 'image'
-                  WHEN doc_id % 3 = 1 THEN 'audio'
-                  ELSE 'video' END AS kind,
-             octet_length(encode(text)) AS n,
-             text
-      FROM documents
-    )
-    SELECT kind, count(*) AS n_items, CAST(sum(n) AS BIGINT) AS total_bytes,
-           CAST(sum(CASE kind
-             WHEN 'image' THEN
-               list_sum(list_transform(generate_series(1, len(text)),
-                                       i -> ascii(substr(text, i, 1)))) % 1000003
-             WHEN 'audio' THEN n
-             ELSE CAST(floor((n * 4 - 1) / 1000) AS BIGINT) + 1
-           END) AS BIGINT) AS kind_metric
-    FROM m GROUP BY kind
-    """,
-    "Multimodal columns: binary payload + typed meta; mapInPandas decode stub, "
-    "metadata-only frame sampling — per-kind summary (deterministic fake codec)",
-)
-def multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import (
-        audio_stats_col,
-        fake_decode_image,
-        media_from_documents,
-        sample_frames,
-    )
-
-    media = media_from_documents(_t(spark, sf_dir, "documents"))
-    sizes = media.groupBy("kind").agg(
-        F.count(F.lit(1)).alias("n_items"),
-        F.sum("meta.n_bytes").cast("long").alias("total_bytes"),
-    )
-    img = (
-        fake_decode_image(media.filter(F.col("kind") == "image"))
-        .agg(F.sum("byte_sum").cast("long").alias("kind_metric"))
-        .select(F.lit("image").alias("kind"), "kind_metric")
-    )
-    aud = (
-        media.filter(F.col("kind") == "audio")
-        .select(audio_stats_col(F.col("meta")).alias("st"))
-        .agg(F.sum("st.n_samples").cast("long").alias("kind_metric"))
-        .select(F.lit("audio").alias("kind"), "kind_metric")
-    )
-    vid = (
-        sample_frames(media, every_ms=1000)
-        .agg(F.count(F.lit(1)).cast("long").alias("kind_metric"))
-        .select(F.lit("video").alias("kind"), "kind_metric")
-    )
-    metrics = img.unionByName(aud).unionByName(vid)
-    return sizes.join(F.broadcast(metrics), "kind").select(
-        "kind", "n_items", "total_bytes", "kind_metric"
-    )
-
-
-@register(
     "q6_forecast_revenue",
     """
     SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue,
@@ -3631,94 +3571,292 @@ def merge_many_group_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# TPC-H completion set (Q2/Q7-Q9/Q11-Q13/Q15/Q16/Q19-Q22) and the
-# round-5 pipeline queries register on import; late imports because both
-# modules need register/_t from this module.
-from . import corpus_stats, curation, curation2, eval_ops, format_parity, graph, ingest_replay, media_ml, pipeline, quality, timeseries, tpch  # noqa: E402,F401  (registration side effect)
+# ---------------------------------------------------------------------------
+# Predicate UPDATE over the lake table
+# ---------------------------------------------------------------------------
+
+UPDATE_PRED = "event_type = 'click'"
 
 
-# Keys that have already earned a driver-side CORRECTNESS row. The driver
-# hashes only the first 50 registered queries per round, so we emit
-# never-driver-checked queries first; this rotates the whole surface
-# through the hard-signal window across rounds (VERDICT r5 "Next round"
-# #1). The live set is read from the committed CORRECTNESS_r*.json round
-# artifacts (self-maintaining as rounds accumulate); this literal is the
-# fallback when they are unreadable (rounds 1-5 state).
-_DRIVER_CHECKED_FALLBACK: frozenset[str] = frozenset({
-    "agg_distinct_orders", "ann_ivf_indexed_topk", "ann_ivf_topk", "ann_lsh_topk",
-    "ann_quantized_topk", "anti_join_idle_customers", "asof_latest_purchase",
-    "contamination_overlap", "corpus_quality_filter", "corpus_stratified_sample",
-    "cube_returnflag_status", "dedup_embedding_cosine", "dedup_exact_stats",
-    "dedup_keep_first", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    "dedup_simhash_hamming", "dedup_span_exact", "delete_where_events",
-    "doc_fingerprint_groups", "grouping_sets_orders", "json_extract_props",
-    "lang_id_confusion", "merge_upsert_events", "multimodal_pipeline",
-    "nested_json_roundtrip", "outer_join_nation_activity", "partition_cells_events",
-    "percentile_order_values", "q17_small_qty_revenue", "q1_pricing_summary",
-    "q3_shipping_priority", "q5_local_supplier_volume", "q6_forecast_revenue",
-    "range_join_click_attribution", "rollup_lineitem_qty", "schema_promotion_union",
-    "semi_join_priority_orders", "session_windows", "similarity_topk",
-    "text_normalize_hashsum", "text_quality_scores", "text_repetition_ratio",
-    "text_token_stats", "timestamp_parse_roundtrip", "top_k_per_group",
-    "upsert_latest_per_key", "user_session_gaps", "windowed_event_counts",
-    "zorder_pruned_scan",
-})
+@register(
+    "update_where_events",
+    f"""
+    SELECT event_type, count(*) AS n,
+           CAST(sum(CASE WHEN {UPDATE_PRED}
+                    THEN CAST(floor(value * 100) AS BIGINT) * 2
+                    ELSE CAST(floor(value * 100) AS BIGINT) END) AS BIGINT)
+             AS value_cents
+    FROM events
+    GROUP BY event_type
+    """,
+    "Predicate UPDATE over the lake table: stat-admitting files "
+    "rewritten in place with SET expressions (matching rows doubled), "
+    "untouched files carried — end state must equal the oracle's CASE "
+    "projection",
+)
+def update_where_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Loads events into a lake table, runs LakeWriter.update_where
+    (file-pruned in-place rewrite doubling matching rows' cents), reads
+    the final snapshot back. Values integerize to cents BEFORE the
+    update so both engines double exact integers."""
+    import os
+    import tempfile
+    import uuid
 
+    from ..lake import LakeCatalog, LakeWriter
 
-def _driver_checked() -> frozenset[str]:
-    """Union of keys across the committed CORRECTNESS_r*.json round
-    artifacts at the repo root; fallback literal if none are readable."""
-    import glob
-    import json
-
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ev = _t(spark, sf_dir, "events").select(
+        "event_id",
+        "event_type",
+        F.floor(F.col("value") * 100).cast("long").alias("value_cents"),
     )
-    keys: set[str] = set()
-    for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        try:
-            with open(p) as f:
-                for name, row in json.load(f).items():
-                    # Only a GREEN row counts as checked: a query that
-                    # failed its driver hash must re-enter the 50-slot
-                    # window next round (VERDICT r6 "Next round" #2).
-                    # Rows-only checks (no oracle) are green when rows
-                    # matched without error.
-                    green = bool(row.get("hash_match")) or (
-                        row.get("hash_match") is None
-                        and bool(row.get("rows_match"))
-                        and not row.get("err")
-                    )
-                    if green:
-                        keys.add(name)
-        except Exception:
-            continue
-    return frozenset(keys) or _DRIVER_CHECKED_FALLBACK
+    lake_dir = os.path.join(
+        tempfile.gettempdir(), f"ducklake_upd_{uuid.uuid4().hex[:8]}"
+    )
+    cat = LakeCatalog(spark, lake_dir)
+    w = LakeWriter(cat.table("events_upd"), pk=["event_id"])
+    w.append(ev)
+    w.update_where(UPDATE_PRED, {"value_cents": "value_cents * 2"})
+    return (
+        cat.table("events_upd")
+        .read()
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("value_cents").alias("value_cents"),
+        )
+    )
 
 
-def _rotated_names() -> list[str]:
-    """Never-driver-checked queries first, newest registrations first
-    within that group (a query added this round gets a hard correctness
-    row this round); already-checked queries follow in registration
-    order. Deterministic within a round, and every query lands in the
-    driver's 50-slot window within two rounds as the artifacts
-    accumulate."""
-    checked_set = _driver_checked()
-    names = list(QUERIES)
-    fresh = [n for n in names if n not in checked_set]
-    checked = [n for n in names if n in checked_set]
-    return list(reversed(fresh)) + checked
+# ---------------------------------------------------------------------------
+# cdc_upsert_tombstones
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "cdc_upsert_tombstones",
+    """
+    WITH last AS (
+      SELECT user_id,
+             arg_max(event_type, event_id) AS et,
+             arg_max(value, event_id) AS v,
+             max(event_id) AS seq
+      FROM events GROUP BY user_id
+    )
+    SELECT CAST(count(*) AS BIGINT) AS n_live,
+           ROUND(sum(v), 2) AS sum_value,
+           CAST(sum(seq) AS BIGINT) AS seq_sum
+    FROM last WHERE et <> 'error'
+    """,
+    "CDC changelog apply with delete semantics: per-user base snapshot, "
+    "then the whole event stream as a changelog MERGE (order_col=event "
+    "sequence, tombstone_col=error events) — last-write-wins including "
+    "winning tombstones deleting their key. The whenMatchedDelete "
+    "extension over the reference's MERGE (SURVEY §2.G)",
+)
+def cdc_upsert_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exercises the lake MERGE's tombstone path end-to-end (pytest
+    covers it unit-level in test_tombstones.py; this adds the driver
+    oracle). A user whose LAST event is an 'error' is tombstoned out of
+    the final table; everyone else carries their latest event's payload."""
+    ev = _t(spark, sf_dir, "events")
+    base = (
+        ev.groupBy("user_id")
+        .agg(F.lit("base").alias("event_type"), F.lit(0.0).alias("value"),
+             F.lit(0).cast("long").alias("seq"))
+    )
+    changelog = ev.select(
+        "user_id",
+        "event_type",
+        "value",
+        F.col("event_id").alias("seq"),
+        (F.col("event_type") == "error").alias("_deleted"),
+    )
+    lake_dir = os.path.join(
+        tempfile.gettempdir(), f"ducklake_cdc_{uuid.uuid4().hex[:8]}"
+    )
+    cat = LakeCatalog(spark, lake_dir)
+    w = LakeWriter(cat.table("user_state"), pk=["user_id"])
+    w.write(base)
+    w.merge(changelog, order_col="seq", tombstone_col="_deleted")
+    final = cat.table("user_state").read()
+    return final.agg(
+        F.count(F.lit(1)).alias("n_live"),
+        F.round(F.sum("value"), 2).alias("sum_value"),
+        F.sum("seq").alias("seq_sum"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Snapshot change feed (CDC between two committed lake versions)
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "snapshot_diff_changefeed",
+    """
+    WITH v1 AS (
+      SELECT event_id, value FROM events WHERE event_id % 10 < 8
+    ),
+    v2 AS (
+      SELECT event_id,
+             CASE WHEN event_id % 10 >= 5 THEN value + 1000.0 ELSE value END AS value
+      FROM events
+    ),
+    j AS (
+      SELECT v1.event_id AS old_id, v2.event_id AS new_id,
+             CAST(floor(v1.value * 100) AS BIGINT) AS oc,
+             CAST(floor(v2.value * 100) AS BIGINT) AS nc
+      FROM v1 FULL JOIN v2 ON v1.event_id = v2.event_id
+    )
+    SELECT CASE WHEN old_id IS NULL THEN 'insert'
+                WHEN new_id IS NULL THEN 'delete'
+                WHEN oc <> nc THEN 'update'
+                ELSE 'unchanged' END AS change_type,
+           count(*) AS n,
+           CAST(sum(coalesce(nc, oc)) AS BIGINT) AS value_cents
+    FROM j
+    GROUP BY 1
+    """,
+    "Change-data feed between two lake snapshots: full-outer diff of a "
+    "pre-merge and post-merge version of the same table, classified "
+    "insert/update/delete/unchanged (the CDC read a downstream "
+    "incremental consumer would run)",
+)
+def snapshot_diff_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators import dedup as _dops
+
+    src = _t(spark, sf_dir, "events")
+    return _dops._memo_plan(
+        src, "snapshot_diff", (), lambda: _build_snapshot_diff(spark, sf_dir)
+    )
+
+
+def _build_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Drives the real write path twice (append → v1, MERGE → v2), then
+    diffs the two committed versions via one full-outer join on the PK —
+    both sides are manifest-versioned reads of the SAME catalog, proving
+    immutable data files + manifest versioning give a usable change feed
+    without any change-log machinery. Values compare as per-row floor
+    cents (exact, order-free). At scale the join shuffles only
+    (pk, cents) pairs, never payloads."""
+    w, batch, cat = merge_upsert_build(spark, sf_dir)
+    t = cat.table("events_merged")
+    v1 = t.current_version()
+    w.write(batch)  # MERGE → v1 + 1
+    cents = lambda c: F.floor(c * 100).cast("long")  # noqa: E731
+    old = t.read(version=v1).select(
+        F.col("event_id").alias("old_id"), cents(F.col("value")).alias("oc")
+    )
+    new = t.read().select(
+        F.col("event_id").alias("new_id"), cents(F.col("value")).alias("nc")
+    )
+    j = old.join(new, old.old_id == new.new_id, "full_outer")
+    change = (
+        F.when(F.col("old_id").isNull(), "insert")
+        .when(F.col("new_id").isNull(), "delete")
+        .when(F.col("oc") != F.col("nc"), "update")
+        .otherwise("unchanged")
+    )
+    return (
+        j.select(change.alias("change_type"), F.coalesce("nc", "oc").alias("c"))
+        .groupBy("change_type")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("c").alias("value_cents"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# Incremental aggregate maintenance from the CDC feed
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "incremental_agg_view",
+    """
+    WITH final AS (
+      SELECT CASE WHEN event_id % 10 >= 5 THEN 'updated' ELSE event_type END
+               AS event_type,
+             CASE WHEN event_id % 10 >= 5 THEN value + 1000.0 ELSE value END
+               AS value
+      FROM events
+    )
+    SELECT event_type,
+           count(*) AS n_events,
+           CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT)
+             AS value_cents
+    FROM final
+    GROUP BY event_type
+    """,
+    "Materialized aggregate maintained INCREMENTALLY from the CDC "
+    "preimage/postimage feed between two lake versions — signed deltas "
+    "folded into the v1 aggregate reproduce the full recompute the "
+    "oracle runs, including rows that migrate between group keys",
+)
+def incremental_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators import dedup as _dops
+
+    src = _t(spark, sf_dir, "events")
+    return _dops._memo_plan(
+        src, "incr_agg_view", (), lambda: _build_incremental_agg_view(spark, sf_dir)
+    )
+
+
+def _build_incremental_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 100 TB materialized-view story: after a MERGE touches a sliver
+    of the table, refresh a per-group aggregate by folding the
+    ``changes(preimages=True)`` feed into the previous aggregate instead
+    of rescanning the corpus. Every feed row carries sign +1
+    (insert/update_postimage) or -1 (delete/update_preimage); summing
+    signed counts and signed cents per group handles group-key migration
+    (the merge rewrites event_type to 'updated') with no special cases.
+    Cost at scale: base aggregate is already materialized (here: the
+    pinned-v1 read stands in for it), so the refresh reads only the
+    churned files — cost proportional to the delta, not the table.
+    Values integerize to floor-cents per row so base+delta addition is
+    exact and order-free."""
+    w, batch, cat = merge_upsert_build(spark, sf_dir)
+    t = cat.table("events_merged")
+    v1 = t.current_version()
+    w.write(batch)  # MERGE → v1 + 1
+
+    cents = F.floor(F.col("value") * 100).cast("long")
+    base = (
+        t.read(version=v1)
+        .select("event_type", cents.alias("c"))
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("c").alias("vc"))
+    )
+    feed = t.changes(v1, preimages=True)
+    sign = F.when(
+        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
+    ).otherwise(F.lit(-1))
+    delta = (
+        feed.select("event_type", sign.alias("s"), cents.alias("c"))
+        .groupBy("event_type")
+        .agg(F.sum("s").alias("dn"), F.sum(F.col("s") * F.col("c")).alias("dvc"))
+    )
+    zero = F.lit(0).cast("long")
+    merged = base.join(delta, "event_type", "full_outer").select(
+        "event_type",
+        (F.coalesce("n", zero) + F.coalesce("dn", zero)).alias("n_events"),
+        (F.coalesce("vc", zero) + F.coalesce("dvc", zero)).alias("value_cents"),
+    )
+    return merged.filter(F.col("n_events") > 0)
+
+
+# TPC-H completion set (Q2/Q7-Q9/Q11-Q13/Q15/Q16/Q19-Q22) and the other
+# plan modules register on import; late imports because they need
+# register/_t from this module.
+from . import format_parity, ingest_replay, quality, timeseries, tpch  # noqa: E402,F401  (registration side effect)
 
 
 def query_map() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: QUERIES[name].fn for name in _rotated_names()}
+    return {name: qd.fn for name, qd in QUERIES.items()}
 
 
 def oracle_sql_map() -> dict[str, str]:
     return {
-        name: QUERIES[name].oracle.strip()
-        for name in _rotated_names()
-        if QUERIES[name].oracle
+        name: qd.oracle.strip() for name, qd in QUERIES.items() if qd.oracle
     }
 
 

@@ -56,6 +56,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..lake import LakeCatalog, LakeWriter
+from ..lake.inline import DEFAULT_INLINING_ROW_LIMIT, parse_inlining_limit  # noqa: F401  (re-exported)
 from ..lake.relation_cache import is_local_plan, local_plan_arrow, local_rows_df
 from ..lake.writer import ARROW_MERGE_MAX_BYTES, _dedup_last_wins
 from ..metrics import REGISTRY
@@ -63,8 +64,6 @@ from ..schema.reconcile import ReconcileError
 from ..sources.json_decode import CORRUPT_COL, decode_json, split_dlq
 
 _TOPIC_RE = re.compile(r"^[A-Za-z0-9._-]+$")
-
-DEFAULT_INLINING_ROW_LIMIT = 10_000
 
 # Largest batch process_batch runs on folded local plans. The folded
 # path evaluates the decode projection interpreted on one driver thread
@@ -81,34 +80,6 @@ DEFAULT_INLINING_ROW_LIMIT = 10_000
 #      10k    1509 - 1889         871 - 878
 # The break-even lies between 2k and 4k rows.
 LOCAL_BATCH_MAX_ROWS = 2048
-
-
-def parse_inlining_limit(value) -> int | None:
-    """``ducklake.data_inlining_row_limit`` semantics
-    (``DucklakeSinkConfig.java`` / ``DucklakeSinkConfigTest.java:58-88``):
-    unset → the 10000 default; ``"off"`` (any case) disables the
-    feature → None; numeric strings / ints parse; anything else raises.
-    In this engine the limit drives write-path auto-compaction — small
-    commits below the threshold get folded together — instead of the
-    reference's catalog inlining, which is the same contract (tiny
-    batches must not accrete as standalone files)."""
-    if value is None:
-        return DEFAULT_INLINING_ROW_LIMIT
-    if isinstance(value, bool):
-        raise ValueError(f"Invalid data-inlining row limit: {value!r}")
-    if isinstance(value, int):
-        n = value
-    else:
-        s = str(value).strip()
-        if s.lower() == "off":
-            return None
-        try:
-            n = int(s)
-        except ValueError:
-            raise ValueError(f"Invalid data-inlining row limit: {value!r}")
-    if n < 0:
-        raise ValueError(f"Invalid data-inlining row limit: {value!r}")
-    return n
 
 
 @dataclass
@@ -128,7 +99,10 @@ class TableSpec:
     csv_schema: str | None = None
     csv_options: dict | None = None
     confluent_framing: bool = False
-    # DATA_INLINING_ROW_LIMIT analogue: None→default 10000, "off"→disable
+    # DATA_INLINING_ROW_LIMIT analogue: None→default 10000, "off"→disable.
+    # Here the limit switches write-path auto-compaction (small commits
+    # get folded together) rather than the reference's catalog inlining:
+    # the same contract, tiny batches must not accrete as standalone files
     inlining_row_limit: str | int | None = None
     # CHECK constraints with CONNECTOR semantics: violating ROWS route to
     # the DLQ with the violated constraint names (the pipeline must not

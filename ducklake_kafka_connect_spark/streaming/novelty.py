@@ -1,8 +1,7 @@
 """Streaming fuzzy deduplication: a lake-backed standing MinHash/LSH
 index probed per micro-batch.
 
-The batch-mode novelty check (``plans/eval_ops.py::
-incremental_minhash_novelty``) made streaming: the index of everything
+A batch-mode MinHash novelty check made streaming: the index of everything
 accepted so far lives in a lake table (band rows, partitioned by band),
 each micro-batch probes it by band key, near-dups are dropped, and only
 the NOVEL documents' band rows append back — so the loop is
@@ -11,8 +10,7 @@ finds its own rows already in the index, flags every doc, and appends
 nothing (the at-least-once → effectively-once upgrade the reference
 gets from MERGE, here for fuzzy identity where no exact key exists).
 
-Decision rule (shared with the driver-hashed ``streaming_novelty_dedup``
-oracle, so it is pinned cross-engine):
+Decision rule:
 
 - a batch doc is flagged iff it shares an LSH band key with an index row
   (or a LOWER-id doc of the same batch) whose signature agrees on
@@ -32,7 +30,7 @@ O(corpus). Signatures compute over DISTINCT batch texts (md5 collapse)
 exactly like the batch operators. Degenerate boilerplate buckets are
 the known skew risk — production would cap bucket fan-in like
 ``minhash_pair_stages`` (MAX_BUCKET); this operator keeps the uncapped
-rule so its oracle twin is exact (see eval_ops docstring).
+rule so the decision stays exact.
 """
 
 from __future__ import annotations

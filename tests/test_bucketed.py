@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from ducklake_kafka_connect_spark.plans.pipeline import bucketed_join_frames
+from ducklake_kafka_connect_spark.plans.quality import bucketed_join_frames
 
 SF = "/root/testdata/sf0.001"
 

@@ -41,7 +41,6 @@ PINS = {
     "dedup_minhash_lsh": (4, 14, 7, 0, True),
     "ann_ivfpq_topk": (1, 0, 0, 0, True),
     "similarity_topk": (1, 0, 0, 0, True),
-    "hybrid_rrf_retrieval": (2, 11, 4, 0, True),
     "text_token_stats": (1, 1, 0, 0, False),
     "window_rank_suite": (1, 1, 0, 0, False),
     "timeseries_gapfill": (1, 6, 2, 0, False),
@@ -55,10 +54,6 @@ PINS = {
     "pivot_event_type_wide": (1, 1, 0, 0, False),
     # as-of joins: one shuffle (the key window), pushed type filters
     "asof_forward_next_purchase": (2, 1, 0, 0, True),
-    # r14 session 9: the kNN eval pairs stage — broadcast(q) into the
-    # repartitioned corpus, zero Python; the dot is the zip_with fold
-    # (entry 18), guarded separately below
-    "knn_label_eval": (2, 5, 1, 0, True),
 }
 
 
@@ -96,15 +91,6 @@ def test_plan_shape_pinned(plans, name):
     assert bool(s["pushed"]) == pushed, (
         f"{name}: pushed-filter presence drifted (now {s['pushed']!r})"
     )
-
-
-def test_knn_eval_dot_is_fold(plans):
-    """Entry 18: the kNN eval dot must stay the aggregate(zip_with(...))
-    fold — an unrolled 64-term spelling re-inflates the codegen method
-    past the JIT/Janino budgets (measured 1.7 s warm vs 1.0 s, 5.8 s
-    cold vs 1.5 s)."""
-    plan = plans["knn_label_eval"]
-    assert "zip_with" in plan, "kNN dot no longer the zip_with fold"
 
 
 def test_no_rowwise_python_udf_in_surface_plans(plans):

@@ -1,5 +1,5 @@
-"""Round-9 operators: product-quantized ANN, SemDeDup pruning,
-iterative BPE training, char-entropy quality.
+"""Round-9 operators: product-quantized ANN, SemDeDup pruning and the
+single-pass replace rule BPE merges rely on.
 
 Reference parity anchor: inyo-global/ducklake-kafka-connect has no
 vector/tokenizer ops — these extend the beyond-parity LLM-pipeline
@@ -165,43 +165,8 @@ def test_semdedup_keeps_lowest_id(spark):
 
 
 # ---------------------------------------------------------------------------
-# BPE training loop
+# BPE merge rule
 # ---------------------------------------------------------------------------
-
-
-def test_bpe_train_merges_known_corpus(spark, tmp_path, monkeypatch):
-    """Tiny corpus with hand-computable merges: 'abab' x3, 'ab' x2.
-    Round 1 must pick ('a b') with count 3*2+2*1 = 8; after merging,
-    round 2 sees 'ab ab' (single-pass replace leaves the second 'a b'
-    of each 'a b a b' unmerged only when ADJACENT — here 'ab' 'a' 'b'
-    remains, so pair ('ab a') vs ('a b')... pinned empirically below
-    against the DuckDB oracle, which is the real invariant."""
-    import duckdb
-
-    from ducklake_kafka_connect_spark.plans.corpus_stats import (
-        _bpe_train_sql,
-        bpe_train_merges,
-    )
-
-    docs = spark.createDataFrame(
-        [(0, "en", "abab abab abab ab ab")],
-        "doc_id long, lang string, text string",
-    )
-    p = str(tmp_path / "documents.parquet")
-    docs.write.mode("overwrite").parquet(p)
-    # the query reads <sf_dir>/documents.parquet
-    rows = sorted(
-        tuple(r)
-        for r in bpe_train_merges(spark, str(tmp_path)).collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{p}/*.parquet')"
-    )
-    oracle = sorted(tuple(r) for r in con.execute(_bpe_train_sql()).fetchall())
-    assert rows == oracle
-    # round 1: 'a b' appears twice per 'abab' (3 docs-words) + once per 'ab'
-    assert rows[0] == (1, "a b", 8)
 
 
 def test_bpe_single_pass_replace_semantics(spark):
@@ -212,30 +177,6 @@ def test_bpe_single_pass_replace_semantics(spark):
         F.replace(F.col("st"), F.lit(" a a "), F.lit(" aa ")).alias("r")
     ).head()["r"]
     assert got == " a a a ".replace(" a a ", " aa ") == " aa a "
-
-
-# ---------------------------------------------------------------------------
-# Char entropy
-# ---------------------------------------------------------------------------
-
-
-def test_char_entropy_uniform_and_degenerate(spark, tmp_path):
-    from ducklake_kafka_connect_spark.plans.corpus_stats import (
-        char_entropy_quality,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (0, "en", "abcd" * 25),  # uniform over 4 chars → ln 4
-            (1, "xx", "aaaa" * 25),  # degenerate → 0
-        ],
-        "doc_id long, lang string, text string",
-    )
-    docs.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    out = {r["lang"]: r for r in char_entropy_quality(spark, str(tmp_path)).collect()}
-    assert out["en"]["avg_entropy"] == pytest.approx(math.log(4), abs=1e-5)
-    assert out["xx"]["avg_entropy"] == 0.0
-    assert out["xx"]["n_low_entropy"] == 1
 
 
 # ---------------------------------------------------------------------------

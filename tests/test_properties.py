@@ -1,9 +1,8 @@
 """Property-based tests (hypothesis): invariants that unit fixtures
-cannot sweep — codec roundtrips over arbitrary shapes/contents,
-partition-value canonicalization agreement, and data-skipping
-conservativeness."""
+cannot sweep — partition-value canonicalization agreement, data-skipping
+conservativeness, manifest segment round trips and SQL predicate
+extraction."""
 
-import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -12,105 +11,6 @@ from ducklake_kafka_connect_spark.lake.partitioning import (
     canon_partition_value,
 )
 from ducklake_kafka_connect_spark.lake.skipping import parse_conjuncts, prune_files
-from ducklake_kafka_connect_spark.operators import codecs
-
-# --------------------------------------------------------------------------
-# codecs: decode(encode(x)) == x for every shape and content
-# --------------------------------------------------------------------------
-
-dims = st.tuples(st.integers(1, 24), st.integers(1, 24))
-
-
-@settings(max_examples=50, deadline=None)
-@given(dims, st.integers(0, 2**32 - 1), st.sampled_from([1, 3]))
-def test_pnm_roundtrip_any_shape(shape, seed, ch):
-    h, w = shape
-    arr = np.random.RandomState(seed).randint(0, 256, size=(h, w, ch), dtype=np.uint8)
-    out = codecs.decode_ppm(codecs.encode_ppm(arr))
-    assert out.shape == arr.shape and np.array_equal(out, arr)
-
-
-@settings(max_examples=50, deadline=None)
-@given(dims, st.integers(0, 2**32 - 1))
-def test_bmp_roundtrip_any_shape(shape, seed):
-    h, w = shape
-    arr = np.random.RandomState(seed).randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-    out = codecs.decode_bmp(codecs.encode_bmp(arr))
-    assert np.array_equal(out, arr)
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.integers(1, 2000), st.sampled_from([1, 2]), st.integers(0, 2**32 - 1),
-       st.sampled_from([8000, 16000, 44100]))
-def test_wav_roundtrip_any_length(n, ch, seed, rate):
-    rng = np.random.RandomState(seed)
-    samples = rng.randint(-(2**15), 2**15, size=(n, ch)).astype(np.int16)
-    arr, r = codecs.decode_wav(codecs.encode_wav(samples, rate=rate))
-    assert r == rate and np.array_equal(arr, samples)
-
-
-@settings(max_examples=50, deadline=None)
-@given(dims, dims, st.integers(0, 2**32 - 1))
-def test_resize_shape_and_pixel_provenance(src, dst, seed):
-    h, w = src
-    th, tw = dst
-    arr = np.random.RandomState(seed).randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-    out = codecs.resize_nearest(arr, tw, th)
-    assert out.shape == (th, tw, 3)
-    # nearest-neighbor: every output pixel exists somewhere in the input
-    src_px = {bytes(p) for p in arr.reshape(-1, 3)}
-    assert all(bytes(p) in src_px for p in out.reshape(-1, 3))
-
-
-@settings(max_examples=25, deadline=None)
-@given(dims, st.integers(0, 2**32 - 1), st.sampled_from([1, 3]),
-       st.sampled_from(["4:4:4", "4:2:0"]), st.sampled_from([0, 2]))
-def test_jpeg_roundtrip_any_shape(shape, seed, ch, sub, ri):
-    """JPEG is lossy in pixels but EXACT in geometry, and smooth inputs
-    must clear a PSNR floor at q90 for every shape/subsampling/restart
-    combination."""
-    from ducklake_kafka_connect_spark.operators import jpeg
-
-    h, w = shape
-    rng = np.random.RandomState(seed)
-    base = 128 + 80 * np.sin(np.add.outer(np.arange(h), np.arange(w)) / 7.0)
-    arr = np.stack(
-        [np.clip(base + rng.randint(-10, 10), 0, 255) for _ in range(ch)],
-        axis=-1,
-    ).astype(np.uint8)
-    payload = jpeg.encode_jpeg(arr, quality=90, subsample=sub, restart_interval=ri)
-    out = jpeg.decode_jpeg(payload)
-    assert out.shape == arr.shape
-    mse = ((out.astype(float) - arr.astype(float)) ** 2).mean()
-    assert 10 * np.log10(255**2 / max(1e-9, mse)) > 28
-
-
-@settings(max_examples=50, deadline=None)
-@given(st.binary(max_size=64))
-def test_codec_errors_never_crash(payload):
-    """Arbitrary garbage either decodes or raises CodecError — never an
-    unhandled exception (one bad payload must not kill a corpus scan)."""
-    for fn in (codecs.decode_ppm, codecs.decode_bmp, codecs.decode_wav,
-               codecs.decode_image_array):
-        try:
-            fn(payload)
-        except codecs.CodecError:
-            pass
-    codecs.sniff_format(payload)
-
-
-@settings(max_examples=40, deadline=None)
-@given(st.binary(max_size=96))
-def test_jpeg_garbage_never_crashes(payload):
-    """Garbage after a JPEG SOI must raise CodecError, never a raw
-    IndexError/KeyError/struct.error from the bit/marker machinery."""
-    from ducklake_kafka_connect_spark.operators import jpeg
-
-    try:
-        jpeg.decode_jpeg(b"\xff\xd8" + payload)
-    except codecs.CodecError:
-        pass
-
 
 # --------------------------------------------------------------------------
 # partition canonicalization: value-side and token-side must agree
@@ -231,50 +131,6 @@ def test_binary_segment_roundtrip_arbitrary(files, stats, version, parent):
         "file_stats": stats,
     }
     assert decode_segment_binary(encode_segment_binary(d)) == d
-
-
-@given(st.binary(max_size=300))
-@settings(max_examples=40, deadline=None)
-def test_tar_member_parse_never_crashes(payload):
-    """Garbage tar payloads must yield zero members, never an exception
-    (the shard-level DLQ philosophy). Pure-Python harness over the same
-    parse the Spark decode uses."""
-    import io
-    import tarfile
-
-    rows = []
-    try:
-        with tarfile.open(fileobj=io.BytesIO(payload), mode="r") as tf:
-            for info in tf:
-                if info.isfile():
-                    rows.append(info.name)
-    except (tarfile.TarError, EOFError, OSError):
-        pass  # exactly what decode_members swallows per shard
-    assert isinstance(rows, list)
-
-
-# ---------------------------------------------------------------------------
-# progressive JPEG: must decode to EXACTLY the baseline pixels (shared
-# quantized coefficients) for any geometry/subsampling/restart combo
-# ---------------------------------------------------------------------------
-
-
-@settings(max_examples=15, deadline=None)
-@given(dims, st.integers(0, 2**32 - 1), st.sampled_from([1, 3]),
-       st.sampled_from(["4:4:4", "4:2:0"]), st.sampled_from([0, 2]))
-def test_progressive_jpeg_equals_baseline(shape, seed, ch, sub, ri):
-    from ducklake_kafka_connect_spark.operators import jpeg
-
-    h, w = shape
-    rng = np.random.RandomState(seed)
-    arr = rng.randint(0, 256, (h, w, ch)).astype(np.uint8)
-    prog = jpeg.decode_jpeg(jpeg.encode_jpeg(
-        arr, quality=80, subsample=sub, restart_interval=ri, progressive=True
-    ))
-    base = jpeg.decode_jpeg(jpeg.encode_jpeg(
-        arr, quality=80, subsample=sub, restart_interval=ri
-    ))
-    assert np.array_equal(prog, base)
 
 
 # ---------------------------------------------------------------------------

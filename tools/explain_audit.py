@@ -20,7 +20,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 # queries that execute writes / collect driver-side as part of plan
 # construction — the final read plan alone is not the interesting part
-SKIP = {"merge_upsert_events", "merge_many_group_commit", "time_travel_snapshot", "delete_where_events", "update_where_events", "ingest_replay_pipeline", "dlq_reprocess_pipeline", "streaming_novelty_dedup"}
+SKIP = {"merge_upsert_events", "merge_many_group_commit", "time_travel_snapshot", "delete_where_events", "update_where_events", "ingest_replay_pipeline", "dlq_reprocess_pipeline"}
 
 
 def _unique_nodes(plan: str) -> dict[int, str]:

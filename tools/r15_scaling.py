@@ -29,8 +29,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 QUERIES_5 = [
     "q1_pricing_summary",
-    "unigram_logprob_quality",
-    "rm3_query_expansion",
+    "q5_local_supplier_volume",
+    "dedup_simhash_hamming",
     "dedup_minhash_lsh",
     "semdedup_prune",
 ]
