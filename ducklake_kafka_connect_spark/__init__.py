@@ -15,7 +15,8 @@ Spark DataFrame / Structured Streaming stack:
 - ``streaming/`` — foreachBatch ingestion pipeline with DLQ routing.
 - ``operators/`` — beyond-parity operators: dedup (exact, MinHash-LSH,
                    SimHash), similarity search, text analysis, as-of and
-                   range joins, salted skew aggregation.
+                   range joins, salted skew aggregation, binary media
+                   columns with zero-dependency codecs.
 - ``functions/`` — scalar helpers (ISO-8601 timestamp sniff/parse, JSON
                    canonicalization) as Catalyst column expressions.
 - ``plans/``     — the named query surface exposed to the driver oracle.

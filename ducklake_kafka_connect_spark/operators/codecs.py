@@ -13,15 +13,7 @@ uncompressed media:
   stdlib ``zlib`` inflate + numpy row unfiltering (all five filter
   types) — a real COMPRESSED format with zero third-party deps.
 
-- **JPEG** (baseline sequential SOF0 AND progressive SOF2 — spectral
-  selection, successive approximation, EOB runs — Huffman, sampling
-  ≤2×2 incl. 4:2:0, restart markers): ``operators/jpeg.py`` — matrix
-  DCT over all blocks, canonical Huffman entropy coder, Annex K tables
-  (per-scan optimal tables for progressive); both directions,
-  standard-conformant output.
-
-Remaining variants (arithmetic-coded JPEG, 12-bit precision, 16-bit or
-Adam7 PNG, FLAC/…) still require Pillow/soundfile and stay behind the
+Remaining formats (JPEG, 16-bit or Adam7 PNG, FLAC/…) still require Pillow/soundfile and stay behind the
 import-try gate in ``multimodal.py`` — ``sniff_format`` tells callers
 which path a payload needs. Resize is nearest-neighbor
 index sampling (the deterministic choice: no filter kernels to disagree
@@ -378,8 +370,4 @@ def decode_image_array(payload: bytes) -> np.ndarray:
         return decode_bmp(payload)
     if fmt == "png":
         return decode_png(payload)
-    if fmt == "jpeg":
-        from .jpeg import decode_jpeg
-
-        return decode_jpeg(payload)
     raise CodecError(f"no built-in decoder for format {fmt!r}")

@@ -14,7 +14,7 @@ of metadata arithmetic. Both directions:
   delays; output is standard GIF89a any decoder reads.
 
 Corrupt payloads raise CodecError only (same mapInPandas-safety
-contract as decode_png/decode_jpeg). Reference scope: beyond-parity
+contract as decode_png). Reference scope: beyond-parity
 multimodal surface (the Kafka connector has no media codecs).
 """
 

@@ -8,8 +8,8 @@ UDF signatures) is real and tested, and the codec layer is REAL for
 uncompressed formats (round 5): ``decode_image`` handles PPM/PGM/BMP
 and ``decode_audio`` PCM WAV via the zero-dependency numpy/stdlib
 codecs in ``operators/codecs.py``; ``resize_images`` produces real
-thumbnails. Baseline JPEG and standard PNG decode with the built-in
-numpy codecs; remaining variants stay behind the Pillow
+thumbnails. Standard PNG decodes with the built-in numpy codecs;
+JPEG and the remaining variants stay behind the Pillow
 import-try gate — absent in this container, those rows decode as NULLs.
 ``fake_decode_image`` / ``audio_stats_col`` stay as the deterministic
 stand-ins the DuckDB oracle can verify (no SQL engine decodes BMP).
@@ -147,10 +147,8 @@ def decode_image(media: DataFrame) -> DataFrame:
     """REAL decode path over ``mapInPandas`` — same plumbing as
     ``fake_decode_image``, but the body runs the built-in numpy codecs
     (PPM/PGM/BMP + zlib-based PNG, ``operators/codecs.py``) on each
-    payload. Formats the built-ins can't handle (arithmetic/12-bit
-    JPEG; 16-bit or interlaced PNG) dispatch to Pillow when importable
-    (the built-ins cover baseline AND progressive JPEG plus standard
-    PNG); otherwise those
+    payload. Formats the built-ins can't handle (JPEG; 16-bit or
+    interlaced PNG) dispatch to Pillow when importable; otherwise those
     rows decode as NULLs (the import-try gate, visible in the output
     rather than an exception so one bad payload can't kill a 100 TB
     scan). ``byte_sum`` = sum of decoded pixel values mod 1,000,003 —

@@ -5,8 +5,8 @@ Beyond-parity module (SURVEY §2.G / BASELINE north star: multimodal
 training-data pipeline operators — the reference delegates all media
 handling to opaque BLOB columns). Both operators run inside
 Arrow-batched ``mapInPandas`` slots over narrow ``(media_id, data)``
-frames, the same two-boundary shape as the JPEG/GIF/WAV pipelines in
-``plans/corpus_stats.py``; everything after the fingerprint is plain
+frames, the same two-boundary shape as ``multimodal.decode_image``;
+everything after the fingerprint is plain
 Catalyst (groupBy on a 63-bit key / a small int bin).
 
 100 TB design notes:

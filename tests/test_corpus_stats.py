@@ -1,4 +1,6 @@
-"""Spark-free property checks for the corpus-stats oracle formulations.
+"""Spark-free property checks for the HyperLogLog and median/MAD oracle
+formulations of ``hll_distinct_sketch`` and ``robust_value_outliers``
+(plans/timeseries.py).
 
 The oracle SQL is the executable spec both engines must match; these
 tests stress it in DuckDB alone across regimes the driver testdata
@@ -9,7 +11,7 @@ doesn't reach (HLL across cardinalities, MAD degenerate distributions)
 import duckdb
 import pytest
 
-from ducklake_kafka_connect_spark.plans.corpus_stats import (
+from ducklake_kafka_connect_spark.plans.timeseries import (
     HLL_2P53,
     HLL_ALPHA_M2,
     HLL_M,
@@ -100,40 +102,3 @@ def test_mad_zero_mad_flags_any_deviation():
     mad_val, n_out = duckdb.connect().execute(q).fetchone()
     assert mad_val == 0
     assert n_out == 40  # every non-identical value flags
-
-
-def test_cms_collision_regime_overestimates_but_never_under():
-    """At 500 distinct keys into a 4x64 grid collisions are guaranteed;
-    CMS must never underestimate, and min-over-rows must beat (or tie)
-    every single row's cell count."""
-    from ducklake_kafka_connect_spark.plans.corpus_stats import CMS_D, CMS_W
-
-    con = duckdb.connect()
-    q = f"""
-    WITH tok AS (
-      SELECT 'k' || CAST((i * i) % 500 AS VARCHAR) AS w
-      FROM (SELECT unnest(generate_series(1, 20000)) AS i)
-    ),
-    rows_ AS (SELECT unnest(generate_series(0, {CMS_D - 1})) AS r),
-    cells AS (
-      SELECT r, {h60_sql("w || '#' || CAST(r AS VARCHAR)")} % {CMS_W} AS idx,
-             count(*) AS c
-      FROM tok, rows_ GROUP BY r, idx
-    ),
-    exact AS (SELECT w, count(*) AS n_exact FROM tok GROUP BY w),
-    probes AS (
-      SELECT exact.w, exact.n_exact, r.r,
-             {h60_sql("exact.w || '#' || CAST(r.r AS VARCHAR)")} % {CMS_W} AS idx
-      FROM exact, rows_ r
-    )
-    SELECT p.w, p.n_exact, min(c.c) AS est
-    FROM probes p JOIN cells c ON p.r = c.r AND p.idx = c.idx
-    GROUP BY p.w, p.n_exact
-    """
-    rows = con.execute(q).fetchall()
-    assert len(rows) > 100
-    n_over = 0
-    for w, n_exact, est in rows:
-        assert est >= n_exact, (w, n_exact, est)  # CMS never underestimates
-        n_over += est > n_exact
-    assert n_over > 0  # the collision regime actually exercises overestimation

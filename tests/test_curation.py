@@ -1,238 +1,9 @@
-"""Semantic checks for the round-9 curation wave (plans/curation.py).
-
-Same two layers as test_eval_ops.py: DuckDB-only runs of the oracle SQL
-over crafted regimes (the oracle is the executable spec), plus one
-Spark-vs-oracle parity run per operator on crafted parquet. The
-sf0.001/sf0.01 testdata parity is covered by test_entry_oracle.py.
+"""DuckDB-only checks of the ``psi_feature_drift`` oracle SQL
+(plans/timeseries.py) over crafted time halves; the sf0.001/sf0.01
+parity is covered by test_entry_oracle.py.
 """
 
-import hashlib
-import os
-
-import duckdb
-
-from ducklake_kafka_connect_spark.plans.curation import (
-    DOMAIN_CAP,
-    DSIR_BUCKETS,
-    DUP5_FLAG_MICRO,
-    TOP2_FLAG_MICRO,
-)
 from ducklake_kafka_connect_spark.plans.queries import QUERIES
-
-DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
-
-
-def _con_with_docs(rows):
-    """DuckDB view over VALUES rows of (doc_id, text, lang, source);
-    n_chars derives from the text."""
-    con = duckdb.connect()
-    vals = ", ".join(
-        f"({i}, '{t}', '{lang}', '{src}', {len(t)})"
-        for i, t, lang, src in rows
-    )
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM (VALUES {vals}) "
-        "AS t(doc_id, text, lang, source, n_chars)"
-    )
-    return con
-
-
-def _parity(spark, tmp_path, rows, name):
-    sf_dir = str(tmp_path)
-    spark.createDataFrame(
-        [(i, t, lang, src, len(t)) for i, t, lang, src in rows], DOC_SCHEMA
-    ).write.mode("overwrite").parquet(os.path.join(sf_dir, "documents.parquet"))
-    got = [tuple(r) for r in QUERIES[name].fn(spark, sf_dir).collect()]
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet/*.parquet')"
-    )
-    want = con.execute(QUERIES[name].oracle).fetchall()
-    con.close()
-    assert got == want
-    return got
-
-
-def _words(n, base, start=0):
-    return " ".join(f"{base}{i}" for i in range(start, start + n))
-
-
-def _bucket(word: str) -> int:
-    return int(hashlib.md5(word.encode()).hexdigest()[:15], 16) % DSIR_BUCKETS
-
-
-class TestGopherRepetition:
-    def test_degenerate_doc_flags_clean_doc_does_not(self):
-        # doc 1: one word 20 times. top 2-gram 'x x' occurs 19 times,
-        # chars 19*2=38 over 20 total → 1.9 (overlap counting, per the
-        # paper); every position is covered by a duplicated 5-gram.
-        rows = [
-            (1, " ".join(["x"] * 20), "en", "s"),
-            (2, _words(20, "w"), "fr", "s"),  # all distinct
-        ]
-        con = _con_with_docs(rows)
-        out = {
-            r[0]: r
-            for r in con.execute(
-                QUERIES["gopher_repetition_suite"].oracle
-            ).fetchall()
-        }
-        lang, n, sum2, max2, f2, f3, sumd, fd = out["en"]
-        assert (n, max2) == (1, 1_900_000)
-        assert sumd == 1_000_000  # full coverage
-        assert (f2, f3, fd) == (1, 1, 1)
-        assert max2 > TOP2_FLAG_MICRO and sumd > DUP5_FLAG_MICRO
-        lang, n, sum2, max2, f2, f3, fd = (
-            out["fr"][0],
-            out["fr"][1],
-            out["fr"][2],
-            out["fr"][3],
-            out["fr"][4],
-            out["fr"][5],
-            out["fr"][7],
-        )
-        # distinct words: every 2-gram count is 1; no duplicated 5-gram
-        assert (f2, f3, fd) == (0, 0, 0)
-        assert out["fr"][6] == 0  # sum_dup5_micro
-
-    def test_short_docs_do_not_crash_coverage(self):
-        rows = [
-            (1, "a", "en", "s"),  # no bigram, no 5-gram
-            (2, "a b c d", "en", "s"),  # bigrams, no 5-gram
-        ]
-        con = _con_with_docs(rows)
-        out = con.execute(QUERIES["gopher_repetition_suite"].oracle).fetchall()
-        assert len(out) == 1 and out[0][1] == 2  # both docs present
-
-    def test_spark_parity_on_crafted_edges(self, spark, tmp_path):
-        rows = [
-            (1, " ".join(["x"] * 20), "en", "s"),
-            (2, _words(20, "w") + " " + _words(6, "w"), "en", "s"),
-            (3, "a", "fr", "s"),
-            (4, "lone pair lone pair lone pair tail0 tail1", "fr", "s"),
-        ]
-        got = _parity(spark, tmp_path, rows, "gopher_repetition_suite")
-        assert [r[0] for r in got] == ["en", "fr"]
-
-
-class TestDsirImportanceWeights:
-    def test_target_like_docs_score_positive(self):
-        # 'beta'(43) and 'delta'(17) hash to different buckets, so the
-        # en-heavy bucket must score positive and the fr-only negative.
-        assert _bucket("beta") != _bucket("delta")
-        rows = (
-            [(i, " ".join(["beta"] * 10), "en", "s") for i in range(4)]
-            + [(9, " ".join(["delta"] * 10), "fr", "s")]
-        )
-        con = _con_with_docs(rows)
-        out = {
-            r[0]: r
-            for r in con.execute(
-                QUERIES["dsir_importance_weights"].oracle
-            ).fetchall()
-        }
-        # en docs: target dist concentrates on beta's bucket → selected
-        assert out["en"][2] == 4  # n_selected
-        assert out["fr"][2] == 0
-        assert out["en"][5] > 0 > out["fr"][5]  # max_w vs max_w
-
-    def test_spark_parity(self, spark, tmp_path):
-        rows = [
-            (1, "beta beta zeta", "en", "s"),
-            (2, "delta delta delta kappa", "fr", "s"),
-            (3, "beta delta", "en", "s"),
-            (4, "omega", "de", "s"),
-        ]
-        _parity(spark, tmp_path, rows, "dsir_importance_weights")
-
-
-class TestDomainCapSample:
-    def test_cap_counts(self):
-        rows = [(i, f"doc {i}", "en", "big") for i in range(DOMAIN_CAP + 5)]
-        rows += [(100 + i, f"doc {i}", "en", "small") for i in range(3)]
-        con = _con_with_docs(rows)
-        out = {
-            r[0]: r
-            for r in con.execute(QUERIES["domain_cap_sample"].oracle).fetchall()
-        }
-        assert out["big"][1:4] == (DOMAIN_CAP + 5, DOMAIN_CAP, 5)
-        assert out["small"][1:4] == (3, 3, 0)
-
-    def test_kept_set_is_hash_stable(self):
-        # adding docs only displaces those ranked after them — a doc
-        # whose hash ranks first is kept under any corpus growth.
-        rows = [(i, f"d{i}", "en", "s") for i in range(30)]
-        con = _con_with_docs(rows)
-        base = con.execute(QUERIES["domain_cap_sample"].oracle).fetchall()
-        assert base[0][2] == DOMAIN_CAP  # n_kept
-        # kept_chars is a deterministic function of the id set
-        again = con.execute(QUERIES["domain_cap_sample"].oracle).fetchall()
-        assert base == again
-
-    def test_spark_parity(self, spark, tmp_path):
-        rows = [(i, _words(3, "t"), "en", f"src{i % 3}") for i in range(40)]
-        got = _parity(spark, tmp_path, rows, "domain_cap_sample")
-        assert all(r[2] <= DOMAIN_CAP for r in got)
-
-
-class TestSourceKlDrift:
-    def test_skewed_source_drifts_more(self):
-        # A and B share the corpus distribution; C floods one rare word.
-        rows = []
-        i = 0
-        for src in ("a", "b"):
-            for _ in range(5):
-                rows.append((i, "red green blue", "en", src))
-                i += 1
-        for _ in range(5):
-            rows.append((i, "red red red red red red", "en", "c"))
-            i += 1
-        con = _con_with_docs(rows)
-        out = {
-            r[0]: r
-            for r in con.execute(QUERIES["source_kl_drift"].oracle).fetchall()
-        }
-        assert out["a"][2] == out["b"][2]  # symmetric sources agree
-        assert out["c"][2] > out["a"][2]  # the skewed source drifts most
-
-    def test_spark_parity(self, spark, tmp_path):
-        rows = [
-            (i, _words(8, "v", start=i % 4), "en", f"s{i % 2}")
-            for i in range(20)
-        ]
-        _parity(spark, tmp_path, rows, "source_kl_drift")
-
-
-class TestDataRecipeEpochs:
-    def test_quota_and_epoch_invariants(self):
-        from ducklake_kafka_connect_spark.plans.curation import (
-            RECIPE_BUDGET_TOKENS,
-        )
-
-        rows = (
-            [(i, _words(50, "e"), "en", "s") for i in range(20)]
-            + [(100 + i, _words(10, "f"), "fr", "s") for i in range(3)]
-        )
-        con = _con_with_docs(rows)
-        out = con.execute(QUERIES["data_recipe_epochs"].oracle).fetchall()
-        got = {r[0]: r for r in out}
-        # quotas never exceed the budget in total
-        assert sum(r[3] for r in out) <= RECIPE_BUDGET_TOKENS
-        # sqrt weighting upsamples the low-resource language: fr repeats
-        # more often than en
-        assert got["fr"][5] > got["en"][5]  # repetition_micro
-        assert all(r[4] >= 1 for r in out)  # epochs
-        # epochs = ceil(quota / available)
-        for r in out:
-            assert r[4] == -(-r[3] // r[1])
-
-    def test_spark_parity(self, spark, tmp_path):
-        rows = [
-            (i, _words(12 + i % 9, "w"), ["en", "fr", "zh"][i % 3], "s")
-            for i in range(30)
-        ]
-        _parity(spark, tmp_path, rows, "data_recipe_epochs")
 
 
 class TestDriftMonitors:
@@ -270,39 +41,3 @@ class TestDriftMonitors:
         }
         assert abs(out["same"]) < 20_000  # smoothing residue only
         assert out["shift"] > 500_000  # clear drift
-
-    def test_centroid_drift_cos_one_when_halves_agree(self, spark, tmp_path):
-        import math
-        import os as _os
-
-        rows = []
-        for k in range(40):
-            vec = [0.0] * 64
-            # label 0: identical direction in both halves → cos 1.0
-            # label 1: even ids point +x, odd ids +y → cos 0.0
-            if k % 2 == 0:
-                vec[0] = 1.0
-            else:
-                vec[0 if (k // 2) % 2 == 0 else 1] = 1.0
-            rows.append((k, vec, 0 if k % 2 == 0 else 1))
-        # relabel: label = 0 for all even vec_ids is wrong shape — use
-        # two labels with controlled halves instead
-        rows = []
-        for k in range(40):
-            vec = [0.0] * 64
-            if k < 20:  # label 0: +x everywhere
-                vec[0] = 1.0
-                rows.append((k, vec, 0))
-            else:  # label 1: +x on even ids, +y on odd ids
-                vec[0 if k % 2 == 0 else 1] = 1.0
-                rows.append((k, vec, 1))
-        sf_dir = str(tmp_path)
-        spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>, label int"
-        ).write.parquet(_os.path.join(sf_dir, "embeddings.parquet"))
-        got = {
-            r["label"]: r["centroid_cos"]
-            for r in QUERIES["embedding_centroid_drift"].fn(spark, sf_dir).collect()
-        }
-        assert got[0] == 1.0
-        assert got[1] == 0.0

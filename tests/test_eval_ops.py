@@ -1,223 +1,12 @@
-"""Semantic checks for the round-9 eval/diagnostic operators.
-
-Two layers, mirroring test_corpus_stats.py: (1) DuckDB-only runs of the
-oracle SQL over crafted regimes the driver testdata doesn't reach (the
-oracle IS the executable spec), and (2) Spark-vs-oracle parity on
-crafted parquet fixtures for the operators with nontrivial windowed
-merging (maximal spans) — the sf0.001/sf0.01 testdata parity is covered
-by test_entry_oracle.py.
+"""DuckDB-only checks of the ``key_skew_profile`` oracle SQL
+(plans/timeseries.py) over crafted key distributions the driver testdata
+doesn't reach; the sf0.001/sf0.01 parity is covered by
+test_entry_oracle.py.
 """
 
-import math
-import os
-
 import duckdb
-import pytest
 
-from ducklake_kafka_connect_spark.plans.eval_ops import (
-    CAL_TRUTH_T,
-    HYBRID_TOP,
-    MAXSPAN_K,
-    NOV_MATCH_MIN,
-    RRF_K,
-    RRF_N,
-)
 from ducklake_kafka_connect_spark.plans.queries import QUERIES
-
-
-def _con_with_docs(rows):
-    """DuckDB connection with a ``documents`` view over VALUES rows of
-    (doc_id, text, lang)."""
-    con = duckdb.connect()
-    vals = ", ".join(
-        f"({i}, '{t}', '{lang}')" for i, t, lang in rows
-    )
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM (VALUES {vals}) "
-        "AS t(doc_id, text, lang)"
-    )
-    return con
-
-
-def _words(n, base, start=0):
-    return " ".join(f"{base}{i}" for i in range(start, start + n))
-
-
-class TestSpanMaximal:
-    def test_shared_run_merges_into_one_maximal_span(self):
-        # Two docs share a 12-word run → 12-8+1 = 5 duplicated windows
-        # that must merge into ONE span of exactly 12 tokens.
-        shared = _words(12, "s")
-        rows = [
-            (1, f"{_words(4, 'a')} {shared}", "en"),
-            (2, f"{shared} {_words(4, 'b')}", "en"),
-            (3, _words(20, "c"), "fr"),  # no duplication → absent
-        ]
-        con = _con_with_docs(rows)
-        out = con.execute(QUERIES["dedup_span_maximal"].oracle).fetchall()
-        assert out == [("en", 2, 2, 24, 12)]
-
-    def test_three_docs_and_disjoint_spans(self):
-        # doc 1 shares runA with doc 2 and runB with doc 3 → doc 1 has
-        # TWO maximal spans (disjoint runs must not merge).
-        run_a = _words(MAXSPAN_K, "x")  # exactly one window
-        run_b = _words(MAXSPAN_K + 2, "y")  # three windows → one span
-        rows = [
-            (1, f"{run_a} {_words(6, 'p')} {run_b}", "en"),
-            (2, f"{_words(3, 'q')} {run_a}", "en"),
-            (3, f"{run_b} {_words(3, 'r')}", "en"),
-        ]
-        con = _con_with_docs(rows)
-        out = con.execute(QUERIES["dedup_span_maximal"].oracle).fetchall()
-        (lang, n_docs, n_spans, sum_tok, max_tok) = out[0]
-        assert lang == "en"
-        assert n_docs == 3
-        # doc1: runA span (8) + runB span (10); doc2: 8; doc3: 10
-        assert n_spans == 4
-        assert sum_tok == 8 + 10 + 8 + 10
-        assert max_tok == MAXSPAN_K + 2
-
-    def test_spark_parity_on_crafted_edges(self, spark, tmp_path):
-        # Edge regimes: span at text start AND end, a doc shorter than
-        # the window width (must vanish), within-doc repeat that is NOT
-        # cross-doc (nd>=2 counts distinct docs).
-        shared = _words(9, "z")
-        rows = [
-            (1, f"{shared} {_words(5, 'a')} {shared}", "en"),
-            (2, shared, "en"),
-            (3, _words(MAXSPAN_K - 1, "w"), "en"),  # too short: no windows
-            (4, _words(30, "u") + " " + _words(6, "u"), "fr"),  # self-repeat only, <K
-        ]
-        sf_dir = str(tmp_path)
-        spark.createDataFrame(
-            rows, "doc_id long, text string, lang string"
-        ).write.parquet(os.path.join(sf_dir, "documents.parquet"))
-        got = [
-            tuple(r)
-            for r in QUERIES["dedup_span_maximal"].fn(spark, sf_dir).collect()
-        ]
-        con = duckdb.connect()
-        con.execute(
-            "CREATE VIEW documents AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/documents.parquet/*.parquet')"
-        )
-        want = con.execute(QUERIES["dedup_span_maximal"].oracle).fetchall()
-        assert got == want
-        # and the semantics: doc1 carries two 9-token spans, doc2 one
-        assert got == [("en", 2, 3, 27, 9)]
-
-
-class TestCalibrationCurve:
-    def test_identical_and_disjoint_pairs_pin_the_curve_ends(self):
-        ident = _words(30, "m")
-        rows = [
-            (0, ident, "en"),
-            (2, ident, "en"),  # J=1.0 with doc 0 → bucket 9
-            (4, _words(30, "n"), "en"),  # disjoint with both → bucket 0
-        ]
-        con = _con_with_docs(rows)
-        out = con.execute(
-            QUERIES["minhash_calibration_curve"].oracle
-        ).fetchall()
-        by_bucket = {r[0]: r for r in out}
-        b9 = by_bucket[9]
-        # (bucket, n_pairs, avg_est_micro, n_band_hit, n_truth, n_caught)
-        assert b9[1:] == (1, 1_000_000, 1, 1, 1)
-        b0 = by_bucket[0]
-        assert b0[1] == 2 and b0[3] == 0 and b0[4] == 0 and b0[5] == 0
-
-    def test_catch_counts_are_consistent(self):
-        # On real testdata: n_caught <= min(n_band_hit, n_truth) per
-        # bucket, buckets ordered and within [0, 9].
-        sf = "/root/testdata/sf0.001"
-        con = duckdb.connect()
-        con.execute(
-            "CREATE VIEW documents AS SELECT * FROM "
-            f"read_parquet('{sf}/documents.parquet')"
-        )
-        out = con.execute(
-            QUERIES["minhash_calibration_curve"].oracle
-        ).fetchall()
-        assert out, "curve must be non-empty"
-        buckets = [r[0] for r in out]
-        assert buckets == sorted(buckets)
-        for b, n, est, bh, tr, ca in out:
-            assert 0 <= b <= 9
-            assert 0 <= est <= 1_000_000
-            assert ca <= min(bh, tr)
-            assert max(bh, tr) <= n
-
-
-class TestHybridRRF:
-    def test_fusion_math_on_crafted_corpus(self):
-        # doc 0 carries the query embedding; doc 1 matches BOTH rankers
-        # (contains a BM25 term, embedding equals the query); doc 2 is
-        # sparse-only; doc 3 dense-only.
-        con = duckdb.connect()
-        con.execute(
-            "CREATE VIEW documents AS SELECT * FROM (VALUES "
-            "(0, 'nothing here', 'en'), "
-            "(1, 'merge table merge window', 'en'), "
-            "(2, 'table scan table', 'en'), "
-            "(3, 'plain words only', 'en')"
-            ") AS t(doc_id, text, lang)"
-        )
-        con.execute(
-            "CREATE VIEW embeddings AS SELECT * FROM (VALUES "
-            "(0, [1.0, 0.0]::FLOAT[], 0), "
-            "(1, [1.0, 0.0]::FLOAT[], 0), "
-            "(2, [0.0, 1.0]::FLOAT[], 1), "
-            "(3, [0.9, 0.1]::FLOAT[], 1)"
-            ") AS t(vec_id, embedding, label)"
-        )
-        out = con.execute(QUERIES["hybrid_rrf_retrieval"].oracle).fetchall()
-        got = {r[0]: r for r in out}
-        c = lambda r: round(1_000_000.0 / (RRF_K + r))  # noqa: E731
-        # doc 1: dense rank 1 (cos=1), sparse rank present → fused first
-        assert out[0][0] == 1
-        assert got[1][3] == c(got[1][1]) + c(got[1][2])
-        # doc 2: sparse-only → cos_rank reported 0, one contribution
-        assert got[2][2] != 1 or got[2][1] != 0
-        for did, (_, bm_r, cos_r, rrf) in got.items():
-            want = (c(bm_r) if bm_r else 0) + (c(cos_r) if cos_r else 0)
-            assert rrf == want, (did, bm_r, cos_r, rrf)
-
-    def test_rank_depth_and_output_size_bounds(self):
-        sf = "/root/testdata/sf0.001"
-        con = duckdb.connect()
-        for t in ("documents", "embeddings"):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sf}/{t}.parquet')"
-            )
-        out = con.execute(QUERIES["hybrid_rrf_retrieval"].oracle).fetchall()
-        assert len(out) <= HYBRID_TOP
-        rrfs = [r[3] for r in out]
-        assert rrfs == sorted(rrfs, reverse=True)
-        for _, bm_r, cos_r, _rrf in out:
-            assert 0 <= bm_r <= RRF_N and 0 <= cos_r <= RRF_N
-
-
-class TestIncrementalNovelty:
-    def test_identical_batch_doc_flags_short_doc_stays_novel(self):
-        corpus_text = _words(25, "k")
-        rows = [
-            (0, corpus_text, "en"),  # corpus
-            (1, _words(25, "j"), "en"),  # corpus
-            (9, corpus_text, "en"),  # batch: exact dup → flagged, est 1e6
-            (19, "tiny doc", "en"),  # batch: <3 words → no sig → novel
-            (29, _words(25, "q"), "fr"),  # batch: unique → novel
-        ]
-        con = _con_with_docs(rows)
-        out = con.execute(
-            QUERIES["incremental_minhash_novelty"].oracle
-        ).fetchall()
-        by_lang = {r[0]: r for r in out}
-        assert by_lang["en"] == ("en", 2, 1, 1, 1_000_000)
-        assert by_lang["fr"] == ("fr", 1, 0, 1, 0)
-
-    def test_threshold_constant_sane(self):
-        assert NOV_MATCH_MIN / 16 >= 0.5 - 1e-9
 
 
 class TestKeySkew:
@@ -253,45 +42,3 @@ class TestKeySkew:
         assert (n_keys, n_events, max_n, p50) == (10, 100, 91, 1.0)
         assert hot == 910_000
         assert skew == round(91 * 10 * 1_000_000.0 / 100)  # max/avg = 9.1
-
-    def test_truth_threshold_in_range(self):
-        assert 0.0 < CAL_TRUTH_T < 1.0 and not math.isnan(CAL_TRUTH_T)
-
-
-class TestMatryoshkaRecall:
-    def test_prefix_only_signal_gives_full_recall(self, spark, tmp_path):
-        # every vector is zero past dim 8 → all prefix rankings equal
-        # the full ranking → recall@K is exactly 1.0 at every dim
-        import math
-        import os as _os
-
-        rows = []
-        for k in range(40):
-            vec = [0.0] * 64
-            vec[0] = math.cos(0.1 * k)
-            vec[1] = math.sin(0.1 * k)
-            vec[2] = 0.25 * (k % 7)
-            rows.append((k, vec, 0))
-        sf_dir = str(tmp_path)
-        spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>, label int"
-        ).write.parquet(_os.path.join(sf_dir, "embeddings.parquet"))
-        got = [
-            tuple(r)
-            for r in QUERIES["matryoshka_recall_eval"].fn(spark, sf_dir).collect()
-        ]
-        assert [r[0] for r in got] == [8, 16, 32, 64]
-        assert all(r[3] == 1_000_000 for r in got)  # avg_recall_micro
-        nq = got[0][1]
-        assert all(r[1] == nq for r in got)  # same query set per dim
-        # oracle agreement
-        import duckdb as _duckdb
-
-        con = _duckdb.connect()
-        con.execute(
-            "CREATE VIEW embeddings AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/embeddings.parquet/*.parquet')"
-        )
-        want = con.execute(QUERIES["matryoshka_recall_eval"].oracle).fetchall()
-        con.close()
-        assert got == [tuple(r) for r in want]
