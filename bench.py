@@ -287,8 +287,6 @@ def split_harness(spark, sf_dir: str) -> dict:
     read-path regression must not hide under build cost). The combined
     numbers in ``queries`` stay directly comparable with earlier rounds."""
     from ducklake_kafka_connect_spark.plans.queries import (
-        ivf_index_build,
-        ivf_index_query,
         merge_upsert_build,
         merge_upsert_query,
         nested_roundtrip_build,
@@ -309,10 +307,6 @@ def split_harness(spark, sf_dir: str) -> dict:
         _, q = timed(lambda: zorder_query(cat).collect())
         out["zorder_pruned_scan"] = {"build_s": b, "query_s": q}
 
-        (t, qv), b = timed(ivf_index_build, spark, sf_dir)
-        _, q = timed(lambda: ivf_index_query(t, qv).collect())
-        out["ann_ivf_indexed_topk"] = {"build_s": b, "query_s": q}
-
         (w, batch, mcat), b = timed(merge_upsert_build, spark, sf_dir)
         _, q = timed(lambda: merge_upsert_query(w, batch, mcat).collect())
         out["merge_upsert_events"] = {"build_s": b, "query_s": q}
@@ -328,10 +322,10 @@ def split_harness(spark, sf_dir: str) -> dict:
 
 # The same-host A/B set: lake-write ops (MERGE upsert, the medallion
 # bronze→silver→gold chain, the matview refresh over a star join, the
-# DLQ replay loop), one dedup op and one Arrow-IPC ingest round trip —
-# mid-cost, stable plans.
+# DLQ replay loop) and one Arrow-IPC ingest round trip — mid-cost,
+# stable plans.
 AB_QUERIES = [
-    "merge_upsert_events", "dedup_minhash_lsh", "arrow_ipc_ingest_roundtrip",
+    "merge_upsert_events", "arrow_ipc_ingest_roundtrip",
     "medallion_incremental_pipeline", "matview_star_join",
     "dlq_reprocess_pipeline",
 ]
@@ -964,9 +958,7 @@ def replay_harness(spark) -> dict:
 
 # ---- sf1 scale rehearsal (VERDICT r2 #6) ----
 # /root/testdata ships no sf1 dir, so the rehearsal replicates the sf0.1
-# tables 10x with key-space shifts (exact-duplicate text/vectors make
-# the dedup queries a WORST-CASE skew stress on their bucket caps, which
-# is the interesting regime). Heaviest queries first-to-safest order,
+# tables 10x with key-space shifts. Heaviest queries first-to-safest order,
 # hard wall-clock budget, one run each — a scaling probe, not a score.
 SF1_COPIES = 10
 SF1_BUDGET_S = 240.0
@@ -985,12 +977,6 @@ SF1_QUERIES = [  # r3's 10 most expensive, cheap/stable first
     "zorder_pruned_scan",
     "nested_json_roundtrip",
     "merge_upsert_events",
-    "ann_ivf_indexed_topk",
-    "contamination_overlap",
-    "dedup_minhash_lsh",
-    "dedup_cluster_keep_best",
-    "dedup_embedding_cosine",
-    "dedup_simhash_hamming",
     # round-5 additions: CDC-maintained aggregate and shared-exchange
     # windows
     "incremental_agg_view",
@@ -1004,10 +990,8 @@ SF1_QUERIES = [  # r3's 10 most expensive, cheap/stable first
     # round-9 addition: the DLQ replay loop (two full connector
     # dataflows + the single-commit swap — the heaviest e2e query)
     "dlq_reprocess_pipeline",
-    # round-10 additions: the quadratic-guard evidence for SemDeDup's
-    # within-cell prune, and the IVF-PQ index (build memoized once +
+    # round-10 addition: the IVF-PQ index (build memoized once +
     # manifest-pruned ADC probe — the corpus-size-independent path)
-    "semdedup_prune",
     "ann_ivfpq_topk",
 ]
 # >12x wall on 10x data (the VERDICT gate) earns a plan note

@@ -13,10 +13,10 @@ Spark DataFrame / Structured Streaming stack:
                    this image, so copy-on-write merge is built here).
 - ``sources/``   — decode paths: schemaless JSON, Avro, Arrow IPC, Kafka.
 - ``streaming/`` — foreachBatch ingestion pipeline with DLQ routing.
-- ``operators/`` — beyond-parity operators: dedup (exact, MinHash-LSH,
-                   SimHash), similarity search, text analysis, as-of and
-                   range joins, salted skew aggregation, binary media
-                   columns with zero-dependency codecs.
+- ``operators/`` — beyond-parity operators: as-of and range joins,
+                   salted skew aggregation, an IVF-PQ similarity index,
+                   text tokens / language ID, and the plan memo and md5
+                   hash the query surface shares.
 - ``functions/`` — scalar helpers (ISO-8601 timestamp sniff/parse, JSON
                    canonicalization) as Catalyst column expressions.
 - ``plans/``     — the named query surface exposed to the driver oracle.

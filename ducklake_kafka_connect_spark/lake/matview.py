@@ -550,7 +550,7 @@ def refresh_materialized_view(cat, name: str, full: bool = False) -> dict:
             )
         )
     delta = ch.groupBy(*[F.col(g) for g in d.groups]).agg(*delta_cols)
-    # r14 (guide §5, same fix as streaming/novelty.py): localCheckpoint
+    # r14 (guide §5): localCheckpoint
     # rather than persist — under repair the delta is consumed by
     # several downstream frames (repair probe, anti/semi joins, fold,
     # merge source) and each action on a persisted frame still re-plans

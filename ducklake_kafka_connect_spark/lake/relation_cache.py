@@ -98,12 +98,20 @@ def _arrow_mappable(st: T.StructType) -> bool:
     return True
 
 
-def _utc(vals: list) -> list:
+def _utc(vals: list, collected: bool) -> list:
     """Naive datetimes are driver-local wall clock (the TimestampType
     contract of both createDataFrame and collect()); pyarrow would read
-    them as UTC, so anchor them first."""
+    them as UTC, so anchor them first. ``collected`` values come from
+    collect()'s ``fromInternal``, which marks the repeated DST hour's
+    second pass with ``fold``; ``astimezone`` honours it. Rows bound for
+    createDataFrame parity go through ``TimestampType.toInternal``
+    (``time.mktime``), exactly as createDataFrame does, DST gap and
+    repeated hours included."""
     import datetime as _dt
 
+    if not collected:
+        ts = T.TimestampType()
+        return [ts.toInternal(v) for v in vals]
     return [
         v.astimezone(_dt.timezone.utc)
         if v is not None and v.tzinfo is None
@@ -112,7 +120,7 @@ def _utc(vals: list) -> list:
     ]
 
 
-def _to_arrow(st: T.StructType, rows: list):
+def _to_arrow(st: T.StructType, rows: list, collected: bool = False):
     """Row tuples → pyarrow Table under the session's Arrow mapping of
     ``st`` (nullability kept)."""
     import pyarrow as pa
@@ -122,7 +130,9 @@ def _to_arrow(st: T.StructType, rows: list):
     cols = list(zip(*rows)) if rows else [() for _ in st.fields]
     arrays = [
         pa.array(
-            _utc(list(c)) if isinstance(sf.dataType, T.TimestampType) else list(c),
+            _utc(list(c), collected)
+            if isinstance(sf.dataType, T.TimestampType)
+            else list(c),
             type=af.type,
         )
         for af, sf, c in zip(asch, st.fields, cols)
@@ -199,7 +209,7 @@ def local_plan_arrow(df: DataFrame):
     if not _arrow_mappable(st):
         _fallback("type")
         return None
-    return _to_arrow(st, df.collect())  # LocalTableScan: zero jobs
+    return _to_arrow(st, df.collect(), collected=True)  # LocalTableScan: zero jobs
 
 
 def empty_relation(spark: SparkSession, schema: T.StructType) -> DataFrame:

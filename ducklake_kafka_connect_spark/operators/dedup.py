@@ -1,65 +1,26 @@
-"""Fuzzy deduplication operators for training-data pipelines.
+"""Shared plumbing of the memoized query plans and the cross-engine hash.
 
-Beyond-parity module (the reference delegates all querying to DuckDB;
-SURVEY §2.G / §7 phase 5). Four families, each with an exact DuckDB
-oracle twin registered in ``plans/queries.py``:
-
-- exact dedup        → hash-groupBy (in ``plans/queries.py``)
-- MinHash + LSH      → shingle → minhash signature → banded buckets →
-                       candidate pairs → exact-Jaccard verify
-- SimHash            → per-token hash sign-sums → 32-bit fingerprint →
-                       banded hamming-≤k pairs
-- n-gram Jaccard     → exact all-pairs baseline within blocking keys
-
-Determinism contract: every hash is derived from ``md5`` (identical in
-Spark and DuckDB), so the LSH bucketing — normally a recall/seed
-lottery — is *bit-identical* in both engines and the oracle comparison
-is exact, not statistical. The permutation coefficients come from a
-seeded LCG shared by the Spark builders and the SQL emitters.
-
-Scale design (100 TB):
-
-- Signatures are fixed-width (NUM_PERM longs) computed in one codegen'd
-  projection over the shingle array — no explode, no shuffle.
-- The only shuffles are groupBy(band_key) over (band, 2×long, doc_id)
-  rows — tiny compared to document payloads — and the verify join,
-  which moves shingle arrays only for *candidate* docs (the semi-joined
-  subset), never the corpus.
-- Hot buckets (boilerplate text) are the skew risk: candidate pair
-  generation caps bucket size (MAX_BUCKET) exactly like production
-  near-dup pipelines drop degenerate bands; AQE skew-join handles the
-  rest.
+- ``_persist`` / ``release_cached``: tracked ``persist`` of plan
+  intermediates and their release.
+- ``_memo_plan``: the prepared-plan memo — semantically identical
+  inputs get the same built DataFrame back.
+- ``h60_col`` / ``h60_sql``: the first 60 bits of ``md5`` as BIGINT,
+  bit-identical in Spark and DuckDB, so hash-based plans compare
+  exactly against their oracle SQL.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from ..lake.relation_cache import local_rows_df
 
 MERSENNE = 2147483647  # 2^31 - 1; keeps a*h+b inside int64 on both engines
-# Shingle-hash combiners: shingle hash = (h(w0)·C1 % M + h(w1)·C2 % M +
-# h(w2)) % M — one md5 per word instead of one per concatenated shingle
-# string, and no string building in the hot path. Both < 2^31 so every
-# intermediate product stays inside int64.
-COMB1 = 1000003
-COMB2 = 999983
-NUM_PERM = 16
-BANDS = 4
-ROWS_PER_BAND = NUM_PERM // BANDS
-SHINGLE_N = 3
-SIMHASH_BITS = 32
-SIMHASH_BANDS = 4  # 4 bands × 8 bits → catches all hamming ≤ 3 pairs
-MAX_BUCKET = 1000  # drop degenerate (boilerplate) buckets
-
 
 
 # Persisted intermediates registered here are released by release_cached()
-# — operators return LAZY frames, so they cannot unpersist before the
-# caller consumes the result; a long-lived driver (streaming) calls
-# release_cached() between batches instead of leaking CacheManager
-# entries until clearCache.
+# — plans return LAZY frames, so they cannot unpersist before the
+# caller consumes the result; a long-lived driver calls release_cached()
+# between uses instead of leaking CacheManager entries until clearCache.
 _CACHED_FRAMES: list = []
 
 
@@ -82,7 +43,7 @@ def release_cached() -> int:
     return n
 
 
-# Prepared-plan memo: constructing the multi-stage dedup plans costs
+# Prepared-plan memo: constructing multi-stage query plans costs
 # >1 s of driver-side work (hundreds of Column/py4j calls + one plan
 # canonicalization per persisted intermediate) — more than executing
 # them warm. Semantically-identical inputs get the SAME DataFrame back,
@@ -141,23 +102,6 @@ def _memo_plan(docs: DataFrame, tag: str, params: tuple, build):
     return result
 
 
-def _lcg_coeffs(n: int = NUM_PERM, seed: int = 42) -> list[tuple[int, int]]:
-    """Deterministic (a, b) pairs for the minhash permutations, shared
-    verbatim by the Spark expressions and the oracle SQL."""
-    state = seed
-    out = []
-    for _ in range(n):
-        state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
-        a = state % (MERSENNE - 1) + 1
-        state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
-        b = state % MERSENNE
-        out.append((a, b))
-    return out
-
-
-COEFFS = _lcg_coeffs()
-
-
 # ---------------------------------------------------------------------------
 # Shared hash primitives (Spark Column + SQL string emitters)
 # ---------------------------------------------------------------------------
@@ -170,1340 +114,3 @@ def h60_col(c: Column) -> Column:
 
 def h60_sql(expr: str) -> str:
     return f"CAST(CONCAT('0x', substr(md5({expr}), 1, 15)) AS BIGINT)"
-
-
-def shingles_col(text: Column, n: int = SHINGLE_N) -> Column:
-    """Distinct word n-gram shingles of lower-cased text. Docs shorter
-    than n words yield an empty array (both engines agree)."""
-    words = F.split(F.trim(F.lower(text)), r"\s+")
-    gram = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at(words, i + j) for j in range(1, n + 1)]
-    )
-    return F.when(F.size(words) < n, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(
-            F.transform(F.sequence(F.lit(0), F.size(words) - n), gram)
-        )
-    )
-
-
-def shingles_sql(words_expr: str = "w", n: int = SHINGLE_N) -> str:
-    """DuckDB twin of shingles_col over a pre-split word list alias
-    (1-based list indexing)."""
-    joined = " || ' ' || ".join(f"{words_expr}[i+{j}]" for j in range(n))
-    return (
-        f"CASE WHEN len({words_expr}) < {n} THEN [] "
-        f"ELSE list_distinct(list_transform("
-        f"generate_series(1, len({words_expr}) - {n} + 1), i -> {joined})) END"
-    )
-
-
-WORDS_SQL = "string_split_regex(trim(lower({text})), '\\s+')"
-
-
-# ---------------------------------------------------------------------------
-# MinHash signatures + LSH bands
-# ---------------------------------------------------------------------------
-
-
-def shingle_hash_combine(h0: Column, h1: Column, h2: Column) -> Column:
-    """Word-hash triple → shingle hash (same formula as the SQL twin)."""
-    return (
-        (h0 * F.lit(COMB1)) % MERSENNE + (h1 * F.lit(COMB2)) % MERSENNE + h2
-    ) % MERSENNE
-
-
-def minhash_sig_cols(shingles_hashes: Column) -> list[Column]:
-    """NUM_PERM minhash values over a precomputed shingle-hash array.
-    Array-expression form for tests/small inputs; the hot path is
-    ``minhash_signatures`` (codegen end-to-end, no lambdas)."""
-    return [
-        F.array_min(
-            F.transform(shingles_hashes, lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE)
-        )
-        for a, b in COEFFS
-    ]
-
-
-def shingle_hashes_col(text: Column, n: int = SHINGLE_N) -> Column:
-    """Array of shingle hashes via word-hash combination (array form).
-
-    NOTE: nests a transform() inside the outer lambda — Catalyst
-    re-evaluates the inner word-hash array per element, so this is
-    O(words²) md5 calls. Fine for unit tests; hot paths use
-    ``minhash_signatures`` (window plan) or ``shingle_hash_set_col``."""
-    words = F.split(F.trim(F.lower(text)), r"\s+")
-    hashes = F.transform(words, lambda w: h60_col(w) % MERSENNE)
-
-    def gram(i: Column) -> Column:
-        return shingle_hash_combine(
-            F.element_at(hashes, i + 1),
-            F.element_at(hashes, i + 2),
-            F.element_at(hashes, i + 3),
-        )
-
-    return F.when(F.size(words) < n, F.array().cast("array<bigint>")).otherwise(
-        F.transform(F.sequence(F.lit(0), F.size(words) - n), gram)
-    )
-
-
-def shingle_hash_set_col(text: Column, n: int = SHINGLE_N) -> Column:
-    """Distinct shingle-hash set for Jaccard verification: one md5 per
-    shingle string in a single-level lambda (no nested transform), then
-    integer set semantics downstream — int intersection is much cheaper
-    than string intersection in the pair joins."""
-    words = F.split(F.trim(F.lower(text)), r"\s+")
-    gram = lambda i: (  # noqa: E731
-        h60_col(
-            F.concat_ws(
-                " ", *[F.element_at(words, i + j) for j in range(1, n + 1)]
-            )
-        )
-        % MERSENNE
-    )
-    return F.when(F.size(words) < n, F.array().cast("array<bigint>")).otherwise(
-        F.array_distinct(F.transform(F.sequence(F.lit(0), F.size(words) - n), gram))
-    )
-
-
-def shingle_hash_set_sql(words_expr: str = "w", n: int = SHINGLE_N) -> str:
-    """DuckDB twin of shingle_hash_set_col."""
-    joined = " || ' ' || ".join(f"{words_expr}[i+{j}]" for j in range(n))
-    h = h60_sql(f"({joined})")
-    return (
-        f"CASE WHEN len({words_expr}) < {n} THEN [] "
-        f"ELSE list_distinct(list_transform("
-        f"generate_series(1, len({words_expr}) - {n} + 1), i -> {h} % {MERSENNE})) END"
-    )
-
-
-def minhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, s0..s15) signature table, the scale-shaped plan:
-
-        repartition → posexplode words → ONE md5 per word (codegen)
-        → lead() window composes shingle hashes (codegen, no strings)
-        → groupBy(id) with NUM_PERM min-aggregates (map-side partial)
-
-    No higher-order lambdas and no shingle-string construction anywhere;
-    exploded rows are slim (id, pos, 8-byte hash). The window sort runs
-    on (id, pos) within the same hash partitioning the final groupBy
-    uses, so the plan has exactly one meaningful shuffle. Duplicate
-    shingles need no dedup — min() over a multiset equals min() over
-    its set."""
-    n_part = docs.sparkSession.sparkContext.defaultParallelism
-    words = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    tok = (
-        docs.repartition(n_part, F.col(id_col))  # single-file scans → all cores
-        .select(F.col(id_col), F.posexplode(words).alias("pos", "w"))
-        .select(F.col(id_col), F.col("pos"), (h60_col(F.col("w")) % MERSENNE).alias("h0"))
-    )
-    win = W.partitionBy(id_col).orderBy("pos")
-    sh = (
-        tok.withColumn("h1", F.lead("h0", 1).over(win))
-        .withColumn("h2", F.lead("h0", 2).over(win))
-        .filter(F.col("h2").isNotNull())
-        .select(
-            F.col(id_col),
-            shingle_hash_combine(F.col("h0"), F.col("h1"), F.col("h2")).alias("h"),
-        )
-    )
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % MERSENNE).alias(f"s{i}")
-        for i, (a, b) in enumerate(COEFFS)
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
-
-
-def shingle_hashes_sql(words_expr: str = "w", n: int = SHINGLE_N) -> str:
-    """Shingle-hash list from a pre-split word list (DuckDB twin of
-    shingle_hashes_col; same combine formula). Expects a lateral alias
-    ``hw`` = per-word hashes to exist (see minhash_dedup_pairs_sql)."""
-    comb = (
-        f"((hw[i] * {COMB1}) % {MERSENNE} + (hw[i+1] * {COMB2}) % {MERSENNE} + hw[i+2])"
-        f" % {MERSENNE}"
-    )
-    return (
-        f"CASE WHEN len({words_expr}) < {n} THEN [] "
-        f"ELSE list_transform(generate_series(1, len({words_expr}) - {n} + 1), i -> {comb}) END"
-    )
-
-
-def minhash_sig_sqls(shingle_hashes_expr: str) -> list[str]:
-    return [
-        f"list_min(list_transform({shingle_hashes_expr}, h -> ({a} * h + {b}) % {MERSENNE}))"
-        for a, b in COEFFS
-    ]
-
-
-def band_keys_col(sig_cols: list[Column]) -> Column:
-    """Array of BANDS string keys, each concatenating ROWS_PER_BAND sig values."""
-    keys = []
-    for band in range(BANDS):
-        part = sig_cols[band * ROWS_PER_BAND : (band + 1) * ROWS_PER_BAND]
-        keys.append(F.concat_ws("_", F.lit(str(band)), *[p.cast("string") for p in part]))
-    return F.array(*keys)
-
-
-def minhash_pair_stages(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> tuple[DataFrame, DataFrame]:
-    """LSH candidate pairs (id_a < id_b), split by verification need:
-    ``(exact, rest)`` where ``exact`` pairs connect byte-identical texts
-    (Jaccard is exactly 1.0 by construction — no verification needed)
-    and ``rest`` pairs connect distinct texts (star edges across text
-    groups plus banded cross-signature candidates) and must be
-    shingle-verified.
-
-    The split falls out of the two collapse layers for free: a text-
-    collapse member pair is identical-text iff its text representative
-    IS the signature-group canonical (``__trep == rep``); signature
-    stars and banded cross pairs always connect distinct texts. No
-    corpus-wide hash-routing join is needed — the old shape re-scanned
-    and re-shuffled corpus md5s just to rediscover this.
-
-    Duplicate-skew guard (the 100 TB scale-killer), two layers:
-
-    1. **Text collapse BEFORE signatures**: identical texts are grouped
-       by md5 in one cheap pass (no tokenization), each group's min-id
-       representative carries the group into the LSH pipeline, and
-       members emit (canonical, member) star edges directly. The whole
-       explode→window→16-min-agg signature computation then scales with
-       DISTINCT texts, not corpus rows — a corpus that is 90% exact
-       duplicates costs ~10% of the naive pipeline.
-    2. **Signature collapse** (for different texts that still hash to
-       identical full signatures): window min over s0..s15 → canonical
-       per signature group; banding runs over one representative per
-       DISTINCT signature.
-
-    Both layers emit star edges instead of cliques — linear in the
-    duplicate count d (was d·(d−1)/2 per band), and union-find-
-    equivalent to the full clique for clustering. Canonicals compose
-    (min of mins = global min), so the edge set is identical to the
-    single-layer form the oracle SQL computes.
-    """
-    sig_cols = [f"s{i}" for i in range(NUM_PERM)]
-    # ---- layer 1: text collapse ----
-    # ONE aggregate on the text hash replaces the old repartition as the
-    # single place corpus text crosses the wire: min-id representative +
-    # one text copy per DISTINCT text. Everything downstream of this
-    # shuffle scales with distinct texts, not corpus rows. (first(text)
-    # is deterministic here: all rows in a group carry identical text.)
-    hashed = docs.select(
-        F.col(id_col), F.md5(F.col(text_col)).alias("__th"), F.col(text_col)
-    )
-    groups = _persist(
-        hashed.groupBy("__th").agg(
-            F.min(id_col).alias("__trep"), F.first(text_col).alias(text_col)
-        )
-    )
-    sig_table = minhash_signatures(
-        groups.select(F.col("__trep").alias(id_col), text_col), id_col, text_col
-    )
-    # members join their group on the slim (id, th) projection — corpus
-    # text never shuffles a second time
-    text_members = (
-        hashed.select(F.col(id_col), "__th")
-        .join(groups.select("__th", "__trep"), "__th")
-        .filter(F.col(id_col) != F.col("__trep"))
-        .select("__trep", F.col(id_col).alias("id_b"))
-    )
-    # ---- layer 2: signature collapse over distinct texts ----
-    # one shuffle on the full signature; min(id) tags every member with
-    # its group canonical without collecting member lists driver-side
-    withrep = sig_table.withColumn(
-        "rep", F.min(id_col).over(W.partitionBy(*sig_cols))
-    )
-    withrep = _persist(withrep)  # feeds star edges + reps below
-    # Text members anchor to their rep's SIGNATURE-group canonical (not
-    # the text rep itself) — exactly the edge the single-layer collapse
-    # the oracle mirrors would emit when one signature group spans
-    # several text groups. The join also gates members on their rep
-    # having a signature row at all (short docs produce none, and their
-    # members must vanish exactly like the single-layer form).
-    tm = text_members.join(
-        withrep.select(F.col(id_col).alias("__trep"), "rep"), "__trep"
-    )
-    # __trep == rep ⟺ the member's text group IS the canonical's text
-    # group ⟺ the two texts are byte-identical → Jaccard exactly 1.0.
-    exact = tm.filter(F.col("__trep") == F.col("rep")).select(
-        F.col("rep").alias("id_a"), "id_b"
-    )
-    text_star_rest = tm.filter(F.col("__trep") != F.col("rep")).select(
-        F.col("rep").alias("id_a"), "id_b"
-    )
-    # sig-star pairs connect two text reps → always distinct texts
-    sig_star = withrep.filter(F.col(id_col) != F.col("rep")).select(
-        F.col("rep").alias("id_a"), F.col(id_col).alias("id_b")
-    )
-    reps = withrep.filter(F.col(id_col) == F.col("rep")).select(id_col, *sig_cols)
-    banded = reps.select(
-        id_col,
-        F.explode(
-            band_keys_col([F.col(c) for c in sig_cols])
-        ).alias("band_key"),
-    )
-    # bucket cap now counts DISTINCT signatures — boilerplate guard only
-    sized = (
-        banded.withColumn(
-            "bucket_n", F.count(F.lit(1)).over(W.partitionBy("band_key"))
-        )
-        .filter(F.col("bucket_n") <= MAX_BUCKET)
-    )
-    sized = _persist(sized)
-    a = sized.select(F.col(id_col).alias("id_a"), "band_key")
-    b = sized.select(F.col(id_col).alias("id_b"), "band_key")
-    cross = (
-        a.join(b, "band_key")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # cross pairs join two reps; star pairs end at a non-rep → disjoint
-    rest = cross.unionByName(sig_star).unionByName(text_star_rest)
-    return exact, rest
-
-
-def minhash_candidate_pairs(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """All LSH candidate pairs (id_a < id_b): the union of both halves
-    of :func:`minhash_pair_stages` — identical-signature star edges plus
-    banded cross-signature candidates over DISTINCT signatures."""
-    exact, rest = minhash_pair_stages(docs, id_col, text_col)
-    return rest.unionByName(exact)
-
-
-def jaccard_col(sh_a: Column, sh_b: Column) -> Column:
-    inter = F.size(F.array_intersect(sh_a, sh_b))
-    union = F.size(sh_a) + F.size(sh_b) - inter
-    return F.round(inter.cast("double") / union, 6)
-
-
-def minhash_dedup_pairs(
-    docs: DataFrame,
-    threshold: float = 0.7,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Near-duplicate edges: LSH candidates verified by exact Jaccard.
-
-    Returns (id_a, id_b, jaccard) for edges with jaccard ≥ threshold.
-    Edge-set semantics (not all-pairs): identical-signature groups
-    contribute (canonical, member) star edges; cross-signature
-    candidates connect group canonicals — connected components match
-    the full pair clique's at linear cost under duplicate skew. Only
-    candidate docs' shingle arrays are materialized for the verify
-    join — the corpus text never shuffles. The built plan is memoized
-    (see _memo_plan): repeat calls on the same input return the same
-    DataFrame, so persisted intermediates and results are shared.
-    """
-    return _memo_plan(
-        docs,
-        "minhash_pairs",
-        (threshold, id_col, text_col),
-        lambda: _persist(_build_minhash_dedup_pairs(docs, threshold, id_col, text_col)),
-    )
-
-
-def _build_minhash_dedup_pairs(
-    docs: DataFrame, threshold: float, id_col: str, text_col: str
-) -> DataFrame:
-    # Exact-duplicate shortcut (duplicate-skew guard, part 2): the split
-    # from minhash_pair_stages hands us the byte-identical-text pairs
-    # directly — their jaccard IS 1.0, no set intersection needed. Under
-    # heavy duplication (the sf1 rehearsal: every doc x10) nearly every
-    # candidate is such a pair, and the old shape paid a corpus-wide md5
-    # scan + two routing joins + a probe job just to classify them.
-    exact_pairs, rest = minhash_pair_stages(docs, id_col, text_col)
-    n_part = docs.sparkSession.sparkContext.defaultParallelism
-    exact = exact_pairs.select("id_a", "id_b", F.lit(1.0).alias("jaccard"))
-    rest = _persist(rest)  # feeds the semi-join id set AND the verify join
-    # verify on hashed shingle SETS — integer intersection is ~an order
-    # of magnitude cheaper than string intersection, deterministic on
-    # both engines (same md5-derived values). Shingles build ONLY for
-    # docs that appear in a distinct-text candidate pair (semi join on
-    # the small candidate-id set): under duplicate skew nearly all
-    # candidates short-circuit as exact, and shingling the whole corpus
-    # for the few survivors was the last corpus-sized term in the
-    # verify path (sf1 rehearsal: 50k-doc shingle build 5.1 s for 1.6k
-    # surviving pairs → ~0.2 s on the ~3k candidate docs). An empty
-    # rest set costs nothing extra: AQE sees the empty build side and
-    # short-circuits the semi join.
-    cand_ids = (
-        rest.select(F.col("id_a").alias(id_col))
-        .unionByName(rest.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    sh = (
-        docs.join(cand_ids, id_col, "left_semi")
-        .repartition(n_part, F.col(id_col))
-        .select(F.col(id_col), shingle_hash_set_col(F.col(text_col)).alias("sh"))
-    )
-    sh = _persist(sh)  # both verify joins read it; shingle work runs once
-    # Size-ratio pre-gate: J(A,B) ≥ t ⟹ t·|A| ≤ |B| ∧ t·|B| ≤ |A| —
-    # sound screen that skips the O(|A|+|B|) intersection for pairs that
-    # cannot possibly clear the threshold.
-    ratio_ok = (F.size("sh_a") * F.lit(threshold) <= F.size("sh_b")) & (
-        F.size("sh_b") * F.lit(threshold) <= F.size("sh_a")
-    )
-    pairs = (
-        rest.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-        .filter(ratio_ok)
-        .select("id_a", "id_b", jaccard_col(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
-    )
-    return (
-        exact.unionByName(pairs.filter(F.col("jaccard") >= threshold))
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def sig_matches_col(suffix_a: str = "_a", suffix_b: str = "_b") -> Column:
-    """Number of agreeing signature components (0..NUM_PERM) between two
-    suffixed signature column sets — estimated Jaccard is
-    matches/NUM_PERM, exact in integer micros as matches·62500."""
-    out = None
-    for i in range(NUM_PERM):
-        term = (F.col(f"s{i}{suffix_a}") == F.col(f"s{i}{suffix_b}")).cast("int")
-        out = term if out is None else out + term
-    return out
-
-
-def sig_matches_sql(a: str = "a", b: str = "b") -> str:
-    """DuckDB twin of ``sig_matches_col`` over table aliases a/b."""
-    return " + ".join(
-        f"CASE WHEN {a}.s{i} = {b}.s{i} THEN 1 ELSE 0 END"
-        for i in range(NUM_PERM)
-    )
-
-
-def band_keys_sql_exprs(prefix: str = "") -> list[str]:
-    """DuckDB band-key expressions, one per LSH band — the SQL twin of
-    ``band_keys_col`` (same '<band>_<sig values>' string shape)."""
-    band_keys = []
-    for band in range(BANDS):
-        part = range(band * ROWS_PER_BAND, (band + 1) * ROWS_PER_BAND)
-        concat = " || '_' || ".join(
-            f"CAST({prefix}s{i} AS VARCHAR)" for i in part
-        )
-        band_keys.append(f"'{band}' || '_' || {concat}")
-    return band_keys
-
-
-def minhash_sigs_cte_sql(
-    source_sql: str, id_col: str = "doc_id", text_col: str = "text"
-) -> str:
-    """CTE block computing minhash signatures + shingle-hash sets per
-    row of ``source_sql`` (any table expression). Emits CTEs ``split``,
-    ``hashed``, ``base`` (id, sh, shh) and ``sigs`` (id, s0..sN) — the
-    same chain ``minhash_dedup_pairs_sql`` builds inline, factored so
-    eval harnesses can reuse it. Caller embeds as ``WITH {this}, ...``.
-    """
-    sig_sqls = minhash_sig_sqls("shh")
-    sig_defs = ", ".join(f"({s}) AS s{i}" for i, s in enumerate(sig_sqls))
-    words = WORDS_SQL.format(text=text_col)
-    word_hashes = f"list_transform(w, x -> {h60_sql('x')} % {MERSENNE})"
-    return f"""split AS (
-      SELECT {id_col} AS id, {words} AS w FROM {source_sql}
-    ),
-    hashed AS (
-      SELECT id, w, {word_hashes} AS hw FROM split
-    ),
-    base AS (
-      SELECT id, {shingle_hash_set_sql('w')} AS sh,
-             {shingle_hashes_sql('w')} AS shh
-      FROM hashed
-    ),
-    sigs AS (
-      SELECT id, {sig_defs} FROM base WHERE len(shh) > 0
-    )"""
-
-
-def minhash_dedup_pairs_sql(
-    table: str = "documents",
-    threshold: float = 0.7,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
-    """DuckDB oracle: the same LSH pipeline, bit-identical hashes —
-    including the identical-signature collapse (star edges + banding
-    over distinct signatures only; see minhash_candidate_pairs)."""
-    sig_sqls = minhash_sig_sqls("shh")
-    sig_defs = ", ".join(f"({s}) AS s{i}" for i, s in enumerate(sig_sqls))
-    sig_names = ", ".join(f"s{i}" for i in range(NUM_PERM))
-    band_list = ", ".join(band_keys_sql_exprs())
-    words = WORDS_SQL.format(text=text_col)
-    word_hashes = f"list_transform(w, x -> {h60_sql('x')} % {MERSENNE})"
-    return f"""
-    WITH split AS (
-      SELECT {id_col} AS id, {words} AS w FROM {table}
-    ),
-    hashed AS (
-      SELECT id, w, {word_hashes} AS hw FROM split
-    ),
-    base AS (
-      SELECT id, {shingle_hash_set_sql('w')} AS sh,
-             {shingle_hashes_sql('w')} AS shh
-      FROM hashed
-    ),
-    sigs AS (
-      SELECT id, {sig_defs} FROM base WHERE len(shh) > 0
-    ),
-    withrep AS (
-      SELECT id, {sig_names},
-             min(id) OVER (PARTITION BY {sig_names}) AS rep
-      FROM sigs
-    ),
-    star AS (
-      SELECT rep AS id_a, id AS id_b FROM withrep WHERE id <> rep
-    ),
-    reps AS (SELECT id, {sig_names} FROM withrep WHERE id = rep),
-    banded AS (
-      SELECT id, unnest([{band_list}]) AS band_key FROM reps
-    ),
-    sized AS (
-      SELECT id, band_key, count(*) OVER (PARTITION BY band_key) AS bucket_n
-      FROM banded
-    ),
-    kept AS (SELECT id, band_key FROM sized WHERE bucket_n <= {MAX_BUCKET}),
-    cands AS (
-      SELECT DISTINCT a.id AS id_a, b.id AS id_b
-      FROM kept a JOIN kept b USING (band_key)
-      WHERE a.id < b.id
-      UNION ALL
-      SELECT id_a, id_b FROM star
-    ),
-    verified AS (
-      SELECT c.id_a, c.id_b,
-             ROUND(CAST(len(list_filter(sa.sh, x -> list_contains(sb.sh, x))) AS DOUBLE)
-                   / (len(sa.sh) + len(sb.sh)
-                      - len(list_filter(sa.sh, x -> list_contains(sb.sh, x)))), 6) AS jaccard
-      FROM cands c
-      JOIN base sa ON sa.id = c.id_a
-      JOIN base sb ON sb.id = c.id_b
-    )
-    SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= {threshold}
-    """
-
-
-# ---------------------------------------------------------------------------
-# SimHash
-# ---------------------------------------------------------------------------
-
-
-def simhash_col(text: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash fingerprint: per-token 60-bit hashes vote ±1 on each bit
-    position; the sign of each sum sets the output bit. One codegen'd
-    expression over the token array — no explode, no shuffle."""
-    toks = F.array_distinct(F.split(F.trim(F.lower(text)), r"\s+"))
-    hashes = F.transform(toks, h60_col)
-
-    def _vote_merge(j: int):
-        # closure factory: a `j=j` default arg would change the lambda's
-        # arity and break PySpark's higher-order-function binding
-        def m(acc: Column, h: Column) -> Column:
-            return acc + F.when(
-                F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-
-        return m
-
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        vote = F.aggregate(hashes, F.lit(0).cast("long"), _vote_merge(j))
-        out = out + F.when(vote > 0, F.lit(1 << j).cast("long")).otherwise(F.lit(0))
-    return out
-
-
-def simhash_sql(text_expr: str, bits: int = SIMHASH_BITS) -> str:
-    toks = f"list_distinct(string_split_regex(trim(lower({text_expr})), '\\s+'))"
-    hashes = f"list_transform({toks}, t -> {h60_sql('t')})"
-    terms = []
-    for j in range(bits):
-        vote = (
-            f"list_sum(list_transform({hashes}, "
-            f"h -> CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END))"
-        )
-        terms.append(f"CASE WHEN ({vote}) > 0 THEN CAST({1 << j} AS BIGINT) ELSE 0 END")
-    return "(" + " + ".join(terms) + ")"
-
-
-def simhash_table(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, simhash) via the scale-shaped plan: explode distinct tokens
-    → one md5 per token (codegen) → groupBy(id) with SIMHASH_BITS
-    conditional-sum votes (map-side partial agg) → assemble bits.
-    Same math as ``simhash_col`` without interpreted lambdas."""
-    n_part = docs.sparkSession.sparkContext.defaultParallelism
-    toks = F.array_distinct(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"))
-    exploded = (
-        docs.repartition(n_part, F.col(id_col))
-        .select(F.col(id_col), F.explode(toks).alias("t"))
-        .select(F.col(id_col), h60_col(F.col("t")).alias("h"))
-    )
-    # branch-free votes: sum of raw bits + one count; bit j set iff
-    # 2·Σbit_j > n — identical to the ±1-vote formulation (ties incl.)
-    # but each row contributes shift-and adds, no per-bit conditionals
-    votes = [
-        F.sum(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1))).alias(f"s{j}")
-        for j in range(SIMHASH_BITS)
-    ]
-    voted = exploded.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"), *votes)
-    out = F.lit(0).cast("long")
-    for j in range(SIMHASH_BITS):
-        out = out + F.when(
-            2 * F.col(f"s{j}") > F.col("n"), F.lit(1 << j).cast("long")
-        ).otherwise(F.lit(0))
-    return voted.select(F.col(id_col), out.alias("simhash"))
-
-
-def simhash_near_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    return _memo_plan(
-        docs,
-        "simhash_pairs",
-        (max_hamming, id_col, text_col),
-        lambda: _persist(
-            _build_simhash_near_pairs(docs, max_hamming, id_col, text_col)
-        ),
-    )
-
-
-def _build_simhash_near_pairs(
-    docs: DataFrame, max_hamming: int, id_col: str, text_col: str
-) -> DataFrame:
-    """Near-dup edges with hamming(simhash_a, simhash_b) ≤ max_hamming.
-
-    Banding: split the 32-bit fingerprint into SIMHASH_BANDS 8-bit
-    bands; by pigeonhole any pair within hamming ≤ SIMHASH_BANDS-1
-    shares at least one exact band → join on (band_id, band_value),
-    verify with bit_count(xor). Shuffles only (id, simhash) pairs.
-
-    Edge-set semantics (not all-pairs): identical fingerprints emit
-    (canonical, member) star edges (hamming 0); distinct fingerprints
-    emit one (canonical_a, canonical_b) edge per near pair. Connected
-    components over these edges equal components over the full pair
-    clique, at linear instead of quadratic cost under duplicate skew.
-    """
-    width = SIMHASH_BITS // SIMHASH_BANDS
-    # (id, simhash) is tiny; persisting it halves the heavy vote
-    # aggregation, which otherwise runs once per self-join side
-    sh = simhash_table(docs, id_col, text_col)
-
-    # Duplicate-skew guard (same as minhash_candidate_pairs): collapse
-    # identical fingerprints to one canonical member (window min), band
-    # one representative per DISTINCT fingerprint, and emit identical
-    # groups as (canonical, member) star edges — linear in the
-    # duplicate count, union-find-equivalent to the full clique. The
-    # old shape (band distinct sigs, then expand members on both sides)
-    # still paid d·(d−1)/2 output pairs per duplicate group; measured
-    # 13-15x wall on a 10x exact-duplicate corpus.
-    withrep = _persist(
-        sh.withColumn("rep", F.min(id_col).over(W.partitionBy("simhash")))
-    )
-    star = withrep.filter(F.col(id_col) != F.col("rep")).select(
-        F.col("rep").alias("id_a"),
-        F.col(id_col).alias("id_b"),
-        F.lit(0).cast("integer").alias("hamming"),
-    )
-    reps = withrep.filter(F.col(id_col) == F.col("rep")).select(id_col, "simhash")
-    bands = reps.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        "_",
-                        F.lit(str(i)),
-                        (F.shiftright("simhash", i * width).bitwiseAND(F.lit((1 << width) - 1))).cast("string"),
-                    )
-                    for i in range(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("band_key"),
-    )
-    sa = bands.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"), "band_key")
-    sb = bands.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"), "band_key")
-    cross = (
-        sa.join(sb, "band_key")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()  # ≤ SIMHASH_BANDS band hits per rep pair
-    )
-    return cross.unionByName(star)
-
-
-def simhash_near_pairs_sql(
-    table: str = "documents",
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
-    width = SIMHASH_BITS // SIMHASH_BANDS
-    band_exprs = ", ".join(
-        f"'{i}' || '_' || CAST((simhash >> {i * width}) & {(1 << width) - 1} AS VARCHAR)"
-        for i in range(SIMHASH_BANDS)
-    )
-    return f"""
-    WITH sh AS (
-      SELECT {id_col} AS id, {simhash_sql(text_col)} AS simhash FROM {table}
-    ),
-    withrep AS (
-      SELECT id, simhash, min(id) OVER (PARTITION BY simhash) AS rep FROM sh
-    ),
-    reps AS (SELECT id, simhash FROM withrep WHERE id = rep),
-    bands AS (
-      SELECT id, simhash, unnest([{band_exprs}]) AS band_key FROM reps
-    )
-    SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-           bit_count(xor(a.simhash, b.simhash)) AS hamming
-    FROM bands a JOIN bands b USING (band_key)
-    WHERE a.id < b.id AND bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
-    UNION ALL
-    SELECT rep AS id_a, id AS id_b, 0 AS hamming
-    FROM withrep WHERE id <> rep
-    """
-
-
-# ---------------------------------------------------------------------------
-# Exact n-gram Jaccard (brute-force baseline; MinHash-LSH is the scale path)
-# ---------------------------------------------------------------------------
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    block_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    return _memo_plan(
-        docs,
-        "ngram_jaccard_pairs",
-        (threshold, block_col, id_col, text_col),
-        lambda: _persist(
-            _build_ngram_jaccard_pairs(docs, threshold, block_col, id_col, text_col)
-        ),
-    )
-
-
-def _build_ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float,
-    block_col: str,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """Exact Jaccard pairs within blocking-key groups via **prefix
-    filtering** (the set-similarity-join technique of PPJoin; Xiao et
-    al., WWW'08): sort each shingle-hash set ascending; two sets with
-    J ≥ t MUST share at least one element among their first
-    |S| - ⌈t·|S|⌉ + 1 elements, so an inverted-index self-join on
-    prefix elements produces a complete candidate set — no quadratic
-    pair enumeration. Sound + complete: result-identical to the
-    brute-force oracle.
-
-    Scale shape: the join key is (blk, prefix-hash) — high cardinality,
-    so it parallelizes without salting; the size-ratio screen
-    (J ≥ t ⟹ |A|/|B| ∈ [t, 1/t]) runs inside the candidate join, before
-    the dedup shuffle. The shingle-set relation feeds three plan
-    branches (inverted index + both verify sides); it is persisted so
-    the scan/shingle work runs once — Catalyst cannot reuse the
-    exchange because column pruning specializes each branch's
-    projection below it. The persisted data is dropped by the
-    ContextCleaner when the returned plan is garbage-collected."""
-    n_part = docs.sparkSession.sparkContext.defaultParallelism
-    sh = docs.repartition(n_part, F.col(id_col)).select(
-        F.col(block_col).alias("blk"),
-        F.col(id_col),
-        F.array_sort(shingle_hash_set_col(F.col(text_col))).alias("sh"),
-    )
-    sh = _persist(sh.withColumn("n", F.size("sh")))
-    # prefix length: n - ceil(t*n) + 1
-    pref_len = F.col("n") - F.ceil(F.col("n") * F.lit(threshold)).cast("int") + 1
-    inv = sh.select(
-        "blk",
-        F.col(id_col),
-        F.col("n"),
-        F.explode(F.slice(F.col("sh"), 1, F.greatest(pref_len, F.lit(0)))).alias("p"),
-    )
-    ratio_ok = (F.col("a.n") * F.lit(threshold) <= F.col("b.n")) & (
-        F.col("b.n") * F.lit(threshold) <= F.col("a.n")
-    )
-    cands = (
-        inv.alias("a")
-        .join(
-            inv.alias("b"),
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.p") == F.col("b.p"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            & ratio_ok,
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-    left = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    right = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        cands.join(left, "id_a")
-        .join(right, "id_b")
-        .select("id_a", "id_b", jaccard_col(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def ngram_jaccard_pairs_sql(
-    table: str = "documents",
-    threshold: float = 0.5,
-    block_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
-    words = WORDS_SQL.format(text=text_col)
-    return f"""
-    WITH sh AS (
-      SELECT blk, id, {shingle_hash_set_sql('w')} AS sh
-      FROM (SELECT {block_col} AS blk, {id_col} AS id, {words} AS w FROM {table})
-    )
-    SELECT a.id AS id_a, b.id AS id_b,
-           ROUND(CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS DOUBLE)
-                 / (len(a.sh) + len(b.sh)
-                    - len(list_filter(a.sh, x -> list_contains(b.sh, x)))), 6) AS jaccard
-    FROM sh a JOIN sh b USING (blk)
-    WHERE a.id < b.id
-      AND ROUND(CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS DOUBLE)
-                / (len(a.sh) + len(b.sh)
-                   - len(list_filter(a.sh, x -> list_contains(b.sh, x)))), 6) >= {threshold}
-    """
-
-
-# ---------------------------------------------------------------------------
-# Embedding cosine near-dup
-# ---------------------------------------------------------------------------
-
-
-# An oversized block would be O(n²): past this row count a block is
-# subdivided by a deterministic SRP bit signature before the self-join,
-# the same role MAX_BUCKET plays for MinHash banding. Mirrored exactly
-# in the oracle SQL (shared LCG hyperplanes), so results stay bit-equal
-# whether or not the guard fires.
-MAX_EMB_BLOCK = 1000
-EMB_GUARD_PLANES = 4
-EMB_GUARD_SEED = 23
-
-
-def _guard_planes(dim: int) -> list[list[float]]:
-    from .similarity import _lcg_hyperplanes
-
-    return _lcg_hyperplanes(dim=dim, n=EMB_GUARD_PLANES, seed=EMB_GUARD_SEED)
-
-
-def embedding_neardup_pairs(
-    emb: DataFrame,
-    threshold: float = 0.99,
-    block_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_block: int = MAX_EMB_BLOCK,
-    dim: int = 64,
-) -> DataFrame:
-    return _memo_plan(
-        emb,
-        "embedding_neardup",
-        (threshold, block_col, id_col, vec_col, max_block, dim),
-        lambda: _persist(
-            _build_embedding_neardup_pairs(
-                emb, threshold, block_col, id_col, vec_col, max_block, dim
-            )
-        ),
-    )
-
-
-def _build_embedding_neardup_pairs(
-    emb: DataFrame,
-    threshold: float,
-    block_col: str,
-    id_col: str,
-    vec_col: str,
-    max_block: int,
-    dim: int,
-) -> DataFrame:
-    """Near-duplicate embedding pairs (cosine ≥ threshold) within a
-    blocking key. The blocking key bounds the quadratic term — and
-    blocks larger than ``max_block`` are further subdivided by an SRP
-    (signed-random-projection) bit signature, capping the worst case at
-    ~(n/2^planes)² per block instead of n² (near-identical vectors share
-    signs on every hyperplane, so true near-dups stay co-bucketed with
-    overwhelming probability; exact duplicates always do). Dot products
-    run as zip_with/aggregate — JVM-side, no UDF."""
-    from .similarity import srp_bucket_col
-
-    # Norms are per-ROW quantities: computing them here (once per vector,
-    # identical expression → identical doubles) instead of per pair cuts
-    # the interpreted higher-order-function work by 2/3 — only the dot
-    # product remains pair-level. Persisted because both join sides read it.
-    norm = F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
-    planes = _guard_planes(dim)
-    v = emb.select(
-        F.col(block_col).alias("blk"),
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    ).withColumn("nrm", norm)
-    # block sizes are few → aggregate once, broadcast back (no window shuffle)
-    sizes = v.groupBy("blk").agg(F.count(F.lit(1)).alias("__nblk"))
-    v = v.join(F.broadcast(sizes), "blk").withColumn(
-        "sub",
-        F.when(
-            F.col("__nblk") > F.lit(max_block), srp_bucket_col("v", planes)
-        ).otherwise(F.lit(0)),
-    ).drop("__nblk")
-    v = _persist(v)
-    a = v.select("blk", "sub", F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
-    b = v.select("blk", "sub", F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        a.join(b, ["blk", "sub"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(dot / (F.col("na") * F.col("nb")), 6).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
-
-
-def embedding_neardup_pairs_sql(
-    table: str = "embeddings",
-    threshold: float = 0.99,
-    block_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_block: int = MAX_EMB_BLOCK,
-    dim: int = 64,
-) -> str:
-    from .similarity import srp_bucket_sql
-
-    sub = srp_bucket_sql("base.v", _guard_planes(dim))
-    return f"""
-    WITH base AS (
-      SELECT {block_col} AS blk, {id_col} AS id,
-             CAST({vec_col} AS DOUBLE[]) AS v
-      FROM {table}
-    ),
-    n AS (SELECT blk, COUNT(*) AS n_blk FROM base GROUP BY blk),
-    v AS (
-      SELECT base.blk, base.id, base.v,
-             CASE WHEN n.n_blk > {max_block} THEN {sub} ELSE 0 END AS sub
-      FROM base JOIN n USING (blk)
-    )
-    SELECT a.id AS id_a, b.id AS id_b,
-           ROUND(list_cosine_similarity(a.v, b.v), 6) AS cos_sim
-    FROM v a JOIN v b ON a.blk = b.blk AND a.sub = b.sub
-    WHERE a.id < b.id
-      AND ROUND(list_cosine_similarity(a.v, b.v), 6) >= {threshold}
-    """
-
-
-# ---------------------------------------------------------------------------
-# Near-dup clustering: connected components over pair edges
-# ---------------------------------------------------------------------------
-
-# Near-dup clusters are shallow (pairs come from similarity buckets, so
-# diameters are tiny); min-label propagation converges in a handful of
-# rounds. The bound is a correctness guard, not an expected count.
-MAX_CC_ITERS = 20
-# At or below this many (verified) edges the component computation runs
-# as driver-side union-find: a similarity-verified pair list is small by
-# construction (it is the DUPLICATES, not the corpus), and each
-# distributed propagation round costs ~1 s of job scheduling that a
-# 10 ms union-find makes absurd. ~16 MB of collected longs at the cap.
-SMALL_GRAPH_EDGES = 1_000_000
-
-
-def dedup_clusters(
-    pairs: DataFrame,
-    out_id: str = "id",
-    method: str = "star",
-    small_graph_edges: int = SMALL_GRAPH_EDGES,
-) -> DataFrame:
-    """Connected components over near-dup pair edges → (id, cluster_id).
-
-    ``pairs`` carries (id_a, id_b) edges (any extra columns ignored);
-    the result labels every vertex with the minimum id reachable from
-    it — the canonical cluster id. Min-label propagation: each round
-    every vertex takes the min of its own label and its neighbors'
-    labels; labels are monotone non-increasing, so a stable label SUM
-    proves a fixpoint (one cheap aggregate per round, no change-join).
-
-    Two paths by edge count: at or below ``small_graph_edges`` the edge
-    list collects (slice-capped) and a driver union-find answers in
-    milliseconds; above it, distributed alternating large-star /
-    small-star contraction (Kiveris et al., "Connected Components in
-    MapReduce and Beyond") — path lengths HALVE per round instead of
-    shrinking by one, so a duplicate chain of length L resolves in
-    O(log L) rounds where plain min-label propagation needs L. Each
-    round is two join+groupBy passes over the (shrinking) edge list.
-    ``method`` selects 'star' (default) or 'minlabel' (the simpler
-    propagation, kept for graphs known to be shallow). Singleton
-    documents (no edges) are not emitted — callers union them back if
-    they need full coverage."""
-    spark = pairs.sparkSession
-    undirected = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-    # One bounded collect decides the path: slice() caps the transfer at
-    # the union-find threshold + 1, so an unexpectedly huge pair set
-    # costs one capped aggregate, not an unbounded driver copy.
-    head = undirected.agg(
-        F.slice(
-            F.collect_list(F.struct("u", "v")), 1, small_graph_edges + 1
-        ).alias("es")
-    ).collect()[0]["es"]
-    if len(head) <= small_graph_edges:
-        return _union_find_labels(spark, [(e["u"], e["v"]) for e in head], out_id)
-    if method == "star":
-        return _star_contract_labels(undirected, out_id)
-
-    edges = undirected
-    edges = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    edges = _persist(edges)
-    labels = (
-        edges.select(F.col("u").alias(out_id))
-        .distinct()
-        .withColumn("cluster_id", F.col(out_id))
-    )
-    labels = _persist(labels)
-    prev_sum = None
-    for _ in range(MAX_CC_ITERS):
-        nbr = (
-            edges.join(labels, edges.v == F.col(out_id))
-            .groupBy("u")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(nbr, labels[out_id] == nbr.u, "left")
-            .select(
-                F.col(out_id),
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
-                ).alias("cluster_id"),
-            )
-        )
-        # cut lineage each round: the plan would otherwise double per
-        # iteration and planning time would dominate the tiny joins
-        new_labels = new_labels.localCheckpoint(eager=True)
-        row = new_labels.agg(
-            F.sum("cluster_id").alias("s"), F.count(F.lit(1)).alias("n")
-        ).collect()[0]
-        labels.unpersist()
-        labels = new_labels
-        if prev_sum is not None and row["s"] == prev_sum:
-            break  # labels only decrease; equal sum == fixpoint
-        prev_sum = row["s"]
-    else:
-        raise RuntimeError(
-            f"connected components did not converge in {MAX_CC_ITERS} rounds"
-        )
-    edges.unpersist()
-    return labels
-
-
-def _star_contract_labels(edges: DataFrame, out_id: str) -> DataFrame:
-    """Alternating large-star/small-star contraction over an undirected
-    edge list → (out_id, cluster_id) with cluster_id = component min.
-
-    Large-star hangs every strictly-greater neighbor of u onto
-    min(Γ(u) ∪ {u}); small-star hangs every smaller-or-equal neighbor
-    (and u itself) onto the same min over the smaller side. Each pass is
-    one groupBy (per-node min) + one join (re-emit), and alternation
-    provably converges to per-component stars rooted at the minimum id
-    in O(log²) rounds — the right shape when duplicate graphs contain
-    long chains (transitive near-dup runs), where min-label propagation
-    needs diameter rounds. Fixpoint test: the (count, xxhash-sum) edge
-    signature is stable across a round."""
-    e = (
-        edges.filter(F.col("u") != F.col("v"))
-        .select("u", "v")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev_sig = None
-    for _ in range(MAX_CC_ITERS):
-        # large-star
-        b = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = b.groupBy("u").agg(F.min("v").alias("mn"))
-        e = (
-            b.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(
-                F.col("v").alias("u"),
-                F.least(F.col("u"), F.col("mn")).alias("v"),
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star (edges now oriented u > v)
-        o = e.select(
-            F.greatest(F.col("u"), F.col("v")).alias("u"),
-            F.least(F.col("u"), F.col("v")).alias("v"),
-        )
-        mins = o.groupBy("u").agg(F.min("v").alias("mn"))
-        e = (
-            o.join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("mn").alias("v"))
-            .unionByName(mins.select("u", F.col("mn").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)  # cut lineage every round
-        )
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: xxhash64 longs overflow BIGINT addition
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        sig = (row["n"], row["h"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    else:
-        raise RuntimeError(
-            f"star contraction did not converge in {MAX_CC_ITERS} rounds"
-        )
-    # converged edges are stars u → component-min v; roots label themselves
-    return (
-        e.select(F.col("u").alias(out_id), F.col("v").alias("cluster_id"))
-        .unionByName(
-            e.select(F.col("v").alias(out_id), F.col("v").alias("cluster_id"))
-        )
-        .distinct()
-    )
-
-
-def _union_find_labels(spark, edge_list: list, out_id: str) -> DataFrame:
-    """Driver-side union-find over a small edge list → (id, cluster_id)
-    DataFrame with cluster_id = min id of each component — identical
-    labels to the distributed propagation path."""
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:  # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in edge_list:
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[rb] = ra
-    comp_min: dict = {}
-    for x in parent:
-        r = find(x)
-        m = comp_min.get(r)
-        if m is None or x < m:
-            comp_min[r] = x
-    rows = [(x, comp_min[find(x)]) for x in parent]
-    if rows and not isinstance(rows[0][0], int):
-        schema: object = f"{out_id} string, cluster_id string"
-    else:
-        schema = T.StructType(
-            [
-                T.StructField(out_id, T.LongType(), False),
-                T.StructField("cluster_id", T.LongType(), False),
-            ]
-        )
-    return local_rows_df(spark, rows, schema)
-
-
-def cluster_reps_sql(
-    pairs_sql: str, table: str = "documents", id_col: str = "doc_id"
-) -> str:
-    """DuckDB oracle twin of clusters-plus-representatives: reachability
-    closure via WITH RECURSIVE (UNION dedups, so it terminates), then
-    min-reachable-id labels and the same (n_chars DESC, doc_id ASC)
-    representative choice."""
-    return f"""
-    WITH RECURSIVE pairs AS ({pairs_sql}),
-    edges AS (
-      SELECT id_a AS u, id_b AS v FROM pairs
-      UNION SELECT id_b, id_a FROM pairs
-    ),
-    verts AS (SELECT DISTINCT u FROM edges),
-    reach(u, v) AS (
-      SELECT u, u FROM verts
-      UNION
-      SELECT e.u, r.v FROM edges e JOIN reach r ON e.v = r.u
-    ),
-    labels AS (SELECT u AS id, min(v) AS cluster_id FROM reach GROUP BY u),
-    joined AS (
-      SELECT l.cluster_id, d.{id_col}, d.n_chars
-      FROM labels l JOIN {table} d ON l.id = d.{id_col}
-    ),
-    sized AS (
-      SELECT cluster_id, count(*) AS n_members FROM joined GROUP BY cluster_id
-    ),
-    ranked AS (
-      SELECT cluster_id, {id_col}, n_chars,
-             row_number() OVER (PARTITION BY cluster_id
-                                ORDER BY n_chars DESC, {id_col} ASC) AS rn
-      FROM joined
-    )
-    SELECT r.cluster_id, s.n_members,
-           r.{id_col} AS rep_doc_id, CAST(r.n_chars AS BIGINT) AS rep_chars
-    FROM ranked r JOIN sized s USING (cluster_id)
-    WHERE r.rn = 1
-    """
-
-
-# ---------------------------------------------------------------------------
-# Asymmetric n-gram containment (doc-in-doc detection)
-# ---------------------------------------------------------------------------
-
-# A shingle seen in more than DF_CAP docs of a block is a stop-shingle:
-# it is dropped from the universe BEFORE pairing (and before sizes are
-# counted, so containment stays a true ratio over the capped universe).
-# This bounds candidate pairs at sum(df^2) <= DF_CAP * |postings| —
-# linear in the corpus — the standard frequent-token guard of
-# inverted-index set-similarity joins. Mirrored exactly in the oracle.
-CONTAIN_DF_CAP = 20
-CONTAIN_TOP_K = 20
-
-
-def containment_pairs(
-    docs: DataFrame,
-    top_k: int = CONTAIN_TOP_K,
-    df_cap: int = CONTAIN_DF_CAP,
-    block_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Top-k document pairs by n-gram CONTAINMENT |A∩B| / min(|A|,|B|)
-    — the asymmetric near-dup measure that catches a short doc embedded
-    in a long one, which symmetric Jaccard dilutes (Broder's
-    containment, the measure behind doc-in-doc leakage checks).
-
-    Plan shape: postings explode → per-(block, shingle) df filter →
-    self-join on the (block, shingle) key → pair-count aggregate.
-    Shuffles carry (id, hash) longs only; the df cap bounds the
-    candidate blowup; ranking is a total order (score desc, id_a,
-    id_b) so top-k is deterministic.
-
-    The postings relation is repartitioned (the corpus parquet is one
-    file — shingle hashing must not run on one task) and persisted: it
-    feeds the df filter plus BOTH self-join sides, and Catalyst cannot
-    share the exchange across differently-pruned branches (the same
-    measured pathology ngram_jaccard_pairs documents — unpersisted,
-    the md5 explode recomputed 4x single-threaded: 67 s at sf0.1)."""
-    n_part = docs.sparkSession.sparkContext.defaultParallelism
-    sh = docs.repartition(n_part, F.col(id_col)).select(
-        F.col(block_col).alias("blk"),
-        F.col(id_col).alias("id"),
-        shingle_hash_set_col(F.col(text_col)).alias("sh"),
-    )
-    post = _persist(sh.select("blk", "id", F.explode("sh").alias("g")))
-    capped = (
-        post.groupBy("blk", "g")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= df_cap)
-        .select("blk", "g")
-    )
-    pf = _persist(post.join(capped, ["blk", "g"]))
-    sz = pf.groupBy("blk", "id").agg(F.count(F.lit(1)).alias("n"))
-    a = pf.alias("a")
-    b = pf.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.g") == F.col("b.g"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(
-            F.col("a.blk").alias("blk"),
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sz.select(F.col("blk"), F.col("id").alias("id_a"), F.col("n").alias("n_a"))
-    sb = sz.select(F.col("blk"), F.col("id").alias("id_b"), F.col("n").alias("n_b"))
-    scored = (
-        inter.join(sa, ["blk", "id_a"])
-        .join(sb, ["blk", "id_b"])
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("inter").cast("double") / F.least("n_a", "n_b"), 6
-            ).alias("containment"),
-        )
-    )
-    # orderBy+limit compiles to TakeOrderedAndProject: per-partition
-    # top-k then a driver merge of k*partitions rows — never a global
-    # single-partition sort
-    return scored.orderBy(
-        F.col("containment").desc(), F.col("id_a").asc(), F.col("id_b").asc()
-    ).limit(top_k)
-
-
-def containment_pairs_sql(
-    table: str = "documents",
-    top_k: int = CONTAIN_TOP_K,
-    df_cap: int = CONTAIN_DF_CAP,
-    block_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
-    """DuckDB twin of containment_pairs."""
-    words = WORDS_SQL.format(text=text_col)
-    return f"""
-    WITH sh AS (
-      SELECT blk, id, {shingle_hash_set_sql('w')} AS sh
-      FROM (SELECT {block_col} AS blk, {id_col} AS id, {words} AS w FROM {table})
-    ),
-    post AS (SELECT blk, id, unnest(sh) AS g FROM sh),
-    capped AS (
-      SELECT blk, g FROM post GROUP BY blk, g HAVING count(*) <= {df_cap}
-    ),
-    pf AS (SELECT post.* FROM post JOIN capped USING (blk, g)),
-    sz AS (SELECT blk, id, count(*) AS n FROM pf GROUP BY blk, id),
-    inter AS (
-      SELECT a.blk, a.id AS id_a, b.id AS id_b, count(*) AS inter
-      FROM pf a JOIN pf b ON a.blk = b.blk AND a.g = b.g AND a.id < b.id
-      GROUP BY 1, 2, 3
-    ),
-    scored AS (
-      SELECT id_a, id_b,
-             ROUND(CAST(inter AS DOUBLE) / least(sa.n, sb.n), 6) AS containment
-      FROM inter
-      JOIN sz sa ON sa.blk = inter.blk AND sa.id = inter.id_a
-      JOIN sz sb ON sb.blk = inter.blk AND sb.id = inter.id_b
-    )
-    SELECT id_a, id_b, containment FROM scored
-    ORDER BY containment DESC, id_a ASC, id_b ASC LIMIT {top_k}
-    """

@@ -1,12 +1,12 @@
-"""Similarity search over embedding columns (beyond-parity operator).
+"""IVF-PQ similarity index over embedding columns (beyond-parity operator).
 
-Brute-force cosine top-k is the exact baseline: a single column-pruned
-scan computing the score with built-in higher-order functions
-(``zip_with`` + ``aggregate``) — fully JVM-side, no Python UDF, no
-shuffle except the final top-k (a TakeOrderedAndProject, which runs
-as per-partition partial top-k then a driver merge of k·partitions
-rows — no full sort at any scale). An LSH-bucketed approximate variant
-lives in ``operators/dedup.py`` (shared random-hyperplane machinery).
+An IVF coarse quantizer assigns each vector to its nearest seeded
+centroid; product quantization stores each vector as per-subspace code
+indices. The index is a cell-partitioned lake table, so the nprobe
+probe is manifest partition pruning, and scoring is asymmetric
+(ADC) lookups on the codes. All scoring uses built-in higher-order
+functions — fully JVM-side, no Python UDF — and the top-k is a
+per-partition partial top-k, never a full sort.
 """
 
 from __future__ import annotations
@@ -16,49 +16,19 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from ..lake.relation_cache import local_rows_df
 
 
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def _elem_sql(vec_sql: str, i: int) -> str:
-    """SQL for element i (0-based) of the vector, cast to double."""
-    return f"CAST(element_at({vec_sql}, {i + 1}) AS DOUBLE)"
-
-
-def _dot_sql(vec_sql: str, plane: Sequence[float]) -> str:
-    """Dot product against a CONSTANT plane as an unrolled SQL string.
-
-    Why a string: building the same tree with Column operators costs one
-    py4j round-trip per node (~7 s of driver time for 8 centroids × 64
-    dims, measured); ``F.expr`` parses the whole chain JVM-side in one
-    call. Why unrolled: higher-order ``aggregate``/``zip_with`` lambdas
-    are interpreted per element, outside whole-stage codegen. ``+`` is
-    left-associative in SQL, so the fold order matches the oracle's
-    ``list_dot_product`` and results stay bit-identical.
-
-    SIZE BUDGET: one unrolled 64-dim dot is ~600 Catalyst nodes. A
-    whole-stage-codegen'd operator fuses every expression in the stage
-    into ONE Java method (codegen cannot split code that reads operator
-    local variables), and Janino hard-fails past 64 KB bytecode — Spark
-    then silently re-plans the stage interpreted AFTER paying the
-    compile attempt (~1-2 s). Keep ≤ ~4 unrolled dots per stage; for
-    wider fan-outs (IVF's N centroids) use ``_dot_hof_sql``.
-    """
-    return "(" + " + ".join(
-        f"{_elem_sql(vec_sql, i)} * {float(x)!r}D" for i, x in enumerate(plane)
-    ) + ")"
-
-
 def _dot_hof_sql(vec_sql: str, plane: Sequence[float]) -> str:
     """Dot product against a CONSTANT plane as a higher-order-function
     SQL string: tiny expression tree (array literal + two lambdas), so
     any number of these fit in a codegen'd stage — the lambdas
-    themselves are evaluated interpreted, per element. Use when the
-    unrolled form would blow the 64 KB method limit (see ``_dot_sql``);
-    the fold is the same left-to-right order."""
+    themselves are evaluated interpreted, per element. An unrolled
+    form would blow the 64 KB codegen method limit; the fold is
+    left-to-right."""
     lits = ", ".join(f"{float(x)!r}D" for x in plane)
     return (
         f"aggregate(zip_with({vec_sql}, array({lits}), "
@@ -66,63 +36,10 @@ def _dot_hof_sql(vec_sql: str, plane: Sequence[float]) -> str:
     )
 
 
-def cosine_similarity_col(
-    vec_sql: str, query: Sequence[float], compact: bool = False
-) -> Column:
-    """cos(vec, query) as a single Catalyst expression (double
-    precision). ``vec_sql`` is a SQL expression (usually a column name)
-    for the ``array<float|double>`` vector column.
-
-    ``compact=False`` unrolls dot and norm into codegen'd multiply-add
-    chains (~400 nodes — fine alone, but see ``_dot_sql``'s stage size
-    budget); ``compact=True`` uses the HOF form (tiny tree, interpreted
-    per element) for stages whose codegen budget is already spent on a
-    hotter expression. Both run the identical left-to-right fold, so
-    they produce the same doubles; accumulation matches DuckDB's
-    list_cosine_similarity closely enough that results agree after
-    rounding to 6 decimals.
-    """
-    q = [float(x) for x in query]
-    norm_q = math.sqrt(sum(x * x for x in q))
-    if compact:
-        dot = _dot_hof_sql(vec_sql, q)
-        norm_v = (
-            f"SQRT(aggregate({vec_sql}, 0D, "
-            f"(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-        )
-    else:
-        dot = _dot_sql(vec_sql, q)
-        norm_v = "SQRT(" + " + ".join(
-            f"{_elem_sql(vec_sql, i)} * {_elem_sql(vec_sql, i)}" for i in range(len(q))
-        ) + ")"
-    return F.expr(f"{dot} / ({norm_v} * {norm_q!r}D)")
-
-
-def cosine_topk(
-    df: DataFrame,
-    query: Sequence[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_ids: Sequence[int] = (),
-) -> DataFrame:
-    """Exact top-k by cosine similarity; deterministic tie-break on id."""
-    scored = df.select(
-        F.col(id_col),
-        F.round(cosine_similarity_col(vec_col, query), 6).alias("cos_sim"),
-    )
-    if exclude_ids:
-        scored = scored.filter(~F.col(id_col).isin(*[int(i) for i in exclude_ids]))
-    return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
-
-
 # ---------------------------------------------------------------------------
-# LSH-bucketed approximate nearest neighbors (the scale path)
+# Seeded hyperplanes and the IVF coarse quantizer
 # ---------------------------------------------------------------------------
 
-# 16 buckets: at corpus sizes ≥ ~10k vectors per partition the bucket
-# count should scale up (planes ∝ log2(n/target_bucket_size)); 4 planes
-# keep the driver-testdata buckets populated while still pruning 15/16.
 NUM_HYPERPLANES = 4
 
 
@@ -139,63 +56,6 @@ def _lcg_hyperplanes(dim: int, n: int = NUM_HYPERPLANES, seed: int = 7) -> list[
             row.append(round((state >> 20) / float(1 << 43) * 2.0 - 1.0, 9))
         planes.append(row)
     return planes
-
-
-def srp_bucket_col(vec_sql: str, planes: Sequence[Sequence[float]]) -> Column:
-    """Signed-random-projection bucket id: bit i = sign(vec · plane_i).
-    ``vec_sql`` is a SQL expression for the vector column; the whole
-    bucket expression is built as one SQL string (see ``_dot_sql``)."""
-    terms = [
-        f"(CASE WHEN {_dot_sql(vec_sql, plane)} > 0 THEN {1 << i} ELSE 0 END)"
-        for i, plane in enumerate(planes)
-    ]
-    return F.expr("(" + " + ".join(terms) + ")")
-
-
-def srp_bucket_sql(vec_expr: str, planes: Sequence[Sequence[float]]) -> str:
-    terms = []
-    for i, plane in enumerate(planes):
-        lits = ", ".join(repr(x) for x in plane)
-        dot = f"list_dot_product({vec_expr}, [{lits}])"
-        terms.append(f"CASE WHEN {dot} > 0 THEN {1 << i} ELSE 0 END")
-    return "(" + " + ".join(terms) + ")"
-
-
-def ann_lsh_topk(
-    df: DataFrame,
-    query: Sequence[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_ids: Sequence[int] = (),
-) -> DataFrame:
-    """Approximate top-k: exact cosine ranking *within the query's SRP
-    bucket*. At scale the bucket filter prunes ~255/256 of the corpus
-    before any scoring; a bucket-partitioned table layout would turn it
-    into partition pruning at the scan. Recall is traded for the prune —
-    the exact baseline is ``cosine_topk``."""
-    dim = len(query)
-    planes = _lcg_hyperplanes(dim)
-    q = [float(x) for x in query]
-    q_bucket = sum(
-        (1 << i) for i, p in enumerate(planes) if sum(a * b for a, b in zip(q, p)) > 0
-    )
-    # bucket filter runs on EVERY row (unrolled, codegen'd — the hot
-    # expression); cosine only on the ~1/2^planes survivors (compact
-    # HOF — together with the pushed-down bucket filter the unrolled
-    # form overflows the stage's 64 KB codegen budget, see _dot_sql)
-    scored = df.select(
-        F.col(id_col),
-        srp_bucket_col(vec_col, planes).alias("bucket"),
-        F.round(cosine_similarity_col(vec_col, query, compact=True), 6).alias("cos_sim"),
-    ).filter(F.col("bucket") == q_bucket)
-    if exclude_ids:
-        scored = scored.filter(~F.col(id_col).isin(*[int(i) for i in exclude_ids]))
-    return (
-        scored.select(id_col, "cos_sim")
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
 
 
 NUM_CELLS = 8
@@ -218,7 +78,7 @@ def with_ivf_cell(
     oracle's CASE chain). Dots use the compact HOF form: N unrolled
     64-dim chains fused into one whole-stage method blow the 64 KB
     bytecode limit and silently fall back to interpreted eval after a
-    ~2 s failed compile (measured; see ``_dot_sql``'s size budget)."""
+    ~2 s failed compile (measured)."""
     names = [f"__ivf_d{i}" for i in range(len(centroids))]
     tmp = df.select(
         "*",
@@ -248,95 +108,6 @@ def _unit(v: Sequence[float]) -> list[float]:
     return [round(float(x) / n, 9) for x in v]
 
 
-def ivf_topk(
-    df: DataFrame,
-    query: Sequence[float],
-    centroids: Sequence[Sequence[float]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_ids: Sequence[int] = (),
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: exact cosine ranking
-    within the query's coarse cell. Centroids come from the caller —
-    at scale a KMeans fit or a deterministic sample; cells map to a
-    bucket-partitioned table layout so the probe is partition pruning.
-    Complementary to SRP-LSH: data-adaptive cells vs data-oblivious
-    hyperplanes."""
-    cents = [_unit(c) for c in centroids]
-    q = [float(x) for x in query]
-    q_cell = max(
-        range(len(cents)),
-        key=lambda i: (sum(a * b for a, b in zip(q, cents[i])), -i),
-    )
-    scored = with_ivf_cell(df, vec_col, cents).select(
-        F.col(id_col),
-        F.col("cell"),
-        F.round(cosine_similarity_col(vec_col, query), 6).alias("cos_sim"),
-    ).filter(F.col("cell") == q_cell)
-    if exclude_ids:
-        scored = scored.filter(~F.col(id_col).isin(*[int(i) for i in exclude_ids]))
-    return (
-        scored.select(id_col, "cos_sim")
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def ivf_topk_sql(
-    centroids: Sequence[Sequence[float]],
-    k: int = 10,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: int = 0,
-) -> str:
-    cents = [_unit(c) for c in centroids]
-    assign = ivf_assign_sql("v", cents)
-    return f"""
-    WITH v AS (
-      SELECT {id_col} AS id, CAST({vec_col} AS DOUBLE[]) AS v,
-             {assign} AS cell
-      FROM {table}
-    ),
-    q AS (SELECT v, cell FROM v WHERE id = {query_id})
-    SELECT v.id AS {id_col},
-           ROUND(list_cosine_similarity(v.v, (SELECT v FROM q)), 6) AS cos_sim
-    FROM v
-    WHERE v.cell = (SELECT cell FROM q) AND v.id <> {query_id}
-    ORDER BY cos_sim DESC, v.id
-    LIMIT {k}
-    """
-
-
-def ann_lsh_topk_sql(
-    dim: int,
-    k: int = 10,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: int = 0,
-) -> str:
-    """DuckDB oracle: identical SRP bucketing + exact cosine within the
-    query's bucket."""
-    planes = _lcg_hyperplanes(dim)
-    bucket = srp_bucket_sql("v", planes)
-    return f"""
-    WITH v AS (
-      SELECT {id_col} AS id, CAST({vec_col} AS DOUBLE[]) AS v,
-             {bucket} AS bucket
-      FROM {table}
-    ),
-    q AS (SELECT v, bucket FROM v WHERE id = {query_id})
-    SELECT v.id AS {id_col},
-           ROUND(list_cosine_similarity(v.v, (SELECT v FROM q)), 6) AS cos_sim
-    FROM v
-    WHERE v.bucket = (SELECT bucket FROM q) AND v.id <> {query_id}
-    ORDER BY cos_sim DESC, v.id
-    LIMIT {k}
-    """
-
-
 # ---------------------------------------------------------------------------
 # IVF over a cell-partitioned lake table: the probe IS partition pruning
 # ---------------------------------------------------------------------------
@@ -352,170 +123,6 @@ def probe_cells(
     q = [float(x) for x in query]
     dots = [sum(a * b for a, b in zip(q, c)) for c in cents]
     return sorted(range(len(cents)), key=lambda i: (-dots[i], i))[:nprobe]
-
-
-def build_ivf_index(
-    table,
-    emb: DataFrame,
-    centroids: Sequence[Sequence[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Write embeddings into a lake table partitioned by IVF cell.
-
-    This is the 100 TB layout: each coarse cell is a partition
-    directory, so an nprobe-cell query turns into manifest-level
-    partition pruning — the scan opens nprobe/NUM_CELLS of the data,
-    no matter how large the corpus. Vectors are cast to double BEFORE
-    the write: the lake stores arrays as JSON text (reference storage
-    semantics) and Jackson's double serialization round-trips
-    bit-exactly, so scores computed after read-back equal scores over
-    the raw parquet."""
-    from ..lake.writer import LakeWriter
-
-    cents = [_unit(c) for c in centroids]
-    indexed = with_ivf_cell(emb, vec_col, cents).select(
-        F.col(id_col),
-        F.col("cell"),
-        _as_double(F.col(vec_col)).alias(vec_col),
-    )
-    LakeWriter(table, pk=[id_col], partition_by="cell", auto_create=True).append(indexed)
-
-
-def ivf_indexed_topk(
-    table,
-    query: Sequence[float],
-    centroids: Sequence[Sequence[float]],
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_ids: Sequence[int] = (),
-) -> DataFrame:
-    """Top-k by exact cosine within the query's ``nprobe`` nearest
-    cells, read through ``LakeTable.read(where="cell IN (...)")`` —
-    files of unprobed cells are pruned from the manifest and never
-    opened."""
-    cells = probe_cells(query, centroids, nprobe)
-    pred = f"cell IN ({', '.join(str(c) for c in cells)})"
-    df = table.read(where=pred).select(
-        F.col(id_col),
-        F.from_json(F.col(vec_col), "array<double>").alias(vec_col),
-    )
-    scored = df.select(
-        F.col(id_col),
-        F.round(cosine_similarity_col(vec_col, query), 6).alias("cos_sim"),
-    )
-    if exclude_ids:
-        scored = scored.filter(~F.col(id_col).isin(*[int(i) for i in exclude_ids]))
-    return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
-
-
-def ivf_indexed_topk_sql(
-    centroids: Sequence[Sequence[float]],
-    k: int = 10,
-    nprobe: int = 2,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: int = 0,
-) -> str:
-    """DuckDB oracle: identical nprobe-cell probe expressed statically —
-    centroid literals + ORDER BY dot DESC LIMIT nprobe (no
-    data-dependent constants in the SQL string)."""
-    cents = [_unit(c) for c in centroids]
-    assign = ivf_assign_sql("v", cents)
-    cent_rows = ", ".join(
-        f"({i}, [{', '.join(repr(float(x)) for x in c)}])" for i, c in enumerate(cents)
-    )
-    return f"""
-    WITH v AS (
-      SELECT {id_col} AS id, CAST({vec_col} AS DOUBLE[]) AS v,
-             {assign} AS cell
-      FROM {table}
-    ),
-    q AS (SELECT v FROM v WHERE id = {query_id}),
-    cents(i, c) AS (VALUES {cent_rows}),
-    probed AS (
-      SELECT i FROM cents, q
-      ORDER BY list_dot_product(q.v, cents.c) DESC, i
-      LIMIT {nprobe}
-    )
-    SELECT v.id AS {id_col},
-           ROUND(list_cosine_similarity(v.v, (SELECT v FROM q)), 6) AS cos_sim
-    FROM v
-    WHERE v.cell IN (SELECT i FROM probed) AND v.id <> {query_id}
-    ORDER BY cos_sim DESC, v.id
-    LIMIT {k}
-    """
-
-
-# ---------------------------------------------------------------------------
-# Int8 quantization (memory-compressed ANN; asymmetric scoring)
-# ---------------------------------------------------------------------------
-
-
-def dequantized_int8_col(vec: Column) -> Column:
-    """Symmetric per-vector int8 quantize→dequantize round-trip:
-    ``scale = max|v| / 127``, ``q_j = round(v_j / scale)``,
-    ``dq_j = q_j * scale``. Models the storage format where embeddings
-    live as int8 + one float scale (4x smaller than float32, ~32x
-    smaller working set than double) while scoring runs asymmetric —
-    full-precision query against dequantized corpus. Zero vectors pass
-    through (no 0/0). Pure Catalyst; bit-identical to the DuckDB twin
-    because both engines do the same double-precision ops."""
-    as_d = F.transform(vec, lambda x: x.cast("double"))
-    scale = F.array_max(F.transform(as_d, F.abs)) / F.lit(127.0)
-    return F.when(scale == F.lit(0.0), as_d).otherwise(
-        F.transform(as_d, lambda x: F.round(x / scale) * scale)
-    )
-
-
-def dequantize_int8_frame(
-    df: DataFrame, vec_col: str = "embedding"
-) -> DataFrame:
-    """Frame-level form of :func:`dequantized_int8_col` that computes
-    the per-vector scale in its OWN projection first. The single-column
-    form captures the scale expression inside the transform lambda, and
-    Catalyst re-evaluates captured outer expressions per element —
-    O(dim²) abs/max work per row. Two projections make it one
-    array_max per row, with the lambda reading a plain column."""
-    others = [c for c in df.columns if c != vec_col]
-    s = df.select(
-        *others,
-        F.transform(vec_col, lambda x: x.cast("double")).alias("__v"),
-    ).withColumn(
-        "__s", F.array_max(F.transform("__v", F.abs)) / F.lit(127.0)
-    )
-    dq = F.when(F.col("__s") == 0.0, F.col("__v")).otherwise(
-        F.transform(
-            "__v", lambda x: F.round(x / F.col("__s")) * F.col("__s")
-        )
-    )
-    return s.select(*others, dq.alias(vec_col))
-
-
-def quantized_topk_sql(table: str = "embeddings", k: int = 10) -> str:
-    """DuckDB oracle twin of int8-dequantized brute cosine top-k."""
-    return f"""
-    WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS v
-               FROM {table} WHERE vec_id = 0),
-    d AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-          FROM {table} WHERE vec_id <> 0),
-    s AS (SELECT vec_id, v,
-                 list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale
-          FROM d),
-    dq AS (SELECT vec_id,
-                  CASE WHEN scale = 0 THEN v
-                       ELSE list_transform(v, x -> round(x / scale) * scale)
-                  END AS dqv
-           FROM s)
-    SELECT vec_id,
-           ROUND(list_cosine_similarity(dqv, (SELECT v FROM q)), 6) AS cos_sim
-    FROM dq
-    ORDER BY cos_sim DESC, vec_id
-    LIMIT {k}
-    """
 
 
 # ---------------------------------------------------------------------------
@@ -569,9 +176,9 @@ def pq_codebooks(
 def _pq_sub_sql(vec_col: str, s: int, sub: int) -> str:
     """Quantized subvector s: floor(double(x) * QSCALE) over dims
     [s*sub, (s+1)*sub) — long elements. SQL string, not Column tree:
-    one JVM-side parse instead of per-node py4j round-trips (the
-    ``_dot_sql`` rationale; 32 subspaces × 16 codewords of Column
-    literals cost ~6 s of driver time, measured)."""
+    one JVM-side parse instead of per-node py4j round-trips (32
+    subspaces × 16 codewords of Column literals cost ~6 s of driver
+    time, measured)."""
     return (
         f"transform(slice({vec_col}, {s * sub + 1}, {sub}), "
         f"x -> floor(CAST(x AS DOUBLE) * {PQ_QSCALE}))"
@@ -591,8 +198,7 @@ def pq_encode(
 
     The per-subspace distance list is a ``transform`` over the codebook
     literal: 16 interpreted 2-dim integer L2s per subspace beat one
-    unrolled 512-expression codegen blob (the 64 KB method limit —
-    see ``_dot_sql``'s size budget)."""
+    unrolled 512-expression codegen blob (the 64 KB method limit)."""
     books = books or pq_codebooks()
     m = len(books)
     sub = len(books[0][0])
@@ -635,100 +241,6 @@ def pq_encode(
             for s in range(m)
         ],
     )
-
-
-def pq_topk(
-    df: DataFrame,
-    query: Sequence[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_ids: Sequence[int] = (),
-    books: Sequence[Sequence[Sequence[int]]] | None = None,
-    pre_encoded: bool = False,
-) -> DataFrame:
-    """Asymmetric-distance top-k: the query builds one 16-entry integer
-    lookup table per subspace ON THE DRIVER (ADC), each corpus row pays
-    32 list_extract lookups on its codes, and the ranking is a partial
-    per-partition top-k (TakeOrderedAndProject — k·partitions rows to
-    the driver, never a full sort). With pre-encoded codes this scans
-    16 bytes per vector: the PQ promise.
-
-    Parity anchor: reference ducklake-kafka-connect has no vector ops;
-    this extends the engine family alongside ivf_topk (SURVEY §2
-    beyond-parity block)."""
-    books = books or pq_codebooks()
-    sub = len(books[0][0])
-    q = [float(x) for x in query]
-    qq = [math.floor(x * PQ_QSCALE) for x in q]
-    enc = df if pre_encoded else pq_encode(df, vec_col, books)
-    terms = []
-    for s, codes in enumerate(books):
-        qs = qq[s * sub : (s + 1) * sub]
-        adc = [sum((a - b) * (a - b) for a, b in zip(qs, c)) for c in codes]
-        lits = ", ".join(f"CAST({int(v)} AS BIGINT)" for v in adc)
-        terms.append(f"element_at(array({lits}), __pq_c{s})")
-    scored = enc.select(
-        F.col(id_col), F.expr("(" + " + ".join(terms) + ")").alias("pq_dist")
-    )
-    if exclude_ids:
-        scored = scored.filter(~F.col(id_col).isin(*[int(i) for i in exclude_ids]))
-    return scored.orderBy(F.col("pq_dist"), F.col(id_col)).limit(k)
-
-
-def pq_topk_sql(
-    table: str = "embeddings", k: int = 10, query_id: int = 0, dim: int = 64
-) -> str:
-    """DuckDB oracle twin of :func:`pq_topk` — identical codebooks,
-    identical floor quantization, identical first-min tie-break
-    (list_position finds the first occurrence, as array_position does)."""
-    books = pq_codebooks(dim=dim)
-    sub = len(books[0][0])
-
-    def qe(i: int) -> str:  # quantized element i (0-based), bigint
-        return (
-            f"CAST(floor(CAST(embedding[{i + 1}] AS DOUBLE) * {PQ_QSCALE}) AS BIGINT)"
-        )
-
-    e_cols = ", ".join(f"{qe(i)} AS e{i}" for i in range(dim))
-    # query CTE: one 16-entry ADC list per subspace, from the query row
-    adc_lists = []
-    for s, codes in enumerate(books):
-        els = []
-        for c in codes:
-            els.append(
-                "(" + " + ".join(
-                    f"({qe(s * sub + d)} - {c[d]}) * ({qe(s * sub + d)} - {c[d]})"
-                    for d in range(sub)
-                ) + ")"
-            )
-        adc_lists.append("list_value(" + ", ".join(els) + f") AS adc{s}")
-    # corpus: per-subspace distance lists over the projected e{i} columns
-    dl_lists = []
-    for s, codes in enumerate(books):
-        els = []
-        for c in codes:
-            els.append(
-                "(" + " + ".join(
-                    f"(e{s * sub + d} - {c[d]}) * (e{s * sub + d} - {c[d]})"
-                    for d in range(sub)
-                ) + ")"
-            )
-        dl_lists.append("list_value(" + ", ".join(els) + f") AS dl{s}")
-    code_cols = ", ".join(
-        f"list_position(dl{s}, list_min(dl{s})) AS c{s}" for s in range(len(books))
-    )
-    score = " + ".join(f"list_extract(q.adc{s}, codes.c{s})" for s in range(len(books)))
-    return f"""
-    WITH q AS (SELECT {", ".join(adc_lists)} FROM {table} WHERE vec_id = {query_id}),
-    v AS (SELECT vec_id, {e_cols} FROM {table} WHERE vec_id <> {query_id}),
-    dl AS (SELECT vec_id, {", ".join(dl_lists)} FROM v),
-    codes AS (SELECT vec_id, {code_cols} FROM dl)
-    SELECT codes.vec_id, ({score}) AS pq_dist
-    FROM codes, q
-    ORDER BY pq_dist, codes.vec_id
-    LIMIT {k}
-    """
 
 
 # ---------------------------------------------------------------------------
@@ -871,130 +383,3 @@ def ivfpq_indexed_topk_sql(
     ORDER BY pq_dist, codes.vec_id
     LIMIT {k}
     """
-
-
-# ---------------------------------------------------------------------------
-# Greedy k-center coreset selection (farthest-point traversal)
-# ---------------------------------------------------------------------------
-
-
-def _d2_micro_col(a, b) -> F.Column:
-    """Squared euclidean distance between two double-array columns as an
-    integer micro distance. The element fold runs left-to-right on both
-    engines and the micro rounding absorbs any residual 1-ulp noise, so
-    the greedy argmax below is bit-stable cross-engine."""
-    d2 = F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.round(d2 * 1000000.0, 0).cast("long")
-
-
-def kcenter_coreset(
-    spark,
-    emb: DataFrame,
-    k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Greedy k-center (farthest-point) selection — the classic 2-approx
-    coreset for data-selection: pick the lowest-id point, then k-1 times
-    the point FARTHEST from everything chosen so far (ties to the lower
-    id). Returns (sel_ord, vec_id, dist_micro) where dist_micro is the
-    coverage radius the pick closed (-1 for the seed) — the radius
-    sequence is the classic diminishing-returns curve for choosing k.
-
-    Plan shape: the vector table is cached once; each round is ONE
-    map-side pass updating the running min-distance against the newly
-    chosen center (a 64-double literal — no join, no shuffle) and a
-    driver argmax of one row. k passes total. At 100 TB run this on the
-    IVF-cell layout instead: per-partition local k-centers via the same
-    recurrence, then this exact routine over the tiny union (composable
-    coresets) — one corpus pass instead of k."""
-    v = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).cache()
-    seed = v.orderBy("id").limit(1).collect()[0]
-    chosen_vecs = [list(seed["v"])]
-    out = [(0, int(seed["id"]), -1)]
-    df = v
-    # r14 (guide §1.2 "the distributed algorithm first"): each round's
-    # frame persists and the previous round's cache releases — round i
-    # reads round i-1's materialized mind column instead of re-deriving
-    # the whole chain from the root (which made the loop O(k²) distance
-    # passes; the plan also grew by 64 literal terms per round). Same
-    # values, same argmax, k one-pass rounds.
-    prev = None
-    for i in range(1, k):
-        center = F.array(*[F.lit(float(x)) for x in chosen_vecs[-1]])
-        d_new = _d2_micro_col(F.col("v"), center)
-        df = df.withColumn(
-            "mind", d_new if i == 1 else F.least(F.col("mind"), d_new)
-        ).persist()
-        top = (
-            df.orderBy(F.desc("mind"), "id")
-            .limit(1)
-            .collect()[0]
-        )
-        if prev is not None:
-            prev.unpersist()
-        prev = df
-        out.append((i, int(top["id"]), int(top["mind"])))
-        chosen_vecs.append(list(top["v"]))
-    if prev is not None:
-        prev.unpersist()
-    v.unpersist()
-    return local_rows_df(spark, 
-        out, "sel_ord int, vec_id long, dist_micro long"
-    )
-
-
-def kcenter_coreset_sql(
-    k: int = 8,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """DuckDB oracle: the SAME greedy recurrence unrolled as k-1 CTE
-    steps — min-distance updates and argmax mirror the Spark operator
-    term for term (micro-int LEAST chains, DESC/id tie-break)."""
-
-    def d2(a: str, b: str) -> str:
-        # list_zip yields unnamed structs in DuckDB → numeric extraction
-        return (
-            f"list_sum(list_transform(list_zip({a}, {b}), "
-            f"p -> (p[1] - p[2]) * (p[1] - p[2])))"
-        )
-
-    def micro(e: str) -> str:
-        return f"CAST(ROUND(({e}) * 1000000) AS BIGINT)"
-
-    parts = [
-        f"v AS (SELECT {id_col} AS id, CAST({vec_col} AS DOUBLE[]) AS v FROM {table})",
-        "s0 AS (SELECT id, v FROM v ORDER BY id LIMIT 1)",
-        f"d1 AS (SELECT v.id, v.v, {micro(d2('v.v', '(SELECT v FROM s0)'))} AS mind FROM v)",
-    ]
-    sel = [
-        "SELECT 0 AS sel_ord, (SELECT id FROM s0) AS vec_id, "
-        "CAST(-1 AS BIGINT) AS dist_micro"
-    ]
-    for i in range(1, k):
-        parts.append(
-            f"s{i} AS (SELECT id, v, mind FROM d{i} ORDER BY mind DESC, id LIMIT 1)"
-        )
-        if i < k - 1:
-            upd = micro(d2(f"d{i}.v", f"(SELECT v FROM s{i})"))
-            parts.append(
-                f"d{i + 1} AS (SELECT d{i}.id, d{i}.v, "
-                f"LEAST(d{i}.mind, {upd}) AS mind FROM d{i})"
-            )
-        sel.append(
-            f"SELECT {i} AS sel_ord, (SELECT id FROM s{i}) AS vec_id, "
-            f"(SELECT mind FROM s{i}) AS dist_micro"
-        )
-    return (
-        "WITH " + ",\n".join(parts) + "\n"
-        + " UNION ALL ".join(sel) + " ORDER BY sel_ord"
-    )

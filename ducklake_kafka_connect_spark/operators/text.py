@@ -2,7 +2,8 @@
 
 All hot-path expressions are built-in Catalyst functions (split /
 filter / size / lower) — whole-stage-codegen'd, no Python in the loop.
-Each has an exact ANSI-SQL oracle twin registered in ``plans/queries.py``.
+``functions/sql_registry.py`` exposes the same definitions as ``dl_*``
+SQL functions.
 """
 
 from __future__ import annotations
@@ -57,222 +58,3 @@ def lang_id_col(text: Column, markers: dict[str, Sequence[str]] = LANG_MARKERS) 
     for lang in reversed(langs):  # earlier langs win ties → apply last
         out = F.when((hits[lang] == best) & (best > 0), F.lit(lang)).otherwise(out)
     return out
-
-
-def lang_id_sql(text_expr: str, markers: dict[str, Sequence[str]] = LANG_MARKERS) -> str:
-    """DuckDB twin of lang_id_col."""
-    langs = sorted(markers)
-    toks = f"string_split_regex(trim(lower({text_expr})), '\\s+')"
-    hit = {
-        lang: (
-            f"len(list_filter({toks}, w -> w IN ("
-            + ", ".join(f"'{m}'" for m in markers[lang])
-            + ")))"
-        )
-        for lang in langs
-    }
-    best = "greatest(" + ", ".join(hit[lang] for lang in langs) + ")"
-    whens = " ".join(
-        f"WHEN {hit[lang]} = {best} AND {best} > 0 THEN '{lang}'" for lang in langs
-    )
-    return f"(CASE {whens} ELSE 'und' END)"
-
-
-def fingerprint_col(text: Column, n: int = 5, k: int = 4) -> Column:
-    """Document fingerprint: bottom-k of the hashed character n-gram set
-    (a winnowing-style sketch; Schleimer et al., SIGMOD'03). Two docs
-    share a fingerprint iff their smallest k shingle hashes agree —
-    robust to small edits. Emitted as a '_'-joined string key. Pure
-    Catalyst: sequence → substr → md5-hash → sort → slice."""
-    from .dedup import h60_col
-
-    low = F.lower(text)
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(low) - (n - 1), F.lit(1))),
-            lambda i: low.substr(i, F.lit(n)),
-        )
-    )
-    bottom_k = F.slice(F.array_sort(F.transform(grams, h60_col)), 1, k)
-    return F.array_join(F.transform(bottom_k, lambda h: h.cast("string")), "_")
-
-
-def fingerprint_sql(text_expr: str, n: int = 5, k: int = 4) -> str:
-    """DuckDB twin of fingerprint_col."""
-    from .dedup import h60_sql
-
-    low = f"lower({text_expr})"
-    grams = (
-        f"list_distinct(list_transform("
-        f"generate_series(1, greatest(len({low}) - {n - 1}, 1)), "
-        f"i -> substr({low}, i, {n})))"
-    )
-    bottom_k = f"list_sort(list_transform({grams}, g -> {h60_sql('g')}))[1:{k}]"
-    return f"array_to_string(list_transform({bottom_k}, h -> CAST(h AS VARCHAR)), '_')"
-
-
-def repetition_ratio_col(text: Column) -> Column:
-    """Repeated-bigram fraction: 1 - distinct_bigrams/total_bigrams, the
-    standard boilerplate/degenerate-text quality signal (high ratio =
-    the document repeats itself). NULL for docs under 2 tokens.
-
-    Distinctness runs over md5-derived bigram HASHES (h60 % MERSENNE,
-    the repo's shared-hash contract) so the count — collisions included
-    — is bit-identical to the SQL twin's. Array-expression form for
-    per-row use; the corpus-scale plan is the row-wise explode + lead()
-    window in ``plans/queries.py::text_repetition_ratio`` (same hash,
-    same counts)."""
-    from .dedup import MERSENNE, h60_col
-
-    toks = tokens_col(text)
-    gram = lambda i: (  # noqa: E731
-        h60_col(
-            F.concat_ws(" ", F.element_at(toks, i + 1), F.element_at(toks, i + 2))
-        )
-        % MERSENNE
-    )
-    total = F.size(toks) - 1
-    grams = F.transform(F.sequence(F.lit(0), F.size(toks) - 2), gram)
-    ratio = F.lit(1.0) - F.size(F.array_distinct(grams)).cast("double") / total
-    return F.when(total >= 1, F.round(ratio, 6))
-
-
-def repetition_ratio_sql(text_expr: str) -> str:
-    """DuckDB twin of repetition_ratio_col (1-based list indexing;
-    identical md5-derived bigram hashes → identical distinct counts)."""
-    from .dedup import MERSENNE, h60_sql
-
-    w = f"string_split_regex(trim(lower({text_expr})), '\\s+')"
-    h = h60_sql(f"({w}[i] || ' ' || {w}[i+1])")
-    grams = f"list_transform(generate_series(1, len({w}) - 1), i -> {h} % {MERSENNE})"
-    ratio = f"ROUND(1.0 - CAST(len(list_distinct({grams})) AS DOUBLE) / (len({w}) - 1), 6)"
-    return f"(CASE WHEN len({w}) >= 2 THEN {ratio} END)"
-
-
-# ---------------------------------------------------------------------------
-# Normalization + composite quality filtering (C4/Gopher-style rules)
-# ---------------------------------------------------------------------------
-
-# Literal ASCII punctuation class, written out so the Java-regex (Spark)
-# and RE2 (DuckDB) dialects can't disagree on a shorthand like \p{Punct}.
-_PUNCT_CLASS = r"[!\"#$%&'()*+,\-./:;<=>?@\[\]\^_`{|}~]"
-
-# Gopher-flavored keep thresholds (tuned to the synthetic corpus scale;
-# the RULES are the operator, the constants are config)
-QUALITY_MIN_TOKENS = 10
-QUALITY_MAX_TOKENS = 100_000
-QUALITY_MEAN_WORD_LEN = (2.0, 12.0)
-QUALITY_MAX_REPETITION = 0.30
-
-
-def normalize_text_col(text: Column) -> Column:
-    """Canonical text form: lower-case, ASCII punctuation stripped,
-    whitespace collapsed to single spaces, trimmed. Pure Catalyst."""
-    t = F.lower(text)
-    t = F.regexp_replace(t, _PUNCT_CLASS, "")
-    t = F.regexp_replace(t, r"\s+", " ")
-    return F.trim(t)
-
-
-def normalize_text_sql(text_expr: str) -> str:
-    """DuckDB twin of normalize_text_col (regexp_replace with 'g')."""
-    cls = _PUNCT_CLASS.replace("'", "''")
-    return (
-        f"trim(regexp_replace(regexp_replace(lower({text_expr}), "
-        f"'{cls}', '', 'g'), '\\s+', ' ', 'g'))"
-    )
-
-
-def mean_word_len_col(text: Column) -> Column:
-    toks = tokens_col(text)
-    return F.when(F.size(toks) == 0, F.lit(None).cast("double")).otherwise(
-        F.aggregate(
-            toks, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
-        ).cast("double")
-        / F.size(toks)
-    )
-
-
-def mean_word_len_sql(text_expr: str) -> str:
-    from .dedup import WORDS_SQL
-
-    w = WORDS_SQL.format(text=text_expr)
-    return (
-        f"CASE WHEN len({w}) = 0 THEN NULL ELSE "
-        f"CAST(list_sum(list_transform({w}, x -> length(x))) AS DOUBLE)"
-        f" / len({w}) END"
-    )
-
-
-def quality_keep_col(text: Column) -> Column:
-    """Composite C4/Gopher-style keep decision, one codegen'd pass:
-    token-count bounds AND mean-word-length bounds AND repetition cap."""
-    n = token_count_col(text)
-    mwl = mean_word_len_col(text)
-    rep = F.coalesce(repetition_ratio_col(text), F.lit(0.0))
-    lo, hi = QUALITY_MEAN_WORD_LEN
-    return (
-        (n >= QUALITY_MIN_TOKENS)
-        & (n <= QUALITY_MAX_TOKENS)
-        & (mwl >= lo)
-        & (mwl <= hi)
-        & (rep <= QUALITY_MAX_REPETITION)
-    )
-
-
-def quality_keep_sql(text_expr: str) -> str:
-    from .dedup import WORDS_SQL
-
-    w = WORDS_SQL.format(text=text_expr)
-    lo, hi = QUALITY_MEAN_WORD_LEN
-    return (
-        f"(len({w}) >= {QUALITY_MIN_TOKENS} AND len({w}) <= {QUALITY_MAX_TOKENS}"
-        f" AND ({mean_word_len_sql(text_expr)}) >= {lo}"
-        f" AND ({mean_word_len_sql(text_expr)}) <= {hi}"
-        f" AND coalesce(({repetition_ratio_sql(text_expr)}), 0.0)"
-        f" <= {QUALITY_MAX_REPETITION})"
-    )
-
-
-# ---------------------------------------------------------------------------
-# PII redaction (training-corpus scrubbing)
-# ---------------------------------------------------------------------------
-
-# Written in the common Java-regex / RE2 subset: explicit classes, \b
-# word boundaries, bounded quantifiers — both engines must match the
-# same spans or the redacted-text hash sums diverge.
-EMAIL_RE = r"[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}"
-PHONE_RE = r"\b\d{3}-\d{3}-\d{4}\b"
-EMAIL_TOKEN = "[EMAIL]"
-PHONE_TOKEN = "[PHONE]"
-
-
-def redact_pii_col(text: Column) -> Column:
-    """Emails then phone numbers replaced by fixed tokens — one
-    codegen'd pass of two regexp_replace calls, the 100 TB-friendly
-    shape for corpus scrubbing."""
-    t = F.regexp_replace(text, EMAIL_RE, EMAIL_TOKEN)
-    return F.regexp_replace(t, PHONE_RE, PHONE_TOKEN)
-
-
-def pii_counts_col(text: Column) -> tuple[Column, Column]:
-    """(n_emails, n_phones) match counts for audit metrics."""
-    return (
-        F.regexp_count(text, F.lit(EMAIL_RE)),
-        F.regexp_count(text, F.lit(PHONE_RE)),
-    )
-
-
-def redact_pii_sql(text_expr: str) -> str:
-    return (
-        f"regexp_replace(regexp_replace({text_expr}, "
-        f"'{EMAIL_RE}', '{EMAIL_TOKEN}', 'g'), "
-        f"'{PHONE_RE}', '{PHONE_TOKEN}', 'g')"
-    )
-
-
-def pii_counts_sql(text_expr: str) -> tuple[str, str]:
-    return (
-        f"len(regexp_extract_all({text_expr}, '{EMAIL_RE}'))",
-        f"len(regexp_extract_all({text_expr}, '{PHONE_RE}'))",
-    )

@@ -186,7 +186,7 @@ def arrow_ipc_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket", (F.col("event_id") % 16).cast("int")
     )
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key, pdf):
         from ..sources.arrow_ipc import encode_ipc
 
         tbl = pa.table(

@@ -34,30 +34,9 @@ from pyspark.sql import functions as F
 from ..functions.timestamps import parse_iso_timestamp
 from ..lake import LakeCatalog, LakeWriter
 from ..operators import dedup as dedup_ops
-from ..operators.similarity import (
-    NUM_CELLS,
-    _lcg_hyperplanes,
-    ann_lsh_topk,
-    ann_lsh_topk_sql,
-    cosine_topk,
-    ivf_indexed_topk_sql,
-    ivf_topk,
-    ivf_topk_sql,
-)
-from ..operators.text import (
-    EN_STOPWORDS,
-    fingerprint_col,
-    fingerprint_sql,
-    lang_id_col,
-    lang_id_sql,
-    repetition_ratio_col,
-    repetition_ratio_sql,
-    stopword_ratio_col,
-    token_count_col,
-)
+from ..operators.similarity import NUM_CELLS, _lcg_hyperplanes
 from ..schema.merge import unify_schemas
 from ..sources.parquet_loader import load_parquet
-from ..lake.relation_cache import local_rows_df
 
 
 @dataclass
@@ -1763,108 +1742,8 @@ def schema_promotion_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# C. LLM-pipeline operators (beyond-parity, BASELINE.json north star)
+# C. Analytical SQL shapes: percentiles, CUBE, semi/anti/outer joins
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "dedup_exact_stats",
-    """
-    SELECT count(*) AS total_docs,
-           CAST(count(DISTINCT text) AS BIGINT) AS distinct_texts,
-           CAST(count(*) - count(DISTINCT text) AS BIGINT) AS dup_docs
-    FROM documents
-    """,
-    "Exact dedup summary over the documents corpus",
-)
-def dedup_exact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return docs.agg(
-        F.count(F.lit(1)).alias("total_docs"),
-        F.countDistinct("text").cast("long").alias("distinct_texts"),
-        (F.count(F.lit(1)) - F.countDistinct("text")).cast("long").alias("dup_docs"),
-    )
-
-
-@register(
-    "dedup_keep_first",
-    """
-    SELECT CAST(min(doc_id) AS BIGINT) AS keeper_id, count(*) AS n_copies
-    FROM documents GROUP BY text
-    """,
-    "Exact dedup: canonical keeper per identical text (hash-groupBy at scale)",
-)
-def dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    # Group on a 256-bit content hash, not the full text — at 100 TB the
-    # shuffle moves 32-byte keys instead of documents.
-    return (
-        docs.groupBy(F.sha2(F.col("text"), 256).alias("h"))
-        .agg(F.min("doc_id").cast("long").alias("keeper_id"), F.count(F.lit(1)).alias("n_copies"))
-        .select("keeper_id", "n_copies")
-    )
-
-
-@register(
-    "text_token_stats",
-    r"""
-    SELECT lang,
-           CAST(sum(len(string_split_regex(trim(lower(text)), '\s+'))) AS BIGINT) AS total_tokens,
-           count(*) AS n_docs,
-           avg(n_chars) AS avg_chars
-    FROM documents GROUP BY lang
-    """,
-    "Token counting per language (text-analysis operator)",
-)
-def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return docs.groupBy("lang").agg(
-        F.sum(token_count_col(F.col("text"))).cast("long").alias("total_tokens"),
-        F.count(F.lit(1)).alias("n_docs"),
-        F.avg("n_chars").alias("avg_chars"),
-    )
-
-
-@register(
-    "text_quality_scores",
-    r"""
-    SELECT doc_id,
-           CAST(len(string_split_regex(trim(lower(text)), '\s+')) AS INTEGER) AS n_words,
-           ROUND(CAST(len(list_filter(string_split_regex(trim(lower(text)), '\s+'),
-                                      w -> w IN ('the','a','of','to','and','in','is'))) AS DOUBLE)
-                 / len(string_split_regex(trim(lower(text)), '\s+')), 6) AS stopword_ratio
-    FROM documents
-    """,
-    "Per-document quality signals: word count + stopword ratio",
-)
-def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        token_count_col(F.col("text")).alias("n_words"),
-        stopword_ratio_col(F.col("text"), EN_STOPWORDS).alias("stopword_ratio"),
-    )
-
-
-@register(
-    "similarity_topk",
-    """
-    WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS embedding
-               FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id,
-           ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                        (SELECT embedding FROM q)), 6) AS cos_sim
-    FROM embeddings e
-    WHERE vec_id <> 0
-    ORDER BY cos_sim DESC, vec_id
-    LIMIT 10
-    """,
-    "Brute-force cosine top-k over embedding column (ANN exact baseline)",
-)
-def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    query = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    return cosine_topk(emb, query, k=10, exclude_ids=[0])
 
 
 @register(
@@ -1979,291 +1858,11 @@ def outer_join_nation_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# D. Fuzzy dedup / ANN / text-analysis / event-time (beyond-parity, phase 5)
-#    LSH determinism contract: every hash is md5-derived so the Spark and
-#    DuckDB pipelines bucket identically — comparisons are exact, not
-#    statistical (operators/dedup.py).
+# D. IVF-PQ index / event-time (beyond-parity, phase 5)
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "dedup_minhash_lsh",
-    dedup_ops.minhash_dedup_pairs_sql(),
-    "MinHash(16)+LSH(4×4) near-dup pairs, exact-Jaccard verified (≥0.7)",
-)
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup_ops.minhash_dedup_pairs(_t(spark, sf_dir, "documents"))
-
-
-@register(
-    "dedup_simhash_hamming",
-    f"""
-    WITH pairs AS ({dedup_ops.simhash_near_pairs_sql()})
-    SELECT hamming, count(*) AS n_pairs FROM pairs GROUP BY hamming
-    """,
-    "SimHash(32-bit) banded near-dup pairs, histogram by hamming distance ≤3",
-)
-def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = dedup_ops.simhash_near_pairs(_t(spark, sf_dir, "documents"))
-    return pairs.groupBy("hamming").agg(F.count(F.lit(1)).alias("n_pairs"))
-
-
-@register(
-    "dedup_ngram_jaccard",
-    dedup_ops.ngram_jaccard_pairs_sql(),
-    "Exact word-3-gram Jaccard pairs (≥0.5) within lang blocks — MinHash's exact baseline",
-)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup_ops.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
-
-
-@register(
-    "dedup_embedding_cosine",
-    dedup_ops.embedding_neardup_pairs_sql(threshold=0.4),
-    "Embedding near-dup pairs (cosine ≥0.4) within label blocks",
-)
-def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup_ops.embedding_neardup_pairs(_t(spark, sf_dir, "embeddings"), threshold=0.4)
-
-
-#    SemDeDup (Abbas et al. 2023): cluster the embedding space, then
-#    prune within-cluster semantic duplicates, keeping one representative
-#    per near-dup ball. Deterministic variant: fixed seeded centroids
-#    (training them is kmeans_embedding_clusters' job), keep-lowest-id.
-SEM_THRESHOLD = 0.35  # ~15% prune rate on the synthetic corpus
-SEM_CENTROIDS: list[list[float]] = []
-
-
-def _sem_centroids() -> list[list[float]]:
-    from ..operators.similarity import _unit
-
-    if not SEM_CENTROIDS:
-        SEM_CENTROIDS.extend(
-            _unit(c) for c in _lcg_hyperplanes(dim=64, n=NUM_CELLS, seed=29)
-        )
-    return SEM_CENTROIDS
-
-
-def _semdedup_oracle() -> str:
-    from ..operators.similarity import ivf_assign_sql, srp_bucket_sql
-
-    cell = ivf_assign_sql("CAST(embedding AS DOUBLE[])", _sem_centroids())
-    sub = srp_bucket_sql("base.v", dedup_ops._guard_planes(64))
-    return f"""
-    WITH base AS (
-      SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v,
-             {cell} AS cell
-      FROM embeddings
-    ),
-    n AS (SELECT cell, COUNT(*) AS n_blk FROM base GROUP BY cell),
-    v AS (
-      SELECT base.cell, base.id, base.v,
-             CASE WHEN n.n_blk > {dedup_ops.MAX_EMB_BLOCK} THEN {sub}
-                  ELSE 0 END AS sub
-      FROM base JOIN n USING (cell)
-    ),
-    pruned AS (
-      SELECT DISTINCT b.id
-      FROM v a JOIN v b ON a.cell = b.cell AND a.sub = b.sub
-      WHERE a.id < b.id
-        AND ROUND(list_cosine_similarity(a.v, b.v), 6) >= {SEM_THRESHOLD}
-    )
-    SELECT base.cell, COUNT(*) AS n_members,
-           CAST(SUM(CASE WHEN pruned.id IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_pruned,
-           ROUND(SUM(CASE WHEN pruned.id IS NOT NULL THEN 1 ELSE 0 END)
-                 / CAST(COUNT(*) AS DOUBLE), 6) AS prune_rate
-    FROM base LEFT JOIN pruned ON base.id = pruned.id
-    GROUP BY base.cell
-    """
-
-
-@register(
-    "semdedup_prune",
-    None,  # oracle attached below (needs centroid/plane literal builders)
-    "SemDeDup semantic pruning: assign embeddings to coarse cells, drop "
-    "within-cell cosine near-dups (keep-lowest-id) — per-cell members, "
-    "pruned count, prune rate",
-)
-def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-then-prune semantic dedup (SemDeDup). Scale shape: the
-    cell assignment is one map-side expression (broadcast centroid
-    literals, no shuffle); the quadratic prune term is bounded by the
-    (cell, SRP-sub-bucket) blocking that embedding_neardup_pairs
-    already enforces above MAX_EMB_BLOCK rows — the same cap that
-    holds dedup_embedding_cosine sub-linear at sf10. At 100 TB cells
-    come from kmeans_embedding_clusters' centroids and the per-cell
-    work distributes; the keep-lowest-id rule replaces the paper's
-    keep-farthest-from-centroid for cross-engine determinism."""
-    from ..operators.similarity import with_ivf_cell
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cells = with_ivf_cell(
-        emb.select("vec_id", "embedding"), "embedding", _sem_centroids(), out="cell"
-    )
-    pairs = dedup_ops.embedding_neardup_pairs(
-        cells, threshold=SEM_THRESHOLD, block_col="cell"
-    )
-    pruned = pairs.select(F.col("id_b").alias("vec_id")).distinct()
-    flagged = cells.join(
-        pruned.withColumn("__p", F.lit(1)), "vec_id", "left"
-    )
-    return (
-        flagged.groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.sum(F.coalesce("__p", F.lit(0))).cast("long").alias("n_pruned"),
-        )
-        .withColumn(
-            "prune_rate",
-            F.round(F.col("n_pruned") / F.col("n_members").cast("double"), 6),
-        )
-    )
-
-
-QUERIES["semdedup_prune"].oracle = _semdedup_oracle()
-
-
-@register(
-    "ann_lsh_topk",
-    ann_lsh_topk_sql(dim=64),
-    "ANN: signed-random-projection bucket prune + exact cosine top-k within bucket",
-)
-def ann_lsh_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    query = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    return ann_lsh_topk(emb, query, k=10, exclude_ids=[0])
-
-
 IVF_CENTROIDS = _lcg_hyperplanes(dim=64, n=NUM_CELLS, seed=11)
-
-
-@register(
-    "ann_ivf_topk",
-    ivf_topk_sql(IVF_CENTROIDS),
-    "ANN via IVF coarse quantizer: nearest-centroid cell probe + exact cosine top-k",
-)
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    query = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    return ivf_topk(emb, query, IVF_CENTROIDS, k=10, exclude_ids=[0])
-
-
-def ivf_index_build(spark: SparkSession, sf_dir: str):
-    """Build phase: cell-partitioned IVF lake index over embeddings.
-    Returns (table, query vector) for the probe phase."""
-    from ..operators.similarity import build_ivf_index
-
-    emb = _t(spark, sf_dir, "embeddings")
-    query = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    lake_dir = os.path.join(tempfile.gettempdir(), f"ducklake_ivf_{uuid.uuid4().hex[:8]}")
-    cat = LakeCatalog(spark, lake_dir)
-    t = cat.table("emb_ivf")
-    build_ivf_index(t, emb, IVF_CENTROIDS)
-    return t, query
-
-
-def ivf_index_query(t, query) -> DataFrame:
-    """Query phase: nprobe-cell manifest-pruned exact top-k."""
-    from ..operators.similarity import ivf_indexed_topk
-
-    return ivf_indexed_topk(t, query, IVF_CENTROIDS, k=10, nprobe=2, exclude_ids=[0])
-
-
-
-@register(
-    "ann_ivf_indexed_topk",
-    ivf_indexed_topk_sql(IVF_CENTROIDS, nprobe=2),
-    "IVF ANN over a cell-partitioned lake index: the nprobe-cell probe is "
-    "manifest partition pruning (build_ivf_index / ivf_indexed_topk) — at "
-    "100 TB the scan opens nprobe/NUM_CELLS of the corpus regardless of size",
-)
-def ann_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """bench.py times ivf_index_build / ivf_index_query separately. The
-    one-time index build is memoized per source — the point of an index
-    is to be built once and probed many times."""
-    src = _t(spark, sf_dir, "embeddings")
-    return dedup_ops._memo_plan(
-        src,
-        "ivf_indexed",
-        (),
-        lambda: ivf_index_query(*ivf_index_build(spark, sf_dir)),
-    )
-
-
-@register(
-    "lang_id_confusion",
-    f"""
-    SELECT lang, {lang_id_sql('text')} AS pred_lang, count(*) AS n
-    FROM documents GROUP BY lang, pred_lang
-    """,
-    "Marker-token language-ID vs stored label (confusion cells)",
-)
-def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-parallel marker counting instead of the per-row CASE chain:
-    tokens explode once, a broadcast (marker, lang) table joins hits
-    (a token in two languages' sets — 'la' es/fr — counts for both,
-    same as the per-set filters), and the per-doc argmax window picks
-    the winner with the (hits DESC, lang ASC) tie-break; docs with no
-    marker hits come back as 'und' via the left join. The inline
-    `lang_id_col` CASE repeats its token-split per branch (~35 subtree
-    copies/row); this shape evaluates the split once and scales as one
-    token-keyed broadcast join + doc-keyed window."""
-    from ..operators.text import LANG_MARKERS
-
-    docs = _t(spark, sf_dir, "documents")
-    markers = local_rows_df(spark, 
-        [(m, lang) for lang, ms in LANG_MARKERS.items() for m in ms],
-        "w string, mlang string",
-    )
-    tok = docs.select(
-        "doc_id",
-        "lang",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
-    )
-    hits = (
-        tok.join(F.broadcast(markers), "w")
-        .groupBy("doc_id", "lang", "mlang")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    win = W.partitionBy("doc_id").orderBy(
-        F.col("n_hits").desc(), F.col("mlang").asc()
-    )
-    best = (
-        hits.withColumn("rn", F.row_number().over(win))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", F.col("mlang").alias("pred_lang"))
-    )
-    return (
-        docs.select("doc_id", "lang")
-        .join(best, "doc_id", "left")
-        .select(
-            "lang", F.coalesce(F.col("pred_lang"), F.lit("und")).alias("pred_lang")
-        )
-        .groupBy("lang", "pred_lang")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-@register(
-    "doc_fingerprint_groups",
-    f"""
-    SELECT count(*) AS n_docs,
-           CAST(count(DISTINCT fp) AS BIGINT) AS n_fingerprints,
-           CAST(count(*) - count(DISTINCT fp) AS BIGINT) AS n_collisions
-    FROM (SELECT {fingerprint_sql('text')} AS fp FROM documents)
-    """,
-    "Winnowing-style bottom-k fingerprint: collision summary over the corpus",
-)
-def doc_fingerprint_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    n_part = spark.sparkContext.defaultParallelism
-    # single-file scan → spread the per-char hashing across all cores
-    return docs.repartition(n_part).select(fingerprint_col(F.col("text")).alias("fp")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("fp").cast("long").alias("n_fingerprints"),
-        (F.count(F.lit(1)) - F.countDistinct("fp")).cast("long").alias("n_collisions"),
-    )
 
 
 @register(
@@ -2447,212 +2046,6 @@ def user_session_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "text_repetition_ratio",
-    f"""
-    SELECT lang, count(*) AS n_docs,
-           ROUND(AVG(rep), 6) AS avg_rep,
-           ROUND(MAX(rep), 6) AS max_rep
-    FROM (SELECT lang, {repetition_ratio_sql('text')} AS rep FROM documents)
-    WHERE rep IS NOT NULL GROUP BY lang
-    """,
-    "Repeated-bigram fraction per document, aggregated per language — "
-    "the standard boilerplate/degenerate-text quality signal",
-)
-def text_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-wise scale plan (the minhash_signatures shape): repartition →
-    posexplode words → lead() composes bigrams → ONE md5 per bigram →
-    per-doc count/count_distinct → per-lang rollup. No per-doc arrays,
-    no higher-order lambdas (array-form ``repetition_ratio_col`` is the
-    per-row variant; its in-lambda token re-evaluation is quadratic in
-    doc length). The window sort shares the explode's doc_id hash
-    partitioning, so bigram composition adds no shuffle; docs under 2
-    tokens emit no bigram rows, matching the oracle's NULL filter."""
-    docs = _t(spark, sf_dir, "documents")
-    n_part = spark.sparkContext.defaultParallelism
-    words = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    tok = docs.repartition(n_part, "doc_id").select(
-        "doc_id", "lang", F.posexplode(words).alias("pos", "w")
-    )
-    win = W.partitionBy("doc_id").orderBy("pos")
-    grams = (
-        tok.withColumn("w1", F.lead("w", 1).over(win))
-        .filter(F.col("w1").isNotNull())
-        .select(
-            "doc_id",
-            "lang",
-            (
-                dedup_ops.h60_col(F.concat_ws(" ", "w", "w1")) % dedup_ops.MERSENNE
-            ).alias("h"),
-        )
-    )
-    per_doc = grams.groupBy("doc_id", "lang").agg(
-        F.round(
-            F.lit(1.0)
-            - F.countDistinct("h").cast("double") / F.count(F.lit(1)),
-            6,
-        ).alias("rep")
-    )
-    return per_doc.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.round(F.avg("rep"), 6).alias("avg_rep"),
-        F.round(F.max("rep"), 6).alias("max_rep"),
-    )
-
-
-CONTAM_BENCH_MOD = 97  # doc_id % MOD == 0 plays the held-out benchmark set
-CONTAM_THRESHOLD = 0.1  # shingle-overlap fraction that flags contamination
-
-
-@register(
-    "contamination_overlap",
-    f"""
-    WITH w AS (
-      SELECT doc_id, lang, {dedup_ops.WORDS_SQL.format(text='text')} AS w
-      FROM documents
-    ),
-    s AS (
-      SELECT doc_id, lang, {dedup_ops.shingle_hash_set_sql('w')} AS sh FROM w
-    ),
-    ex AS (
-      SELECT doc_id, lang, len(sh) AS n_sh, unnest(sh) AS h FROM s
-    ),
-    bench AS (
-      SELECT DISTINCT h FROM ex WHERE doc_id % {CONTAM_BENCH_MOD} = 0
-    ),
-    hits AS (
-      SELECT doc_id, lang, n_sh, count(*) AS n_hit
-      FROM ex JOIN bench USING (h)
-      WHERE doc_id % {CONTAM_BENCH_MOD} <> 0
-      GROUP BY doc_id, lang, n_sh
-    )
-    SELECT lang,
-           count(*) AS n_contaminated,
-           ROUND(MAX(CAST(n_hit AS DOUBLE) / n_sh), 6) AS max_frac,
-           CAST(SUM(n_hit) AS BIGINT) AS total_hits
-    FROM hits
-    WHERE CAST(n_hit AS DOUBLE) / n_sh >= {CONTAM_THRESHOLD}
-    GROUP BY lang
-    """,
-    "Benchmark-contamination check: corpus docs whose shingle sets "
-    "overlap a held-out benchmark set above a threshold (the n-gram "
-    "decontamination pass of a training-data pipeline)",
-)
-def contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: the benchmark shingle set is tiny next to the corpus
-    → collected into a broadcast hash join against the exploded corpus
-    shingles. Shingle generation is row-wise (explode → lead() window →
-    ONE md5 per shingle; exploding a computed HOF array re-runs the
-    generator per OUTPUT row — measured 16-30 s vs <1 s at sf0.1), and
-    the per-doc dedup is a ``collect_set`` whose groupBy REUSES the
-    window's doc_id hash-partitioning — no global distinct shuffle of
-    all shingle rows (r4 shape: distinct + two more (doc,lang) shuffles;
-    measured 0.86 s → 0.71 s under the bench protocol, and at corpus
-    scale the removed shuffle is O(total shingles)). The persisted
-    per-doc sets are bounded by document length. The md5-derived hashes
-    are bit-identical to the oracle's (h60), so overlap counts compare
-    exactly."""
-    docs = _t(spark, sf_dir, "documents")
-    return dedup_ops._memo_plan(
-        docs, "contamination_overlap", (), lambda: _build_contamination(spark, docs)
-    )
-
-
-def _build_contamination(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    n_part = spark.sparkContext.defaultParallelism
-    words = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    tok = docs.repartition(n_part, "doc_id").select(
-        "doc_id", "lang", F.posexplode(words).alias("pos", "w")
-    )
-    win = W.partitionBy("doc_id").orderBy("pos")
-    sh_set = dedup_ops._persist(
-        tok.withColumn("w1", F.lead("w", 1).over(win))
-        .withColumn("w2", F.lead("w", 2).over(win))
-        .filter(F.col("w2").isNotNull())
-        .select(
-            "doc_id",
-            "lang",
-            (
-                dedup_ops.h60_col(F.concat_ws(" ", "w", "w1", "w2"))
-                % dedup_ops.MERSENNE
-            ).alias("h"),
-        )
-        .groupBy("doc_id", "lang")  # reuses the window's doc_id partitioning
-        .agg(F.collect_set("h").alias("hs"))
-        .withColumn("n_sh", F.size("hs"))
-    )
-    bench = (
-        sh_set.filter(F.col("doc_id") % CONTAM_BENCH_MOD == 0)
-        .select(F.explode("hs").alias("h"))
-        .distinct()
-    )
-    hits = (
-        sh_set.filter(F.col("doc_id") % CONTAM_BENCH_MOD != 0)
-        .select("doc_id", "lang", "n_sh", F.explode("hs").alias("h"))
-        .join(F.broadcast(bench), "h")
-        .groupBy("doc_id", "lang", "n_sh")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    frac = F.col("n_hit").cast("double") / F.col("n_sh")
-    return (
-        hits.filter(frac >= CONTAM_THRESHOLD)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_contaminated"),
-            F.round(F.max(frac), 6).alias("max_frac"),
-            F.sum("n_hit").alias("total_hits"),
-        )
-    )
-
-
-@register(
-    "ann_quantized_topk",
-    None,  # oracle attached below (operator SQL builder)
-    "Int8-quantized brute cosine top-k: corpus stored as int8+scale "
-    "(4x smaller), scored asymmetric against the full-precision query",
-)
-def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import dequantize_int8_frame
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]]
-    dq = dequantize_int8_frame(
-        emb.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
-    )
-    return cosine_topk(dq, qvec, k=10)
-
-
-@register(
-    "ann_pq_topk",
-    None,  # oracle attached below (operator SQL builder)
-    "Product-quantized ANN top-k: 8 subspaces x 16 seeded integer "
-    "codewords, asymmetric ADC scoring (8 table lookups per row) — "
-    "the 4-bytes-per-vector storage path of an IVF-PQ index",
-)
-def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Encode is map-side and write-time in a real index, so it is
-    memoized per source (the codes persist; every query re-reads them
-    — same convention as ann_ivf_indexed_topk's build). Scoring reads
-    32 small-int codes per vector and ranks via per-partition partial
-    top-k. At 100 TB the PQ codes are 16x smaller than the float32
-    embeddings — the scan is the win, the ADC math is noise.
-    Exactness: integer floor-quantization + integer codebooks, so the
-    DuckDB twin matches bit-for-bit (operators/similarity.py:pq_topk)."""
-    from ..operators.similarity import pq_encode, pq_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]]
-    enc = dedup_ops._memo_plan(
-        emb,
-        "pq_encoded",
-        (),
-        lambda: dedup_ops._persist(
-            pq_encode(emb.select("vec_id", "embedding"))
-        ),
-    )
-    return pq_topk(enc, qvec, k=10, exclude_ids=[0], pre_encoded=True)
-
-
-@register(
     "ann_ivfpq_topk",
     None,  # oracle attached below (operator SQL builder)
     "Full IVF-PQ index query: nprobe-cell manifest pruning over a "
@@ -2686,210 +2079,14 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _attach_similarity_oracles() -> None:
-    from ..operators.similarity import (
-        ivfpq_indexed_topk_sql,
-        pq_topk_sql,
-        quantized_topk_sql,
-    )
+    from ..operators.similarity import ivfpq_indexed_topk_sql
 
-    QUERIES["ann_quantized_topk"].oracle = quantized_topk_sql()
-    QUERIES["ann_pq_topk"].oracle = pq_topk_sql()
     QUERIES["ann_ivfpq_topk"].oracle = ivfpq_indexed_topk_sql(
         IVF_CENTROIDS, nprobe=2
     )
 
 
 _attach_similarity_oracles()
-
-
-@register(
-    "text_normalize_hashsum",
-    None,  # oracle attached below (needs operator SQL builders)
-    "Canonical text normalization (lower, punctuation strip, whitespace "
-    "collapse) proven byte-identical via per-lang hash sums",
-)
-def text_normalize_hashsum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-insensitive equality proof: sum of bounded per-doc hashes
-    of the NORMALIZED text per language — any engine divergence in the
-    normalization (regex dialect, trim semantics) breaks the sum."""
-    from ..operators.text import normalize_text_col
-
-    docs = _t(spark, sf_dir, "documents")
-    h = dedup_ops.h60_col(normalize_text_col(F.col("text"))) % dedup_ops.MERSENNE
-    return docs.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(h).alias("norm_hashsum"),
-    )
-
-
-@register(
-    "corpus_quality_filter",
-    None,  # oracle attached below
-    "Composite C4/Gopher-style quality gate (token bounds, mean word "
-    "length, repetition cap) — per-lang keep/drop counts + kept tokens",
-)
-def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-wise scale plan (the text_repetition_ratio shape): the
-    repetition signal comes from posexplode → lead() → one md5 per
-    bigram → per-doc distinct/count — NOT the array-lambda
-    ``quality_keep_col`` form, whose in-lambda token re-evaluation is
-    quadratic in doc length (measured 6.9 s vs 0.8 s at sf0.1). Token
-    count and mean word length are linear single-pass array aggregates
-    computed alongside; everything shares one doc_id hash partitioning,
-    so the rep join adds no shuffle."""
-    from ..operators.text import (
-        QUALITY_MAX_REPETITION,
-        QUALITY_MAX_TOKENS,
-        QUALITY_MEAN_WORD_LEN,
-        QUALITY_MIN_TOKENS,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    n_part = spark.sparkContext.defaultParallelism
-    words = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    mwl = F.when(F.size(words) == 0, F.lit(None).cast("double")).otherwise(
-        F.aggregate(
-            words, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
-        ).cast("double")
-        / F.size(words)
-    )
-    base = docs.repartition(n_part, "doc_id").select(
-        "doc_id", "lang", F.size(words).alias("n_tok"), mwl.alias("mwl")
-    )
-    tok = docs.repartition(n_part, "doc_id").select(
-        "doc_id", F.posexplode(words).alias("pos", "w")
-    )
-    win = W.partitionBy("doc_id").orderBy("pos")
-    grams = (
-        tok.withColumn("w1", F.lead("w", 1).over(win))
-        .filter(F.col("w1").isNotNull())
-        .select(
-            "doc_id",
-            (
-                dedup_ops.h60_col(F.concat_ws(" ", "w", "w1")) % dedup_ops.MERSENNE
-            ).alias("h"),
-        )
-    )
-    rep = grams.groupBy("doc_id").agg(
-        F.round(
-            F.lit(1.0) - F.countDistinct("h").cast("double") / F.count(F.lit(1)),
-            6,
-        ).alias("rep")
-    )
-    lo, hi = QUALITY_MEAN_WORD_LEN
-    j = base.join(rep, "doc_id", "left")
-    keep = (
-        (F.col("n_tok") >= QUALITY_MIN_TOKENS)
-        & (F.col("n_tok") <= QUALITY_MAX_TOKENS)
-        & (F.col("mwl") >= lo)
-        & (F.col("mwl") <= hi)
-        & (F.coalesce(F.col("rep"), F.lit(0.0)) <= QUALITY_MAX_REPETITION)
-    )
-    return j.groupBy("lang").agg(
-        F.sum(F.when(keep, 1).otherwise(0)).alias("n_keep"),
-        F.sum(F.when(keep, 0).otherwise(1)).alias("n_drop"),
-        F.sum(F.when(keep, F.col("n_tok")).otherwise(0)).cast("long").alias("kept_tokens"),
-    )
-
-
-def _attach_text_oracles() -> None:
-    from ..operators.dedup import MERSENNE, WORDS_SQL, h60_sql
-    from ..operators.text import normalize_text_sql, quality_keep_sql
-
-    QUERIES["text_normalize_hashsum"].oracle = f"""
-    SELECT lang, count(*) AS n,
-           CAST(sum({h60_sql(normalize_text_sql('text'))} % {MERSENNE})
-                AS BIGINT) AS norm_hashsum
-    FROM documents GROUP BY lang
-    """
-    w = WORDS_SQL.format(text="text")
-    QUERIES["corpus_quality_filter"].oracle = f"""
-    SELECT lang,
-           CAST(sum(CASE WHEN {quality_keep_sql('text')} THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
-           CAST(sum(CASE WHEN {quality_keep_sql('text')} THEN 0 ELSE 1 END) AS BIGINT) AS n_drop,
-           CAST(sum(CASE WHEN {quality_keep_sql('text')} THEN len({w}) ELSE 0 END) AS BIGINT) AS kept_tokens
-    FROM documents GROUP BY lang
-    """
-
-
-_attach_text_oracles()
-
-
-SPAN_WORDS = 8  # non-overlapping span width for exact span dedup
-SAMPLE_RATES = {"en": 60, "es": 40, "de": 40, "fr": 40, "zh": 25}  # pct per lang
-
-
-@register(
-    "dedup_span_exact",
-    None,  # oracle attached below (needs dedup SQL builders)
-    "C4-style exact span dedup signal: non-overlapping 8-word spans "
-    "hashed; spans seen in ≥2 distinct docs are duplicates — per-lang "
-    "affected-doc counts and mean duplicate-span fraction",
-)
-def dedup_span_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale shape: explode (span_hash, doc_id) — 8x fewer rows than
-    tokens — one groupBy(hash) for the cross-doc duplicate set, one
-    broadcast-ish semi-join back, one per-doc aggregate. The corpus
-    text itself never shuffles."""
-    docs = _t(spark, sf_dir, "documents")
-    words = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    n_spans = F.floor(F.size(words) / SPAN_WORDS).cast("int")
-    span = lambda i: dedup_ops.h60_col(  # noqa: E731
-        F.concat_ws(" ", F.slice(words, i * SPAN_WORDS + 1, SPAN_WORDS))
-    )
-    chunks = F.when(n_spans <= 0, F.array().cast("array<bigint>")).otherwise(
-        F.transform(F.sequence(F.lit(0), n_spans - 1), span)
-    )
-    ex = docs.select("doc_id", "lang", F.explode(chunks).alias("h"))
-    # tracked persist: released by dedup_ops.release_cached(), not leaked
-    ex = dedup_ops._persist(ex)
-    dup = (
-        ex.groupBy("h")
-        .agg(F.countDistinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("h")
-    )
-    per_doc = (
-        ex.join(dup.withColumn("__dup", F.lit(1)), "h", "left")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_spans"),
-            F.sum(F.coalesce(F.col("__dup"), F.lit(0))).alias("n_dup"),
-        )
-    )
-    return per_doc.groupBy("lang").agg(
-        F.sum(F.when(F.col("n_dup") > 0, 1).otherwise(0)).alias("docs_with_dup"),
-        F.round(
-            F.avg(F.col("n_dup").cast("double") / F.col("n_spans")), 6
-        ).alias("avg_dup_frac"),
-    )
-
-
-@register(
-    "corpus_stratified_sample",
-    None,  # oracle attached below
-    "Deterministic stratified sampling for training-mix construction: "
-    "content-stable hash gate per language rate — reproducible across "
-    "engines and runs, no RNG",
-)
-def corpus_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    gate = dedup_ops.h60_col(F.col("doc_id").cast("string")) % 100
-    rate = F.coalesce(
-        *[
-            F.when(F.col("lang") == lang, F.lit(pct))
-            for lang, pct in SAMPLE_RATES.items()
-        ],
-        F.lit(0),
-    )
-    return (
-        docs.filter(gate < rate)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_sampled"),
-            F.sum("doc_id").alias("id_sum"),
-        )
-    )
 
 
 DELETE_PRED = "event_type = 'error' OR value < 50.0"
@@ -2972,276 +2169,6 @@ def value_histogram_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", bin_col.alias("bin"))
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("event_type", "bin")
-    )
-
-
-RARE_TOKEN_MAX_COUNT = 2  # corpus frequency at or below this = rare
-
-
-@register(
-    "rare_token_ratio",
-    f"""
-    WITH tok AS (
-      SELECT doc_id, lang,
-             unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
-      FROM documents
-    ),
-    freq AS (SELECT w, count(*) AS n FROM tok GROUP BY w),
-    per_doc AS (
-      SELECT t.doc_id, t.lang,
-             count(*) AS n_tok,
-             CAST(sum(CASE WHEN f.n <= {RARE_TOKEN_MAX_COUNT}
-                      THEN 1 ELSE 0 END) AS BIGINT) AS n_rare
-      FROM tok t JOIN freq f ON t.w = f.w
-      GROUP BY t.doc_id, t.lang
-    )
-    SELECT lang,
-           ROUND(avg(CAST(n_rare AS DOUBLE) / n_tok), 6) AS avg_rare_frac,
-           CAST(sum(CASE WHEN n_rare * 2 > n_tok THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_noisy_docs,
-           CAST(sum(n_rare) AS BIGINT) AS total_rare
-    FROM per_doc GROUP BY lang
-    """,
-    "Rare-token quality signal: fraction of tokens whose CORPUS "
-    "frequency is tiny — high fractions flag garbage/misspelled text. "
-    "Two-pass plan, all-integer until the final ratio (exact cross-engine)",
-)
-def rare_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pass 1 aggregates corpus token frequencies (map-side combine, one
-    shuffle on the token — vocab-sized output); pass 2 joins tokens back
-    to their frequency and rolls up per doc then per lang. 'Noisy doc'
-    uses integer cross-multiplication (n_rare·2 > n_tok), so every
-    comparison is exact — no float threshold parity risk."""
-    docs = _t(spark, sf_dir, "documents")
-    n_part = spark.sparkContext.defaultParallelism
-    words = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    tok = docs.repartition(n_part, "doc_id").select(
-        "doc_id", "lang", F.explode(words).alias("w")
-    )
-    tok = dedup_ops._persist(tok)  # both passes read it
-    freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("n"))
-    per_doc = (
-        tok.join(freq, "w")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_tok"),
-            F.sum(
-                F.when(F.col("n") <= RARE_TOKEN_MAX_COUNT, 1).otherwise(0)
-            ).alias("n_rare"),
-        )
-    )
-    return per_doc.groupBy("lang").agg(
-        F.round(
-            F.avg(F.col("n_rare").cast("double") / F.col("n_tok")), 6
-        ).alias("avg_rare_frac"),
-        F.sum(
-            F.when(F.col("n_rare") * 2 > F.col("n_tok"), 1).otherwise(0)
-        ).cast("long").alias("n_noisy_docs"),
-        F.sum("n_rare").cast("long").alias("total_rare"),
-    )
-
-
-@register(
-    "top_bigrams_per_lang",
-    """
-    WITH w AS (
-      SELECT lang, string_split_regex(trim(lower(text)), '\\s+') AS w
-      FROM documents
-    ),
-    grams AS (
-      SELECT lang, unnest(list_transform(
-               generate_series(1, len(w) - 1), i -> w[i] || ' ' || w[i+1]
-             )) AS bigram
-      FROM w WHERE len(w) >= 2
-    ),
-    counted AS (
-      SELECT lang, bigram, count(*) AS n FROM grams GROUP BY lang, bigram
-    ),
-    ranked AS (
-      SELECT lang, bigram, n,
-             row_number() OVER (PARTITION BY lang
-                                ORDER BY n DESC, bigram ASC) AS rn
-      FROM counted
-    )
-    SELECT lang, bigram, n FROM ranked WHERE rn <= 5
-    """,
-    "Corpus statistics: top-5 bigrams per language by frequency "
-    "(explode → count → per-group top-k), deterministic tie-break",
-)
-def top_bigrams_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same row-wise shape as the repetition plan, keeping the bigram
-    STRING (the output) instead of its hash: posexplode → lead() under
-    the doc_id partitioning → per-(lang, bigram) count — the count
-    aggregation does map-side partial combine, so the shuffle carries
-    (lang, bigram, partial_n), not token rows."""
-    docs = _t(spark, sf_dir, "documents")
-    n_part = spark.sparkContext.defaultParallelism
-    words = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    tok = docs.repartition(n_part, "doc_id").select(
-        "doc_id", "lang", F.posexplode(words).alias("pos", "w")
-    )
-    win = W.partitionBy("doc_id").orderBy("pos")
-    grams = (
-        tok.withColumn("w1", F.lead("w", 1).over(win))
-        .filter(F.col("w1").isNotNull())
-        .select("lang", F.concat_ws(" ", "w", "w1").alias("bigram"))
-    )
-    counted = grams.groupBy("lang", "bigram").agg(F.count(F.lit(1)).alias("n"))
-    rank = W.partitionBy("lang").orderBy(F.col("n").desc(), F.col("bigram").asc())
-    return (
-        counted.withColumn("rn", F.row_number().over(rank))
-        .filter(F.col("rn") <= 5)
-        .select("lang", "bigram", "n")
-    )
-
-
-@register(
-    "pii_redaction",
-    None,  # oracle attached below (operator SQL builders)
-    "PII scrubbing: emails + phone numbers redacted to fixed tokens by "
-    "codegen'd regexp_replace; deterministic injected PII proves the "
-    "Java-regex and RE2 dialects match identical spans (hash-sum check)",
-)
-def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Each doc gets one deterministic email + phone appended (synthetic
-    corpus carries none), then the redaction pass runs; the oracle must
-    agree on match COUNTS and on the byte-exact redacted text (per-lang
-    hash sums). At 100 TB this is one narrow projection — no shuffle,
-    no Python."""
-    from ..operators.text import pii_counts_col, redact_pii_col
-
-    docs = _t(spark, sf_dir, "documents")
-    enriched = F.concat(
-        F.col("text"),
-        F.lit(" contact user"),
-        F.col("doc_id").cast("string"),
-        F.lit("@example.com or 555-"),
-        F.lpad((F.col("doc_id") % 1000).cast("string"), 3, "0"),
-        F.lit("-"),
-        F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-    )
-    n_email, n_phone = pii_counts_col(enriched)
-    redacted = redact_pii_col(enriched)
-    h = dedup_ops.h60_col(redacted) % dedup_ops.MERSENNE
-    return docs.select(
-        "lang",
-        n_email.alias("ne"),
-        n_phone.alias("np"),
-        h.alias("h"),
-    ).groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("ne").cast("long").alias("n_emails"),
-        F.sum("np").cast("long").alias("n_phones"),
-        F.sum("h").alias("redacted_hashsum"),
-    )
-
-
-def _attach_pii_oracle() -> None:
-    from ..operators.dedup import MERSENNE, h60_sql
-    from ..operators.text import pii_counts_sql, redact_pii_sql
-
-    enriched = (
-        "(text || ' contact user' || CAST(doc_id AS VARCHAR) || "
-        "'@example.com or 555-' || "
-        "lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-' || "
-        "lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'))"
-    )
-    ne, np_ = pii_counts_sql(enriched)
-    QUERIES["pii_redaction"].oracle = f"""
-    SELECT lang, count(*) AS n,
-           CAST(sum({ne}) AS BIGINT) AS n_emails,
-           CAST(sum({np_}) AS BIGINT) AS n_phones,
-           CAST(sum({h60_sql(redact_pii_sql(enriched))} % {MERSENNE})
-                AS BIGINT) AS redacted_hashsum
-    FROM documents GROUP BY lang
-    """
-
-
-_attach_pii_oracle()
-
-
-def _attach_span_sample_oracles() -> None:
-    from ..operators.dedup import h60_sql
-
-    w = dedup_ops.WORDS_SQL.format(text="text")
-    span = h60_sql(f"array_to_string(w[i*{SPAN_WORDS}+1 : i*{SPAN_WORDS}+{SPAN_WORDS}], ' ')")
-    QUERIES["dedup_span_exact"].oracle = f"""
-    WITH c AS (
-      SELECT doc_id, lang,
-             CASE WHEN len(w) < {SPAN_WORDS} THEN []
-                  ELSE list_transform(
-                         -- floor() explicitly: DuckDB CAST(x AS INT) rounds
-                         generate_series(0, CAST(floor(len(w) / {SPAN_WORDS}.0) AS INT) - 1),
-                         i -> {span})
-             END AS chunks
-      FROM (SELECT doc_id, lang, {w} AS w FROM documents)
-    ),
-    ex AS (SELECT doc_id, lang, unnest(chunks) AS h FROM c WHERE len(chunks) > 0),
-    dup AS (SELECT h FROM ex GROUP BY h HAVING count(DISTINCT doc_id) >= 2),
-    per_doc AS (
-      SELECT e.doc_id, e.lang, count(*) AS n_spans,
-             CAST(sum(CASE WHEN d.h IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dup
-      FROM ex e LEFT JOIN dup d ON e.h = d.h
-      GROUP BY e.doc_id, e.lang
-    )
-    SELECT lang,
-           CAST(sum(CASE WHEN n_dup > 0 THEN 1 ELSE 0 END) AS BIGINT) AS docs_with_dup,
-           ROUND(avg(CAST(n_dup AS DOUBLE) / n_spans), 6) AS avg_dup_frac
-    FROM per_doc GROUP BY lang
-    """
-    rate_case = " ".join(
-        f"WHEN '{lang}' THEN {pct}" for lang, pct in SAMPLE_RATES.items()
-    )
-    QUERIES["corpus_stratified_sample"].oracle = f"""
-    SELECT lang, count(*) AS n_sampled, CAST(sum(doc_id) AS BIGINT) AS id_sum
-    FROM documents
-    WHERE {h60_sql("CAST(doc_id AS VARCHAR)")} % 100
-          < (CASE lang {rate_case} ELSE 0 END)
-    GROUP BY lang
-    """
-
-
-_attach_span_sample_oracles()
-
-
-@register(
-    "dedup_cluster_keep_best",
-    dedup_ops.cluster_reps_sql(dedup_ops.minhash_dedup_pairs_sql()),
-    "Near-dup clustering: connected components over MinHash-LSH pairs, "
-    "one representative per cluster (longest doc, doc_id tie-break) — "
-    "the canonical final step of a training-corpus dedup pipeline",
-)
-def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pairs → min-label connected components (operators/dedup.py:
-    dedup_clusters) → per-cluster member count + representative by
-    (n_chars DESC, doc_id ASC). The oracle walks the same edges with a
-    recursive reachability closure — feasible there because the pair
-    set is small; the Spark side is the shape that scales."""
-    docs = _t(spark, sf_dir, "documents")
-    # tiny verified pair list (it is the DUPLICATES) — persisted by the
-    # operator itself, so the component collect and any re-run read it back
-    pairs = dedup_ops.minhash_dedup_pairs(docs)
-    comp = dedup_ops.dedup_clusters(pairs, out_id="id")
-    # comp has one row per clustered doc — broadcast it so the corpus
-    # scan joins map-side (no shuffle of the documents table)
-    joined = F.broadcast(comp).join(
-        docs.select("doc_id", "n_chars"), comp.id == F.col("doc_id")
-    ).select("cluster_id", "doc_id", "n_chars")
-    # representative = max over (n_chars, -doc_id) ≡ (n_chars DESC,
-    # doc_id ASC); a single struct-max aggregate replaces the old
-    # window + row_number + re-join (three shuffles → one)
-    best = F.max(
-        F.struct(F.col("n_chars"), (-F.col("doc_id")).alias("neg_id"))
-    ).alias("m")
-    return (
-        joined.groupBy("cluster_id")
-        .agg(F.count(F.lit(1)).alias("n_members"), best)
-        .select(
-            "cluster_id",
-            "n_members",
-            (-F.col("m.neg_id")).alias("rep_doc_id"),
-            F.col("m.n_chars").cast("long").alias("rep_chars"),
-        )
     )
 
 
@@ -3860,28 +2787,6 @@ def oracle_sql_map() -> dict[str, str]:
     }
 
 
-from ..operators.similarity import (  # noqa: E402  (late: avoids cycle at import)
-    kcenter_coreset,
-    kcenter_coreset_sql,
-)
-
-
-@register(
-    "kcenter_coreset_select",
-    kcenter_coreset_sql(k=8),
-    "Greedy k-center (farthest-point) coreset selection over the "
-    "embedding corpus — the data-selection primitive behind diversity "
-    "sampling / coreset pruning: 8 picks, each the point farthest from "
-    "everything already chosen, with the coverage-radius sequence as "
-    "output. Integer micro-distances make the greedy argmax bit-equal "
-    "across engines; the oracle unrolls the identical recurrence as "
-    "CTE steps.",
-)
-def kcenter_coreset_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    return kcenter_coreset(spark, emb, k=8)
-
-
 @register(
     "matview_incremental_refresh",
     """
@@ -4148,41 +3053,6 @@ def matview_minmax_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     if "repair" not in st["detail"]:
         raise AssertionError(f"refresh took {st['detail']!r}, expected repair")
     return cat.table("mm_rollup").read().select("event_type", "lo", "hi", "n")
-
-
-@register(
-    "contrastive_pair_mining",
-    f"""
-    WITH pairs AS ({dedup_ops.minhash_dedup_pairs_sql(threshold=0.0)})
-    SELECT id_a AS anchor_id, id_b AS pair_id, jaccard,
-           CASE WHEN jaccard >= 0.7 THEN 'positive'
-                ELSE 'hard_negative' END AS label
-    FROM pairs
-    WHERE jaccard >= 0.7 OR jaccard < 0.3
-    """,
-    "Contrastive training-pair mining for embedding models (SimCSE/E5 "
-    "recipe): LSH candidate pairs double as BOTH sides of the "
-    "contrastive objective — exact-Jaccard >= 0.7 collisions become "
-    "positives (near-dup augmentations), while same-bucket collisions "
-    "with Jaccard < 0.3 become HARD negatives (lexically overlapping "
-    "non-duplicates, exactly the pairs in-batch random negatives never "
-    "surface); the ambiguous mid-band is dropped. Reuses the banded "
-    "MinHash pipeline end-to-end, so mining cost = the dedup pass "
-    "already being paid; no all-pairs stage exists at any scale.",
-)
-def contrastive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = dedup_ops.minhash_dedup_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.0
-    )
-    return pairs.filter(
-        (F.col("jaccard") >= 0.7) | (F.col("jaccard") < 0.3)
-    ).select(
-        F.col("id_a").alias("anchor_id"),
-        F.col("id_b").alias("pair_id"),
-        "jaccard",
-        F.when(F.col("jaccard") >= 0.7, "positive")
-        .otherwise("hard_negative").alias("label"),
-    )
 
 
 @register(

@@ -1,22 +1,18 @@
 """Time-series / product-analytics queries, round 5 (third wave):
 retention cohorts, session assembly, gap-filled hourly series with
 LOCF, a hypertable-style multi-granularity rollup, per-group trend
-regression, a pivoted daily event matrix, random-projection
-dimensionality reduction of the embedding corpus, and event-stream
-monitors: a HyperLogLog distinct sketch, median/MAD outliers, hourly
-rate anomalies, hot-key skew, salted aggregation and PSI drift.
+regression, a pivoted daily event matrix, and event-stream monitors:
+a HyperLogLog distinct sketch, median/MAD outliers, hourly rate
+anomalies, hot-key skew, salted aggregation and PSI drift.
 
 These are the operators a TimescaleDB/ClickHouse-style analytics user
 expects on top of the ingested `events` hypertable (the reference's
-output tables are exactly such event streams), plus the embedding-side
-reduction step a training-data pipeline runs before clustering.
+output tables are exactly such event streams).
 
 Determinism contract (same as plans/queries.py): time becomes integer
 epoch-microsecond arithmetic (`epoch_us_col` ↔ DuckDB
 ``epoch_us(CAST(ts AS TIMESTAMP))``), money becomes integer cents per
-row BEFORE aggregation, and dot products fold left-to-right in both
-engines (`_dot_hof_sql` ↔ ``list_dot_product``) so every hash compare
-is exact.
+row BEFORE aggregation, so every hash compare is exact.
 
 Scale notes are per-query docstrings; the shared principle: aggregate
 to the coarsest grain FIRST (one shuffle over the fact), then run the
@@ -35,8 +31,6 @@ from .queries import _t, epoch_us_col, register
 US_PER_HOUR = 3_600_000_000
 US_PER_DAY = 86_400_000_000
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min
-PROJ_DIMS = 8
-PROJ_SEED = 11
 
 
 def _cents(col: str = "value") -> F.Column:
@@ -440,68 +434,6 @@ def pivot_daily_event_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.coalesce(F.col(t), F.lit(0)) for t in EVENT_TYPES), F.lit(0)
     ).alias("n_total")
     return pivoted.select("day_idx", *totals, n_total).orderBy("day_idx")
-
-
-# ---------------------------------------------------------------------------
-# Random-projection dimensionality reduction (±1 planes, 64 → 8 dims)
-# ---------------------------------------------------------------------------
-
-
-def _sign_planes(dim: int, k: int = PROJ_DIMS, seed: int = PROJ_SEED) -> list[list[float]]:
-    """±1 sign matrix from the repo's shared LCG — inlined as literals
-    into both engines, so the projection is bit-identical."""
-    state = seed
-    planes = []
-    for _ in range(k):
-        row = []
-        for _ in range(dim):
-            state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 63)
-            row.append(1.0 if (state >> 40) & 1 else -1.0)
-        planes.append(row)
-    return planes
-
-
-def _proj_oracle_sql() -> str:
-    planes = _sign_planes(64)
-    cols = ", ".join(
-        f"CAST(round(1000.0 * list_dot_product(CAST(embedding AS DOUBLE[]), "
-        f"[{', '.join(repr(x) for x in p)}])) AS BIGINT) AS p{j}"
-        for j, p in enumerate(planes)
-    )
-    return f"""
-    SELECT vec_id, {cols}
-    FROM embeddings
-    ORDER BY vec_id
-    """
-
-
-@register(
-    "srp_projection_reduce",
-    _proj_oracle_sql(),
-    "Johnson-Lindenstrauss-style reduction: 64-dim embeddings projected "
-    "onto 8 deterministic ±1 hyperplanes, quantized to milli-units",
-)
-def srp_projection_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sparse random projection (Achlioptas ±1 variant) of the
-    embedding corpus to 8 components — the cheap dimensionality
-    reduction before clustering / coarse ANN.
-
-    Scale shape: map-only — zero shuffles, zero Python; 8 HOF dot
-    products per row inside one codegen'd stage (the unrolled form
-    would blow the 64 KB method budget at 8 × 64 dims, see
-    ``similarity._dot_sql``). Both engines fold left-to-right and the
-    milli-unit quantization happens on the identical double, so the
-    BIGINT outputs hash-match exactly.
-    """
-    from ..operators.similarity import _dot_hof_sql
-
-    emb = _t(spark, sf_dir, "embeddings")
-    planes = _sign_planes(64)
-    projs = [
-        F.round(1000.0 * F.expr(_dot_hof_sql("embedding", p))).cast("long").alias(f"p{j}")
-        for j, p in enumerate(planes)
-    ]
-    return emb.select("vec_id", *projs).orderBy("vec_id")
 
 
 # ---------------------------------------------------------------------------

@@ -1,126 +1,11 @@
-"""Semantic tests for the fuzzy-dedup operators: known duplicates must
-be found, disjoint texts must not pair, and the md5-derived hashing
-must be stable (the determinism the oracle parity relies on)."""
+"""Tests for the shared pieces of operators/dedup.py and operators/text.py:
+the prepared-plan memo the memoized queries build through, and
+marker-token language ID."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from ducklake_kafka_connect_spark.operators import dedup as D
-from ducklake_kafka_connect_spark.operators.similarity import (
-    _lcg_hyperplanes,
-    ann_lsh_topk,
-    cosine_topk,
-    ivf_topk,
-)
-from ducklake_kafka_connect_spark.operators.text import fingerprint_col, lang_id_col
-
-BASE = (
-    "the quick brown fox jumps over the lazy dog while the cat watches "
-    "from the warm window sill in the afternoon sun"
-)
-NEAR = (
-    "the quick brown fox jumps over the lazy dog while the cat watches "
-    "from the warm window sill in the evening sun"
-)
-OTHER = (
-    "completely different subject matter about distributed query engines "
-    "processing columnar data with vectorized execution kernels"
-)
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.createDataFrame(
-        [(1, BASE), (2, BASE), (3, NEAR), (4, OTHER)], "doc_id long, text string"
-    )
-
-
-class TestMinhash:
-    def test_exact_dup_pairs_found(self, docs):
-        pairs = {(r.id_a, r.id_b): r.jaccard for r in D.minhash_dedup_pairs(docs).collect()}
-        assert pairs[(1, 2)] == 1.0
-        assert (1, 3) in pairs and pairs[(1, 3)] > 0.7
-        assert not any(4 in p for p in pairs)
-
-    def test_signature_deterministic(self, spark):
-        df = spark.createDataFrame([(BASE,)], "text string")
-        sig = D.minhash_sig_cols(D.shingle_hashes_col(F.col("text")))
-        a = df.select(*[s.alias(f"s{i}") for i, s in enumerate(sig)]).collect()[0]
-        b = df.select(*[s.alias(f"s{i}") for i, s in enumerate(sig)]).collect()[0]
-        assert tuple(a) == tuple(b)
-        assert len(set(a)) > 1  # permutations differ
-
-    def test_short_doc_empty_shingles(self, spark):
-        df = spark.createDataFrame([("one two",)], "text string")
-        out = df.select(F.size(D.shingles_col(F.col("text"))).alias("n")).collect()[0]["n"]
-        assert out == 0
-
-
-class TestSimhash:
-    def test_identical_hamming_zero(self, docs):
-        pairs = {(r.id_a, r.id_b): r.hamming for r in D.simhash_near_pairs(docs).collect()}
-        assert pairs[(1, 2)] == 0
-
-    def test_unrelated_text_far(self, spark):
-        df = spark.createDataFrame([(1, BASE), (2, OTHER)], "doc_id long, text string")
-        rows = df.select(D.simhash_col(F.col("text")).alias("h")).collect()
-        hamming = bin(rows[0]["h"] ^ rows[1]["h"]).count("1")
-        assert hamming > 3  # not near-dups
-
-
-class TestJaccard:
-    def test_blocked_pairs(self, spark):
-        df = spark.createDataFrame(
-            [(1, "en", BASE), (2, "en", NEAR), (3, "de", BASE)],
-            "doc_id long, lang string, text string",
-        )
-        pairs = {(r.id_a, r.id_b) for r in D.ngram_jaccard_pairs(df).collect()}
-        assert (1, 2) in pairs        # same block, near-dup
-        assert (1, 3) not in pairs    # cross-block never compared
-
-
-class TestEmbeddingNearDup:
-    def test_identical_vectors_pair(self, spark):
-        df = spark.createDataFrame(
-            [(1, [1.0, 0.0, 1.0], 0), (2, [1.0, 0.0, 1.0], 0), (3, [-1.0, 1.0, 0.0], 0)],
-            "vec_id long, embedding array<float>, label int",
-        )
-        pairs = {(r.id_a, r.id_b): r.cos_sim for r in D.embedding_neardup_pairs(df).collect()}
-        assert pairs[(1, 2)] == 1.0
-        assert (1, 3) not in pairs
-
-
-class TestAnnLsh:
-    def test_bucket_prune_subset_of_exact(self, spark):
-        import random
-
-        rng = random.Random(3)
-        rows = [(i, [rng.uniform(-1, 1) for _ in range(8)], 0) for i in range(100)]
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-        q = rows[0][1]
-        exact = [r.vec_id for r in cosine_topk(df, q, k=100, exclude_ids=[0]).collect()]
-        approx = ann_lsh_topk(df, q, k=10, exclude_ids=[0]).collect()
-        assert 0 < len(approx) <= 10
-        # every ANN hit is a real vector ranked by true cosine
-        assert all(r.vec_id in exact for r in approx)
-        # scores are correctly ordered
-        sims = [r.cos_sim for r in approx]
-        assert sims == sorted(sims, reverse=True)
-
-    def test_ivf_cell_prune_subset_of_exact(self, spark):
-        import random
-
-        rng = random.Random(9)
-        rows = [(i, [rng.uniform(-1, 1) for _ in range(8)], 0) for i in range(100)]
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-        q = rows[0][1]
-        centroids = _lcg_hyperplanes(dim=8, n=4, seed=11)
-        exact = [r.vec_id for r in cosine_topk(df, q, k=100, exclude_ids=[0]).collect()]
-        approx = ivf_topk(df, q, centroids, k=10, exclude_ids=[0]).collect()
-        assert 0 < len(approx) <= 10
-        assert all(r.vec_id in exact for r in approx)
-        sims = [r.cos_sim for r in approx]
-        assert sims == sorted(sims, reverse=True)
+from ducklake_kafka_connect_spark.operators.text import lang_id_col
 
 
 class TestTextOps:
@@ -132,141 +17,22 @@ class TestTextOps:
         out = [r[0] for r in df.select(lang_id_col(F.col("text"))).collect()]
         assert out == ["en", "es", "und"]
 
-    def test_fingerprint_stable_and_edit_robust(self, spark):
-        df = spark.createDataFrame(
-            [(1, BASE), (2, BASE), (3, OTHER)], "doc_id long, text string"
+
+def _dup_pairs(docs, params=()):
+    """Exact-duplicate edges (lowest id, other id), built through the
+    memo with one persisted intermediate — the shape of the memoized
+    query plans."""
+
+    def build():
+        base = D._persist(docs.select("doc_id", "text"))
+        keep = base.groupBy("text").agg(F.min("doc_id").alias("id_a"))
+        return (
+            base.join(keep, "text")
+            .filter(F.col("doc_id") != F.col("id_a"))
+            .select("id_a", F.col("doc_id").alias("id_b"))
         )
-        fps = [r[0] for r in df.select(fingerprint_col(F.col("text"))).collect()]
-        assert fps[0] == fps[1]
-        assert fps[0] != fps[2]
 
-    def test_repetition_ratio(self, spark):
-        from ducklake_kafka_connect_spark.operators.text import repetition_ratio_col
-
-        df = spark.createDataFrame(
-            [
-                (1, "a b a b a b"),        # bigrams: ab ba ab ba ab → 2/5 distinct
-                (2, "one two three four"), # all distinct → 0.0
-                (3, "solo"),              # < 2 tokens → NULL
-                (4, ""),                  # empty → NULL
-            ],
-            "doc_id long, text string",
-        )
-        out = {r.doc_id: r.rep for r in df.select(
-            "doc_id", repetition_ratio_col(F.col("text")).alias("rep")
-        ).collect()}
-        assert out[1] == 0.6
-        assert out[2] == 0.0
-        assert out[3] is None
-        assert out[4] is None
-
-
-class TestDedupClusters:
-    """Connected components over pair edges (operators/dedup.py
-    dedup_clusters): min-label propagation must produce the min
-    reachable id per vertex, on chains, triangles, and forests."""
-
-    def _labels(self, spark, edges):
-        from ducklake_kafka_connect_spark.operators.dedup import dedup_clusters
-
-        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        return {
-            r["id"]: r["cluster_id"] for r in dedup_clusters(pairs).collect()
-        }
-
-    def test_triangle_and_disjoint_pair(self, spark):
-        got = self._labels(spark, [(1, 2), (2, 3), (1, 3), (10, 11)])
-        assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-    def test_chain_propagates_to_min(self, spark):
-        # a 7-hop chain needs several propagation rounds
-        edges = [(i, i + 1) for i in range(1, 8)]
-        got = self._labels(spark, edges)
-        assert set(got.values()) == {1}
-        assert len(got) == 8
-
-    def test_star_graph(self, spark):
-        got = self._labels(spark, [(5, i) for i in (6, 7, 8, 9)])
-        assert got == {5: 5, 6: 5, 7: 5, 8: 5, 9: 5}
-
-    def test_min_id_not_first_seen(self, spark):
-        # min id enters via the far end of the component
-        got = self._labels(spark, [(9, 8), (8, 7), (7, 1)])
-        assert set(got.values()) == {1}
-
-    def test_no_singletons_emitted(self, spark):
-        got = self._labels(spark, [(2, 3)])
-        assert 99 not in got and got == {2: 2, 3: 2}
-
-    def test_distributed_path_matches_union_find(self, spark, monkeypatch):
-        from ducklake_kafka_connect_spark.operators import dedup as dd
-
-        edges = [(1, 2), (2, 3), (10, 11), (7, 1), (20, 21), (21, 22), (22, 20)]
-        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        fast = {r["id"]: r["cluster_id"] for r in dd.dedup_clusters(pairs).collect()}
-        monkeypatch.setattr(dd, "SMALL_GRAPH_EDGES", 0)  # force distributed
-        slow = {r["id"]: r["cluster_id"] for r in dd.dedup_clusters(pairs).collect()}
-        assert fast == slow
-        assert slow[7] == 1 and slow[22] == 20
-
-
-# ---------------------------------------------------------------------------
-# Star-contraction connected components (distributed path)
-# ---------------------------------------------------------------------------
-
-
-def _labels(df):
-    return {r["id"]: r["cluster_id"] for r in df.collect()}
-
-
-def test_star_contraction_matches_union_find_on_chains_and_random(spark):
-    import random
-
-    from ducklake_kafka_connect_spark.operators.dedup import dedup_clusters
-
-    rng = random.Random(7)
-    # long chain (worst case for min-label), a star, a cycle, and noise
-    edges = [(i, i + 1) for i in range(60)]
-    edges += [(100, 100 + i) for i in range(1, 8)]
-    edges += [(200, 201), (201, 202), (202, 200)]
-    edges += [(rng.randrange(300, 340), rng.randrange(300, 340)) for _ in range(40)]
-    edges = [e for e in edges if e[0] != e[1]]
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-
-    star = _labels(dedup_clusters(pairs, method="star", small_graph_edges=0))
-    uf = _labels(dedup_clusters(pairs, method="minlabel", small_graph_edges=10**9))
-    assert star == uf
-    # chain collapses to min id 0
-    assert all(star[i] == 0 for i in range(61))
-
-
-def test_star_contraction_string_ids(spark):
-    from ducklake_kafka_connect_spark.operators.dedup import dedup_clusters
-
-    pairs = spark.createDataFrame(
-        [("b", "c"), ("a", "b"), ("x", "y")], "id_a string, id_b string"
-    )
-    got = _labels(dedup_clusters(pairs, method="star", small_graph_edges=0))
-    assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
-
-
-def test_cluster_query_distributed_path_matches_driver_path(spark):
-    """Full pipeline equivalence: minhash pairs → clusters via the
-    distributed star-contraction path vs the driver union-find path."""
-    from ducklake_kafka_connect_spark.operators import dedup as d
-    from ducklake_kafka_connect_spark.sources.parquet_loader import load_parquet
-
-    docs = load_parquet(spark, "/root/testdata/sf0.001/documents.parquet")
-    pairs = d.minhash_dedup_pairs(docs)
-    star = {
-        r["id"]: r["cluster_id"]
-        for r in d.dedup_clusters(pairs, method="star", small_graph_edges=0).collect()
-    }
-    uf = {
-        r["id"]: r["cluster_id"]
-        for r in d.dedup_clusters(pairs).collect()
-    }
-    assert star == uf and len(star) > 0
+    return D._memo_plan(docs, "dup_pairs", params, build)
 
 
 class TestPlanMemo:
@@ -278,8 +44,8 @@ class TestPlanMemo:
             [(i, f"alpha beta gamma delta {i}") for i in range(30)],
             "doc_id long, text string",
         )
-        a = D.minhash_dedup_pairs(docs)
-        b = D.minhash_dedup_pairs(docs)
+        a = _dup_pairs(docs)
+        b = _dup_pairs(docs)
         assert a is b
 
     def test_different_params_rebuild(self, spark):
@@ -287,8 +53,8 @@ class TestPlanMemo:
             [(i, f"alpha beta gamma delta {i}") for i in range(30)],
             "doc_id long, text string",
         )
-        a = D.minhash_dedup_pairs(docs, threshold=0.7)
-        b = D.minhash_dedup_pairs(docs, threshold=0.5)
+        a = _dup_pairs(docs, params=(0.7,))
+        b = _dup_pairs(docs, params=(0.5,))
         assert a is not b
 
     def test_different_input_rebuilds_and_results_differ(self, spark):
@@ -299,8 +65,8 @@ class TestPlanMemo:
             [(1, "p q r s t u"), (2, "completely different words here now")],
             "doc_id long, text string",
         )
-        p1 = D.minhash_dedup_pairs(d1)
-        p2 = D.minhash_dedup_pairs(d2)
+        p1 = _dup_pairs(d1)
+        p2 = _dup_pairs(d2)
         assert p1 is not p2
         assert p1.count() == 1 and p2.count() == 0
 
@@ -311,7 +77,7 @@ class TestPlanMemo:
             [(i, "same text for everyone") for i in range(10)],
             "doc_id long, text string",
         )
-        before = {tuple(r) for r in D.minhash_dedup_pairs(docs).collect()}
+        before = {tuple(r) for r in _dup_pairs(docs).collect()}
         spark.catalog.clearCache()
-        after = {tuple(r) for r in D.minhash_dedup_pairs(docs).collect()}
+        after = {tuple(r) for r in _dup_pairs(docs).collect()}
         assert before == after and len(before) == 9  # star edges to min id

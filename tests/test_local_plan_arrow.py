@@ -213,3 +213,35 @@ print("TZ_OK")
         timeout=300,
     )
     assert "TZ_OK" in p.stdout, p.stderr[-2000:]
+
+
+def test_local_rows_timestamps_convert_like_create_dataframe_across_dst():
+    """local_rows_df's Arrow rows must carry the instants createDataFrame
+    computes (``TimestampType.toInternal``), also for the DST hour a
+    non-UTC driver skips and the one it repeats. TZ and tzset are
+    process-wide, so both are restored afterwards."""
+    import os
+    import time
+
+    from ducklake_kafka_connect_spark.lake.relation_cache import _to_arrow
+
+    st = T.StructType([T.StructField("ts", T.TimestampType())])
+    vals = [
+        datetime.datetime(2024, 3, 10, 2, 30),  # skipped (spring forward)
+        datetime.datetime(2024, 11, 3, 1, 30),  # repeated (fall back)
+        datetime.datetime(2024, 7, 1, 3, 4, 5, 678901),  # ordinary
+    ]
+    saved = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        for v in vals:
+            want = T.TimestampType().toInternal(v)
+            got = _to_arrow(st, [(v,)]).column("ts").cast(pa.int64())[0].as_py()
+            assert got == want, (v, got, want)
+    finally:
+        if saved is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()

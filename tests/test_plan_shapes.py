@@ -38,10 +38,7 @@ SF_DIR = "/root/testdata/sf0.001"
 PINS = {
     "q1_pricing_summary": (1, 1, 0, 0, True),
     "q3_shipping_priority": (3, 3, 2, 0, True),
-    "dedup_minhash_lsh": (4, 14, 7, 0, True),
     "ann_ivfpq_topk": (1, 0, 0, 0, True),
-    "similarity_topk": (1, 0, 0, 0, True),
-    "text_token_stats": (1, 1, 0, 0, False),
     "window_rank_suite": (1, 1, 0, 0, False),
     "timeseries_gapfill": (1, 6, 2, 0, False),
     "sql_pruned_point_lookup": (1, 1, 0, 0, True),

@@ -1,4 +1,4 @@
-"""Round-9 operators: product-quantized ANN, SemDeDup pruning and the
+"""Round-9 operators: product quantization for the IVF-PQ index and the
 single-pass replace rule BPE merges rely on.
 
 Reference parity anchor: inyo-global/ducklake-kafka-connect has no
@@ -9,7 +9,6 @@ tests/test_entry_oracle.py, these tests pin operator-level invariants.
 
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
 from ducklake_kafka_connect_spark.operators.similarity import (
@@ -19,7 +18,6 @@ from ducklake_kafka_connect_spark.operators.similarity import (
     PQ_QSCALE,
     pq_codebooks,
     pq_encode,
-    pq_topk,
 )
 from ducklake_kafka_connect_spark.sources.parquet_loader import load_parquet
 
@@ -53,12 +51,24 @@ def test_pq_encode_codes_in_range(spark):
         assert 1 <= aggs[f"lo{s}"] and aggs[f"hi{s}"] <= PQ_K
 
 
-def test_pq_dist_matches_python_adc(spark):
-    """One row's pq_dist recomputed in pure Python from the codebooks —
-    pins the quantize→encode→ADC arithmetic end to end."""
+def test_pq_dist_matches_python_adc(spark, tmp_path):
+    """One row's pq_dist from the IVF-PQ probe recomputed in pure Python
+    from the codebooks — pins the quantize→encode→ADC arithmetic end to
+    end."""
+    from ducklake_kafka_connect_spark.lake import LakeCatalog
+    from ducklake_kafka_connect_spark.operators.similarity import (
+        build_ivfpq_index,
+        ivfpq_indexed_topk,
+        _lcg_hyperplanes,
+        NUM_CELLS,
+    )
+
+    cents = _lcg_hyperplanes(dim=64, n=NUM_CELLS, seed=11)
     emb = load_parquet(spark, f"{SF}/embeddings.parquet")
     q = [float(x) for x in emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]]
-    probe = pq_topk(emb, q, k=1, exclude_ids=[0]).head()
+    t = LakeCatalog(spark, str(tmp_path)).table("emb_ivfpq")
+    build_ivfpq_index(t, emb, cents)
+    probe = ivfpq_indexed_topk(t, q, cents, k=1, nprobe=2, exclude_ids=[0]).head()
     v = [
         float(x)
         for x in emb.filter(F.col("vec_id") == probe["vec_id"])
@@ -77,91 +87,6 @@ def test_pq_dist_matches_python_adc(spark):
         qs = qq[s * sub : (s + 1) * sub]
         expect += sum((a - b) * (a - b) for a, b in zip(qs, codes[code]))
     assert probe["pq_dist"] == expect
-
-
-def test_pq_topk_recall_against_exact_l2(spark):
-    """ADC approximates the L2 distance, so the comparison target is
-    the exact L2 top-10. Untrained (seeded) codebooks with 2-dim
-    subcells hit 6/10 on this corpus — assert a margin below that."""
-    emb = load_parquet(spark, f"{SF}/embeddings.parquet")
-    rows = emb.select("vec_id", "embedding").collect()
-    q = next([float(x) for x in r["embedding"]] for r in rows if r["vec_id"] == 0)
-    l2 = sorted(
-        (
-            sum((float(a) - b) * (float(a) - b) for a, b in zip(r["embedding"], q)),
-            r["vec_id"],
-        )
-        for r in rows
-        if r["vec_id"] != 0
-    )
-    exact = {vid for _, vid in l2[:10]}
-    approx = {r["vec_id"] for r in pq_topk(emb, q, k=10, exclude_ids=[0]).collect()}
-    assert len(approx) == 10
-    assert len(approx & exact) >= 3
-
-
-def test_pq_duplicate_vector_ranks_first(spark):
-    """An exact duplicate of the query gets identical codes, and its
-    ADC is the query's own quantization residual — on this corpus the
-    minimum. The duplicate must rank first."""
-    emb = load_parquet(spark, f"{SF}/embeddings.parquet")
-    q = [float(x) for x in emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]]
-    dup = spark.createDataFrame(
-        [(99999, q, 0)], "vec_id long, embedding array<double>, label long"
-    )
-    pool = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-        F.col("label").cast("long").alias("label"),
-    ).unionByName(dup)
-    top = pq_topk(pool, q, k=1, exclude_ids=[0]).head()
-    assert top["vec_id"] == 99999
-
-
-# ---------------------------------------------------------------------------
-# SemDeDup
-# ---------------------------------------------------------------------------
-
-
-def test_semdedup_prune_invariants(spark):
-    from ducklake_kafka_connect_spark.plans.queries import semdedup_prune
-
-    out = semdedup_prune(spark, SF).collect()
-    assert out, "cells must be non-empty"
-    total = sum(r["n_members"] for r in out)
-    n_emb = load_parquet(spark, f"{SF}/embeddings.parquet").count()
-    assert total == n_emb, "every vector lands in exactly one cell"
-    for r in out:
-        assert 0 <= r["n_pruned"] < r["n_members"] or (
-            r["n_members"] == 1 and r["n_pruned"] == 0
-        ), "a cell always keeps at least one representative"
-        assert r["prune_rate"] == pytest.approx(
-            round(r["n_pruned"] / r["n_members"], 6)
-        )
-
-
-def test_semdedup_keeps_lowest_id(spark):
-    """Constructed cell with three mutual near-dups: only the lowest id
-    survives; an orthogonal vector is never pruned."""
-    from ducklake_kafka_connect_spark.operators import dedup as dedup_ops
-
-    base = [1.0] * 8 + [0.0] * 56
-    near = [1.0] * 8 + [0.02] * 56
-    ortho = [0.0] * 56 + [1.0] * 8
-    df = spark.createDataFrame(
-        [
-            (10, base, 0),
-            (11, near, 0),
-            (12, base, 0),
-            (20, ortho, 0),
-        ],
-        "vec_id long, embedding array<double>, cell int",
-    )
-    pairs = dedup_ops.embedding_neardup_pairs(
-        df, threshold=0.9, block_col="cell"
-    )
-    pruned = {r["id_b"] for r in pairs.collect()}
-    assert pruned == {11, 12}, "near-dups of 10 pruned; ortho kept"
 
 
 # ---------------------------------------------------------------------------

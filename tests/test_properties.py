@@ -1,9 +1,7 @@
 """Property-based tests (hypothesis): invariants that unit fixtures
-cannot sweep — codec roundtrips over arbitrary shapes/contents,
-partition-value canonicalization agreement, and data-skipping
-conservativeness."""
+cannot sweep — partition-value canonicalization agreement, manifest
+segment roundtrips, and data-skipping conservativeness."""
 
-import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -12,69 +10,6 @@ from ducklake_kafka_connect_spark.lake.partitioning import (
     canon_partition_value,
 )
 from ducklake_kafka_connect_spark.lake.skipping import parse_conjuncts, prune_files
-from ducklake_kafka_connect_spark.operators import codecs
-
-# --------------------------------------------------------------------------
-# codecs: decode(encode(x)) == x for every shape and content
-# --------------------------------------------------------------------------
-
-dims = st.tuples(st.integers(1, 24), st.integers(1, 24))
-
-
-@settings(max_examples=50, deadline=None)
-@given(dims, st.integers(0, 2**32 - 1), st.sampled_from([1, 3]))
-def test_pnm_roundtrip_any_shape(shape, seed, ch):
-    h, w = shape
-    arr = np.random.RandomState(seed).randint(0, 256, size=(h, w, ch), dtype=np.uint8)
-    out = codecs.decode_ppm(codecs.encode_ppm(arr))
-    assert out.shape == arr.shape and np.array_equal(out, arr)
-
-
-@settings(max_examples=50, deadline=None)
-@given(dims, st.integers(0, 2**32 - 1))
-def test_bmp_roundtrip_any_shape(shape, seed):
-    h, w = shape
-    arr = np.random.RandomState(seed).randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-    out = codecs.decode_bmp(codecs.encode_bmp(arr))
-    assert np.array_equal(out, arr)
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.integers(1, 2000), st.sampled_from([1, 2]), st.integers(0, 2**32 - 1),
-       st.sampled_from([8000, 16000, 44100]))
-def test_wav_roundtrip_any_length(n, ch, seed, rate):
-    rng = np.random.RandomState(seed)
-    samples = rng.randint(-(2**15), 2**15, size=(n, ch)).astype(np.int16)
-    arr, r = codecs.decode_wav(codecs.encode_wav(samples, rate=rate))
-    assert r == rate and np.array_equal(arr, samples)
-
-
-@settings(max_examples=50, deadline=None)
-@given(dims, dims, st.integers(0, 2**32 - 1))
-def test_resize_shape_and_pixel_provenance(src, dst, seed):
-    h, w = src
-    th, tw = dst
-    arr = np.random.RandomState(seed).randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-    out = codecs.resize_nearest(arr, tw, th)
-    assert out.shape == (th, tw, 3)
-    # nearest-neighbor: every output pixel exists somewhere in the input
-    src_px = {bytes(p) for p in arr.reshape(-1, 3)}
-    assert all(bytes(p) in src_px for p in out.reshape(-1, 3))
-
-
-@settings(max_examples=50, deadline=None)
-@given(st.binary(max_size=64))
-def test_codec_errors_never_crash(payload):
-    """Arbitrary garbage either decodes or raises CodecError — never an
-    unhandled exception (one bad payload must not kill a corpus scan)."""
-    for fn in (codecs.decode_ppm, codecs.decode_bmp, codecs.decode_wav,
-               codecs.decode_image_array):
-        try:
-            fn(payload)
-        except codecs.CodecError:
-            pass
-    codecs.sniff_format(payload)
-
 
 # --------------------------------------------------------------------------
 # partition canonicalization: value-side and token-side must agree
@@ -195,26 +130,6 @@ def test_binary_segment_roundtrip_arbitrary(files, stats, version, parent):
         "file_stats": stats,
     }
     assert decode_segment_binary(encode_segment_binary(d)) == d
-
-
-@given(st.binary(max_size=300))
-@settings(max_examples=40, deadline=None)
-def test_tar_member_parse_never_crashes(payload):
-    """Garbage tar payloads must yield zero members, never an exception
-    (the shard-level DLQ philosophy). Pure-Python harness over the same
-    parse the Spark decode uses."""
-    import io
-    import tarfile
-
-    rows = []
-    try:
-        with tarfile.open(fileobj=io.BytesIO(payload), mode="r") as tf:
-            for info in tf:
-                if info.isfile():
-                    rows.append(info.name)
-    except (tarfile.TarError, EOFError, OSError):
-        pass  # exactly what decode_members swallows per shard
-    assert isinstance(rows, list)
 
 
 # ---------------------------------------------------------------------------

@@ -235,53 +235,6 @@ class TestExecutorSideBloom:
         assert membership_filter_spark(spark, [p], [1]) == [True]
 
 
-class TestEmbeddingBlockGuard:
-    def _corpus(self, spark, n=300, dim=8):
-        # degenerate: every vector shares ONE label → unguarded join is n²
-        import random
-
-        rnd = random.Random(5)
-        rows = []
-        for i in range(n):
-            rows.append((i, "only", [rnd.uniform(-1, 1) for _ in range(dim)]))
-        # plant exact duplicates (guaranteed same SRP signature)
-        rows.append((n, "only", list(rows[0][2])))
-        rows.append((n + 1, "only", list(rows[1][2])))
-        return spark.createDataFrame(rows, "vec_id int, label string, embedding array<double>")
-
-    def test_guard_subdivides_degenerate_block(self, spark):
-        from ducklake_kafka_connect_spark.operators.dedup import (
-            _guard_planes,
-            embedding_neardup_pairs,
-        )
-        from ducklake_kafka_connect_spark.operators.similarity import srp_bucket_col
-
-        emb = self._corpus(spark)
-        # the degenerate block really is subdivided (bounded pair count)
-        subs = (
-            emb.select(srp_bucket_col("embedding", _guard_planes(8)).alias("s"))
-            .distinct()
-            .count()
-        )
-        assert subs > 4, "SRP signature must split the degenerate block"
-        guarded = embedding_neardup_pairs(emb, threshold=0.99, max_block=100, dim=8)
-        exact = embedding_neardup_pairs(emb, threshold=0.99, max_block=10**9, dim=8)
-        g = {(r["id_a"], r["id_b"]) for r in guarded.collect()}
-        e = {(r["id_a"], r["id_b"]) for r in exact.collect()}
-        assert g <= e, "guard must never invent pairs"
-        assert (0, 300) in g and (1, 301) in g, "planted exact duplicates must survive the guard"
-
-    def test_guard_noop_below_cap(self, spark):
-        from ducklake_kafka_connect_spark.operators.dedup import embedding_neardup_pairs
-
-        emb = self._corpus(spark, n=50)
-        guarded = embedding_neardup_pairs(emb, threshold=0.9, max_block=100, dim=8)
-        exact = embedding_neardup_pairs(emb, threshold=0.9, max_block=10**9, dim=8)
-        assert (
-            sorted(map(tuple, guarded.collect())) == sorted(map(tuple, exact.collect()))
-        ), "below the cap the guard must change nothing"
-
-
 class TestAsofNullKeysAndTies:
     def test_null_left_key_gets_null_payload(self, spark):
         from ducklake_kafka_connect_spark.operators.asof import asof_join

@@ -7,10 +7,7 @@ hold identically-wrong on both engines if a formulation slipped.
 import duckdb
 import pytest
 
-from ducklake_kafka_connect_spark.plans.timeseries import (
-    SESSION_GAP_US,
-    _sign_planes,
-)
+from ducklake_kafka_connect_spark.plans.timeseries import SESSION_GAP_US
 from ducklake_kafka_connect_spark.plans.queries import QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -153,23 +150,3 @@ class TestPivotAndProjection:
         assert sum(r.n_total for r in rows) == n_events
         for r in rows:
             assert r.n_click + r.n_error + r.n_purchase + r.n_signup + r.n_view == r.n_total
-
-    def test_sign_planes_deterministic_and_balanced(self):
-        a = _sign_planes(64)
-        b = _sign_planes(64)
-        assert a == b
-        flat = [x for row in a for x in row]
-        assert set(flat) == {-1.0, 1.0}
-        # LCG bit should be roughly balanced (not constant / degenerate)
-        pos = sum(1 for x in flat if x > 0)
-        assert 0.3 < pos / len(flat) < 0.7
-
-    def test_projection_preserves_relative_distance(self, spark):
-        """JL sanity: the projection of identical vectors is identical,
-        and projecting preserves exact linearity (p(u+v) = p(u)+p(v) up
-        to quantization) — checked via the zero vector trick on a pair."""
-        rows = QUERIES["srp_projection_reduce"].fn(spark, SF_DIR).limit(5).collect()
-        assert len(rows) == 5
-        for r in rows:
-            vals = [r[f"p{j}"] for j in range(8)]
-            assert any(v != 0 for v in vals)
