@@ -2,8 +2,8 @@
 
 All hot-path expressions are built-in Catalyst functions (split /
 filter / size / lower) — whole-stage-codegen'd, no Python in the loop.
-``functions/sql_registry.py`` exposes the same definitions as ``dl_*``
-SQL functions.
+``functions/sql_registry.py`` exposes the token, stopword and
+language-ID definitions as ``dl_*`` SQL functions.
 """
 
 from __future__ import annotations
@@ -58,3 +58,73 @@ def lang_id_col(text: Column, markers: dict[str, Sequence[str]] = LANG_MARKERS) 
     for lang in reversed(langs):  # earlier langs win ties → apply last
         out = F.when((hits[lang] == best) & (best > 0), F.lit(lang)).otherwise(out)
     return out
+
+
+def fingerprint_col(text: Column, n: int = 5, k: int = 4) -> Column:
+    """Document fingerprint: bottom-k of the hashed character n-gram set
+    (a winnowing-style sketch; Schleimer et al., SIGMOD'03). Two docs
+    share a fingerprint iff their smallest k shingle hashes agree —
+    robust to small edits. Emitted as a '_'-joined string key. Pure
+    Catalyst: sequence → substr → md5-hash → sort → slice."""
+    from .dedup import h60_col
+
+    low = F.lower(text)
+    grams = F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), F.greatest(F.length(low) - (n - 1), F.lit(1))),
+            lambda i: low.substr(i, F.lit(n)),
+        )
+    )
+    bottom_k = F.slice(F.array_sort(F.transform(grams, h60_col)), 1, k)
+    return F.array_join(F.transform(bottom_k, lambda h: h.cast("string")), "_")
+
+
+def repetition_ratio_col(text: Column) -> Column:
+    """Repeated-bigram fraction: 1 - distinct_bigrams/total_bigrams, the
+    standard boilerplate/degenerate-text quality signal (high ratio =
+    the document repeats itself). NULL for docs under 2 tokens.
+
+    Distinctness runs over md5-derived bigram HASHES (h60 % MERSENNE,
+    the repo's shared-hash contract), so hash collisions count as
+    repeats the same way on every engine that uses that hash."""
+    from .dedup import MERSENNE, h60_col
+
+    toks = tokens_col(text)
+    gram = lambda i: (  # noqa: E731
+        h60_col(
+            F.concat_ws(" ", F.element_at(toks, i + 1), F.element_at(toks, i + 2))
+        )
+        % MERSENNE
+    )
+    total = F.size(toks) - 1
+    grams = F.transform(F.sequence(F.lit(0), F.size(toks) - 2), gram)
+    ratio = F.lit(1.0) - F.size(F.array_distinct(grams)).cast("double") / total
+    return F.when(total >= 1, F.round(ratio, 6))
+
+
+# ---------------------------------------------------------------------------
+# PII redaction (training-corpus scrubbing)
+# ---------------------------------------------------------------------------
+
+# Written in the common Java-regex / RE2 subset: explicit classes, \b
+# word boundaries, bounded quantifiers.
+EMAIL_RE = r"[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}"
+PHONE_RE = r"\b\d{3}-\d{3}-\d{4}\b"
+EMAIL_TOKEN = "[EMAIL]"
+PHONE_TOKEN = "[PHONE]"
+
+
+def redact_pii_col(text: Column) -> Column:
+    """Emails then phone numbers replaced by fixed tokens — one
+    codegen'd pass of two regexp_replace calls, the 100 TB-friendly
+    shape for corpus scrubbing."""
+    t = F.regexp_replace(text, EMAIL_RE, EMAIL_TOKEN)
+    return F.regexp_replace(t, PHONE_RE, PHONE_TOKEN)
+
+
+def pii_counts_col(text: Column) -> tuple[Column, Column]:
+    """(n_emails, n_phones) match counts for audit metrics."""
+    return (
+        F.regexp_count(text, F.lit(EMAIL_RE)),
+        F.regexp_count(text, F.lit(PHONE_RE)),
+    )

@@ -151,6 +151,46 @@ class TestDlqEdges:
         assert good.filter("id = 1").count() == 1
 
 
+class TestPiiRedaction:
+    """Unit edges for operators/text.py PII redaction."""
+
+    def test_redacts_and_counts(self, spark):
+        from pyspark.sql import functions as F
+
+        from ducklake_kafka_connect_spark.operators.text import (
+            pii_counts_col,
+            redact_pii_col,
+        )
+
+        rows = [
+            ("write to a.b+c@x-mail.co.uk or call 555-123-4567 now",),
+            ("no pii here",),
+            ("two mails: x@y.io z@w.org and 111-222-3333 999-888-7777",),
+        ]
+        df = spark.createDataFrame(rows, "text string")
+        ne, np_ = pii_counts_col(F.col("text"))
+        out = df.select(
+            redact_pii_col(F.col("text")).alias("r"), ne.alias("ne"), np_.alias("np")
+        ).collect()
+        assert out[0]["r"] == "write to [EMAIL] or call [PHONE] now"
+        assert (out[0]["ne"], out[0]["np"]) == (1, 1)
+        assert out[1]["r"] == "no pii here"
+        assert (out[2]["ne"], out[2]["np"]) == (2, 2)
+        assert "[EMAIL]" in out[2]["r"] and "[PHONE]" in out[2]["r"]
+
+    def test_phone_word_boundary(self, spark):
+        from pyspark.sql import functions as F
+
+        from ducklake_kafka_connect_spark.operators.text import redact_pii_col
+
+        # digits glued to the pattern must NOT redact (word boundary)
+        rows = [("id 9555-123-45678 stays",), ("but 555-123-4567 goes",)]
+        df = spark.createDataFrame(rows, "text string")
+        out = [r["r"] for r in df.select(redact_pii_col(F.col("text")).alias("r")).collect()]
+        assert out[0] == "id 9555-123-45678 stays"
+        assert out[1] == "but [PHONE] goes"
+
+
 class TestJsonPrimitiveMatrix:
     """Value-conversion matrix in the spirit of the reference's
     SinkRecordToArrowConverterTest primitive coverage: numeric widths,

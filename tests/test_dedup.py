@@ -1,11 +1,20 @@
 """Tests for the shared pieces of operators/dedup.py and operators/text.py:
-the prepared-plan memo the memoized queries build through, and
-marker-token language ID."""
+the prepared-plan memo the memoized queries build through, marker-token
+language ID, and the fingerprint and repetition-ratio text signals."""
 
 from pyspark.sql import functions as F
 
 from ducklake_kafka_connect_spark.operators import dedup as D
-from ducklake_kafka_connect_spark.operators.text import lang_id_col
+from ducklake_kafka_connect_spark.operators.text import fingerprint_col, lang_id_col
+
+BASE = (
+    "the quick brown fox jumps over the lazy dog while the cat watches "
+    "from the warm window sill in the afternoon sun"
+)
+OTHER = (
+    "completely different subject matter about distributed query engines "
+    "processing columnar data with vectorized execution kernels"
+)
 
 
 class TestTextOps:
@@ -16,6 +25,34 @@ class TestTextOps:
         )
         out = [r[0] for r in df.select(lang_id_col(F.col("text"))).collect()]
         assert out == ["en", "es", "und"]
+
+    def test_fingerprint_stable_and_edit_robust(self, spark):
+        df = spark.createDataFrame(
+            [(1, BASE), (2, BASE), (3, OTHER)], "doc_id long, text string"
+        )
+        fps = [r[0] for r in df.select(fingerprint_col(F.col("text"))).collect()]
+        assert fps[0] == fps[1]
+        assert fps[0] != fps[2]
+
+    def test_repetition_ratio(self, spark):
+        from ducklake_kafka_connect_spark.operators.text import repetition_ratio_col
+
+        df = spark.createDataFrame(
+            [
+                (1, "a b a b a b"),        # bigrams: ab ba ab ba ab → 2/5 distinct
+                (2, "one two three four"), # all distinct → 0.0
+                (3, "solo"),              # < 2 tokens → NULL
+                (4, ""),                  # empty → NULL
+            ],
+            "doc_id long, text string",
+        )
+        out = {r.doc_id: r.rep for r in df.select(
+            "doc_id", repetition_ratio_col(F.col("text")).alias("rep")
+        ).collect()}
+        assert out[1] == 0.6
+        assert out[2] == 0.0
+        assert out[3] is None
+        assert out[4] is None
 
 
 def _dup_pairs(docs, params=()):
