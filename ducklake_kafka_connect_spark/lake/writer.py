@@ -13,10 +13,10 @@ Parity targets (reference ``ingestor/DucklakeWriter.java``):
 MERGE runs on one of two copy-on-write executors, or as merge-on-read:
 
 - **Driver-side Arrow merge** (``_merge_arrow``) for tables of at most
-  ARROW_MERGE_MAX_BYTES, partitioned or not, with no merge-on-read state
-  and a batch that does not evolve the schema: one Spark job evaluates
-  the batch, the merge, parquet write and stats harvest run in-process —
-  the latency shape of the reference's in-process DuckDB ``MERGE INTO``.
+  ARROW_MERGE_MAX_BYTES, partitioned or not, with no merge-on-read state:
+  one Spark job evaluates the batch, the merge, parquet write and stats
+  harvest run in-process — the latency shape of the reference's
+  in-process DuckDB ``MERGE INTO``.
   It rewrites only the files holding a key the batch updates or deletes
   and writes one file per partition dir it lands rows in. Every decline
   is a named check (``merge.arrowSkip.<reason>`` before the batch is
@@ -261,13 +261,43 @@ def _arrow_fallback(reason: str) -> None:
     return None
 
 
-def _arrow_merge_skip(
-    manifest: Manifest, final_logical: T.StructType
-) -> str | None:
+def _append_fallback(reason: str) -> bool:
+    """Count an Arrow-append decline (the Spark write path runs);
+    returns False for the caller."""
+    REGISTRY.inc("append.arrowFallback")
+    REGISTRY.inc(f"append.arrowFallback.{reason}")
+    return False
+
+
+def _align_arrow(tbl, schema):
+    """``tbl`` on ``schema`` (the merge's evolved physical schema): a
+    column it lacks — a file written before an ADD COLUMN — becomes
+    typed NULLs, a narrower one (written before a widening) is cast up,
+    and a column ``schema`` does not name is ignored, as the Spark read
+    of the same file does. A table already on ``schema`` is returned
+    as is."""
+    import pyarrow as pa
+
+    if tbl.schema.equals(schema):
+        return tbl
+    names = set(tbl.column_names)
+    return pa.table(
+        [
+            tbl.column(f.name).cast(f.type)
+            if f.name in names
+            else pa.nulls(tbl.num_rows, f.type)
+            for f in schema
+        ],
+        schema=schema,
+    )
+
+
+def _arrow_merge_skip(manifest: Manifest) -> str | None:
     """Manifest-only half of the copy-on-write executor choice, checked
     before the batch is evaluated: the reason this merge cannot run on
     the driver-side Arrow executor (``LakeWriter._merge_arrow``), or
-    None if it may."""
+    None if it may. Schema evolution is not a reason: the executor
+    aligns every target table to the evolved schema."""
     from .mor import mor_state
 
     table_bytes = sum(
@@ -283,13 +313,6 @@ def _arrow_merge_skip(
         # the Arrow executor reads files raw — live tombstones need
         # the visibility-applying read of the pruning executor
         return "mor_state"
-    existing = [
-        (f.name, f.dataType)
-        for f in manifest.schema.fields
-        if f.name != INSERTED_AT
-    ]
-    if [(f.name, f.dataType) for f in final_logical.fields] != existing:
-        return "schema_change"
     return None
 
 
@@ -1311,9 +1334,7 @@ class LakeWriter:
                 batch, manifest.partition_exprs, manifest.files
             )
             if reason:
-                REGISTRY.inc("append.arrowFallback")
-                REGISTRY.inc(f"append.arrowFallback.{reason}")
-                return False
+                return _append_fallback(reason)
             parts = {
                 k: [batch if len(groups) == 1 else batch.take(idxs)]
                 for k, idxs in groups.items()
@@ -1321,8 +1342,7 @@ class LakeWriter:
             stat_cols = _stats_columns(out.schema, self.pk)
             bloom_col = _bloom_column(out.schema, self.pk)
         except Exception:
-            REGISTRY.inc("append.arrowFallback")
-            return False
+            return _append_fallback("error")
         # From here the commit is the point of no return: once
         # _commit_next succeeds, NO exception may reach the caller's
         # fallback — the Spark path would re-append the same batch
@@ -1336,8 +1356,7 @@ class LakeWriter:
                     # a RENAME COLUMN landed after the batch was prepared
                     # — its logical names are stale; let the Spark path
                     # re-read and translate
-                    REGISTRY.inc("append.arrowFallback")
-                    return False
+                    return _append_fallback("column_renames")
                 with REGISTRY.timer("append.arrowWrite"):
                     new_files, new_stats = self._write_arrow_files(
                         current, parts, stat_cols, bloom_col
@@ -1358,8 +1377,7 @@ class LakeWriter:
         except Exception:
             if committed:
                 raise
-            REGISTRY.inc("append.arrowFallback")
-            return False
+            return _append_fallback("error")
         # Post-commit, outside the try: a compaction failure propagates
         # (same as the Spark path) instead of triggering a duplicate
         # append via the False fallback.
@@ -1612,7 +1630,7 @@ class LakeWriter:
             )
 
         # ---- executor choice: driver-side Arrow, else Spark pruning ----
-        skip = _arrow_merge_skip(manifest, final_logical)
+        skip = _arrow_merge_skip(manifest)
         if skip is None:
             done = self._merge_arrow(
                 df, manifest, final_logical, exprs, part_cols,
@@ -2148,11 +2166,14 @@ class LakeWriter:
         another partition leaves its old file; a dir left with no rows
         drops out of the manifest.
 
+        A batch that evolves the schema merges here too: the target,
+        read from its files or taken from ``_ARROW_TARGET_CACHE``, is
+        aligned to ``final_logical``'s physical types
+        (:func:`_align_arrow`), and the commit carries ``final_logical``.
+
         Returns True (committed), False (version conflict → replan) or
-        None (declined → the pruning executor runs). Target files that
-        predate a metadata-only ADD COLUMN decline before the batch is
-        evaluated (``merge.arrowSkip.schema_change``); every decline
-        after it is named and counted by :func:`_arrow_fallback`. Errors
+        None (declined → the pruning executor runs). Every decline is
+        named and counted by :func:`_arrow_fallback`. Errors
         at or after the table lock propagate: the commit itself refused,
         and re-running the merge on Spark would only repeat the refusal."""
         import time
@@ -2162,6 +2183,7 @@ class LakeWriter:
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         from .relation_cache import local_plan_arrow
         from .table import _bloom_column, _stats_columns
@@ -2200,7 +2222,19 @@ class LakeWriter:
             # analogue), so the next merge skips re-reading the files.
             # ``row_file`` is each row's index into ``files``. The merge
             # runs in LOGICAL column space: file tables are renamed
-            # physical→logical right after the read (zero-copy).
+            # physical→logical right after the read (zero-copy). Both
+            # sources are aligned to ONE schema — the (possibly evolved)
+            # table's physical types, µs ``_inserted_at`` and the derived
+            # partition columns — so files written before an ADD COLUMN
+            # or a widening merge like new ones.
+            rs = raw.schema
+            common = _arrow_write_schema(
+                to_arrow_schema(T.StructType([
+                    T.StructField(c, T.TimestampType()) if c == INSERTED_AT else rs[c]
+                    for c in out_cols
+                ])),
+                nullable=True,
+            )
             files = manifest.all_files()
             cached = _ARROW_TARGET_CACHE.get(self.table.dir)
             if (
@@ -2209,25 +2243,17 @@ class LakeWriter:
                 and set(cached[1]) == set(files)
             ):
                 _, files, target, row_file = cached
+                target = _align_arrow(target, common)
             else:
                 inv_ren = {p: l for l, p in manifest.column_renames.items()}
 
                 def read_one(f):
                     t = pq.read_table(os.path.join(self.table.dir, f))
-                    return t.rename_columns([inv_ren.get(n, n) for n in t.column_names])
+                    t = t.rename_columns([inv_ren.get(n, n) for n in t.column_names])
+                    return _align_arrow(t, common)
 
                 tables = _thread_map(read_one, files)
-                if any(sorted(t.column_names) != sorted(out_cols) for t in tables):
-                    REGISTRY.inc("merge.arrowSkip.schema_change")
-                    return None
-                target = None
-                if tables:
-                    common = _arrow_write_schema(
-                        tables[0].select(out_cols).schema, nullable=True
-                    )
-                    target = pa.concat_tables(
-                        [t.select(out_cols).cast(common) for t in tables]
-                    )
+                target = pa.concat_tables(tables) if tables else None
                 row_file = np.repeat(
                     np.arange(len(files)), [t.num_rows for t in tables]
                 )
@@ -2254,21 +2280,7 @@ class LakeWriter:
             if (target.nbytes if n_t else 0) + batch.nbytes > ARROW_MERGE_MAX_BYTES:
                 return _arrow_fallback("size_cap")
 
-            # ---- align the batch to the target's (nullable) schema ----
-            if target is not None:
-                common = target.schema
-            else:
-                common = _arrow_write_schema(
-                    pa.schema(
-                        [
-                            pa.field(c, pa.timestamp("us", tz="UTC"))
-                            if c == INSERTED_AT
-                            else batch.schema.field(c)
-                            for c in out_cols
-                        ]
-                    ),
-                    nullable=True,
-                )
+            # ---- align the batch to the same schema ----
             bt = pa.table(
                 [
                     pa.nulls(batch.num_rows, type=f.type)

@@ -25,7 +25,13 @@ _CACHED_FRAMES: list = []
 
 
 def _persist(df):
+    """``df.persist()``, tracked once for release_cached(). Frames whose
+    plan a clearCache()/unpersist dropped from the CacheManager leave the
+    list here, so re-persisting after every clearCache stays flat."""
     df = df.persist()
+    _CACHED_FRAMES[:] = [
+        f for f in _CACHED_FRAMES if f is not df and _plan_actually_cached(f)
+    ]
     _CACHED_FRAMES.append(df)
     return df
 
@@ -94,11 +100,14 @@ def _memo_plan(docs: DataFrame, tag: str, params: tuple, build):
             return result
         except Exception:
             _PLAN_MEMO.pop(key, None)
-    before = len(_CACHED_FRAMES)
+    # build()'s _persist calls prune the list, so its new frames are
+    # found by identity, not by position (``prior`` keeps the ids live)
+    prior = list(_CACHED_FRAMES)
     result = build()
+    seen = {id(f) for f in prior}
     if len(_PLAN_MEMO) >= _PLAN_MEMO_CAP:
         _PLAN_MEMO.clear()
-    _PLAN_MEMO[key] = (result, list(_CACHED_FRAMES[before:]))
+    _PLAN_MEMO[key] = (result, [f for f in _CACHED_FRAMES if id(f) not in seen])
     return result
 
 

@@ -548,3 +548,50 @@ def test_commit_refusal_is_not_rerun_on_spark(spark, tmp_path):
     assert fb1 == fb0, "a commit refusal is not an Arrow fallback"
     assert wd1 == wd0, "the refused merge was re-run on Spark"
     assert mt.read().count() == 2
+
+
+def _append_fallbacks(reason):
+    from ducklake_kafka_connect_spark.metrics import REGISTRY
+
+    c = REGISTRY.snapshot()["counters"]
+    return c.get("append.arrowFallback", 0), c.get(f"append.arrowFallback.{reason}", 0)
+
+
+def test_arrow_append_error_is_a_named_fallback(spark, lake, monkeypatch):
+    """A failure before the Arrow append commits is counted as
+    ``append.arrowFallback.error`` and the Spark write lands the batch."""
+    cat = LakeCatalog(spark, lake)
+    w = LakeWriter(cat.table("t"), pk=["id"])
+    w.append(_base(spark, 10))
+
+    def boom(self, *a, **k):
+        raise RuntimeError("parquet write failed")
+
+    monkeypatch.setattr(wmod.LakeWriter, "_write_arrow_files", boom)
+    total0, named0 = _append_fallbacks("error")
+    w.append(spark.range(10, 15).select(F.col("id"), F.lit("b").alias("name")))
+    assert _append_fallbacks("error") == (total0 + 1, named0 + 1)
+    assert cat.table("t").read().count() == 15
+
+
+def test_arrow_append_rename_race_is_a_named_fallback(spark, lake, monkeypatch):
+    """A RENAME COLUMN that lands between planning and the Arrow append's
+    commit is counted as ``append.arrowFallback.column_renames``."""
+    cat = LakeCatalog(spark, lake)
+    t = cat.table("t")
+    w = LakeWriter(t, pk=["id"])
+    w.append(spark.range(10).select(
+        F.col("id"), F.lit("a").alias("name"), F.lit("n").alias("note")
+    ))
+    split = wmod._partition_dirs
+
+    def rename_then_split(*a, **k):
+        t.rename_column("note", "memo")  # the concurrent DDL
+        return split(*a, **k)
+
+    monkeypatch.setattr(wmod, "_partition_dirs", rename_then_split)
+    total0, named0 = _append_fallbacks("column_renames")
+    w.append(spark.range(10, 15).select(F.col("id"), F.lit("b").alias("name")))
+    assert _append_fallbacks("column_renames") == (total0 + 1, named0 + 1)
+    got = {r["id"]: (r["name"], r["memo"]) for r in t.read().collect()}
+    assert got[0] == ("a", "n") and got[12] == ("b", None) and len(got) == 15

@@ -118,3 +118,34 @@ class TestPlanMemo:
         spark.catalog.clearCache()
         after = {tuple(r) for r in _dup_pairs(docs).collect()}
         assert before == after and len(before) == 9  # star edges to min id
+
+    def test_tracked_frames_stay_flat_across_clear_cache(self, spark, tmp_path):
+        """A memoized plan re-persists its intermediates after every
+        clearCache, and the event-rate query persists a fresh one per
+        run: neither may grow the list release_cached() walks."""
+        import datetime as dt
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from ducklake_kafka_connect_spark.plans.queries import QUERIES
+
+        t0 = dt.datetime(2024, 1, 1)
+        pq.write_table(
+            pa.table({
+                "event_type": ["click", "view"] * 20,
+                "ts": [t0 + dt.timedelta(minutes=17 * i) for i in range(40)],
+            }),
+            str(tmp_path / "events.parquet"),
+        )
+        docs = spark.createDataFrame(
+            [(i, f"text {i % 3}") for i in range(12)], "doc_id long, text string"
+        )
+        spark.catalog.clearCache()
+        sizes = []
+        for _ in range(5):
+            _dup_pairs(docs).collect()
+            QUERIES["event_rate_anomaly"].fn(spark, str(tmp_path)).collect()
+            sizes.append(len(D._CACHED_FRAMES))
+            spark.catalog.clearCache()
+        assert sizes == [2] * 5, sizes

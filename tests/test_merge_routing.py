@@ -65,6 +65,39 @@ def _schema_change(spark, w, t):
     w.merge(_batch(spark, 30, 50, "wide").withColumn("score", F.lit(1.5)))
 
 
+def _complex_column(spark, w, t):
+    # a complex column is stored as JSON text (to_physical_schema)
+    w.merge(_batch(spark, 30, 50, "wide")
+            .withColumn("tags", F.array(F.col("name"), F.col("id").cast("string"))))
+
+
+def _widening(spark, w, t):
+    # seq int → bigint (values past int32) from a February-only batch:
+    # January's file keeps int32 seq, February's new file is int64
+    w.merge(_batch(spark, 40, 45, "wide", ts=FEB)
+            .withColumn("seq", F.col("id") + (1 << 40)))
+    # re-read the mixed-width files instead of the merge's cached target
+    wmod._ARROW_TARGET_CACHE.clear()
+    w.merge(_batch(spark, 0, 5, "jan"))
+
+
+def _add_column_ddl(spark, w, t):
+    t.add_column("score", "double")  # metadata only: no file has score
+    w.merge(_batch(spark, 30, 50, "upd").withColumn("score", F.lit(2.5)))
+
+
+def _evolve_on_cached_target(spark, w, t):
+    w.merge(_batch(spark, 30, 45, "warm"))  # caches the target
+    w.merge(_batch(spark, 40, 50, "wide").withColumn("score", F.lit(1.5)))
+
+
+def _evolved_untouched_dir(spark, w, t):
+    w.merge(_batch(spark, 40, 50, "feb", ts=FEB))
+    # ADD COLUMN from a January-only batch: February keeps its old file
+    w.merge(_batch(spark, 0, 10, "wide").withColumn("score", F.lit(1.5)))
+    w.merge(_batch(spark, 45, 55, "feb2", ts=FEB))
+
+
 def _new_partition_value(spark, w, t):
     w.merge(_batch(spark, 30, 50, "feb", ts=FEB))
 
@@ -124,7 +157,13 @@ CASES = [
     ("small_unpartitioned", _small, False, None, "arrow", None),
     ("small_with_tombstones", _tombstones, False, None, "arrow", None),
     ("merge_many_ephemeral_order", _merge_many, False, None, "arrow", None),
-    ("schema_evolving_batch", _schema_change, False, None, "pruning", None),
+    ("schema_evolving_batch", _schema_change, False, None, "arrow", None),
+    ("complex_column_batch", _complex_column, False, None, "arrow", None),
+    ("widening_batch", _widening, True, None, "arrow", None),
+    ("add_column_ddl_then_merge", _add_column_ddl, False, None, "arrow", None),
+    ("evolve_on_cached_target", _evolve_on_cached_target, False, None, "arrow",
+     None),
+    ("evolved_untouched_dir", _evolved_untouched_dir, True, None, "arrow", None),
     ("new_partition_value", _new_partition_value, True, None, "arrow", None),
     ("multi_dir_table", _multi_dir, True, None, "arrow", None),
     ("partition_drift", _partition_drift, True, None, "arrow", _one_row_per_key),
@@ -146,6 +185,7 @@ def _snapshot():
         "pruning": ops.get("merge.planAgg", {}).get("count", 0),
         "mor": ctr.get("merge.morCommits", 0),
         "token": ctr.get("merge.arrowFallback.partition_token", 0),
+        "fallback": ctr.get("merge.arrowFallback", 0),
     }
 
 
@@ -183,13 +223,14 @@ def _run(spark, root, step, partitioned, mode):
     step(spark, w, t)
     after = _snapshot()
     m1 = t.manifest()
-    rows = sorted(
-        (r["id"], r["name"], r["seq"], r["created_at"],
-         r["_inserted_at"] == stamps[r["id"]] if r["id"] in stamps else None)
-        for r in t.read().collect()
-    )
     extra = sorted(c for c in t.read().columns if c not in (
         "id", "name", "seq", "created_at", "_inserted_at"))
+    rows = sorted(
+        (r["id"], r["name"], r["seq"], r["created_at"],
+         r["_inserted_at"] == stamps[r["id"]] if r["id"] in stamps else None,
+         *(r[c] for c in extra))
+        for r in t.read().collect()
+    )
     kept = set(m0.all_files()) & set(m1.all_files())
     return {
         "ran": _executor(before, after),
@@ -214,6 +255,8 @@ def test_merge_routing_decision_table(
     ref = _run(spark, str(tmp_path / "pruning"), step, partitioned, None)
     assert got["ran"] == executor, f"{case}: ran on {got['ran']}, expected {executor}"
     assert ref["ran"] == "pruning"
+    if executor == "arrow":  # every merge of the step, none declined late
+        assert got["delta"]["pruning"] == got["delta"]["fallback"] == 0, got["delta"]
     assert got["rows"] == ref["rows"] and got["extra"] == ref["extra"]
     assert sorted(got["files_after"]) == sorted(ref["files_after"])
     if mode is None:
@@ -222,21 +265,41 @@ def test_merge_routing_decision_table(
         check(got)
 
 
-def test_small_upsert_from_non_local_frame_is_one_spark_job(spark, tmp_path):
-    """A small-table upsert whose batch is a distributed plan (not a
-    folded LocalRelation) costs exactly the one batch-evaluation job."""
-    cat = LakeCatalog(spark, str(tmp_path))
+def _warm_upsert_jobs(spark, root, batch, group):
+    """Spark jobs of one small-table upsert of ``batch`` (a distributed
+    plan, not a folded LocalRelation) after a warm-up merge; returns
+    (job ids, {id: row} read back)."""
+    cat = LakeCatalog(spark, root)
     w = LakeWriter(cat.table("t"), pk=["id"])
     w.append(_base(spark))
     w.merge(_batch(spark, 30, 50, "warm"))
     sc = spark.sparkContext
-    sc.setJobGroup("merge_routing_job_count", "one small upsert")
+    sc.setJobGroup(group, "one small upsert")
     try:
-        w.merge(_batch(spark, 20, 60, "upd"))
+        w.merge(batch)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("merge_routing_job_count")
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    return jobs, {r["id"]: r for r in cat.table("t").read().collect()}
+
+
+def test_small_upsert_from_non_local_frame_is_one_spark_job(spark, tmp_path):
+    """A small-table upsert whose batch is a distributed plan (not a
+    folded LocalRelation) costs exactly the one batch-evaluation job."""
+    jobs, got = _warm_upsert_jobs(
+        spark, str(tmp_path), _batch(spark, 20, 60, "upd"), "merge_routing_jobs"
+    )
     assert len(jobs) == 1, jobs
-    got = {r["id"]: r["name"] for r in cat.table("t").read().collect()}
-    assert len(got) == 60 and got[25] == "upd" and got[5] == "base5"
+    assert len(got) == 60 and got[25]["name"] == "upd" and got[5]["name"] == "base5"
+
+
+def test_evolving_small_upsert_is_one_spark_job(spark, tmp_path):
+    """An upsert that adds a column costs the same one job: the schema
+    change commits with the Arrow merge, not on the Spark executor."""
+    batch = _batch(spark, 20, 60, "wide").withColumn("score", F.lit(1.5))
+    jobs, got = _warm_upsert_jobs(
+        spark, str(tmp_path), batch, "merge_routing_jobs_evolving"
+    )
+    assert len(jobs) == 1, jobs
+    assert len(got) == 60 and got[25]["score"] == 1.5 and got[5]["score"] is None
