@@ -118,8 +118,7 @@ def main() -> None:
     # load as if the host had drifted
     time.sleep(3)
     probes["end"] = mini_probe()
-    # Per-section stamping (r14 refinement, declared in
-    # OPTIMIZATION_r14.md): the surface/ingest stamp uses the run-level
+    # Per-section stamping: the surface/ingest stamp uses the run-level
     # probes around THOSE sections; the A/B phase carries its own stamp
     # (ab.load_contaminated, from the probes taken around each side).
     # The old pooled stamp let one turbulent A/B-phase probe flag the
@@ -779,8 +778,7 @@ def ingest_harness(spark) -> dict:
         )
         from pyspark.sql import types as T
 
-        # r14 measurement fix (declared in OPTIMIZATION_r14.md): the drip
-        # batches are built as Arrow LocalRelations (local_rows_df — the
+        # The drip batches are built as Arrow LocalRelations (local_rows_df — the
         # engine's own API for driver-local rows) instead of
         # spark.createDataFrame, whose RDD-backed plan reports UNKNOWN
         # size to the optimizer and so disqualified every batch from the

@@ -124,20 +124,27 @@ def conform_to_arrow(tbl, target):
     return pa.table(cols, schema=target)
 
 
-def inline_rows_df(spark, manifest, schema):
-    """Pending inlined rows as a DataFrame under ``schema`` (the read
-    surface), or None when the buffer is empty. Driver-side decode —
-    bounded by the limit, so ≤ ~10k rows by construction."""
+def buffer_table(manifest, target):
+    """Pending inlined rows as one pyarrow Table on the arrow schema
+    ``target`` (see :func:`conform_to_arrow`), or None when the buffer
+    is empty. Driver-side decode — bounded by the limit, so ≤ ~10k rows
+    by construction."""
+    import pyarrow as pa
+
     blobs, _ = inline_state(manifest)
     if not blobs:
         return None
+    return pa.concat_tables([conform_to_arrow(decode_blob(b), target) for b in blobs])
+
+
+def inline_rows_df(spark, manifest, schema):
+    """Pending inlined rows as a DataFrame under ``schema`` (the read
+    surface), or None when the buffer is empty."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    target = to_arrow_schema(schema, timestamp_utc=True)
-    import pyarrow as pa
-
-    tables = [conform_to_arrow(decode_blob(b), target) for b in blobs]
-    merged = pa.concat_tables(tables)
+    merged = buffer_table(manifest, to_arrow_schema(schema, timestamp_utc=True))
+    if merged is None:
+        return None
     # hand Spark the Arrow table directly (LocalRelation, no RDD
     # parallelize round-trip); the python-rows path stays as the
     # fallback for any arrow→catalyst mapping gap

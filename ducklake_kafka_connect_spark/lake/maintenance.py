@@ -202,32 +202,12 @@ def compact(
         new_files, new_stats = table.write_data_files(df, m.version + 1, manifest=m)
         # per-FILE carryover (small_file_bytes offenders list only a
         # partition's small files; its right-sized files must survive)
-        rewritten = {f for v in offenders.values() for f in v}
-        files = {
-            k: [f for f in v if f not in rewritten] for k, v in m.files.items()
-        }
-        files = {k: v for k, v in files.items() if v}
-        for k, v in new_files.items():
-            files.setdefault(k, []).extend(v)
-        stats = {f: s for f, s in m.file_stats.items() if f not in rewritten}
-        stats.update(new_stats)
-        table._commit(
-            Manifest(
-                version=m.version + 1,
-                schema=m.schema,
-                pk=m.pk,
-                partition_spec=m.partition_spec,
-                files=files,
-                parent=m.version,
-                props={**m.props, "last_op": "COMPACT"},
-                file_stats=stats,
-            ),
-            parent_manifest=m,
-        )
+        nm = m.successor("COMPACT", **m.replace_files(rel, new_files, new_stats))
+        table._commit(nm, parent_manifest=m)
         return CompactionResult(
             len(offenders),
             sum(map(len, m.files.values())),
-            sum(map(len, files.values())),
+            sum(map(len, nm.files.values())),
         )
 
 
@@ -471,15 +451,8 @@ def dedup_rewrite(
             survivors, m.version + 1, layout="rebalance", manifest=m
         )
         table._commit(
-            Manifest(
-                version=m.version + 1,
-                schema=m.schema,
-                pk=m.pk,
-                partition_spec=m.partition_spec,
-                files=new_files,
-                parent=m.version,
-                props={**m.props, "last_op": "DEDUP"},
-                file_stats=new_stats,
+            m.successor(
+                "DEDUP", **m.replace_files(m.all_files(), new_files, new_stats)
             ),
             parent_manifest=m,
         )

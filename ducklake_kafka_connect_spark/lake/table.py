@@ -40,7 +40,7 @@ import os
 import re
 import time
 import uuid
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass, field as dc_field, replace as dc_replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -162,6 +162,40 @@ class Manifest:
         manifest form without any serialization change. Empty for
         tables that never renamed — every boundary helper no-ops."""
         return dict(self.props.get("column_renames") or {})
+
+    def successor(
+        self, op: str | None, props: dict | None = None, **changes
+    ) -> "Manifest":
+        """The next version on top of this one, for
+        ``LakeTable._commit(..., parent_manifest=self)``: version + 1
+        linked to this version, ``props`` (default: this version's)
+        carried with ``last_op`` stamped to ``op`` (None leaves it as
+        carried), and the fields named in ``changes`` replaced.
+        ``delta_depth`` describes how THIS version resolved, so the
+        successor starts at 0."""
+        props = dict(self.props if props is None else props)
+        if op is not None:
+            props["last_op"] = op
+        return dc_replace(
+            self, version=self.version + 1, parent=self.version,
+            props=props, delta_depth=0, **changes,
+        )
+
+    def replace_files(
+        self, drop, new_files: dict, new_stats: dict
+    ) -> dict:
+        """``files``/``file_stats`` of a successor that drops the files in
+        ``drop`` and adds ``new_files`` (dir key → paths) with their
+        ``new_stats``: every other file keeps its dir and stats, and a dir
+        left with no file drops out. Spread into :meth:`successor`."""
+        drop = set(drop)
+        files = {k: [f for f in v if f not in drop] for k, v in self.files.items()}
+        files = {k: v for k, v in files.items() if v}
+        for k, paths in new_files.items():
+            files.setdefault(k, []).extend(paths)
+        stats = {f: s for f, s in self.file_stats.items() if f not in drop}
+        stats.update(new_stats)
+        return {"files": files, "file_stats": stats}
 
     def all_files(self) -> list[str]:
         return [p for paths in self.files.values() for p in paths]
@@ -908,16 +942,8 @@ class LakeTable:
                 **{str(k): str(v) for k, v in props.items()},
             }
             self._commit(
-                Manifest(
-                    version=m.version + 1,
-                    schema=m.schema,
-                    pk=m.pk,
-                    partition_spec=m.partition_spec,
-                    files=m.files,
-                    parent=m.version,
-                    props={**m.props, "tblproperties": tp,
-                           "last_op": "SET TBLPROPERTIES"},
-                    file_stats=m.file_stats,
+                m.successor(
+                    "SET TBLPROPERTIES", props={**m.props, "tblproperties": tp}
                 ),
                 parent_manifest=m,
             )
@@ -937,16 +963,8 @@ class LakeTable:
             for k in keys:
                 tp.pop(k, None)
             self._commit(
-                Manifest(
-                    version=m.version + 1,
-                    schema=m.schema,
-                    pk=m.pk,
-                    partition_spec=m.partition_spec,
-                    files=m.files,
-                    parent=m.version,
-                    props={**m.props, "tblproperties": tp,
-                           "last_op": "UNSET TBLPROPERTIES"},
-                    file_stats=m.file_stats,
+                m.successor(
+                    "UNSET TBLPROPERTIES", props={**m.props, "tblproperties": tp}
                 ),
                 parent_manifest=m,
             )
@@ -1247,21 +1265,20 @@ class LakeTable:
             # tblproperties) stays current. mor_preserve: the commit
             # chokepoint must not re-stamp restored base files — that
             # would un-suppress rows the restored tombstones hide.
-            props = {**cur.props, "last_op": f"RESTORE({version})"}
+            props = dict(cur.props)
             for k in ("mor", "column_renames"):
                 props.pop(k, None)
                 if k in old.props:
                     props[k] = old.props[k]
             if "mor" in props:
                 props["mor_preserve"] = True
-            new = Manifest(
-                version=cur.version + 1,
+            new = cur.successor(
+                f"RESTORE({version})",
+                props=props,
                 schema=old.schema,
                 pk=old.pk,
                 partition_spec=old.partition_spec,
                 files={k: list(v) for k, v in old.files.items()},
-                parent=cur.version,
-                props=props,
                 file_stats=dict(old.file_stats),
             )
             self._commit(new, parent_manifest=cur)
@@ -1565,27 +1582,17 @@ class LakeTable:
             else:
                 keys = list(src_files)
                 abs_paths = list(src_files)
-            stats = dict(m.file_stats)
             harvested = _count_harvest(
                 (key, *_harvest_one(ap, stat_cols, None))
                 for key, ap in zip(keys, abs_paths)
             )
-            for key, s in harvested.items():
-                stats[key] = {inv.get(c, c): v for c, v in s.items()}
-            new_files = {k: list(v) for k, v in m.files.items()}
-            new_files.setdefault("", []).extend(keys)
-            nm = Manifest(
-                version=m.version + 1,
-                schema=m.schema,
-                pk=m.pk,
-                partition_spec=m.partition_spec,
-                files=new_files,
-                parent=m.version,
-                props={
-                    **m.props,
-                    "last_op": f"ADD FILES({len(keys)})",
-                },
-                file_stats=stats,
+            stats = {
+                key: {inv.get(c, c): v for c, v in s.items()}
+                for key, s in harvested.items()
+            }
+            nm = m.successor(
+                f"ADD FILES({len(keys)})",
+                **m.replace_files((), {"": keys}, stats),
             )
             self._commit(nm, parent_manifest=m)
             return nm.version
@@ -1597,17 +1604,12 @@ class LakeTable:
         version."""
         with self.lock():
             m = self.manifest()
-            nm = Manifest(
-                version=m.version + 1,
-                schema=m.schema,
-                pk=m.pk,
-                partition_spec=m.partition_spec,
-                files={},
-                parent=m.version,
-                # TRUNCATE drops ALL content — pending inlined rows
-                # (lake/inline.py) are content and empty with it
-                props={**m.props, "inlined": {}, "last_op": "TRUNCATE"},
-                file_stats={},
+            # TRUNCATE drops ALL content — pending inlined rows
+            # (lake/inline.py) are content and empty with it
+            nm = m.successor(
+                "TRUNCATE",
+                props={**m.props, "inlined": {}},
+                **m.replace_files(m.all_files(), {}, {}),
             )
             self._commit(nm, parent_manifest=m)
             return nm.version
@@ -1636,16 +1638,7 @@ class LakeTable:
             fields.append(T.StructField(name, dt, True))
             if INSERTED_AT in m.schema.fieldNames():
                 fields.append(m.schema[INSERTED_AT])  # system col stays last
-            nm = Manifest(
-                version=m.version + 1,
-                schema=T.StructType(fields),
-                pk=m.pk,
-                partition_spec=m.partition_spec,
-                files={k: list(v) for k, v in m.files.items()},
-                parent=m.version,
-                props={**m.props, "last_op": f"ADD COLUMN({name})"},
-                file_stats=dict(m.file_stats),
-            )
+            nm = m.successor(f"ADD COLUMN({name})", schema=T.StructType(fields))
             self._commit(nm, parent_manifest=m)
             return nm.version
 
@@ -1703,7 +1696,7 @@ class LakeTable:
                 f: {(new if c == old else c): v for c, v in s.items()}
                 for f, s in m.file_stats.items()
             }
-            props = {**m.props, "last_op": f"RENAME COLUMN({old}->{new})"}
+            props = dict(m.props)
             if renames:
                 props["column_renames"] = renames
             else:
@@ -1717,15 +1710,9 @@ class LakeTable:
                     moved = True
             if moved:
                 props["tblproperties"] = tp
-            nm = Manifest(
-                version=m.version + 1,
-                schema=T.StructType(fields),
-                pk=m.pk,
-                partition_spec=m.partition_spec,
-                files={k: list(v) for k, v in m.files.items()},
-                parent=m.version,
-                props=props,
-                file_stats=stats,
+            nm = m.successor(
+                f"RENAME COLUMN({old}->{new})", props=props,
+                schema=T.StructType(fields), file_stats=stats,
             )
             self._commit(nm, parent_manifest=m)
             return nm.version
@@ -1810,19 +1797,13 @@ class LakeTable:
         fields.append(T.StructField(INSERTED_AT, T.TimestampType(), True))
         with self.lock():
             m = self.manifest()
-            nm = Manifest(
-                version=m.version + 1,
+            nm = m.successor(
+                "REPLACE",
+                props={**(props or {}), "txns": m.props.get("txns", {})},
                 schema=T.StructType(fields),
                 pk=list(pk or []),
                 partition_spec=[e.spec_string() for e in exprs],
-                files={},
-                parent=m.version,
-                props={
-                    **(props or {}),
-                    "last_op": "REPLACE",
-                    "txns": m.props.get("txns", {}),
-                },
-                file_stats={},
+                **m.replace_files(m.all_files(), {}, {}),
             )
             self._commit(nm, parent_manifest=m)
             return nm
@@ -1871,7 +1852,7 @@ class LakeTable:
                 f: {c: v for c, v in s.items() if c != name}
                 for f, s in m.file_stats.items()
             }
-            props = {**m.props, "last_op": f"DROP COLUMN({name})"}
+            props = dict(m.props)
             # retire the column's DEFAULT / NOT NULL props — a stale
             # `default.<col>` would resurrect if the name is re-added
             tp = {
@@ -1890,15 +1871,9 @@ class LakeTable:
                     props["column_renames"] = renames
                 else:
                     props.pop("column_renames", None)
-            new = Manifest(
-                version=m.version + 1,
-                schema=T.StructType(fields),
-                pk=m.pk,
-                partition_spec=m.partition_spec,
-                files={k: list(v) for k, v in m.files.items()},
-                parent=m.version,
-                props=props,
-                file_stats=stats,
+            new = m.successor(
+                f"DROP COLUMN({name})", props=props,
+                schema=T.StructType(fields), file_stats=stats,
             )
             self._commit(new, parent_manifest=m)
             return new.version
@@ -1935,17 +1910,9 @@ class LakeTable:
             hist = [list(s) for s in props.get("prior_partition_specs", [])]
             hist.append(list(m.partition_spec))
             props["prior_partition_specs"] = hist
+            # no op of its own: history shows the parent's last_op
             self._commit(
-                Manifest(
-                    version=m.version + 1,
-                    schema=m.schema,
-                    pk=m.pk,
-                    partition_spec=new_spec,
-                    files=m.files,
-                    parent=m.version,
-                    props=props,
-                    file_stats=m.file_stats,
-                ),
+                m.successor(None, props=props, partition_spec=new_spec),
                 parent_manifest=m,
             )
 

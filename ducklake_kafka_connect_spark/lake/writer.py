@@ -25,6 +25,23 @@ MERGE runs on one of two copy-on-write executors, or as merge-on-read:
 - **Merge-on-read** (``_merge_mor_once``) under
   ``write.merge.mode=merge-on-read``: delta + tombstone files, no rewrite.
 
+APPEND, INSERT OVERWRITE and the inline flush run through one body
+(``_append`` → ``_append_locked``). A batch of at most
+ARROW_APPEND_MAX_BYTES is evaluated on the driver once, by the helper
+the Arrow merge uses (``_eval_arrow``), and the table lock picks one
+commit shape:
+
+- **Inline blob** (``INSERT_INLINE``) when the table opted in
+  (``write.inlining.row.limit``) and buffer + batch fit the limit;
+- **Driver-written Arrow files**, one per partition dir; a batch that
+  fits the limit but overflows the buffer lands with it
+  (``FLUSH_INLINED``);
+- **Spark-written files** for a batch over the cap, and for Arrow-held
+  rows the driver cannot write (``append.arrowFallback.<reason>``).
+
+Every commit builds its successor manifest with ``Manifest.successor``
+and its file set with ``Manifest.replace_files``.
+
 The pruning merge is the 100 TB design. The source micro-batch is small
 relative to the table, so every join broadcasts the source — the target
 is **never shuffled**. (Batches above MERGE_BROADCAST_ROWS — bulk
@@ -61,7 +78,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..metrics import REGISTRY
-from ..schema.reconcile import INSERTED_AT, plan_evolution
+from ..schema.reconcile import INSERTED_AT, ReconcileError, plan_evolution
 from .partitioning import (
     canon_partition_value,
     dir_key_to_canon_tuple,
@@ -225,9 +242,64 @@ def _out_cols(final_logical: T.StructType, part_cols: Sequence[str]) -> list[str
 _PART_SQL = {"year": "year", "month": "month", "day": "dayofmonth"}
 
 
-def _est_plan_bytes(df: DataFrame) -> int:
-    """The optimizer's size estimate for ``df`` (no Spark job)."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+def _eval_arrow(
+    df: DataFrame,
+    timer: str,
+    max_bytes: int | None = None,
+    max_rows: int | None = None,
+):
+    """Evaluate a small batch on the driver as a pyarrow Table — the
+    one way both Arrow executors (append and merge) do it. A frame
+    folded to a LocalRelation evaluates with ZERO Spark jobs (its rows
+    already sit in the driver); anything else is ONE ``toArrow`` job,
+    coalesced to 4 partitions when the optimizer estimates it at most
+    EVAL_COALESCE_MAX_BYTES: a small batch often arrives in 32 map
+    partitions, and collecting 32 near-empty Arrow streams is pure
+    task-scheduling overhead (~70→30 ms for 10k rows), while a
+    compute-heavy plan (a JSON decode) keeps its parallelism. coalesce
+    merges ADJACENT partitions, so arrival order is kept.
+
+    With ``max_bytes``, a batch over it returns None without a job
+    when the estimate says so. An unknown estimate (the optimizer's
+    8-EiB sentinel for an RDD-backed frame) is collected only when
+    ``max_rows`` bounds it: at most ``max_rows + 1`` rows come back
+    (CollectLimit short-circuits), and more than ``max_rows`` returns
+    None."""
+    from .relation_cache import local_plan_arrow
+
+    with REGISTRY.timer(timer):
+        tbl = local_plan_arrow(df)
+        if tbl is None:
+            # the optimizer's size estimate (no Spark job)
+            est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+            if max_bytes is None or est <= max_bytes:
+                small = est <= EVAL_COALESCE_MAX_BYTES
+                tbl = (df.coalesce(4) if small else df).toArrow()
+            elif max_rows is not None and est >= 1 << 60:
+                tbl = df.limit(max_rows + 1).toArrow()
+                if tbl.num_rows > max_rows:
+                    return None
+            else:
+                return None
+    if max_bytes is not None and tbl.nbytes > max_bytes:
+        return None  # one huge file helps nobody
+    return tbl
+
+
+def _buffer_schema(manifest: Manifest):
+    """Arrow schema of the rows an append commits to ``manifest``'s
+    table (``LakeWriter._prepare_insert``'s output): the physical
+    column types under logical names, ``_inserted_at``, then derived
+    partition columns — what an inline blob holds."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    derived = [
+        T.StructField(e.output_name, T.IntegerType(), True)
+        for e in manifest.partition_exprs
+        if e.is_derived
+    ]
+    st = T.StructType(to_physical_schema(manifest.schema).fields + derived)
+    return to_arrow_schema(st, timestamp_utc=True)
 
 
 def _arrow_write_schema(schema, nullable: bool = False):
@@ -253,20 +325,13 @@ def _arrow_write_schema(schema, nullable: bool = False):
     )
 
 
-def _arrow_fallback(reason: str) -> None:
-    """Count an Arrow-merge decline taken after the batch was evaluated
-    (the pruning executor re-evaluates it); returns None for the caller."""
-    REGISTRY.inc("merge.arrowFallback")
-    REGISTRY.inc(f"merge.arrowFallback.{reason}")
-    return None
-
-
-def _append_fallback(reason: str) -> bool:
-    """Count an Arrow-append decline (the Spark write path runs);
-    returns False for the caller."""
-    REGISTRY.inc("append.arrowFallback")
-    REGISTRY.inc(f"append.arrowFallback.{reason}")
-    return False
+def _fallback(counter: str, reason: str) -> None:
+    """Count a named decline of a driver-side Arrow executor taken after
+    its batch was evaluated, as ``counter`` and ``counter.<reason>``:
+    ``merge.arrowFallback`` (the pruning executor re-runs the merge) or
+    ``append.arrowFallback`` (Spark writes the rows); returns None."""
+    REGISTRY.inc(counter)
+    REGISTRY.inc(f"{counter}.{reason}")
 
 
 def _align_arrow(tbl, schema):
@@ -393,23 +458,6 @@ def _dictionary_columns(tbl) -> list[str]:
         or pc.count_distinct(tbl.column(f.name)).as_py() <= tbl.num_rows // 2
         for p in leaves(f.name, f.type)
     ]
-
-
-def _replace_files(
-    manifest: Manifest, rewritten: set, new_files: dict, new_stats: dict
-) -> tuple[dict, dict]:
-    """(files, file_stats) of a copy-on-write commit: every file not in
-    ``rewritten`` keeps its dir and stats, ``new_files`` join their dirs,
-    and a dir left with no file drops out."""
-    files = {
-        k: [f for f in v if f not in rewritten] for k, v in manifest.files.items()
-    }
-    files = {k: v for k, v in files.items() if v}
-    for k, paths in new_files.items():
-        files.setdefault(k, []).extend(paths)
-    stats = {f: s for f, s in manifest.file_stats.items() if f not in rewritten}
-    stats.update(new_stats)
-    return files, stats
 
 
 def _qcol(name: str) -> Column:
@@ -584,8 +632,6 @@ class LakeWriter:
 
     # ---------- public API ----------
 
-    _RESOLVE = object()  # sentinel: "resolve the manifest yourself"
-
     _NEXTVAL_DEFAULT = re.compile(
         r"nextval\s*\(\s*'([^']+)'\s*\)", re.IGNORECASE
     )
@@ -623,7 +669,7 @@ class LakeWriter:
             df = _seq.attach_sequence(df, col, lo, st["increment"], counts)
         return df
 
-    def _enforce_constraints(self, df: DataFrame, manifest=_RESOLVE) -> None:
+    def _enforce_constraints(self, df: DataFrame, m: Manifest | None) -> None:
         """Reject the batch if any CHECK constraint is violated. One
         aggregate job computes every constraint's violation count at
         once. A row violates only when the predicate evaluates FALSE;
@@ -649,19 +695,12 @@ class LakeWriter:
         Stored NOT NULL (``notnull.<col>``) enforces strictly in the
         same single aggregate.
 
-        ``manifest`` is the write path's ALREADY-RESOLVED manifest —
-        pass it so constraint lookup costs zero extra metadata reads
-        (at 100 TB a manifest is O(files) big; a second chain resolve
-        per 10k-row CDC batch is real money). ``None`` means the table
-        is known to not exist (no stored constraints possible); the
-        default self-resolves, for callers with no manifest in hand."""
+        ``m`` is the write path's ALREADY-RESOLVED manifest, so
+        constraint lookup costs zero extra metadata reads (at 100 TB a
+        manifest is O(files) big; a second chain resolve per 10k-row CDC
+        batch is real money). ``None`` means the table is known to not
+        exist (no stored constraints possible)."""
         checks = dict(self.check_constraints)
-        if manifest is LakeWriter._RESOLVE:
-            m = self.table.manifest() if self.table.exists() else None
-        elif manifest is None:
-            m = None
-        else:
-            m = manifest
         stored = dict(m.props.get("tblproperties", {})) if m else {}
         for k, v in stored.items():
             if k.startswith("constraint."):
@@ -796,107 +835,6 @@ class LakeWriter:
         finally:
             self._txn = None
 
-    # ---------- data inlining (lake/inline.py) ----------
-
-    def _maybe_inline_append(self, out: DataFrame, df: DataFrame, manifest):
-        """Inline-or-flush decision for an append on an opted-in table
-        (``write.inlining.row.limit`` tblproperty; lake/inline.py).
-
-        → (handled, out, manifest). handled=True means the batch was
-        committed here — either as a metadata-only inline commit (ONE
-        manifest PUT, no Spark write job, no parquet file) or, when the
-        accumulated buffer would overflow the limit, as a FLUSH commit
-        that lands buffer + batch together in real files. Both branches
-        run under the table lock with replan-on-advance, so concurrent
-        inline appends stack instead of losing rows."""
-        from .inline import encode_table, inline_state, table_inline_limit
-
-        limit = table_inline_limit(manifest)
-        if limit is None:
-            return False, out, manifest
-        # zero-job driver-side eval for LocalRelation-folded micro-
-        # batches (the inline trickle shape) — tried FIRST: their data
-        # already sits in the driver, and the optimizer reports an
-        # 8-EiB unknown-size sentinel for RDD-backed local frames that
-        # would otherwise defeat the estimate gate. The row-limit check
-        # below rejects oversized results either way.
-        with REGISTRY.timer("append.inlineEval"):
-            from .relation_cache import local_plan_arrow
-
-            tbl = local_plan_arrow(out)
-        if tbl is None:
-            # fast reject on a RELIABLE big estimate; unknown estimates
-            # fall through to the bounded probe instead
-            try:
-                est = _est_plan_bytes(out)
-            except Exception:
-                est = None
-            if est is not None and (1 << 60) > est > self.ARROW_APPEND_MAX_BYTES:
-                return False, out, manifest
-            # bounded probe: collect at most limit+1 rows — CollectLimit
-            # short-circuits, so a huge append pays one cheap partial
-            # scan, a tiny one IS fully collected right here
-            with REGISTRY.timer("append.inlineEval"):
-                tbl = out.limit(limit + 1).toArrow()
-        if tbl.num_rows == 0 or tbl.num_rows > limit:
-            return False, out, manifest
-        with self.table.lock():
-            if self._chain_advanced(manifest.version):
-                manifest = self.table.manifest()
-            blobs, pending = inline_state(manifest)
-            schema = _logical_schema_of_batch(df, manifest)
-            if pending + tbl.num_rows <= limit:
-                with REGISTRY.timer("append.inlineCommit"):
-                    self._commit_next(
-                        manifest,
-                        manifest.files,
-                        schema,
-                        manifest.file_stats,
-                        op="INSERT_INLINE",
-                        extra_props={
-                            "inlined": {
-                                "ipc": blobs + [encode_table(tbl)],
-                                "rows": pending + tbl.num_rows,
-                            }
-                        },
-                    )
-                return True, out, manifest
-            # overflow → flush buffer + batch as real files, ONE commit
-            with REGISTRY.timer("append.inlineFlush"):
-                self._flush_locked(manifest, schema, extra=out)
-            return True, out, manifest
-
-    def _flush_locked(
-        self, manifest: Manifest, schema, extra: DataFrame | None = None
-    ) -> None:
-        """Write the pending inline buffer (+ optionally one more
-        physical batch frame) as real data files and clear the buffer —
-        caller holds the table lock."""
-        from .inline import inline_rows_df
-
-        pend = inline_rows_df(
-            self.table.spark, manifest, self.table.read_schema(manifest)
-        )
-        frames = [f for f in (pend, extra) if f is not None]
-        if not frames:
-            return
-        combined = frames[0]
-        for f in frames[1:]:
-            combined = combined.unionByName(f, allowMissingColumns=True)
-        new_files, new_stats = self.table.write_data_files(
-            combined, manifest.version + 1, layout="rebalance",
-            manifest=manifest,
-        )
-        files = {k: list(v) for k, v in manifest.files.items()}
-        for k, paths in new_files.items():
-            files.setdefault(k, []).extend(paths)
-        stats = dict(manifest.file_stats)
-        stats.update(new_stats)
-        self._commit_next(
-            manifest, files, schema,
-            stats, op="FLUSH_INLINED", extra_props={"inlined": {}},
-        )
-
     def flush_inlined(self) -> int:
         """``ducklake_flush_inlined_data()`` parity: materialize the
         pending inline buffer into real parquet files (one commit) and
@@ -910,28 +848,8 @@ class LakeWriter:
             blobs, pending = inline_state(manifest)
             if not blobs:
                 return 0
-            schema = T.StructType(
-                [f for f in manifest.schema.fields if f.name != INSERTED_AT]
-            )
-            self._flush_locked(manifest, schema)
+            self._append_locked(manifest)
             return pending
-
-    def _flush_inline_locked(self, manifest: Manifest) -> Manifest:
-        """Flush-first hook for locked rewrite operations (UPDATE /
-        DELETE): their planning is file-based, so pending inlined rows
-        must become file rows before the operation can see them. Caller
-        holds the table lock and passes its already-resolved manifest —
-        the clean path (no buffer) costs ZERO extra metadata reads; the
-        flush path commits once and re-resolves."""
-        from .inline import inline_state
-
-        if not inline_state(manifest)[0]:
-            return manifest
-        schema = T.StructType(
-            [f for f in manifest.schema.fields if f.name != INSERTED_AT]
-        )
-        self._flush_locked(manifest, schema)
-        return self.table.manifest()
 
     def delete_where(self, predicate: str) -> None:
         """Predicate DELETE (``DELETE FROM t WHERE p``): only files whose
@@ -945,10 +863,16 @@ class LakeWriter:
         Under ``write.merge.mode=merge-on-read`` the delete commits only
         a PK tombstone file for the matching VISIBLE rows — no file is
         rewritten (lake/mor.py); OPTIMIZE materializes later."""
+        from .inline import inline_state
         from .mor import MODE_MOR, resolve_merge_mode
 
         with REGISTRY.timer("deleteWhere"), self.table.lock():
-            manifest = self._flush_inline_locked(self.table.manifest())
+            manifest = self.table.manifest()
+            if inline_state(manifest)[0]:
+                # planning below is file-based: pending inlined rows
+                # must become file rows first (lake/inline.py)
+                self._append_locked(manifest)
+                manifest = self.table.manifest()
             affected, _ = self.table.prune_files(predicate, manifest=manifest)
             if not affected:
                 return
@@ -963,28 +887,10 @@ class LakeWriter:
                 layout=self._rewrite_layout(manifest, affected),
                 manifest=manifest,
             )
-            dropped = set(affected)
-            files = {
-                k: [f for f in v if f not in dropped]
-                for k, v in manifest.files.items()
-            }
-            files = {k: v for k, v in files.items() if v}
-            for k, v in new_files.items():
-                files.setdefault(k, []).extend(v)
-            stats = {
-                f: s for f, s in manifest.file_stats.items() if f not in dropped
-            }
-            stats.update(new_stats)
             self.table._commit(
-                Manifest(
-                    version=manifest.version + 1,
-                    schema=manifest.schema,
-                    pk=manifest.pk,
-                    partition_spec=manifest.partition_spec,
-                    files=files,
-                    parent=manifest.version,
-                    props={**manifest.props, "last_op": "DELETE"},
-                    file_stats=stats,
+                manifest.successor(
+                    "DELETE",
+                    **manifest.replace_files(affected, new_files, new_stats),
                 ),
                 parent_manifest=manifest,
             )
@@ -996,7 +902,6 @@ class LakeWriter:
         of visible rows matching ``predicate`` inside the pruned file
         set become one tombstone file; data files are untouched."""
         from .mor import mor_state, write_tombstones
-        from .table import Manifest as _M
 
         keys = (
             self._read_files(manifest, affected)
@@ -1016,19 +921,9 @@ class LakeWriter:
         seq_map, deletes = mor_state(manifest)
         deletes = {**deletes, tomb_rel: meta}
         self.table._commit(
-            _M(
-                version=v,
-                schema=manifest.schema,
-                pk=manifest.pk,
-                partition_spec=manifest.partition_spec,
-                files=manifest.files,
-                parent=manifest.version,
-                props={
-                    **manifest.props,
-                    "mor": {"seq": seq_map, "deletes": deletes},
-                    "last_op": "DELETE(MOR)",
-                },
-                file_stats=manifest.file_stats,
+            manifest.successor(
+                "DELETE(MOR)",
+                props={**manifest.props, "mor": {"seq": seq_map, "deletes": deletes}},
             ),
             parent_manifest=manifest,
         )
@@ -1045,8 +940,15 @@ class LakeWriter:
         bad = [c for c in assignments if c in (self.pk or [])]
         if bad:
             raise ValueError(f"update_where cannot assign PK column(s) {bad}")
+        from .inline import inline_state
+
         with REGISTRY.timer("updateWhere"), self.table.lock():
-            manifest = self._flush_inline_locked(self.table.manifest())
+            manifest = self.table.manifest()
+            if inline_state(manifest)[0]:
+                # planning below is file-based: pending inlined rows
+                # must become file rows first (lake/inline.py)
+                self._append_locked(manifest)
+                manifest = self.table.manifest()
             # partition source/output columns are immutable under UPDATE:
             # moving a row between partition dirs is a merge-shaped
             # operation (delete + reinsert), not an in-place file rewrite
@@ -1096,28 +998,10 @@ class LakeWriter:
                 layout=self._rewrite_layout(manifest, affected),
                 manifest=manifest,
             )
-            dropped = set(affected)
-            files = {
-                k: [f for f in v if f not in dropped]
-                for k, v in manifest.files.items()
-            }
-            files = {k: v for k, v in files.items() if v}
-            for k, v in new_files.items():
-                files.setdefault(k, []).extend(v)
-            stats = {
-                f: s for f, s in manifest.file_stats.items() if f not in dropped
-            }
-            stats.update(new_stats)
             self.table._commit(
-                Manifest(
-                    version=manifest.version + 1,
-                    schema=manifest.schema,
-                    pk=manifest.pk,
-                    partition_spec=manifest.partition_spec,
-                    files=files,
-                    parent=manifest.version,
-                    props={**manifest.props, "last_op": "UPDATE"},
-                    file_stats=stats,
+                manifest.successor(
+                    "UPDATE",
+                    **manifest.replace_files(affected, new_files, new_stats),
                 ),
                 parent_manifest=manifest,
             )
@@ -1169,38 +1053,17 @@ class LakeWriter:
             for f in paths:
                 seq_map[f] = v
         deletes = {**deletes, tomb_rel: meta}
-        files = {k: list(paths) for k, paths in manifest.files.items()}
-        for k, paths in new_files.items():
-            files.setdefault(k, []).extend(paths)
         self.table._commit(
-            Manifest(
-                version=v,
-                schema=manifest.schema,
-                pk=manifest.pk,
-                partition_spec=manifest.partition_spec,
-                files=files,
-                parent=manifest.version,
-                props={
-                    **manifest.props,
-                    "mor": {"seq": seq_map, "deletes": deletes},
-                    "last_op": "UPDATE(MOR)",
-                },
-                file_stats={**manifest.file_stats, **new_stats},
+            manifest.successor(
+                "UPDATE(MOR)",
+                props={**manifest.props, "mor": {"seq": seq_map, "deletes": deletes}},
+                **manifest.replace_files((), new_files, new_stats),
             ),
             parent_manifest=manifest,
         )
 
     def append(self, df: DataFrame, txn: tuple[str, int] | None = None) -> None:
-        if self.txn_applied(txn):
-            return
-        if txn is not None:
-            self._txn = txn
-        try:
-            with REGISTRY.timer("simpleInsert"):
-                self._append(df)
-        finally:
-            if txn is not None:
-                self._txn = None
+        self._append(df, txn)
 
     def overwrite(self, df: DataFrame, txn: tuple[str, int] | None = None) -> None:
         """INSERT OVERWRITE: ONE commit whose file set is exactly this
@@ -1209,180 +1072,151 @@ class LakeWriter:
         with full history preserved for time travel. Schema evolution
         applies the same as append (the batch's schema conforms/widens
         the manifest's)."""
+        self._append(df, txn, overwrite=True)
+
+    # Appends whose batch is at or below this many bytes (the optimizer
+    # estimate, or the Arrow size of a folded local batch) are evaluated
+    # on the driver and written there; larger ones take the Spark write.
+    ARROW_APPEND_MAX_BYTES = 16 * 1024 * 1024
+
+    def _append(self, df: DataFrame, txn=None, overwrite: bool = False) -> None:
+        """Body of :meth:`append` and :meth:`overwrite` (``txn`` as in
+        :meth:`write`): plan against one manifest resolve (enforcement
+        reuses it), evaluate a small batch on the driver once
+        (:func:`_eval_arrow`), then commit under the table lock in the
+        shape :meth:`_append_locked` picks."""
+        from .inline import table_inline_limit
+
         if self.txn_applied(txn):
             return
         if txn is not None:
             self._txn = txn
         try:
-            with REGISTRY.timer("insertOverwrite"):
-                # one manifest resolve: enforcement reuses the planning
-                # manifest; a violating first batch still rejects BEFORE
-                # auto-create (no stored constraints can exist then)
+            with REGISTRY.timer("insertOverwrite" if overwrite else "simpleInsert"):
                 if self.table.exists():
                     manifest = self.table.manifest()
                     df = self._apply_sequence_defaults(df, manifest)
                     self._enforce_constraints(df, manifest)
                 else:
+                    # a violating first batch rejects BEFORE auto-create
+                    # (no stored constraints can exist then)
                     self._enforce_constraints(df, None)
                     manifest = self._ensure_table(df)
                 out = self._prepare_insert(df, manifest)
+                # an unknown estimate is probed up to the inline limit: a
+                # batch that fits it is an inline commit's whole input
+                try:
+                    batch = _eval_arrow(
+                        out, "append.arrowBatchEval", self.ARROW_APPEND_MAX_BYTES,
+                        table_inline_limit(manifest),
+                    )
+                except Exception:
+                    _fallback("append.arrowFallback", "error")
+                    batch = None  # Spark writes `out`
                 with self.table.lock():
                     # re-resolve only if a commit landed since planning
                     if self._chain_advanced(manifest.version):
                         manifest = self.table.manifest()
-                    new_files, new_stats = self.table.write_data_files(
-                        out,
-                        manifest.version + 1,
-                        layout="rebalance",
-                        manifest=manifest,
-                    )
-                    # OVERWRITE replaces the table's whole content — any
-                    # pending inline buffer is part of that content and
-                    # empties here (no flush: the rows are superseded)
-                    self._commit_next(
-                        manifest,
-                        new_files,
-                        _logical_schema_of_batch(df, manifest),
-                        new_stats,
-                        op="INSERT_OVERWRITE",
-                        extra_props={"inlined": {}},
-                    )
+                    nm = self._append_locked(manifest, df, out, batch, overwrite)
         finally:
             if txn is not None:
                 self._txn = None
+        # post-commit, like every write: a compaction failure propagates
+        self._maybe_auto_compact(nm)
 
-    def _append(self, df: DataFrame) -> None:
-        # one manifest resolve: enforcement reuses the planning manifest
-        if self.table.exists():
-            manifest = self.table.manifest()
-            df = self._apply_sequence_defaults(df, manifest)
-            self._enforce_constraints(df, manifest)
-        else:
-            self._enforce_constraints(df, None)
-            manifest = self._ensure_table(df)
-        out = self._prepare_insert(df, manifest)
-        handled, out, manifest = self._maybe_inline_append(out, df, manifest)
-        if handled:
-            return
-        if self._append_small_arrow(out, df, manifest):
-            return
-        with self.table.lock():
-            # re-resolve only if a commit landed since planning
-            if self._chain_advanced(manifest.version):
-                manifest = self.table.manifest()
-            new_files, new_stats = self.table.write_data_files(
-                out, manifest.version + 1, layout="rebalance",
-                manifest=manifest,
-            )
-            merged_files = {k: list(v) for k, v in manifest.files.items()}
-            for k, paths in new_files.items():
-                merged_files.setdefault(k, []).extend(paths)
-            stats = dict(manifest.file_stats)
-            stats.update(new_stats)
-            self._commit_next(
-                manifest, merged_files, _logical_schema_of_batch(df, manifest), stats,
-                op="INSERT",
-            )
-        self._maybe_auto_compact(merged_files, stats)
+    def _append_locked(
+        self,
+        tip: Manifest,
+        df: DataFrame | None = None,
+        out: DataFrame | None = None,
+        batch=None,
+        overwrite: bool = False,
+    ) -> Manifest:
+        """Commit an append on ``tip`` (caller holds the table lock) in
+        the one shape it fits, and return the committed manifest:
 
-    # Appends whose optimizer-estimated batch size is at or below this
-    # take the driver-side Arrow path: ONE Spark job (toArrow), then the
-    # partition split, parquet write, stats harvest, and commit happen
-    # in-process — the same latency shape as _merge_arrow. Large appends
-    # never reach it, and any doubt (a new dir whose token needs escaping
-    # or is null, counted as append.arrowFallback.partition_token; an
-    # evaluation error) falls back to the Spark write path.
-    ARROW_APPEND_MAX_BYTES = 16 * 1024 * 1024
+        - an inline blob (``INSERT_INLINE``), when the table opted in
+          (``write.inlining.row.limit``) and buffer + batch fit the limit;
+        - driver-written Arrow files of the evaluated ``batch`` — with
+          the pending buffer prepended when the batch fits the limit but
+          overflows the buffer (``FLUSH_INLINED``, buffer emptied);
+        - Spark-written files of ``out``, when the batch was over the
+          cap (``batch`` None). Arrow-held rows whose partition token
+          needs Hive escaping, or whose driver write fails, are written
+          by Spark too, each a named ``append.arrowFallback.<reason>``.
 
-    def _append_small_arrow(self, out: DataFrame, df: DataFrame, manifest) -> bool:
-        """Driver-side Arrow append for small batches. Returns True when
-        the batch was written and committed; False → Spark path runs."""
-        try:
-            from .relation_cache import local_plan_arrow
-            from .table import _bloom_column, _stats_columns
+        ``df`` None flushes the buffer alone (:meth:`flush_inlined` and
+        the flush-first rewrites); that commit carries neither the txn
+        marker nor ``extra_commit_props``, which belong to the write
+        that follows it. ``overwrite`` replaces every file and drops the
+        buffer. The batch's schema is planned again against ``tip``, so
+        a RENAME COLUMN that landed since planning is refused like one
+        that landed before (:func:`_logical_schema_of_batch`)."""
+        import contextlib
 
-            with REGISTRY.timer("append.arrowBatchEval"):
-                # LocalRelation-folded micro-batches evaluate driver-
-                # side with ZERO Spark jobs (~10 vs ~85 ms) — tried
-                # FIRST because their data already sits in the driver
-                # (and an RDD-backed local frame reports an unknown-
-                # size sentinel that would wrongly fail the gate).
-                # Everything else gates on the optimizer estimate, with
-                # the same gated coalesce as the Arrow merge path: a
-                # small batch often arrives in 32 near-empty map
-                # partitions and collecting them is pure task-
-                # scheduling overhead (~60→35 ms measured); only plans
-                # the optimizer thinks are tiny qualify, so compute-
-                # heavy pipelines keep their parallelism.
-                batch = local_plan_arrow(out)
-                if batch is not None:
-                    if batch.nbytes > self.ARROW_APPEND_MAX_BYTES:
-                        return False  # one huge file helps nobody
-                else:
-                    est = _est_plan_bytes(out)
-                    if est > self.ARROW_APPEND_MAX_BYTES:
-                        return False
-                    eval_df = (
-                        out.coalesce(4)
-                        if est <= EVAL_COALESCE_MAX_BYTES
-                        else out
-                    )
-                    batch = eval_df.toArrow()  # the ONE Spark job
-            if batch.num_rows == 0:
-                return False
-            groups, reason = _partition_dirs(
-                batch, manifest.partition_exprs, manifest.files
-            )
-            if reason:
-                return _append_fallback(reason)
-            parts = {
-                k: [batch if len(groups) == 1 else batch.take(idxs)]
-                for k, idxs in groups.items()
-            }
-            stat_cols = _stats_columns(out.schema, self.pk)
-            bloom_col = _bloom_column(out.schema, self.pk)
-        except Exception:
-            return _append_fallback("error")
-        # From here the commit is the point of no return: once
-        # _commit_next succeeds, NO exception may reach the caller's
-        # fallback — the Spark path would re-append the same batch
-        # (append, unlike the Arrow merge path, is not idempotent on
-        # retry). Pre-commit failures still fall back cleanly.
-        committed = False
-        try:
-            with self.table.lock():
-                current = self.table.manifest()
-                if current.column_renames != manifest.column_renames:
-                    # a RENAME COLUMN landed after the batch was prepared
-                    # — its logical names are stale; let the Spark path
-                    # re-read and translate
-                    return _append_fallback("column_renames")
-                with REGISTRY.timer("append.arrowWrite"):
-                    new_files, new_stats = self._write_arrow_files(
-                        current, parts, stat_cols, bloom_col
-                    )
-                merged_files = {k: list(v) for k, v in current.files.items()}
-                for k, paths in new_files.items():
-                    merged_files.setdefault(k, []).extend(paths)
-                stats = dict(current.file_stats)
-                stats.update(new_stats)
-                self._commit_next(
-                    current,
-                    merged_files,
-                    _logical_schema_of_batch(df, current),
-                    stats,
-                    op="INSERT",
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        from .inline import buffer_table, encode_table, inline_state, table_inline_limit
+        from .table import _bloom_column, _stats_columns
+
+        blobs, pending = inline_state(tip)
+        limit = table_inline_limit(tip)
+        n = batch.num_rows if batch is not None else 0
+        schema = _logical_schema_of_batch(df, tip) if df is not None else None
+        fits = not overwrite and limit is not None and 0 < n <= limit
+        if fits and pending + n <= limit:
+            with REGISTRY.timer("append.inlineCommit"):
+                return self._commit_next(
+                    tip, "INSERT_INLINE", schema,
+                    {"inlined": {"ipc": blobs + [encode_table(batch)],
+                                 "rows": pending + n}},
                 )
-                committed = True
-        except Exception:
-            if committed:
-                raise
-            return _append_fallback("error")
-        # Post-commit, outside the try: a compaction failure propagates
-        # (same as the Spark path) instead of triggering a duplicate
-        # append via the False fallback.
-        self._maybe_auto_compact(merged_files, stats)
-        return True
+        op = "INSERT_OVERWRITE" if overwrite else "INSERT"
+        rows = batch
+        flush = bool(blobs) and (df is None or fits)
+        if flush:
+            op = "FLUSH_INLINED"
+            if batch is None:
+                rows = buffer_table(tip, _buffer_schema(tip))
+            else:
+                rows = pa.concat_tables([buffer_table(tip, batch.schema), batch])
+        new_files = None
+        with REGISTRY.timer("append.inlineFlush") if flush else contextlib.nullcontext():
+            if rows is not None:
+                groups, reason = _partition_dirs(rows, tip.partition_exprs, tip.files)
+                if reason:
+                    _fallback("append.arrowFallback", reason)
+                else:
+                    parts = {
+                        k: [rows if len(groups) == 1 else rows.take(idx)]
+                        for k, idx in groups.items()
+                    }
+                    try:
+                        st = from_arrow_schema(rows.schema)
+                        with REGISTRY.timer("append.arrowWrite"):
+                            new_files, new_stats = self._write_arrow_files(
+                                tip, parts, _stats_columns(st, tip.pk),
+                                _bloom_column(st, tip.pk),
+                            )
+                    except Exception:
+                        _fallback("append.arrowFallback", "error")
+            if new_files is None:
+                frame = out if rows is None else self.table.spark.createDataFrame(rows)
+                new_files, new_stats = self.table.write_data_files(
+                    frame, tip.version + 1, layout="rebalance", manifest=tip,
+                )
+            files = tip.replace_files(
+                tip.all_files() if overwrite else (), new_files, new_stats
+            )
+            # OVERWRITE replaces the table's whole content: a pending
+            # buffer is part of that content and empties (no flush)
+            extra = {"inlined": {}} if flush or overwrite else {}
+            if df is None:
+                nm = tip.successor(op, props={**tip.props, **extra}, **files)
+                self.table._commit(nm, parent_manifest=tip)
+                return nm
+            return self._commit_next(tip, op, schema, extra, **files)
 
     def _write_arrow_files(
         self,
@@ -1448,18 +1282,18 @@ class LakeWriter:
         }
         return files, stats
 
-    def _maybe_auto_compact(self, files: dict, stats: dict) -> None:
+    def _maybe_auto_compact(self, m: Manifest) -> None:
         """Post-commit trigger (runs OUTSIDE the table lock — compact
         takes it afresh, so a concurrent writer just wins the race and
         the next commit re-triggers). The check is driver-side over the
-        manifest dicts already in hand: zero I/O unless it fires."""
+        committed manifest in hand: zero I/O unless it fires."""
         if not self.auto_compact:
             return
-        for v in files.values():
+        for v in m.files.values():
             small = sum(
                 1
                 for f in v
-                if int((stats.get(f) or {}).get("__bytes") or 0)
+                if int((m.file_stats.get(f) or {}).get("__bytes") or 0)
                 < AUTO_COMPACT_SMALL_BYTES
             )
             if small > AUTO_COMPACT_MIN_FILES:
@@ -1601,6 +1435,78 @@ class LakeWriter:
             f"{retries} times (max_retry_count={self.max_retry_count})"
         )
 
+    def _plan_merge(
+        self, manifest: Manifest, probe: DataFrame, part_cols: list[str]
+    ) -> "tuple[int, set, dict]":
+        """The ONE planning job of both Spark merge executors and the
+        file-overlap prune it feeds. ``probe`` carries the batch's
+        pk[0] as ``__k`` and, when ``part_cols`` is set, a ``__live``
+        flag and those columns. A single JVM-side aggregate yields the
+        exact row count, pk[0] bounds, a capped key set and the live
+        rows' partition-value set (every extra driver-blocking job is
+        ~100+ ms of scheduling on a micro-batch; the collect also
+        materializes the cache the write job reuses). Then files whose
+        footer [min, max] of pk[0] misses the bounds drop out, and, when
+        more than one survives, the Bloom sidecars prove which of the
+        rest hold a batch key — after interleaved appends every file's
+        range overlaps every batch. Returns (rows, {partition tuple},
+        {dir key: overlap files})."""
+        pk0 = self.pk[0]
+        agg_cols = [
+            F.count(F.lit(1)).alias("n"),
+            F.min("__k").alias("lo"),
+            F.max("__k").alias("hi"),
+            # slice() caps the transferred array at CAP+1: exactly CAP+1
+            # back means overflow → probing is skipped. NULL keys don't
+            # collect_set, so they're counted separately — any NULL key
+            # disables probing (a sidecar can't prove absence of a key
+            # it never hashed in canonical form).
+            F.slice(
+                F.collect_set("__k"), 1, MERGE_BLOOM_PROBE_KEYS + 1
+            ).alias("ks"),
+            F.count(F.when(F.col("__k").isNull(), 1)).alias("null_keys"),
+        ]
+        if part_cols:
+            # collect_set skips NULLs, so non-live rows drop out here
+            agg_cols.append(
+                F.collect_set(
+                    F.when(F.col("__live"), F.struct(*part_cols))
+                ).alias("parts")
+            )
+        with REGISTRY.timer("merge.planAgg"):
+            row = probe.agg(*agg_cols).collect()[0]
+        n_src = row["n"]
+        bounds = {"lo": row["lo"], "hi": row["hi"]}
+        src_parts = {tuple(p) for p in row["parts"]} if part_cols else set()
+        probe_keys = list(row["ks"] or [])
+        if row["null_keys"] or len(probe_keys) > MERGE_BLOOM_PROBE_KEYS:
+            probe_keys = None  # overflow / NULL key → no bloom probing
+        overlap_by_part = {
+            k: [f for f in v if _overlaps(manifest.file_stats.get(f), bounds, pk0)]
+            for k, v in manifest.files.items()
+        }
+        flat = [f for v in overlap_by_part.values() for f in v]
+        if probe_keys and len(flat) > 1:
+            from .bloom import (
+                MEMBERSHIP_SPARK_THRESHOLD,
+                membership_filter,
+                membership_filter_spark,
+            )
+
+            with REGISTRY.timer("merge.bloomProbe"):
+                # the key set came back with the planning aggregate; large
+                # overlap sets probe executor-side so wall time stays flat
+                abs_paths = [os.path.join(self.table.dir, f) for f in flat]
+                if len(flat) > MEMBERSHIP_SPARK_THRESHOLD:
+                    kept = membership_filter_spark(self.table.spark, abs_paths, probe_keys)
+                else:
+                    kept = membership_filter(abs_paths, probe_keys)
+            keep = dict(zip(flat, kept))
+            overlap_by_part = {
+                k: [f for f in v if keep[f]] for k, v in overlap_by_part.items()
+            }
+        return n_src, src_parts, overlap_by_part
+
     def _merge_once(
         self,
         df: DataFrame,
@@ -1686,15 +1592,10 @@ class LakeWriter:
             else live_keys
         )
 
-        # ---- the ONE planning job ----
-        # A single JVM-side aggregate over the cached source yields exact
-        # row count, pk[0] bounds, and the batch's partition-value set —
-        # replacing the former bounds-agg + partition-distinct job chain
-        # (every extra driver-blocking job is ~100+ ms of scheduling on a
-        # micro-batch). The collect also materializes the cache the write
-        # job reuses. Dead (tombstone) rows count toward bounds/keys but
-        # contribute no partition values (their old copies may live
-        # anywhere; the overlap probe finds them).
+        # ---- the ONE planning job + overlap prune ----
+        # Dead (tombstone) rows count toward bounds/keys but contribute
+        # no partition values (their old copies may live anywhere; the
+        # overlap probe finds them).
         pk0 = self.pk[0]
         probe = raw.select(
             F.lit(True).alias("__live"),
@@ -1712,77 +1613,15 @@ class LakeWriter:
                     ],
                 )
             )
-        agg_cols = [
-            F.count(F.lit(1)).alias("n"),
-            F.min("__k").alias("lo"),
-            F.max("__k").alias("hi"),
-            # Fold the bloom-probe key set into this same job (the former
-            # separate key-collect was one more ~100+ ms driver-blocking
-            # job per merge). slice() caps the transferred array at CAP+1:
-            # exactly CAP+1 back means overflow → probing is skipped. NULL
-            # keys don't collect_set, so they're counted separately — any
-            # NULL key disables probing (a sidecar can't prove absence of
-            # a key it never hashed in canonical form).
-            F.slice(
-                F.collect_set("__k"), 1, MERGE_BLOOM_PROBE_KEYS + 1
-            ).alias("ks"),
-            F.count(F.when(F.col("__k").isNull(), 1)).alias("null_keys"),
-        ]
-        if part_cols:
-            # collect_set skips NULLs, so non-live rows drop out here
-            agg_cols.append(
-                F.collect_set(
-                    F.when(F.col("__live"), F.struct(*part_cols))
-                ).alias("parts")
-            )
-        with REGISTRY.timer("merge.planAgg"):
-            row = probe.agg(*agg_cols).collect()[0]
-        n_src = row["n"]
-        bounds = {"lo": row["lo"], "hi": row["hi"]}
-        src_parts = {tuple(p) for p in row["parts"]} if part_cols else set()
-        probe_keys = list(row["ks"] or [])
-        if row["null_keys"] or len(probe_keys) > MERGE_BLOOM_PROBE_KEYS:
-            probe_keys = None  # overflow / NULL key → no bloom probing
+        n_src, src_parts, overlap_by_part = self._plan_merge(
+            manifest, probe, part_cols
+        )
 
         # Micro-batches broadcast (hash-join against only the rewrite
         # files, no shuffle of the table); a bulk backfill batch above
         # the row threshold would OOM the driver as a broadcast, so it
         # degrades to ordinary shuffle joins instead.
         bcast = F.broadcast if n_src <= MERGE_BROADCAST_ROWS else (lambda d: d)
-
-        # ---- file-level pruning on PK range (parquet footer stats) ----
-        # A target row can only match a source key if its file's
-        # [min, max] of pk[0] overlaps the batch's key range; files
-        # without stats are conservatively kept.
-        overlap_by_part = {
-            k: [f for f in v if _overlaps(manifest.file_stats.get(f), bounds, pk0)]
-            for k, v in manifest.files.items()
-        }
-        # Small batches additionally Bloom-probe the surviving files:
-        # after interleaved appends every file's PK range overlaps every
-        # batch, but the sidecars prove which files actually hold the
-        # keys — the rewrite set shrinks to true containers. The key
-        # collect is one small job against the cache, spent only when
-        # more than one file survived range pruning; large overlap sets
-        # probe executor-side so wall-time stays flat with file count.
-        n_overlap = sum(len(v) for v in overlap_by_part.values())
-        if probe_keys and n_src > 0 and n_overlap > 1:
-            from .bloom import MEMBERSHIP_SPARK_THRESHOLD, membership_filter, membership_filter_spark
-
-            with REGISTRY.timer("merge.bloomProbe"):
-                # key set came back with the planning aggregate — the
-                # probe itself is sidecar reads only, no extra Spark job
-                # below the executor-side threshold
-                flat = [f for v in overlap_by_part.values() for f in v]
-                abs_paths = [os.path.join(self.table.dir, f) for f in flat]
-                if len(flat) > MEMBERSHIP_SPARK_THRESHOLD:
-                    kept = membership_filter_spark(self.table.spark, abs_paths, probe_keys)
-                else:
-                    kept = membership_filter(abs_paths, probe_keys)
-            keep = dict(zip(flat, kept))
-            overlap_by_part = {
-                k: [f for f in v if keep[f]] for k, v in overlap_by_part.items()
-            }
 
         # ---- affected partitions (driver-side partition pruning) ----
         # Both sides of the membership test go through ONE canonical
@@ -1834,7 +1673,6 @@ class LakeWriter:
             # unpartitioned or tiny manifest → every overlapping file
             rewrite_files = [f for v in overlap_by_part.values() for f in v]
 
-        rewrite_set = set(rewrite_files)
         target = self._read_files(manifest, rewrite_files)
         # Conform the target side to the evolved schema too: null-fill
         # added columns, cast widened ones; keep system/partition columns.
@@ -1931,13 +1769,13 @@ class LakeWriter:
                     )
                 # keep every file that was not rewritten (including
                 # non-overlapping files inside affected partitions)
-                merged_files, stats = _replace_files(
-                    manifest, rewrite_set, new_files, new_stats
+                nm = self._commit_next(
+                    manifest, "MERGE", final_logical,
+                    **manifest.replace_files(rewrite_files, new_files, new_stats),
                 )
-                self._commit_next(manifest, merged_files, final_logical, stats, op="MERGE")
         finally:
             raw.unpersist()
-        self._maybe_auto_compact(merged_files, stats)
+        self._maybe_auto_compact(nm)
         return True
 
     def _merge_mor_once(
@@ -1994,56 +1832,14 @@ class LakeWriter:
             live = live.drop(*keep_extra)
         live = with_partition_columns(live, exprs).cache()
 
-        # ---- the ONE planning job (bounds + count + bloom keys) ----
+        # ---- the ONE planning job + overlap prune ----
         probe = live.select(F.col(pk0).alias("__k"))
         if dead_keys is not None:
             probe = probe.unionByName(dead_keys.select(F.col(pk0).alias("__k")))
         try:
-            with REGISTRY.timer("merge.planAgg"):
-                row = probe.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.min("__k").alias("lo"),
-                    F.max("__k").alias("hi"),
-                    F.slice(
-                        F.collect_set("__k"), 1, MERGE_BLOOM_PROBE_KEYS + 1
-                    ).alias("ks"),
-                    F.count(F.when(F.col("__k").isNull(), 1)).alias("null_keys"),
-                ).collect()[0]
-            n_src = row["n"]
+            n_src, _, overlap_by_part = self._plan_merge(manifest, probe, [])
             if n_src == 0:
                 return True  # empty batch: no commit
-            bounds = {"lo": row["lo"], "hi": row["hi"]}
-            probe_keys = list(row["ks"] or [])
-            if row["null_keys"] or len(probe_keys) > MERGE_BLOOM_PROBE_KEYS:
-                probe_keys = None
-
-            # ---- overlap files: pk-range stats + Bloom sidecars ----
-            overlap_by_part = {
-                k: [f for f in v if _overlaps(manifest.file_stats.get(f), bounds, pk0)]
-                for k, v in manifest.files.items()
-            }
-            n_overlap = sum(len(v) for v in overlap_by_part.values())
-            if probe_keys and n_overlap > 1:
-                from .bloom import (
-                    MEMBERSHIP_SPARK_THRESHOLD,
-                    membership_filter,
-                    membership_filter_spark,
-                )
-
-                with REGISTRY.timer("merge.bloomProbe"):
-                    flat = [f for v in overlap_by_part.values() for f in v]
-                    abs_paths = [os.path.join(self.table.dir, f) for f in flat]
-                    if len(flat) > MEMBERSHIP_SPARK_THRESHOLD:
-                        kept = membership_filter_spark(
-                            self.table.spark, abs_paths, probe_keys
-                        )
-                    else:
-                        kept = membership_filter(abs_paths, probe_keys)
-                keep = dict(zip(flat, kept))
-                overlap_by_part = {
-                    k: [f for f in v if keep[f]]
-                    for k, v in overlap_by_part.items()
-                }
             overlap = [f for v in overlap_by_part.values() for f in v]
 
             # ---- post-image composition ----
@@ -2095,10 +1891,6 @@ class LakeWriter:
                         out, v, layout="range",
                         range_split=(list(self.pk), n_out), manifest=manifest,
                     )
-                files = {k: list(paths) for k, paths in manifest.files.items()}
-                for k, paths in new_files.items():
-                    files.setdefault(k, []).extend(paths)
-                stats = {**manifest.file_stats, **new_stats}
                 seq_map, deletes = mor_state(manifest)
                 for paths in new_files.values():
                     for f in paths:
@@ -2121,8 +1913,9 @@ class LakeWriter:
                         deletes = {**deletes, tomb_rel: tomb_meta}
                 REGISTRY.inc("merge.morCommits")
                 self._commit_next(
-                    manifest, files, final_logical, stats, op="MERGE(MOR)",
-                    extra_props={"mor": {"seq": seq_map, "deletes": deletes}},
+                    manifest, "MERGE(MOR)", final_logical,
+                    {"mor": {"seq": seq_map, "deletes": deletes}},
+                    **manifest.replace_files((), new_files, new_stats),
                 )
         finally:
             live.unpersist()
@@ -2173,7 +1966,7 @@ class LakeWriter:
 
         Returns True (committed), False (version conflict → replan) or
         None (declined → the pruning executor runs). Every decline is
-        named and counted by :func:`_arrow_fallback`. Errors
+        named and counted by :func:`_fallback`. Errors
         at or after the table lock propagate: the commit itself refused,
         and re-running the merge on Spark would only repeat the refusal."""
         import time
@@ -2185,7 +1978,6 @@ class LakeWriter:
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        from .relation_cache import local_plan_arrow
         from .table import _bloom_column, _stats_columns
 
         out_cols = _out_cols(final_logical, part_cols)
@@ -2258,27 +2050,14 @@ class LakeWriter:
                     np.arange(len(files)), [t.num_rows for t in tables]
                 )
 
-            with REGISTRY.timer("merge.arrowBatchEval"):
-                # zero-job eval when the batch folded to a LocalRelation;
-                # else coalesce: a small batch often arrives in 32 map
-                # partitions, and collecting 32 near-empty Arrow streams
-                # is pure task-scheduling overhead (~70→30 ms for 10k
-                # rows). coalesce merges ADJACENT partitions, so the
-                # concat order (the arrival order below) is unchanged.
-                # Gated on the optimizer's size estimate: coalescing a
-                # COMPUTE-heavy batch (e.g. a JSON-decode pipeline) would
-                # serialize that compute onto 4 cores.
-                batch = local_plan_arrow(raw)
-                if batch is None:
-                    small = _est_plan_bytes(raw) <= EVAL_COALESCE_MAX_BYTES
-                    batch = (raw.coalesce(4) if small else raw).toArrow()
+            batch = _eval_arrow(raw, "merge.arrowBatchEval")
 
             dead = None
             if tombstone_col:
                 dead = pc.fill_null(batch.column(tombstone_col), False)
             n_t = target.num_rows if target is not None else 0
             if (target.nbytes if n_t else 0) + batch.nbytes > ARROW_MERGE_MAX_BYTES:
-                return _arrow_fallback("size_cap")
+                return _fallback("merge.arrowFallback", "size_cap")
 
             # ---- align the batch to the same schema ----
             bt = pa.table(
@@ -2293,7 +2072,7 @@ class LakeWriter:
             combined = pa.concat_tables([target, bt]) if n_t else bt
             n_b = bt.num_rows
             if any(combined.column(k).null_count for k in pk):
-                return _arrow_fallback("null_pk")  # window null-group semantics
+                return _fallback("merge.arrowFallback", "null_pk")  # window null-group semantics
 
             # ---- winner selection (the row_number window, in pandas) ----
             key_df = combined.select(pk).to_pandas()
@@ -2305,7 +2084,7 @@ class LakeWriter:
 
             t_index = keys_of(key_df.iloc[:n_t])
             if not t_index.is_unique:
-                return _arrow_fallback("dup_target_keys")
+                return _fallback("merge.arrowFallback", "dup_target_keys")
             key_df["__pri"] = np.repeat(np.array([0, 1], dtype="int8"), [n_t, n_b])
 
             def batch_only(series: "pd.Series") -> "pd.Series":
@@ -2321,14 +2100,14 @@ class LakeWriter:
                 st = batch.column(order_col)
                 o_pd = pc.struct_field(st, "o").to_pandas()
                 if o_pd.dtype == object:
-                    return _arrow_fallback("unsortable_order")
+                    return _fallback("merge.arrowFallback", "unsortable_order")
                 key_df["__s"] = batch_only(pc.struct_field(st, "s").to_pandas())
                 key_df["__o"] = batch_only(o_pd)
                 sort_cols += ["__s", "__o"]
             elif order_col:
                 o_pd = combined.column(order_col).to_pandas()
                 if o_pd.dtype == object:
-                    return _arrow_fallback("unsortable_order")
+                    return _fallback("merge.arrowFallback", "unsortable_order")
                 key_df["__ord"] = o_pd
                 sort_cols.append("__ord")
             # arrival order within the batch (monotonically_increasing_id
@@ -2404,7 +2183,7 @@ class LakeWriter:
             # overestimate parquet — errs toward fewer, larger files).
             groups, reason = _partition_dirs(out_tbl, exprs, manifest.files)
             if reason:
-                return _arrow_fallback(reason)
+                return _fallback("merge.arrowFallback", reason)
             parts = {}
             for key, rows in groups.items():
                 part = out_tbl if len(groups) == 1 else out_tbl.take(rows)
@@ -2434,7 +2213,7 @@ class LakeWriter:
                 + [np.full(t.num_rows, len(files) + j) for j, t in enumerate(slices)]
             )
         except Exception:
-            return _arrow_fallback("error")
+            return _fallback("merge.arrowFallback", "error")
 
         # ---- write + commit (same protocol as the Spark path) ----
         with self.table.lock():
@@ -2445,15 +2224,17 @@ class LakeWriter:
                 new_files, new_stats = self._write_arrow_files(
                     manifest, parts, stat_cols, bloom_col
                 )
-            merged_files, stats = _replace_files(
-                manifest, {f for f, k in zip(files, kept_file) if not k},
-                new_files, new_stats,
+            nm = self._commit_next(
+                manifest, "MERGE", final_logical,
+                **manifest.replace_files(
+                    [f for f, k in zip(files, kept_file) if not k],
+                    new_files, new_stats,
+                ),
             )
-            self._commit_next(manifest, merged_files, final_logical, stats, op="MERGE")
         if len(_ARROW_TARGET_CACHE) >= 4:
             _ARROW_TARGET_CACHE.clear()
         if next_tbl is not None:
-            next_files = [f for v in merged_files.values() for f in v]
+            next_files = nm.all_files()
             pos = {f: i for i, f in enumerate(next_files)}
             written = [f for v in new_files.values() for f in v]
             remap = np.array([pos.get(f, -1) for f in files + written])
@@ -2461,7 +2242,7 @@ class LakeWriter:
                 manifest.version + 1, next_files, next_tbl, remap[slot],
             )
         # insert-only dirs gained a file
-        self._maybe_auto_compact(merged_files, stats)
+        self._maybe_auto_compact(nm)
         return True
 
     # ---------- internals ----------
@@ -2531,38 +2312,27 @@ class LakeWriter:
     def _commit_next(
         self,
         manifest: Manifest,
-        files: dict[str, list[str]],
-        final_logical: T.StructType,
-        file_stats: dict | None = None,
-        op: str = "WRITE",
+        op: str,
+        final_logical: T.StructType | None = None,
         extra_props: dict | None = None,
-    ) -> None:
-        fields = [f for f in final_logical.fields if f.name != INSERTED_AT]
-        fields.append(T.StructField(INSERTED_AT, T.TimestampType(), True))
-        props = dict(manifest.props)
-        if self.extra_commit_props:
-            props.update(self.extra_commit_props)
-        if extra_props:
-            props.update(extra_props)
-        props["last_op"] = op  # history()/DESCRIBE-HISTORY lineage
+        **changes,
+    ) -> Manifest:
+        """Commit a write's successor of ``manifest`` and return it: the
+        writer's ``extra_commit_props``, ``extra_props`` and the
+        in-flight txn marker join the carried props, and
+        ``final_logical`` (the batch-evolved schema) becomes the schema
+        with ``_inserted_at`` last."""
+        props = {**manifest.props, **self.extra_commit_props, **(extra_props or {})}
         if self._txn is not None:
             app, epoch = self._txn
-            txns = dict(props.get("txns", {}))
-            txns[str(app)] = int(epoch)
-            props["txns"] = txns
-        self.table._commit(
-            Manifest(
-                version=manifest.version + 1,
-                schema=T.StructType(fields),
-                pk=manifest.pk or self.pk,
-                partition_spec=manifest.partition_spec,
-                files=files,
-                parent=manifest.version,
-                props=props,
-                file_stats=file_stats if file_stats is not None else manifest.file_stats,
-            ),
-            parent_manifest=manifest,
-        )
+            props["txns"] = {**props.get("txns", {}), str(app): int(epoch)}
+        if final_logical is not None:
+            fields = [f for f in final_logical.fields if f.name != INSERTED_AT]
+            fields.append(T.StructField(INSERTED_AT, T.TimestampType(), True))
+            changes["schema"] = T.StructType(fields)
+        nm = manifest.successor(op, props=props, pk=manifest.pk or self.pk, **changes)
+        self.table._commit(nm, parent_manifest=manifest)
+        return nm
 
     def _read_files(self, manifest: Manifest, rel_files: list[str]) -> DataFrame:
         """Read an explicit file list under the manifest's read schema,
@@ -2578,8 +2348,21 @@ class LakeWriter:
 
 def _logical_schema_of_batch(df: DataFrame, manifest: Manifest) -> T.StructType:
     """Reconcile the incoming batch's logical schema against the stored
-    schema → final (possibly evolved) logical schema. Raises on
-    incompatible evolution (caller DLQs)."""
+    schema → final (possibly evolved) logical schema. Raises
+    ReconcileError (the caller DLQs) on incompatible evolution, and on
+    an added column named like a renamed column's physical name: the
+    files already hold a column of that name, so the two would
+    collide."""
     incoming = _logical_schema_of(df)
     existing = T.StructType([f for f in manifest.schema.fields if f.name != INSERTED_AT])
-    return plan_evolution(existing, incoming).final_schema
+    plan = plan_evolution(existing, incoming)
+    renamed = {p: l for l, p in manifest.column_renames.items()}
+    for f in plan.add_columns:
+        if f.name in renamed:
+            raise ReconcileError(
+                f"cannot add column '{f.name}': it is the physical name of "
+                f"renamed column '{renamed[f.name]}'",
+                field=f.name,
+                incoming=f.dataType,
+            )
+    return plan.final_schema

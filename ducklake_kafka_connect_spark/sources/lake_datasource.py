@@ -951,8 +951,6 @@ class _WriterBase:
 
     # -- driver side --
     def _commit_files(self, messages, overwrite: bool, txn=None) -> None:
-        from ..lake.table import Manifest
-
         t = _open_table(
             {"path": self.root, "table": self.name, "backend": self.backend_name}
         )
@@ -1029,21 +1027,13 @@ class _WriterBase:
                     f"(floor: the longest micro-batch duration) and restart "
                     f"the stream to replay this epoch"
                 )
-            if overwrite:
-                files = {}
-                for key, rel in entries:
-                    files.setdefault(key, []).append(rel)
-                file_stats = dict(stats)
-                op = "SINK_OVERWRITE"
-            else:
-                if not entries:
-                    return  # empty append: no new version
-                files = {k: list(v) for k, v in m.files.items()}
-                for key, rel in entries:
-                    files.setdefault(key, []).append(rel)
-                file_stats = {**m.file_stats, **stats}
-                op = "SINK_APPEND"
-            props = {**m.props, "last_op": op}
+            if not (overwrite or entries):
+                return  # empty append: no new version
+            added: dict = {}
+            for key, rel in entries:
+                added.setdefault(key, []).append(rel)
+            op = "SINK_OVERWRITE" if overwrite else "SINK_APPEND"
+            props = dict(m.props)
             if self.merge_keys:
                 # epoch = one merge-on-read MERGE: delta files stamped
                 # with this version, per-task tombstones suppress older
@@ -1057,20 +1047,12 @@ class _WriterBase:
                 for rel, meta in tombs:
                     deletes[rel] = {"seq": v, **meta}
                 props["mor"] = {"seq": seq_map, "deletes": deletes}
-                props["last_op"] = op = "SINK_MERGE(MOR)"
+                op = "SINK_MERGE(MOR)"
             if txn is not None:
                 props["txns"] = {**m.props.get("txns", {}), txn[0]: int(txn[1])}
+            drop = m.all_files() if overwrite else ()
             t._commit(
-                Manifest(
-                    version=m.version + 1,
-                    schema=m.schema,
-                    pk=m.pk,
-                    partition_spec=m.partition_spec,
-                    files=files,
-                    parent=m.version,
-                    props=props,
-                    file_stats=file_stats,
-                ),
+                m.successor(op, props=props, **m.replace_files(drop, added, stats)),
                 parent_manifest=m,
             )
         if self.merge_keys:

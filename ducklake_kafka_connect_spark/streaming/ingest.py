@@ -632,14 +632,13 @@ class IngestPipeline:
         appended concurrently (files newer than the snapshot) are
         untouched and a crash can never lose residuals to a
         delete-then-append window."""
-        from ..lake.table import Manifest
         from ..metrics import REGISTRY
         from ..sources.json_decode import conflict_note
 
         with REGISTRY.timer("dlqReprocess"):
-            return self._reprocess_dlq(table, Manifest, conflict_note)
+            return self._reprocess_dlq(table, conflict_note)
 
-    def _reprocess_dlq(self, table: str, Manifest, conflict_note) -> dict:
+    def _reprocess_dlq(self, table: str, conflict_note) -> dict:
         dlq_t = self.catalog.table(f"{table}{self.config.dlq_suffix}")
         out = {"attempted": 0, "landed": 0, "residual": 0}
         if not dlq_t.exists():
@@ -720,27 +719,10 @@ class IngestPipeline:
                         prepared, latest.version + 1, layout="rebalance",
                         manifest=latest,
                     )
-                files = {
-                    k: [f for f in v if f not in drop]
-                    for k, v in latest.files.items()
-                }
-                files = {k: v for k, v in files.items() if v}
-                for k, v in new_files.items():
-                    files.setdefault(k, []).extend(v)
-                fstats = {
-                    f: s for f, s in latest.file_stats.items() if f not in drop
-                }
-                fstats.update(new_stats)
                 dlq_t._commit(
-                    Manifest(
-                        version=latest.version + 1,
-                        schema=latest.schema,
-                        pk=latest.pk,
-                        partition_spec=latest.partition_spec,
-                        files=files,
-                        parent=latest.version,
-                        props={**latest.props, "last_op": "DLQ_REPROCESS"},
-                        file_stats=fstats,
+                    latest.successor(
+                        "DLQ_REPROCESS",
+                        **latest.replace_files(drop, new_files, new_stats),
                     ),
                     parent_manifest=latest,
                 )

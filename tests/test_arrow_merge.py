@@ -282,14 +282,13 @@ def test_harvest_skips_are_counted(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Arrow small-APPEND fast path (lake/writer.py ``_append_small_arrow``)
+# Arrow small-APPEND shape (lake/writer.py ``LakeWriter._append_locked``)
 # ---------------------------------------------------------------------------
 
 
 def _append_spark_only(monkeypatch):
-    monkeypatch.setattr(
-        wmod.LakeWriter, "_append_small_arrow", lambda self, *a, **k: False
-    )
+    # every batch is over the driver-side cap → Spark-written files
+    monkeypatch.setattr(wmod.LakeWriter, "ARROW_APPEND_MAX_BYTES", -1)
 
 
 def test_arrow_append_matches_spark_append(spark, tmp_path, monkeypatch):
@@ -572,26 +571,3 @@ def test_arrow_append_error_is_a_named_fallback(spark, lake, monkeypatch):
     w.append(spark.range(10, 15).select(F.col("id"), F.lit("b").alias("name")))
     assert _append_fallbacks("error") == (total0 + 1, named0 + 1)
     assert cat.table("t").read().count() == 15
-
-
-def test_arrow_append_rename_race_is_a_named_fallback(spark, lake, monkeypatch):
-    """A RENAME COLUMN that lands between planning and the Arrow append's
-    commit is counted as ``append.arrowFallback.column_renames``."""
-    cat = LakeCatalog(spark, lake)
-    t = cat.table("t")
-    w = LakeWriter(t, pk=["id"])
-    w.append(spark.range(10).select(
-        F.col("id"), F.lit("a").alias("name"), F.lit("n").alias("note")
-    ))
-    split = wmod._partition_dirs
-
-    def rename_then_split(*a, **k):
-        t.rename_column("note", "memo")  # the concurrent DDL
-        return split(*a, **k)
-
-    monkeypatch.setattr(wmod, "_partition_dirs", rename_then_split)
-    total0, named0 = _append_fallbacks("column_renames")
-    w.append(spark.range(10, 15).select(F.col("id"), F.lit("b").alias("name")))
-    assert _append_fallbacks("column_renames") == (total0 + 1, named0 + 1)
-    got = {r["id"]: (r["name"], r["memo"]) for r in t.read().collect()}
-    assert got[0] == ("a", "n") and got[12] == ("b", None) and len(got) == 15

@@ -287,3 +287,101 @@ class TestPredicateOpsAfterRename:
         for f in _data_files(t):
             names = pq.read_schema(os.path.join(t.dir, f)).names
             assert "score" in names and "points" not in names
+
+
+class TestPhysicalNameRefusal:
+    """A batch column named like a renamed column's physical name would
+    add a second column of that name inside the files. Schema planning
+    refuses it as a ReconcileError (the ingest path's DLQ signal), before
+    and after the rename alike, and commits nothing."""
+
+    @staticmethod
+    def _stale(spark, lo, hi):
+        # the pre-rename shape: still calls `points` by its old name
+        return spark.range(lo, hi).select(
+            F.col("id").alias("pk"),
+            F.lit("0").alias("grp"),
+            (F.col("id") * 10).alias("score"),
+            F.lit("new").alias("who"),
+        )
+
+    def _assert_refused(self, t, v):
+        assert t.current_version() == v
+        out = t.read()
+        assert out.count() == 60 and "score" not in out.columns
+
+    def test_append_refused(self, spark, tmp_path):
+        from ducklake_kafka_connect_spark.schema.reconcile import ReconcileError
+
+        t, _ = _mk(spark, str(tmp_path))
+        t.rename_column("score", "points")
+        v = t.current_version()
+        with pytest.raises(ReconcileError, match="physical name") as e:
+            LakeWriter(t, pk=[]).append(self._stale(spark, 100, 110))
+        assert e.value.field == "score"
+        self._assert_refused(t, v)
+
+    def test_merge_refused(self, spark, tmp_path):
+        from ducklake_kafka_connect_spark.schema.reconcile import ReconcileError
+
+        t, _ = _mk(spark, str(tmp_path))
+        t.rename_column("score", "points")
+        v = t.current_version()
+        with pytest.raises(ReconcileError, match="physical name"):
+            LakeWriter(t, pk=["pk"]).write(self._stale(spark, 50, 70))
+        self._assert_refused(t, v)
+
+    def test_merge_refused_when_rename_lands_mid_merge(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The rename lands between the merge's planning and its commit
+        (inside the Arrow executor's partition split): the commit sees
+        the moved tip, replans, and the replan refuses the batch."""
+        from ducklake_kafka_connect_spark.lake import writer as wmod
+        from ducklake_kafka_connect_spark.schema.reconcile import ReconcileError
+
+        t, _ = _mk(spark, str(tmp_path))
+        split = wmod._partition_dirs
+        renamed = []
+
+        def rename_then_split(*a, **k):
+            if not renamed:
+                t.rename_column("score", "points")  # the concurrent DDL
+                renamed.append(True)
+            return split(*a, **k)
+
+        monkeypatch.setattr(wmod, "_partition_dirs", rename_then_split)
+        v = t.current_version()
+        with pytest.raises(ReconcileError, match="physical name"):
+            LakeWriter(t, pk=["pk"]).write(self._stale(spark, 50, 70))
+        assert renamed
+        self._assert_refused(t, v + 1)
+
+    def test_ingest_batch_lands_in_the_dlq(self, spark, tmp_path):
+        from ducklake_kafka_connect_spark.lake import LakeCatalog
+        from ducklake_kafka_connect_spark.streaming.ingest import (
+            IngestConfig,
+            IngestPipeline,
+            TableSpec,
+        )
+
+        cat = LakeCatalog(spark, str(tmp_path / "lake"))
+        pipe = IngestPipeline(cat, IngestConfig(
+            topic2table={"t1": "orders"},
+            tables={"orders": TableSpec(id_columns=["id"], auto_create=True)},
+        ))
+
+        def batch(payloads):
+            return spark.createDataFrame(
+                [("t1", 0, i, bytearray(p.encode())) for i, p in enumerate(payloads)],
+                "topic string, partition int, offset long, value binary",
+            )
+
+        pipe.process_batch(batch(['{"id": 1, "qty": 5}', '{"id": 2, "qty": 6}']))
+        cat.table("orders").rename_column("qty", "amount")
+        pipe.process_batch(batch(['{"id": 3, "qty": 7}']))
+        rows = cat.table("orders").read()
+        assert sorted((r["id"], r["amount"]) for r in rows.collect()) == [(1, 5), (2, 6)]
+        dlq = cat.table("orders_dlq").read().collect()
+        assert len(dlq) == 1 and "physical name" in dlq[0]["error"]
+        assert '"qty":7' in dlq[0]["raw_value"].replace(" ", "")
