@@ -170,17 +170,19 @@ def _canon_str(s: str) -> str:
 
 
 def canon_partition_token(token: str | None) -> str | None:
-    """Hive directory token → canonical string (None for the null marker)."""
-    if token is None or token == HIVE_NULL:
+    """Hive directory token → canonical string (None for the null marker
+    and for an empty token, which older sink versions wrote for ``""``)."""
+    if not token or token == HIVE_NULL:
         return None
     return _canon_str(_unescape_hive(token))
 
 
 def canon_partition_value(v) -> str | None:
-    """Python partition value (from Row) → canonical string (None for null)."""
+    """Python partition value (from Row) → canonical string (None for
+    null and for ``""``: Spark writes both to the null marker's dir)."""
     import datetime
 
-    if v is None:
+    if v is None or v == "":
         return None
     if isinstance(v, bool):
         return "true" if v else "false"

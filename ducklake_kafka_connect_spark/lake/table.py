@@ -2583,19 +2583,21 @@ def _harvest_one(
     return s, bool(bloom_col) and not _write_bloom_sidecar(pf, abs_path, bloom_col)
 
 
-def _count_harvest(results) -> dict:
+def _count_harvest(results, counts=None) -> dict:
     """{rel: stats} from (rel, stats, bloom_skipped) harvest results.
     A file with no stats is never pruned — and prices at the Arrow
     merge's byte cap — so each is counted (``write.harvestSkip``), as is
-    each missing Bloom sidecar (``write.bloomSkip``)."""
+    each missing Bloom sidecar (``write.bloomSkip``): in ``counts`` (a
+    Counter an executor task ships to the driver), else in REGISTRY."""
     out = {}
+    inc = REGISTRY.inc if counts is None else lambda n: counts.update((n,))
     for rel, s, bloom_skipped in results:
         if s:
             out[rel] = s
         else:
-            REGISTRY.inc("write.harvestSkip")
+            inc("write.harvestSkip")
         if bloom_skipped:
-            REGISTRY.inc("write.bloomSkip")
+            inc("write.bloomSkip")
     return out
 
 
@@ -2656,19 +2658,11 @@ def _normalize_stat(lo, hi):
     return [lo, hi]
 
 
-def _footer_stats(path: str, columns: list[str]) -> dict:
-    """{column: [min, max(, null_count)]} from parquet row-group footer
-    statistics (no data pages read); columns with absent stats are
-    omitted, all-NULL columns keep a null-count-only entry."""
-    try:
-        import pyarrow.parquet as pq
-
-        return _footer_stats_of(pq.ParquetFile(path), columns)
-    except Exception:
-        return {}
-
-
 def _footer_stats_of(f, columns: list[str]) -> dict:
+    """{column: [min, max(, null_count)]} from parquet row-group footer
+    statistics of the open ParquetFile ``f`` (no data pages read);
+    columns with absent stats are omitted, all-NULL columns keep a
+    null-count-only entry."""
     try:
         out: dict = {"__rows": f.metadata.num_rows}
     except Exception:

@@ -37,7 +37,11 @@ commit shape:
   fits the limit but overflows the buffer lands with it
   (``FLUSH_INLINED``);
 - **Spark-written files** for a batch over the cap, and for Arrow-held
-  rows the driver cannot write (``append.arrowFallback.<reason>``).
+  rows whose driver write failed (``append.arrowFallback.error``).
+
+Both Arrow executors name partition dirs and write files through
+``lake/arrow_files.py`` — the writer the ``ducklake`` sink's tasks use
+too — so their dirs are the ones Spark's ``partitionBy`` would name.
 
 Every commit builds its successor manifest with ``Manifest.successor``
 and its file set with ``Manifest.replace_files``.
@@ -79,6 +83,7 @@ from pyspark.sql import types as T
 
 from ..metrics import REGISTRY
 from ..schema.reconcile import INSERTED_AT, ReconcileError, plan_evolution
+from .arrow_files import StagedFiles, _arrow_write_schema, _thread_map, dir_groups
 from .partitioning import (
     canon_partition_value,
     dir_key_to_canon_tuple,
@@ -302,29 +307,6 @@ def _buffer_schema(manifest: Manifest):
     return to_arrow_schema(st, timestamp_utc=True)
 
 
-def _arrow_write_schema(schema, nullable: bool = False):
-    """Arrow schema the driver-side writers emit: timestamps as MICROS —
-    Spark reads TIMESTAMP (MICROS) everywhere, and a ns column (INT96
-    files surface as ns in Arrow) written back as nanos would not
-    round-trip through the engine's reader. ``nullable`` relaxes every
-    field, so NULLs from a batch fit a column the target file declared
-    NOT NULL."""
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            pa.field(
-                f.name,
-                pa.timestamp("us", tz=f.type.tz)
-                if pa.types.is_timestamp(f.type)
-                else f.type,
-                nullable or f.nullable,
-            )
-            for f in schema
-        ]
-    )
-
-
 def _fallback(counter: str, reason: str) -> None:
     """Count a named decline of a driver-side Arrow executor taken after
     its batch was evaluated, as ``counter`` and ``counter.<reason>``:
@@ -379,85 +361,6 @@ def _arrow_merge_skip(manifest: Manifest) -> str | None:
         # the visibility-applying read of the pruning executor
         return "mor_state"
     return None
-
-
-_SIMPLE_TOKEN = re.compile(r"^[A-Za-z0-9._-]+$")
-
-
-def _partition_dirs(tbl, exprs, existing) -> "tuple[dict | None, str | None]":
-    """Rows of ``tbl`` grouped by the partition dir they belong in →
-    ({dir_key: row indices}, None). A row whose partition already has a
-    dir among ``existing`` keys (matched canonically) lands in it; a new
-    dir is named the way Spark's ``partitionBy`` names it. Tokens are
-    computed once per distinct partition tuple. Returns
-    (None, "partition_token") when a new dir's token would be null or
-    need Hive escaping — only Spark's writer names those."""
-    import numpy as np
-    import pyarrow as pa
-
-    if not exprs:
-        return ({"": pa.array(np.arange(tbl.num_rows))} if tbl.num_rows else {}), None
-    cols = [e.output_name for e in exprs]
-    known: dict = {}
-    for k in existing:
-        known.setdefault(dir_key_to_canon_tuple(k, exprs), k)
-    grouped = (
-        tbl.select(cols)
-        .append_column("__row", pa.array(np.arange(tbl.num_rows)))
-        .group_by(cols, use_threads=False)
-        .aggregate([("__row", "list")])
-    )
-    dirs: dict = {}
-    values = zip(*(grouped.column(c).to_pylist() for c in cols))
-    for vals, rows in zip(values, grouped.column("__row_list")):
-        canon = tuple(canon_partition_value(v) for v in vals)
-        key = known.get(canon)
-        if key is None:
-            toks = [v if isinstance(v, str) else c for v, c in zip(vals, canon)]
-            if any(t is None or not _SIMPLE_TOKEN.match(t) for t in toks):
-                return None, "partition_token"
-            key = "/".join(f"{e.dir_name}={t}" for e, t in zip(exprs, toks))
-        dirs.setdefault(key, []).append(rows.values)
-    return {k: pa.concat_arrays(v) for k, v in dirs.items()}, None
-
-
-def _thread_map(fn, items: list) -> list:
-    """``map`` over ``items``, on threads when there is more than one
-    (parquet encode and decode release the GIL)."""
-    if len(items) <= 1:
-        return [fn(x) for x in items]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(8, len(items))) as ex:
-        return list(ex.map(fn, items))
-
-
-def _dictionary_columns(tbl) -> list[str]:
-    """Parquet leaf paths worth dictionary-encoding in ``tbl``: a flat
-    column whose distinct count is at most half its rows (parquet-mr's
-    fallback keeps unique columns PLAIN, which pyarrow would otherwise
-    dictionary-encode at a loss), and every nested leaf (the default)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def leaves(path, t):  # pyarrow's parquet names for nested leaves
-        if pa.types.is_struct(t):
-            kids = [(f.name, f.type) for f in t]
-        elif pa.types.is_map(t):
-            kids = [("key_value.key", t.key_type), ("key_value.value", t.item_type)]
-        elif pa.types.is_list(t) or pa.types.is_large_list(t):
-            kids = [("list.element", t.value_type)]
-        else:
-            return [path]
-        return [p for n, k in kids for p in leaves(f"{path}.{n}", k)]
-
-    return [
-        p
-        for f in tbl.schema
-        if pa.types.is_nested(f.type)
-        or pc.count_distinct(tbl.column(f.name)).as_py() <= tbl.num_rows // 2
-        for p in leaves(f.name, f.type)
-    ]
 
 
 def _qcol(name: str) -> Column:
@@ -1141,9 +1044,9 @@ class LakeWriter:
           the pending buffer prepended when the batch fits the limit but
           overflows the buffer (``FLUSH_INLINED``, buffer emptied);
         - Spark-written files of ``out``, when the batch was over the
-          cap (``batch`` None). Arrow-held rows whose partition token
-          needs Hive escaping, or whose driver write fails, are written
-          by Spark too, each a named ``append.arrowFallback.<reason>``.
+          cap (``batch`` None). Arrow-held rows whose driver write fails
+          are written by Spark too, a counted
+          ``append.arrowFallback.error``.
 
         ``df`` None flushes the buffer alone (:meth:`flush_inlined` and
         the flush-first rewrites); that commit carries neither the txn
@@ -1184,23 +1087,16 @@ class LakeWriter:
         new_files = None
         with REGISTRY.timer("append.inlineFlush") if flush else contextlib.nullcontext():
             if rows is not None:
-                groups, reason = _partition_dirs(rows, tip.partition_exprs, tip.files)
-                if reason:
-                    _fallback("append.arrowFallback", reason)
-                else:
-                    parts = {
-                        k: [rows if len(groups) == 1 else rows.take(idx)]
-                        for k, idx in groups.items()
-                    }
-                    try:
-                        st = from_arrow_schema(rows.schema)
-                        with REGISTRY.timer("append.arrowWrite"):
-                            new_files, new_stats = self._write_arrow_files(
-                                tip, parts, _stats_columns(st, tip.pk),
-                                _bloom_column(st, tip.pk),
-                            )
-                    except Exception:
-                        _fallback("append.arrowFallback", "error")
+                try:
+                    groups = dir_groups(rows, tip.partition_exprs, tip.files)
+                    parts = {k: [t] for k, t in groups.items()}
+                    st = from_arrow_schema(rows.schema)
+                    with REGISTRY.timer("append.arrowWrite"):
+                        new_files, new_stats = self._staged(
+                            tip, _stats_columns(st, tip.pk), _bloom_column(st, tip.pk)
+                        ).write(parts)
+                except Exception:
+                    _fallback("append.arrowFallback", "error")
             if new_files is None:
                 frame = out if rows is None else self.table.spark.createDataFrame(rows)
                 new_files, new_stats = self.table.write_data_files(
@@ -1218,69 +1114,16 @@ class LakeWriter:
                 return nm
             return self._commit_next(tip, op, schema, extra, **files)
 
-    def _write_arrow_files(
-        self,
-        manifest: Manifest,
-        parts: "dict[str, list]",
-        stat_cols: list[str],
-        bloom_col: str | None,
-    ) -> tuple[dict[str, list[str]], dict]:
-        """Driver-side parquet writer shared by the Arrow append and the
-        Arrow merge. ``parts`` maps a partition dir key to the Arrow
-        tables (logical column names) to write there, one file each,
-        staged under version ``manifest.version + 1``. Each file is cast
-        to micro timestamps, renamed to PHYSICAL column names (the write
-        boundary of metadata-only RENAME COLUMN; zero-copy), written and
-        its footer stats harvested — threaded when there is more than one
-        file. Only columns where it pays are dictionary-encoded
-        (:func:`_dictionary_columns`). Returns
-        ({part_key: [rel_file]}, {rel_file: stats under LOGICAL names})."""
+    def _staged(self, manifest: Manifest, stat_cols, bloom_col) -> StagedFiles:
+        """The Arrow writer of the files ``manifest``'s successor adds,
+        staged under ``data/s<next version>-<uuid>/``."""
         import uuid
 
-        import pyarrow.parquet as pq
-
-        from .table import _count_harvest, _harvest_one
-
-        ren = manifest.column_renames
-        inv_ren = {p: l for l, p in ren.items()}
-        stat_cols = [ren.get(c, c) for c in stat_cols]
-        bloom_col = ren.get(bloom_col, bloom_col) if bloom_col else None
-        codec = manifest.props.get("tblproperties", {}).get(
-            "write.compression", "snappy"
+        stage = os.path.join("data", f"s{manifest.version + 1}-{uuid.uuid4().hex[:8]}")
+        return StagedFiles(
+            self.table.dir, stage, manifest.props.get("tblproperties", {}),
+            manifest.column_renames, stat_cols, bloom_col,
         )
-        stage_rel = os.path.join(
-            "data", f"s{manifest.version + 1}-{uuid.uuid4().hex[:8]}"
-        )
-        files: dict[str, list[str]] = {}
-        jobs = []
-        for part_key, tables in parts.items():
-            rel_dir = os.path.join(stage_rel, part_key) if part_key else stage_rel
-            self.table.fs.ensure_dir(os.path.join(self.table.dir, rel_dir))
-            for tbl in tables:
-                rel = os.path.join(
-                    rel_dir, f"part-{len(jobs):05d}-{uuid.uuid4().hex[:8]}.parquet"
-                )
-                files.setdefault(part_key, []).append(rel)
-                jobs.append((rel, tbl))
-
-        def write_one(job) -> dict:
-            rel, tbl = job
-            tbl = tbl.cast(_arrow_write_schema(tbl.schema))
-            if ren:
-                tbl = tbl.rename_columns([ren.get(n, n) for n in tbl.column_names])
-            abs_file = os.path.join(self.table.dir, rel)
-            pq.write_table(
-                tbl, abs_file, compression=codec,
-                use_dictionary=_dictionary_columns(tbl),
-            )
-            return (rel, *_harvest_one(abs_file, stat_cols, bloom_col))
-
-        harvested = _count_harvest(_thread_map(write_one, jobs))
-        stats = {
-            rel: {inv_ren.get(c, c): v for c, v in h.items()}
-            for rel, h in harvested.items()
-        }
-        return files, stats
 
     def _maybe_auto_compact(self, m: Manifest) -> None:
         """Post-commit trigger (runs OUTSIDE the table lock — compact
@@ -1394,18 +1237,12 @@ class LakeWriter:
     ) -> None:
         if not self.pk:
             raise ValueError(f"merge() on table {self.table.name} requires pk columns")
+        from .inline import inline_state
+
         # one manifest resolve: the pre-lock planning manifest doubles as
         # the constraint source and seeds the FIRST _merge_once attempt
         # (replans after a commit conflict re-resolve, as they must)
         pre = self.table.manifest() if self.table.exists() else None
-        # merge planning is file-based: pending inlined rows must become
-        # file rows first or a matching source row would duplicate
-        # instead of updating (lake/inline.py)
-        from .inline import inline_state
-
-        if pre is not None and inline_state(pre)[0]:
-            self.flush_inlined()
-            pre = self.table.manifest()
         df = self._apply_sequence_defaults(df, pre)
         # tombstoned rows are DELETES — they carry no insertable values,
         # so constraints (incl. NOT NULL) must not judge them: a narrow
@@ -1424,9 +1261,17 @@ class LakeWriter:
         # so the commit re-checks the version under the lock and replans.
         retries = max(1, self.max_retry_count)
         for attempt in range(retries):
+            m = pre if attempt == 0 else self.table.manifest()
+            # merge planning is file-based: pending inlined rows must
+            # become file rows first or a matching source row would
+            # duplicate instead of updating (lake/inline.py) — at the top
+            # of EVERY attempt, since an inline append may land before
+            # the replan
+            if m is not None and inline_state(m)[0]:
+                self.flush_inlined()
+                m = self.table.manifest()
             if self._merge_once(
-                df, order_col, tombstone_col, ephemeral_order,
-                manifest=pre if attempt == 0 else None,
+                df, order_col, tombstone_col, ephemeral_order, manifest=m
             ):
                 return
             REGISTRY.inc("merge.commitConflictReplans")
@@ -2181,12 +2026,8 @@ class LakeWriter:
             # to prune, and the files encode in parallel. Same rows-vs-
             # bytes balance as the Spark range layout (Arrow nbytes
             # overestimate parquet — errs toward fewer, larger files).
-            groups, reason = _partition_dirs(out_tbl, exprs, manifest.files)
-            if reason:
-                return _fallback("merge.arrowFallback", reason)
             parts = {}
-            for key, rows in groups.items():
-                part = out_tbl if len(groups) == 1 else out_tbl.take(rows)
+            for key, part in dir_groups(out_tbl, exprs, manifest.files).items():
                 n = part.num_rows
                 parts[key] = [part]
                 if n > 2 * MERGE_TARGET_FILE_ROWS:
@@ -2221,9 +2062,9 @@ class LakeWriter:
             if self._chain_advanced(manifest.version):
                 return False
             with REGISTRY.timer("merge.arrowWrite"):
-                new_files, new_stats = self._write_arrow_files(
-                    manifest, parts, stat_cols, bloom_col
-                )
+                new_files, new_stats = self._staged(
+                    manifest, stat_cols, bloom_col
+                ).write(parts)
             nm = self._commit_next(
                 manifest, "MERGE", final_logical,
                 **manifest.replace_files(

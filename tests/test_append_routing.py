@@ -6,8 +6,8 @@ on the driver once and commits in exactly one shape: an inline blob,
 driver-written Arrow files (an inline overflow carries the buffer along),
 or Spark-written files for a batch over the cap. Each row below names an
 input class and the shape it must take (read off ``metrics.REGISTRY``),
-how many versions the step commits, and its table contents must equal
-the Spark write's on the same inputs."""
+how many versions the step commits, and its table contents and partition
+dirs must equal the Spark write's on the same inputs."""
 
 import uuid
 
@@ -27,7 +27,6 @@ SHAPES = {
     "arrow": ("op", "append.arrowWrite"),
     "spark": ("op", "write.dataFiles"),
     "eval": ("op", "append.arrowBatchEval"),
-    "token": ("ctr", "append.arrowFallback.partition_token"),
     "fallback": ("ctr", "append.arrowFallback"),
 }
 
@@ -96,11 +95,18 @@ def _overwrite(spark, t):
     LakeWriter(t, pk=["id"]).overwrite(_base(spark, 500, 505))
 
 
-def _partition_token(spark, t):
-    LakeWriter(t, pk=["id"], partition_by="kind").append(
-        spark.range(2, 4).select(
-            F.col("id"),
-            F.when(F.col("id") == 2, "a b:c").otherwise("plain").alias("kind")))
+def _kind(value):
+    """Append rows 2 and 3 to the ``kind``-partitioned table, row 2 with
+    partition value ``value`` (a Hive-escaped or null-marker dir)."""
+
+    def step(spark, t):
+        LakeWriter(t, pk=["id"], partition_by="kind").append(
+            spark.range(2, 4).select(
+                F.col("id"),
+                F.when(F.col("id") == 2, F.lit(value).cast("string"))
+                .otherwise("plain").alias("kind")))
+
+    return step
 
 
 def _race(old, new, batch):
@@ -136,10 +142,6 @@ def _buffer_dropped(r):
     assert [row[0] for row in r["rows"]] == list(range(500, 505))
 
 
-def _token_named(r):
-    assert r["delta"]["token"] == r["delta"]["fallback"] == 1
-
-
 def _landed_under_new_name(r):
     assert "memo" in r["cols"] and "note" not in r["cols"]
     assert len(r["rows"]) == 40
@@ -159,8 +161,16 @@ CASES = [
      _buffer_emptied),
     ("overwrite_drops_buffer", _setup_inline, _overwrite, "arrow", 1, None,
      _buffer_dropped),
-    ("partition_token", _setup_kind, _partition_token, "spark", 1, None,
-     _token_named),
+    # partition values Spark's partitionBy escapes or maps to the null
+    # marker: the driver names the same dirs
+    ("partition_token", _setup_kind, _kind("a b:c"), "arrow", 1, None, None),
+    ("partition_space", _setup_kind, _kind("a b"), "arrow", 1, None, None),
+    ("partition_slash", _setup_kind, _kind("a/b"), "arrow", 1, None, None),
+    ("partition_equals", _setup_kind, _kind("a=b"), "arrow", 1, None, None),
+    ("partition_percent", _setup_kind, _kind("100%"), "arrow", 1, None, None),
+    ("partition_non_ascii", _setup_kind, _kind("café ü"), "arrow", 1, None, None),
+    ("partition_empty_string", _setup_kind, _kind(""), "arrow", 1, None, None),
+    ("partition_null", _setup_kind, _kind(None), "arrow", 1, None, None),
     # a rename of a column the batch does not carry lands with it
     ("rename_race_uncarried_column", _setup_plain,
      _race("note", "memo", lambda spark: _base(spark, 20, 40).drop("note")),
@@ -216,6 +226,7 @@ def _run(spark, root, setup, step, monkeypatch):
         "rows": sorted(tuple(r[c] for c in cols) for r in t.read().collect()),
         "inlined": inline_state(m)[1],
         "last_op": m.props.get("last_op"),
+        "dirs": sorted(m.files),
     }
 
 
@@ -237,5 +248,8 @@ def test_append_routing_decision_table(
     if jobs is not None:
         assert got["jobs"] == jobs, got
     assert got["rows"] == ref["rows"] and got["cols"] == ref["cols"]
+    assert got["dirs"] == ref["dirs"]
+    if got["shape"] == "arrow":
+        assert got["delta"]["fallback"] == 0, got["delta"]
     if check:
         check(got)

@@ -385,27 +385,33 @@ def test_arrow_append_then_arrow_merge(spark, lake):
     assert got[2]["_inserted_at"] == stamps[2]
 
 
-def test_arrow_append_falls_back_on_exotic_partition_tokens(spark, lake, monkeypatch):
-    """A string partition value needing Hive escaping must route the
-    append to the Spark path (whose partitionBy does the escaping),
-    not silently mis-name the directory."""
+def test_arrow_append_writes_exotic_partition_tokens(spark, lake, monkeypatch):
+    """A string partition value needing Hive escaping takes the Arrow
+    path and lands in the dir Spark's partitionBy names, reading back
+    like the Spark path's write."""
     from ducklake_kafka_connect_spark.metrics import REGISTRY
 
     cat = LakeCatalog(spark, lake)
-    w = LakeWriter(cat.table("t"), pk=["id"], partition_by="kind")
+
+    def append(name):
+        t = cat.table(name)
+        LakeWriter(t, pk=["id"], partition_by="kind").append(spark.range(1, 3).select(
+            F.col("id"), F.when(F.col("id") == 1, "a b:c").otherwise("plain").alias("kind")
+        ))
+        return sorted(t.manifest().files), {r["id"]: r["kind"] for r in t.read().collect()}
+
     before = (
         REGISTRY.snapshot()["operations"].get("append.arrowWrite", {}).get("count", 0)
     )
-    batch = spark.createDataFrame(
-        [(1, "a b:c"), (2, "plain")], "id long, kind string"
-    )
-    w.append(batch)
+    got = append("t")
     after = (
         REGISTRY.snapshot()["operations"].get("append.arrowWrite", {}).get("count", 0)
     )
-    assert after == before, "escaped token should NOT take the Arrow path"
-    got = {r["id"]: r["kind"] for r in cat.table("t").read().collect()}
-    assert got == {1: "a b:c", 2: "plain"}
+    assert after == before + 1, "an escaped token takes the Arrow path"
+    monkeypatch.setattr(wmod.LakeWriter, "ARROW_APPEND_MAX_BYTES", -1)
+    assert got == append("spark") == (
+        ["_pd_kind=a b%3Ac", "_pd_kind=plain"], {1: "a b:c", 2: "plain"}
+    )
 
 
 def test_arrow_append_schema_evolution(spark, lake):
@@ -566,7 +572,7 @@ def test_arrow_append_error_is_a_named_fallback(spark, lake, monkeypatch):
     def boom(self, *a, **k):
         raise RuntimeError("parquet write failed")
 
-    monkeypatch.setattr(wmod.LakeWriter, "_write_arrow_files", boom)
+    monkeypatch.setattr(wmod.StagedFiles, "write", boom)
     total0, named0 = _append_fallbacks("error")
     w.append(spark.range(10, 15).select(F.col("id"), F.lit("b").alias("name")))
     assert _append_fallbacks("error") == (total0 + 1, named0 + 1)

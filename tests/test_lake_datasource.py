@@ -405,6 +405,68 @@ class TestMedallion:
         assert t_s.read().count() == 50
 
 
+class TestSinkParity:
+    """Sink tasks write through the engine's Arrow writer: the table's
+    codec, PK-first stats and Bloom sidecars, and the task's harvest or
+    Bloom skips counted on the driver."""
+
+    def test_sink_honours_write_compression(self, spark, lake):
+        import pyarrow.parquet as pq
+
+        t = LakeCatalog(spark, lake).table("z")
+        src = spark.range(20).select(F.col("id"), F.lit("a").alias("s"))
+        t.create(src.schema, pk=[])
+        t.set_properties({"write.compression": "zstd"})
+        src.write.format("ducklake").option("path", lake).option(
+            "table", "z"
+        ).mode("append").save()
+        files = t.manifest().all_files()
+        assert files
+        codecs = {
+            pq.ParquetFile(os.path.join(t.dir, f)).metadata.row_group(0)
+            .column(0).compression
+            for f in files
+        }
+        assert codecs == {"ZSTD"}
+
+    def test_sink_upsert_files_get_pk_stats_and_bloom_sidecars(self, spark, lake):
+        t = LakeCatalog(spark, lake).table("u")
+        src = spark.range(20).select(F.lit("a").alias("s"), F.col("id"))
+        t.create(src.schema, pk=["id"])
+        src.write.format("ducklake").option("path", lake).option(
+            "table", "u"
+        ).option("mergeKeys", "id").mode("append").save()
+        m = t.manifest()
+        assert m.all_files()
+        for f in m.all_files():
+            assert os.path.exists(os.path.join(t.dir, f) + ".bloom"), f
+            assert [c for c in m.file_stats[f] if not c.startswith("__")][0] == "id"
+        assert t.read().count() == 20
+
+    def test_task_bloom_skips_are_counted_on_the_driver(
+        self, spark, lake, monkeypatch
+    ):
+        import pyarrow as pa
+
+        from ducklake_kafka_connect_spark.lake import table as tmod
+        from ducklake_kafka_connect_spark.metrics import REGISTRY
+        from ducklake_kafka_connect_spark.sources.lake_datasource import (
+            _BatchWriter,
+        )
+
+        t = LakeCatalog(spark, lake).table("k")
+        schema = spark.range(1).schema
+        t.create(schema, pk=["id"])
+        w = _BatchWriter({"path": lake, "table": "k", "mergekeys": "id"}, schema, False)
+        monkeypatch.setattr(tmod, "_write_bloom_sidecar", lambda *a: False)
+        msg = w.write(iter(pa.table({"id": [1, 2, 3]}).to_batches()))
+        assert msg.skips == {"write.bloomSkip": 1}
+        before = REGISTRY.snapshot()["counters"].get("write.bloomSkip", 0)
+        w.commit([msg])
+        assert REGISTRY.snapshot()["counters"].get("write.bloomSkip", 0) == before + 1
+        assert t.read().count() == 3
+
+
 class TestSinkRename:
     def test_sink_writes_physical_names_after_rename(self, spark, lake):
         """The sink's write boundary must translate logical→physical:
@@ -617,19 +679,28 @@ class TestPartitionedSink:
         files, _ = t.prune_files("_p_month_ts = 2")
         assert 0 < len(files) < len(t.manifest().all_files())
 
-    def test_raw_string_partition_with_specials_and_null(self, spark, lake):
+    def test_raw_string_partition_with_specials_and_null(
+        self, spark, lake, monkeypatch
+    ):
+        from ducklake_kafka_connect_spark.lake import writer as wmod
+
         cat = LakeCatalog(spark, lake)
         t = cat.table("pq")
         src = spark.createDataFrame(
-            [(1, "a/b=c"), (2, "plain"), (3, None)], "id long, grp string"
+            [(1, "a/b=c"), (2, "plain"), (3, None), (4, "")], "id long, grp string"
         )
         t.create(src.schema, pk=[], partition_by="grp")
         src.write.format("ducklake").option("path", lake).option(
             "table", "pq"
         ).mode("append").save()
         got = {r["id"]: r["grp"] for r in t.read().collect()}
-        assert got == {1: "a/b=c", 2: "plain", 3: None}
+        assert got == {1: "a/b=c", 2: "plain", 3: None, 4: ""}
         assert len(t.manifest().files) == 3
+        # the dirs Spark's partitionBy names for the same rows
+        monkeypatch.setattr(wmod.LakeWriter, "ARROW_APPEND_MAX_BYTES", -1)
+        ref = cat.table("pq_spark")
+        LakeWriter(ref, partition_by="grp").append(src)
+        assert sorted(t.manifest().files) == sorted(ref.manifest().files)
         # the engine's own key parser round-trips the escaped dir
         from ducklake_kafka_connect_spark.lake.partitioning import (
             dir_key_to_canon_tuple,

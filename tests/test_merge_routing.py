@@ -130,6 +130,17 @@ def _null_partition_value(spark, w, t):
             .withColumn("created_at", F.lit(None).cast("timestamp")))
 
 
+def _rename_to(value):
+    """Move keys 30..49 into the dir of ``name`` = ``value`` (a
+    Hive-escaped or null-marker dir) of the ``name``-partitioned table."""
+
+    def step(spark, w, t):
+        w.merge(_batch(spark, 30, 50, "x")
+                .withColumn("name", F.lit(value).cast("string")))
+
+    return step
+
+
 def _one_row_per_key(r):
     ids = [row[0] for row in r["rows"]]
     assert len(ids) == len(set(ids)) == 45
@@ -148,11 +159,8 @@ def _dir_files_unchanged(r):
     assert r["files_after"][jan] == r["files_before"][jan]
 
 
-def _token_declined(r):
-    assert r["delta"]["token"] == 1
-
-
-# (case, merge step, partitioned, writer merge_mode, executor, extra check)
+# (case, merge step, partitioned (or the partition spec), writer
+# merge_mode, executor, extra check)
 CASES = [
     ("small_unpartitioned", _small, False, None, "arrow", None),
     ("small_with_tombstones", _tombstones, False, None, "arrow", None),
@@ -171,8 +179,16 @@ CASES = [
      _dir_dropped),
     ("untouched_dir_kept", _untouched_dir_kept, True, None, "arrow",
      _dir_files_unchanged),
-    ("null_partition_value", _null_partition_value, True, None, "pruning",
-     _token_declined),
+    ("null_partition_value", _null_partition_value, True, None, "arrow", None),
+    # string partition values Spark's partitionBy escapes or maps to the
+    # null marker: the Arrow merge names the same dirs
+    ("partition_space", _rename_to("a b"), "name", None, "arrow", None),
+    ("partition_slash", _rename_to("a/b"), "name", None, "arrow", None),
+    ("partition_equals", _rename_to("a=b"), "name", None, "arrow", None),
+    ("partition_percent", _rename_to("100%"), "name", None, "arrow", None),
+    ("partition_non_ascii", _rename_to("café ü"), "name", None, "arrow", None),
+    ("partition_empty_string", _rename_to(""), "name", None, "arrow", None),
+    ("partition_null", _rename_to(None), "name", None, "arrow", None),
     ("merge_on_read", _small, False, "merge-on-read", "mor", None),
 ]
 
@@ -184,7 +200,6 @@ def _snapshot():
         "arrow": ops.get("merge.arrowWrite", {}).get("count", 0),
         "pruning": ops.get("merge.planAgg", {}).get("count", 0),
         "mor": ctr.get("merge.morCommits", 0),
-        "token": ctr.get("merge.arrowFallback.partition_token", 0),
         "fallback": ctr.get("merge.arrowFallback", 0),
     }
 
@@ -207,12 +222,13 @@ def _file_ids(m, files):
 
 
 def _run(spark, root, step, partitioned, mode):
+    """``partitioned``: False, True (by ``month(created_at)``) or a
+    partition spec."""
     cat = LakeCatalog(spark, root)
     t = cat.table("t")
-    w = LakeWriter(
-        t, pk=["id"], merge_mode=mode,
-        partition_by="month(created_at)" if partitioned else None,
-    )
+    if partitioned is True:
+        partitioned = "month(created_at)"
+    w = LakeWriter(t, pk=["id"], merge_mode=mode, partition_by=partitioned or None)
     w.append(_base(spark))
     stamps = {
         r["id"]: r["_inserted_at"]
@@ -303,3 +319,53 @@ def test_evolving_small_upsert_is_one_spark_job(spark, tmp_path):
     )
     assert len(jobs) == 1, jobs
     assert len(got) == 60 and got[25]["score"] == 1.5 and got[5]["score"] is None
+
+
+@pytest.mark.parametrize("executor", ["arrow", "pruning"])
+def test_empty_string_partition_value_updates_in_place(
+    spark, tmp_path, monkeypatch, executor
+):
+    """A merge of a key whose partition value is ``""`` updates its row
+    in the null marker's dir (where Spark's partitionBy puts ``""``) on
+    either executor, past the pruning merge's small-manifest shortcut."""
+    if executor == "pruning":
+        monkeypatch.setattr(wmod.LakeWriter, "_merge_arrow", lambda self, *a, **k: None)
+    t = LakeCatalog(spark, str(tmp_path)).table("t")
+    w = LakeWriter(t, pk=["id"], partition_by="kind")
+    schema = "id long, kind string, v string"
+    for i in range(10):
+        w.append(spark.createDataFrame([(i, f"a{i}", "x")], schema))
+    w.append(spark.createDataFrame([(100, "", "old")], schema))
+    assert len(t.manifest().all_files()) > wmod.MERGE_SMALL_MANIFEST_FILES
+    w.merge(spark.createDataFrame([(100, "", "new")], schema))
+    rows = [tuple(r) for r in t.read().filter("id = 100").select("kind", "v").collect()]
+    assert rows == [("", "new")]
+
+
+def test_merge_flushes_an_inline_append_that_lands_before_its_replan(
+    spark, tmp_path, monkeypatch
+):
+    """An inline append landing between the merge's planning and its
+    first attempt's commit forces a replan; the replan flushes the new
+    buffer first, so the batch's key updates the buffered row instead
+    of being inserted beside it."""
+    t = LakeCatalog(spark, str(tmp_path)).table("t")
+    schema = "id long, v string"
+    w = LakeWriter(t, pk=["id"])
+    w.append(spark.createDataFrame([(1, "base")], schema))
+    t.set_properties({"write.inlining.row.limit": "50"})
+    real = wmod.LakeWriter._merge_once
+    landed = []
+
+    def inline_append_then_merge(self, *a, **k):
+        if not landed:  # the concurrent inline append
+            LakeWriter(t, pk=["id"]).append(
+                spark.createDataFrame([(2, "inline-between")], schema))
+            landed.append(True)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(wmod.LakeWriter, "_merge_once", inline_append_then_merge)
+    w.merge(spark.createDataFrame([(2, "merged")], schema))
+    assert landed
+    rows = sorted(tuple(r) for r in t.read().select("id", "v").collect())
+    assert rows == [(1, "base"), (2, "merged")]

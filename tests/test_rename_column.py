@@ -341,7 +341,7 @@ class TestPhysicalNameRefusal:
         from ducklake_kafka_connect_spark.schema.reconcile import ReconcileError
 
         t, _ = _mk(spark, str(tmp_path))
-        split = wmod._partition_dirs
+        split = wmod.dir_groups
         renamed = []
 
         def rename_then_split(*a, **k):
@@ -350,7 +350,7 @@ class TestPhysicalNameRefusal:
                 renamed.append(True)
             return split(*a, **k)
 
-        monkeypatch.setattr(wmod, "_partition_dirs", rename_then_split)
+        monkeypatch.setattr(wmod, "dir_groups", rename_then_split)
         v = t.current_version()
         with pytest.raises(ReconcileError, match="physical name"):
             LakeWriter(t, pk=["pk"]).write(self._stale(spark, 50, 70))
