@@ -71,6 +71,8 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..metrics import REGISTRY
+
 if TYPE_CHECKING:  # pragma: no cover
     from .table import LakeTable, Manifest
 
@@ -256,10 +258,8 @@ def write_tombstones(
     out = keys.select(*[F.col(c).alias(ren.get(c, c)) for c in m.pk])
     stage_rel = os.path.join("data", f"d{version_hint}-{uuid.uuid4().hex[:8]}")
     stage_abs = os.path.join(table.dir, stage_rel)
-    try:
-        est = int(out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        est = TOMB_ARROW_MAX_BYTES + 1
+    # the optimizer's size estimate (no Spark job)
+    est = int(out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     rel = None
     if est <= TOMB_ARROW_MAX_BYTES:
         try:
@@ -269,7 +269,9 @@ def write_tombstones(
             table.fs.ensure_dir(stage_abs)
             pq.write_table(batch, abs_p, compression="snappy")
         except Exception:
-            rel = None  # any doubt → Spark write path below
+            # a counted fallback: Spark writes the keys below
+            REGISTRY.inc("mor.tombstoneFallback.error")
+            rel = None
     if rel is None:
         out.repartition(1).write.mode("overwrite").parquet(stage_abs)
         rel = next(

@@ -33,13 +33,14 @@ Execution is Spark-first, not row-at-a-time: the clauses compile to ONE
 projection over ``source LEFT JOIN target`` (matched-ness from a
 sentinel), and the resulting frame goes through the existing
 ``LakeWriter.merge`` — so the merge executors (the driver-side Arrow
-merge for small tables, the Spark pruning merge with window /
-broadcast+Bloom file pruning, group commit) are reused verbatim, ``WHEN MATCHED … DELETE`` rides the
-tombstone channel, and ``_inserted_at`` keeps the stamp-only-on-insert
-invariant. When the statement is the reference's exact shape —
-``UPDATE SET *`` + ``INSERT *``, no extra conditions — the join is
-skipped entirely and the mapped source feeds ``merge`` directly (zero
-overhead vs the API path).
+merge for small tables, the Spark pruning merge's broadcast joins with
+range/Bloom file pruning, group commit) are reused verbatim, ``WHEN
+MATCHED … DELETE`` rides the tombstone channel, ``_inserted_at`` keeps
+the stamp-only-on-insert invariant, and a NULL key matches no target
+row (``ON`` equality is never true for NULL). When the statement is
+the reference's exact shape — ``UPDATE SET *`` + ``INSERT *``, no extra
+conditions — the join is skipped entirely and the mapped source feeds
+``merge`` directly (zero overhead vs the API path).
 
 Scale: the general path reads the target once for the pre-join; with a
 single-column PK that read is bounded by the source's [min, max] key

@@ -21,9 +21,15 @@ MERGE runs on one of two copy-on-write executors, or as merge-on-read:
   and writes one file per partition dir it lands rows in. Every decline
   is a named check (``merge.arrowSkip.<reason>`` before the batch is
   evaluated, ``merge.arrowFallback.<reason>`` after).
-- **Spark pruning merge** (``_merge_once``) for everything else.
-- **Merge-on-read** (``_merge_mor_once``) under
-  ``write.merge.mode=merge-on-read``: delta + tombstone files, no rewrite.
+- **Spark pruning merge** (``_merge_once``) for everything else, with
+  one prologue for its two commit shapes: copy-on-write rewrites the
+  pruned files, and merge-on-read (``write.merge.mode=merge-on-read``)
+  commits delta + tombstone files instead.
+
+A NULL key never matches a target row, as in the reference's
+``MERGE INTO t USING tmp USING (pk)``: it is inserted beside any
+stored NULL-key row. Within one batch, NULL keys still collapse to the
+last write like any other key.
 
 APPEND, INSERT OVERWRITE and the inline flush run through one body
 (``_append`` → ``_append_locked``). A batch of at most
@@ -48,9 +54,9 @@ and its file set with ``Manifest.replace_files``.
 
 The pruning merge is the 100 TB design. The source micro-batch is small
 relative to the table, so every join broadcasts the source — the target
-is **never shuffled**. (Batches above MERGE_BROADCAST_ROWS — bulk
-backfills — degrade to ordinary shuffle joins instead of OOMing the
-driver as a broadcast.) Affected partitions are computed from (a) the
+is **never shuffled**, whatever the size of the rewrite set. (Batches
+above MERGE_BROADCAST_ROWS — bulk backfills — degrade to ordinary
+shuffle joins instead of OOMing the driver as a broadcast.) Affected partitions are computed from (a) the
 source rows' partition values and (b) a column-pruned scan of target
 (pk + partition columns) semi-joined against the broadcast source keys —
 so keys whose update moves them across partitions delete their old
@@ -108,8 +114,8 @@ MERGE_BLOOM_PROBE_KEYS = 100_000
 # pruning in the pruning merge: bloom-probing and rewriting a handful of
 # files is cheaper than any extra planning job.
 MERGE_SMALL_MANIFEST_FILES = 8
-# Merges whose rewrite-set + batch estimate fits one output file take the
-# single-shuffle window-merge plan and write exactly one file.
+# Merges whose rewrite-set + batch estimate fits one output file write
+# one file (or range-split files, see MERGE_TARGET_FILE_ROWS).
 SMALL_OUTPUT_BYTES = 64 * 1024 * 1024
 EST_ROW_BYTES = 256
 # Small-merge outputs are range-split by PK into files of ~this many rows
@@ -172,66 +178,6 @@ AUTO_COMPACT_MIN_FILES = 8
 AUTO_COMPACT_SMALL_BYTES = 8 * 1024 * 1024
 
 
-def _window_merge(
-    target: DataFrame,
-    raw: DataFrame,
-    pk: Sequence[str],
-    out_cols: Sequence[str],
-    order_col: str | None,
-) -> DataFrame:
-    """Small-merge plan: union(target-rewrite-rows, un-deduped batch) →
-    one row_number window per PK picks the winner (batch over target,
-    newest batch row over older by order_col / arrival). ``_inserted_at``
-    of a matched key survives via a min-over-partition (target rows carry
-    it, batch rows carry NULL); fresh keys get NOW(). One shuffle total,
-    no joins, no broadcasts — the latency-optimal shape when the rewrite
-    set is small.
-
-    ``order_col`` may be a column absent from ``out_cols`` (merge_many's
-    ephemeral batch ordinal): it rides the union as an extra column —
-    NULL on the target side, safe because ``__pri`` already ranks every
-    batch row above every target row — and is dropped by the final
-    out_cols projection."""
-    from pyspark.sql import Window as W
-
-    carry_order = (
-        [order_col] if order_col and order_col not in out_cols else []
-    )
-    tgt_side = target.select(
-        *[F.col(c) for c in out_cols],
-        *[
-            F.lit(None).cast(raw.schema[c].dataType).alias(c)
-            for c in carry_order
-        ],
-        F.lit(0).alias("__pri"),
-        F.lit(None).cast("long").alias("__mono"),
-    )
-    src_side = raw.withColumn(INSERTED_AT, F.lit(None).cast("timestamp")).select(
-        *[F.col(c) for c in out_cols],
-        *[F.col(c) for c in carry_order],
-        F.lit(1).alias("__pri"),
-        F.monotonically_increasing_id().alias("__mono"),
-    )
-    order = [F.col("__pri").desc()]
-    if order_col:
-        order.append(F.col(order_col).desc())
-    order.append(F.col("__mono").desc())
-    # Both window expressions share one (partition, order) spec — the min
-    # just widens its frame to the whole partition — so Catalyst plans a
-    # single WindowExec pass (a second unordered spec would add another
-    # full pass over the union).
-    wo = W.partitionBy(*pk).orderBy(*order)
-    full_frame = wo.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    return (
-        tgt_side.unionByName(src_side)
-        .withColumn("__rn", F.row_number().over(wo))
-        .withColumn("__ts0", F.min(INSERTED_AT).over(full_frame))
-        .filter(F.col("__rn") == 1)
-        .withColumn(INSERTED_AT, F.coalesce(F.col("__ts0"), F.current_timestamp()))
-        .select(*[_qcol(c) for c in out_cols])
-    )
-
-
 def _out_cols(final_logical: T.StructType, part_cols: Sequence[str]) -> list[str]:
     """Column order of every merge output: the physical table columns,
     ``_inserted_at``, then derived partition columns."""
@@ -264,12 +210,15 @@ def _eval_arrow(
     compute-heavy plan (a JSON decode) keeps its parallelism. coalesce
     merges ADJACENT partitions, so arrival order is kept.
 
-    With ``max_bytes``, a batch over it returns None without a job
-    when the estimate says so. An unknown estimate (the optimizer's
-    8-EiB sentinel for an RDD-backed frame) is collected only when
-    ``max_rows`` bounds it: at most ``max_rows + 1`` rows come back
-    (CollectLimit short-circuits), and more than ``max_rows`` returns
-    None."""
+    With ``max_bytes`` (only the append passes it), a batch over it
+    returns None without a job when the estimate says so. An unknown
+    estimate (the optimizer's 8-EiB sentinel for an RDD-backed frame)
+    is collected only when ``max_rows`` bounds it: at most
+    ``max_rows + 1`` rows come back (CollectLimit short-circuits), and
+    more than ``max_rows`` returns None. Each None is counted as
+    ``append.arrowSkip`` and ``append.arrowSkip.<reason>``:
+    ``batch_size`` (over ``max_bytes``) or ``unknown_size`` (unknown
+    estimate, not bounded to the limit)."""
     from .relation_cache import local_plan_arrow
 
     with REGISTRY.timer(timer):
@@ -280,14 +229,17 @@ def _eval_arrow(
             if max_bytes is None or est <= max_bytes:
                 small = est <= EVAL_COALESCE_MAX_BYTES
                 tbl = (df.coalesce(4) if small else df).toArrow()
-            elif max_rows is not None and est >= 1 << 60:
+            elif est < 1 << 60:
+                return _fallback("append.arrowSkip", "batch_size")
+            elif max_rows is None:
+                return _fallback("append.arrowSkip", "unknown_size")
+            else:
                 tbl = df.limit(max_rows + 1).toArrow()
                 if tbl.num_rows > max_rows:
-                    return None
-            else:
-                return None
+                    return _fallback("append.arrowSkip", "unknown_size")
     if max_bytes is not None and tbl.nbytes > max_bytes:
-        return None  # one huge file helps nobody
+        # one huge file helps nobody
+        return _fallback("append.arrowSkip", "batch_size")
     return tbl
 
 
@@ -308,10 +260,11 @@ def _buffer_schema(manifest: Manifest):
 
 
 def _fallback(counter: str, reason: str) -> None:
-    """Count a named decline of a driver-side Arrow executor taken after
-    its batch was evaluated, as ``counter`` and ``counter.<reason>``:
-    ``merge.arrowFallback`` (the pruning executor re-runs the merge) or
-    ``append.arrowFallback`` (Spark writes the rows); returns None."""
+    """Count a named decline of a driver-side Arrow executor as
+    ``counter`` and ``counter.<reason>``: ``merge.arrowFallback`` (the
+    pruning executor re-runs the merge), ``append.arrowFallback``
+    (Spark writes the evaluated rows) or ``append.arrowSkip`` (Spark
+    writes a batch the driver did not take); returns None."""
     REGISTRY.inc(counter)
     REGISTRY.inc(f"{counter}.{reason}")
 
@@ -477,7 +430,8 @@ def _overlaps(stats, bounds, pk0: str) -> bool:
 def _dedup_last_wins(df: DataFrame, pk: Sequence[str], order_col: str | None) -> DataFrame:
     """Collapse in-batch duplicate keys to the last write (SURVEY risk #2:
     DuckDB MERGE applies last-write; a multi-match would also break the
-    join-based merge)."""
+    join-based merge). The window groups NULL keys together, so NULL
+    keys collapse too."""
     from pyspark.sql import Window as W
 
     order = F.col(order_col) if order_col else F.monotonically_increasing_id()
@@ -1283,8 +1237,8 @@ class LakeWriter:
     def _plan_merge(
         self, manifest: Manifest, probe: DataFrame, part_cols: list[str]
     ) -> "tuple[int, set, dict]":
-        """The ONE planning job of both Spark merge executors and the
-        file-overlap prune it feeds. ``probe`` carries the batch's
+        """The ONE planning job of the Spark merge and the file-overlap
+        prune it feeds. ``probe`` carries the batch's
         pk[0] as ``__k`` and, when ``part_cols`` is set, a ``__live``
         flag and those columns. A single JVM-side aggregate yields the
         exact row count, pk[0] bounds, a capped key set and the live
@@ -1360,419 +1314,305 @@ class LakeWriter:
         ephemeral_order: bool = False,
         manifest=None,
     ) -> bool:
-        # ephemeral order columns never enter the table schema
-        drop_for_schema = [c for c in (tombstone_col,) if c]
-        if ephemeral_order and order_col:
-            drop_for_schema.append(order_col)
-        payload = df.drop(*drop_for_schema) if drop_for_schema else df
-        if manifest is None:
-            manifest = self._ensure_table(payload)
-        planned_version = manifest.version
-        final_logical = _logical_schema_of_batch(payload, manifest)
-        exprs = manifest.partition_exprs
-        part_cols = partition_column_names(exprs)
+        """One attempt of a merge against ``manifest``: True once it
+        committed, False when a concurrent commit moved the tip (the
+        caller replans).
 
-        from .mor import MODE_MOR, resolve_merge_mode
+        A copy-on-write merge tries the driver-side Arrow executor
+        first. Every other merge runs on Spark behind one prologue: the
+        batch is conformed once (the tombstone flag and merge_many's
+        ephemeral order ride as extra columns), gains its partition
+        columns and is coalesced and cached; ONE planning job runs over
+        the cached, un-deduped rows; last-write-wins dedup then runs
+        lazily inside the write job, and the live rows split from the
+        dead (tombstoned) keys. The pk joins are equi-joins, so a NULL
+        key never matches a target row (the reference's ``USING (pk)``),
+        while NULL keys within one batch still collapse to its last
+        write. The two commit shapes differ only in what they write:
 
-        if self.pk and resolve_merge_mode(manifest, self.merge_mode) == MODE_MOR:
-            return self._merge_mor_once(
-                df, manifest, planned_version, final_logical, exprs,
-                part_cols, order_col, tombstone_col, ephemeral_order,
-            )
-
-        # ---- executor choice: driver-side Arrow, else Spark pruning ----
-        skip = _arrow_merge_skip(manifest)
-        if skip is None:
-            done = self._merge_arrow(
-                df, manifest, final_logical, exprs, part_cols,
-                order_col, tombstone_col, ephemeral_order,
-            )
-            if done is not None:
-                return done
-        else:
-            REGISTRY.inc(f"merge.arrowSkip.{skip}")
-
-        if tombstone_col:
-            # Tombstones need last-write-wins resolution BEFORE the
-            # live/dead split (delete-then-reinsert resolves by order),
-            # so this rarer path pays the dedup shuffle eagerly.
-            src0 = _dedup_last_wins(df, self.pk, order_col)
-            flag = F.coalesce(F.col(tombstone_col), F.lit(False))
-            dead = src0.filter(flag).drop(tombstone_col)
-            src0 = src0.filter(~flag).drop(tombstone_col)
-            raw = _conform(src0, final_logical, defaults=column_defaults(manifest))
-            np_cap = self.table.spark.sparkContext.defaultParallelism
-            raw = with_partition_columns(raw, exprs).coalesce(np_cap).cache()
-            src = raw
-            dead_conf = _conform(dead, final_logical)
-        else:
-            # Hot path: cache the batch UN-deduped and run the planning
-            # aggregate straight over it (no shuffle barrier inside the
-            # blocking planning job). Duplicate keys only widen bounds /
-            # add partition values — conservative for planning — and the
-            # dedup window runs lazily inside the write job instead,
-            # where its shuffle overlaps the rest of the plan.
-            extra = (order_col,) if ephemeral_order and order_col else ()
-            raw = _conform(
-                df, final_logical, extra=extra,
-                defaults=column_defaults(manifest),
-            )
-            # cap the batch's partition count at the session's parallelism:
-            # a merge_many union of N micro-batches arrives with N×32 tiny
-            # upstream partitions, and every downstream stage (planning
-            # agg, window, write) would schedule one task per partition —
-            # measured 321-task write jobs at ~3 s pure scheduling. A
-            # coalesce never increases partition count, so normal batches
-            # are untouched.
-            np_cap = self.table.spark.sparkContext.defaultParallelism
-            raw = with_partition_columns(raw, exprs).coalesce(np_cap).cache()
-            src = _dedup_last_wins(raw, self.pk, order_col)
-            dead = dead_conf = None
-        # One row per PK after dedup, and the live/dead split is disjoint
-        # — the key frames below are already distinct, no dedup shuffle.
-        live_keys = src.select(*self.pk)
-        src_keys = (
-            live_keys.unionByName(dead_conf.select(*self.pk))
-            if dead_conf is not None
-            else live_keys
-        )
-
-        # ---- the ONE planning job + overlap prune ----
-        # Dead (tombstone) rows count toward bounds/keys but contribute
-        # no partition values (their old copies may live anywhere; the
-        # overlap probe finds them).
-        pk0 = self.pk[0]
-        probe = raw.select(
-            F.lit(True).alias("__live"),
-            F.col(pk0).alias("__k"),
-            *[F.col(c) for c in part_cols],
-        )
-        if dead_conf is not None:
-            probe = probe.unionByName(
-                dead_conf.select(
-                    F.lit(False).alias("__live"),
-                    F.col(pk0).alias("__k"),
-                    *[
-                        F.lit(None).cast(src.schema[c].dataType).alias(c)
-                        for c in part_cols
-                    ],
-                )
-            )
-        n_src, src_parts, overlap_by_part = self._plan_merge(
-            manifest, probe, part_cols
-        )
-
-        # Micro-batches broadcast (hash-join against only the rewrite
-        # files, no shuffle of the table); a bulk backfill batch above
-        # the row threshold would OOM the driver as a broadcast, so it
-        # degrades to ordinary shuffle joins instead.
-        bcast = F.broadcast if n_src <= MERGE_BROADCAST_ROWS else (lambda d: d)
-
-        # ---- affected partitions (driver-side partition pruning) ----
-        # Both sides of the membership test go through ONE canonical
-        # encoding (canon_partition_value / dir_key_to_canon_tuple):
-        # Python str() of a boolean/timestamp/escaped value differs from
-        # the Hive directory token Spark writes, and a raw-string compare
-        # would silently skip partitions (old rows never rewritten →
-        # duplicate keys). Tiny manifests skip partition pruning: probing
-        # and rewriting every overlap file is cheaper than planning.
-        n_files_total = sum(len(v) for v in manifest.files.values())
-        if part_cols and n_files_total > MERGE_SMALL_MANIFEST_FILES:
-            affected = {
-                tuple(canon_partition_value(v) for v in p) for p in src_parts
-            }
-            # Old copies of updated keys may live in partitions the new
-            # rows don't touch (partition-value drift). Only files
-            # OUTSIDE the already-affected partitions can add to the
-            # rewrite set — scan just those; usually there are none and
-            # the probe job is skipped entirely.
-            outside_files = [
-                f
-                for k, v in overlap_by_part.items()
-                if dir_key_to_canon_tuple(k, exprs) not in affected
-                for f in v
-            ]
-            if outside_files:
-                target_outside = self._read_files(manifest, outside_files)
-                matched_parts = (
-                    target_outside.select(*self.pk, *part_cols)
-                    .join(bcast(src_keys), on=self.pk, how="left_semi")
-                    .select(*part_cols)
-                    .distinct()
-                    .collect()
-                )
-                affected |= {
-                    tuple(canon_partition_value(r[c]) for c in part_cols)
-                    for r in matched_parts
-                }
-            if len(affected) > MAX_PRUNED_PARTITIONS:
-                rewrite_files = [f for v in overlap_by_part.values() for f in v]
-            else:
-                rewrite_files = [
-                    f
-                    for k, v in overlap_by_part.items()
-                    if dir_key_to_canon_tuple(k, exprs) in affected
-                    for f in v
-                ]
-        else:
-            # unpartitioned or tiny manifest → every overlapping file
-            rewrite_files = [f for v in overlap_by_part.values() for f in v]
-
-        target = self._read_files(manifest, rewrite_files)
-        # Conform the target side to the evolved schema too: null-fill
-        # added columns, cast widened ones; keep system/partition columns.
-        passthrough = [INSERTED_AT] + [c for c in part_cols if c not in final_logical.fieldNames()]
-        target = _conform(target, final_logical, extra=passthrough)
-        out_cols = _out_cols(final_logical, part_cols)
-
-        # ---- physical strategy: window-merge vs broadcast 3-join ----
-        # The rewrite set's size is known from the manifest (__bytes per
-        # file). When rewrite ∪ batch fits one output file, a single
-        # shuffle of that union through one row_number window resolves
-        # the whole merge — no broadcasts, no joins, in-batch dup keys
-        # resolved by the same sort, one file written. Above the
-        # threshold the broadcast 3-join keeps the (large) target side
-        # unshuffled, which is the plan that survives 100 TB.
-        est_bytes = self._est_rewrite_bytes(manifest, rewrite_files) + n_src * EST_ROW_BYTES
-        small = dead_conf is None and est_bytes <= SMALL_OUTPUT_BYTES
-        est_rows = self._est_rewrite_rows(manifest, rewrite_files) + n_src
-        # Rows want MANY narrow-range files (pruning); auto-compact wants
-        # FEW sub-8 MB files. Its trigger is strictly MORE THAN
-        # AUTO_COMPACT_MIN_FILES small files per dir, so up to that many
-        # range files may go sub-threshold safely — the former pure
-        # rows/32k split emitted 13 × 3.8 MB files for a 51 MB wide-row
-        # merge and every commit paid a second full rewrite that also
-        # destroyed the range layout's key-disjointness.
-        n_out = max(1, min(MERGE_RANGE_MAX_FILES, _range_file_count(est_rows, est_bytes)))
-        if small:
-            # collapse the (small, cached) batch to one task so every
-            # downstream stage schedules 1-2 tasks, not 32 near-empty ones
-            merged = _window_merge(target, raw.coalesce(1), self.pk, out_cols, order_col)
-        else:
-            # the three broadcast joins (src deduped lazily here)
-            untouched = target.join(bcast(src_keys), on=self.pk, how="left_anti")
-            ins_lookup = target.select(*self.pk, INSERTED_AT)
-            matched = (
-                ins_lookup.join(bcast(src), on=self.pk, how="inner")
-                .select(*[F.col(c) for c in src.columns if c != INSERTED_AT], F.col(INSERTED_AT))
-            )
-            inserts = (
-                src.join(bcast(ins_lookup.select(*self.pk)), on=self.pk, how="left_anti")
-                .withColumn(INSERTED_AT, F.current_timestamp())
-            )
-            # The changed side (matched + inserts) is at most n_src rows,
-            # but each branch inherits its upstream partitioning — the
-            # matched rows land one sliver per rewrite-file scan task and
-            # the inserts one per cached batch partition, so every large
-            # merge used to emit dozens of KB-class files and immediately
-            # trip auto-compact into a SECOND full rewrite (measured:
-            # 2.2 s of the 7.6 s wide26 CoW merge was that compaction).
-            # Repartitioning just the changed union to batch-sized task
-            # counts shuffles only ≤ n_src rows (the untouched side —
-            # the heavy one at 100 TB — stays unshuffled) and the merge
-            # output comes out right-sized on its own.
-            changed = matched.select(
-                *[_qcol(c) for c in out_cols]
-            ).unionByName(inserts.select(*[_qcol(c) for c in out_cols]))
-            if est_bytes > MERGE_REBALANCE_MAX_BYTES:
-                # natural-layout write below: collapse only the changed
-                # side (the rebalance layout already right-sizes outputs)
-                n_changed = max(
-                    1, -(-(n_src * EST_ROW_BYTES) // SMALL_OUTPUT_BYTES)
-                )
-                changed = changed.repartition(n_changed)
-            merged = untouched.select(
-                *[_qcol(c) for c in out_cols]
-            ).unionByName(changed)
-
-        try:
-            with self.table.lock():
-                # cheap tip check (one tiny LATEST read, not a chain
-                # resolve): unchanged version ⇒ the pre-lock planning
-                # manifest IS the tip, so reuse it as-is
-                if self._chain_advanced(planned_version):
-                    return False  # concurrent commit — replan against it
-                if small and n_out > 1:
-                    # key-disjoint output files: see write_data_files'
-                    # range layout (bounded rewrite amplification)
-                    new_files, new_stats = self.table.write_data_files(
-                        merged, manifest.version + 1,
-                        layout="range", range_split=(list(self.pk), n_out),
-                        manifest=manifest,
-                    )
-                else:
-                    if small:
-                        layout = "single"
-                    elif est_bytes <= MERGE_REBALANCE_MAX_BYTES:
-                        layout = "rebalance"  # right-sized files, no compact
-                    else:
-                        layout = "natural"
-                    new_files, new_stats = self.table.write_data_files(
-                        merged, manifest.version + 1,
-                        layout=layout,
-                        manifest=manifest,
-                    )
-                # keep every file that was not rewritten (including
-                # non-overlapping files inside affected partitions)
-                nm = self._commit_next(
-                    manifest, "MERGE", final_logical,
-                    **manifest.replace_files(rewrite_files, new_files, new_stats),
-                )
-        finally:
-            raw.unpersist()
-        self._maybe_auto_compact(nm)
-        return True
-
-    def _merge_mor_once(
-        self,
-        df: DataFrame,
-        manifest: Manifest,
-        planned_version: int,
-        final_logical: T.StructType,
-        exprs,
-        part_cols: list[str],
-        order_col: str | None,
-        tombstone_col: str | None,
-        ephemeral_order: bool = False,
-    ) -> bool:
-        """Merge-on-read upsert (``write.merge.mode=merge-on-read``,
-        lake/mor.py): commit the batch's post-image rows as a DELTA file
-        and the touched keys as a TOMBSTONE file — no matched file is
-        rewritten, so write cost is O(batch) regardless of table width
-        or how many files hold the matched keys. The only read of the
-        target is a pk+``_inserted_at`` lookup over the range/Bloom-
-        pruned overlap files (two columns, not the row width), needed to
-        preserve insertion timestamps on updated keys; a provably
-        insert-only batch (no overlap survives pruning) reads nothing
-        and writes no tombstone at all. The read path reconstructs the
-        snapshot by suppressing rows whose pk appears in a LATER
-        tombstone; OPTIMIZE materializes the debt."""
+        - copy-on-write: untouched ∪ matched ∪ inserts over the rewrite
+          set (the module docstring's plan shape);
+        - merge-on-read (``write.merge.mode=merge-on-read``,
+          lake/mor.py): the live rows as a DELTA file carrying matched
+          keys' ``_inserted_at``, and the matched and dead keys as a
+          TOMBSTONE file. No file is rewritten, so write cost is
+          O(batch); the only target read is a pk + ``_inserted_at``
+          lookup over the pruned overlap files, and a provably
+          insert-only batch reads nothing and writes no tombstone."""
         from .mor import (
+            MODE_MOR,
             MOR_AUTO_MATERIALIZE_DELETES,
             mor_state,
+            resolve_merge_mode,
             write_tombstones,
         )
 
-        pk0 = self.pk[0]
-        keep_extra = tuple(c for c in (tombstone_col,) if c) + (
-            (order_col,) if ephemeral_order and order_col else ()
-        )
-        src0 = _conform(
-            df, final_logical, extra=keep_extra,
-            defaults=column_defaults(manifest),
-        )
-        np_cap = self.table.spark.sparkContext.defaultParallelism
-        # delta files must hold exactly ONE row per pk (rows within one
-        # commit share a seq, so nothing suppresses an in-batch dup) —
-        # dedup eagerly, unlike the COW path where it rides the window
-        src0 = _dedup_last_wins(src0.coalesce(np_cap), self.pk, order_col)
-        if tombstone_col:
-            flag = F.coalesce(F.col(tombstone_col), F.lit(False))
-            dead_keys = src0.filter(flag).select(*self.pk)
-            live = src0.filter(~flag)
-        else:
-            dead_keys = None
-            live = src0
-        if keep_extra:
-            live = live.drop(*keep_extra)
-        live = with_partition_columns(live, exprs).cache()
+        # the tombstone flag and ephemeral order never enter the schema
+        extra = [c for c in (tombstone_col,) if c]
+        if ephemeral_order and order_col:
+            extra.append(order_col)
+        payload = df.drop(*extra) if extra else df
+        if manifest is None:
+            manifest = self._ensure_table(payload)
+        final_logical = _logical_schema_of_batch(payload, manifest)
+        exprs = manifest.partition_exprs
+        part_cols = partition_column_names(exprs)
+        mor = resolve_merge_mode(manifest, self.merge_mode) == MODE_MOR
 
-        # ---- the ONE planning job + overlap prune ----
-        probe = live.select(F.col(pk0).alias("__k"))
-        if dead_keys is not None:
-            probe = probe.unionByName(dead_keys.select(F.col(pk0).alias("__k")))
-        try:
-            n_src, _, overlap_by_part = self._plan_merge(manifest, probe, [])
-            if n_src == 0:
-                return True  # empty batch: no commit
-            overlap = [f for v in overlap_by_part.values() for f in v]
-
-            # ---- post-image composition ----
-            if overlap:
-                # pk + _inserted_at only: a 2-column pruned scan, never
-                # the row width — and visibility-aware, so a key whose
-                # only copies are tombstone-suppressed counts as absent
-                ins_lookup = (
-                    self._read_files(manifest, overlap)
-                    .select(*self.pk, F.col(INSERTED_AT).alias("__t_ins"))
+        # ---- executor choice: driver-side Arrow, else Spark ----
+        if not mor:
+            skip = _arrow_merge_skip(manifest)
+            if skip is None:
+                done = self._merge_arrow(
+                    df, manifest, final_logical, exprs, part_cols,
+                    order_col, tombstone_col, ephemeral_order,
                 )
-                if self._est_rewrite_rows(manifest, overlap) <= MERGE_BROADCAST_ROWS:
-                    ins_lookup = F.broadcast(ins_lookup)
-                out = (
-                    live.join(ins_lookup, on=self.pk, how="left")
-                    .withColumn(
-                        INSERTED_AT,
-                        F.coalesce(F.col("__t_ins"), F.current_timestamp()),
-                    )
-                    .drop("__t_ins")
-                )
-                # tombstone only keys that actually MATCH a visible row
-                # (plus CDC dead keys below): inserts need no
-                # suppression, and at scale an insert-heavy batch must
-                # not inflate the standing tombstone set the read path
-                # anti-joins against
-                matched_keys = live.join(ins_lookup, on=self.pk, how="left_semi")
+                if done is not None:
+                    return done
             else:
-                out = live.withColumn(INSERTED_AT, F.current_timestamp())
-                matched_keys = None
-            out_cols = _out_cols(final_logical, part_cols)
-            out = out.select(*[_qcol(c) for c in out_cols])
-            est_bytes = n_src * EST_ROW_BYTES
-            n_out = max(
-                1, min(MERGE_RANGE_MAX_FILES, _range_file_count(n_src, est_bytes))
+                REGISTRY.inc(f"merge.arrowSkip.{skip}")
+
+        # ---- the one Spark prologue ----
+        # Cap the batch's partition count at the session's parallelism:
+        # a merge_many union of N micro-batches arrives with N×32 tiny
+        # upstream partitions, and every downstream stage would schedule
+        # one task per partition (measured 321-task write jobs at ~3 s
+        # pure scheduling). A coalesce never adds partitions.
+        np_cap = self.table.spark.sparkContext.defaultParallelism
+        raw = _conform(
+            df, final_logical, extra=extra, defaults=column_defaults(manifest)
+        )
+        raw = with_partition_columns(raw, exprs).coalesce(np_cap).cache()
+        flag = (
+            F.coalesce(F.col(tombstone_col), F.lit(False))
+            if tombstone_col
+            else F.lit(False)
+        )
+        # The planning job runs straight over the cached batch (no
+        # shuffle barrier inside the blocking job): duplicate keys only
+        # widen bounds or add partition values, which is conservative.
+        # Dead rows add no partition value (their old copies may live
+        # anywhere; the overlap probe finds them); merge-on-read rewrites
+        # no file and needs no partition value at all.
+        probe_parts = [] if mor else part_cols
+        probe = raw.select(
+            F.col(self.pk[0]).alias("__k"), (~flag).alias("__live"), *probe_parts
+        )
+        # one row per pk from here on: the dedup window runs lazily
+        # inside the write job, where its shuffle overlaps the plan
+        src = _dedup_last_wins(raw, self.pk, order_col)
+        live = src.filter(~flag) if tombstone_col else src
+        dead_keys = src.filter(flag).select(*self.pk) if tombstone_col else None
+        out_cols = _out_cols(final_logical, part_cols)
+        now = F.current_timestamp()
+
+        try:
+            n_src, src_parts, overlap_by_part = self._plan_merge(
+                manifest, probe, probe_parts
             )
+            overlap = [f for v in overlap_by_part.values() for f in v]
+            if mor:
+                if n_src == 0:
+                    return True  # empty batch: no commit
+                rewrite_files = []
+                out = live.withColumn(INSERTED_AT, now)
+                if overlap:
+                    # pk + _inserted_at only: a 2-column pruned scan,
+                    # never the row width, and visibility-aware, so a
+                    # key whose only copies are tombstoned counts absent
+                    ins_lookup = self._read_files(manifest, overlap).select(
+                        *self.pk, F.col(INSERTED_AT).alias("__t_ins")
+                    )
+                    if self._est_rewrite_rows(manifest, overlap) <= MERGE_BROADCAST_ROWS:
+                        ins_lookup = F.broadcast(ins_lookup)
+                    out = live.join(ins_lookup, on=self.pk, how="left").withColumn(
+                        INSERTED_AT, F.coalesce(F.col("__t_ins"), now)
+                    )
+                    # tombstone only keys that MATCH a visible row (plus
+                    # the dead keys): an insert-heavy batch must not
+                    # grow the tombstone set every read anti-joins
+                    tomb_keys = live.join(
+                        ins_lookup, on=self.pk, how="left_semi"
+                    ).select(*self.pk)
+                    if dead_keys is not None:
+                        tomb_keys = tomb_keys.unionByName(dead_keys)
+                out = out.select(*[_qcol(c) for c in out_cols])
+            else:
+                # Micro-batches broadcast (hash-join against only the
+                # rewrite files, no shuffle of the table); a bulk
+                # backfill above the row threshold would OOM the driver
+                # as a broadcast, so it degrades to shuffle joins.
+                bcast = F.broadcast if n_src <= MERGE_BROADCAST_ROWS else (lambda d: d)
+                src_keys = src.select(*self.pk)  # live and dead keys
+                rewrite_files = self._rewrite_files(
+                    manifest, src_parts, overlap_by_part, src_keys, bcast
+                )
+                target = self._read_files(manifest, rewrite_files)
+                # Conform the target to the evolved schema too: null-fill
+                # added columns, cast widened ones; keep system/partition
+                # columns.
+                passthrough = [INSERTED_AT] + [
+                    c for c in part_cols if c not in final_logical.fieldNames()
+                ]
+                target = _conform(target, final_logical, extra=passthrough)
+                untouched = target.join(bcast(src_keys), on=self.pk, how="left_anti")
+                ins_lookup = target.select(*self.pk, INSERTED_AT)
+                matched = ins_lookup.join(bcast(live), on=self.pk, how="inner")
+                inserts = live.join(
+                    bcast(ins_lookup.select(*self.pk)), on=self.pk, how="left_anti"
+                ).withColumn(INSERTED_AT, now)
+                changed = matched.select(*[_qcol(c) for c in out_cols]).unionByName(
+                    inserts.select(*[_qcol(c) for c in out_cols])
+                )
+            # Output layout from manifest estimates. Rows want MANY
+            # narrow-range files (pruning); auto-compact wants FEW sub-8
+            # MB files, and fires only past AUTO_COMPACT_MIN_FILES of
+            # them per dir, so up to that many range files may go
+            # sub-threshold safely.
+            est_rows = self._est_rewrite_rows(manifest, rewrite_files) + n_src
+            est_bytes = (
+                self._est_rewrite_bytes(manifest, rewrite_files)
+                + n_src * EST_ROW_BYTES
+            )
+            n_out = max(
+                1, min(MERGE_RANGE_MAX_FILES, _range_file_count(est_rows, est_bytes))
+            )
+            # range: key-disjoint output files (see write_data_files),
+            # so a later merge rewrites only the files its keys overlap
+            range_split = {"layout": "range", "range_split": (list(self.pk), n_out)}
+            small = est_bytes <= SMALL_OUTPUT_BYTES
+            if mor:
+                layout = {"layout": "single"} if small else range_split
+            else:
+                if small and not tombstone_col:
+                    layout = range_split if n_out > 1 else {"layout": "single"}
+                elif est_bytes <= MERGE_REBALANCE_MAX_BYTES:
+                    layout = {"layout": "rebalance"}  # right-sized files
+                else:
+                    # The changed side is at most n_src rows, but each
+                    # branch inherits its upstream partitioning (one
+                    # sliver per rewrite-file scan task and per batch
+                    # partition), which the natural layout keeps: only
+                    # the changed side is repartitioned to batch-sized
+                    # tasks, while the untouched side (the heavy one at
+                    # 100 TB) stays unshuffled.
+                    layout = {"layout": "natural"}
+                    changed = changed.repartition(
+                        max(1, -(-(n_src * EST_ROW_BYTES) // SMALL_OUTPUT_BYTES))
+                    )
+                out = untouched.select(*[_qcol(c) for c in out_cols]).unionByName(
+                    changed
+                )
 
             with self.table.lock():
-                # cheap tip check; unchanged ⇒ planning manifest is tip
-                if self._chain_advanced(planned_version):
-                    return False  # concurrent commit — replan
+                # cheap tip check (one tiny LATEST read, not a chain
+                # resolve): unchanged version ⇒ the planning manifest IS
+                # the tip, so reuse it as-is
+                if self._chain_advanced(manifest.version):
+                    return False  # concurrent commit — replan against it
                 v = manifest.version + 1
-                if est_bytes <= SMALL_OUTPUT_BYTES:
-                    new_files, new_stats = self.table.write_data_files(
-                        out, v, layout="single", manifest=manifest
+                new_files, new_stats = self.table.write_data_files(
+                    out, v, manifest=manifest, **layout
+                )
+                if not mor:
+                    # keep every file that was not rewritten (including
+                    # non-overlapping files inside affected partitions)
+                    nm = self._commit_next(
+                        manifest, "MERGE", final_logical,
+                        **manifest.replace_files(rewrite_files, new_files, new_stats),
                     )
                 else:
-                    new_files, new_stats = self.table.write_data_files(
-                        out, v, layout="range",
-                        range_split=(list(self.pk), n_out), manifest=manifest,
-                    )
-                seq_map, deletes = mor_state(manifest)
-                for paths in new_files.values():
-                    for f in paths:
-                        seq_map[f] = v
-                if overlap:
-                    keys = matched_keys.select(*self.pk)
-                    if dead_keys is not None:
-                        keys = keys.unionByName(dead_keys)
-                    tomb_rel, tomb_meta = write_tombstones(
-                        self.table, keys, manifest, v
-                    )
-                    if tomb_meta["rows"] == 0:
-                        # no key matched after all (stats/bloom are
-                        # conservative): drop the staged empty tombstone
-                        self.table.fs.delete(
-                            os.path.join(self.table.dir, tomb_rel),
-                            missing_ok=True,
+                    # the commit stamps the delta files with v, so the
+                    # tombstone (seq v) never suppresses them
+                    seq_map, deletes = mor_state(manifest)
+                    if overlap:
+                        tomb_rel, tomb_meta = write_tombstones(
+                            self.table, tomb_keys, manifest, v
                         )
-                    else:
-                        deletes = {**deletes, tomb_rel: tomb_meta}
-                REGISTRY.inc("merge.morCommits")
-                self._commit_next(
-                    manifest, "MERGE(MOR)", final_logical,
-                    {"mor": {"seq": seq_map, "deletes": deletes}},
-                    **manifest.replace_files((), new_files, new_stats),
-                )
+                        if tomb_meta["rows"] == 0:
+                            # no key matched after all (stats and Bloom
+                            # are conservative): drop the empty tombstone
+                            self.table.fs.delete(
+                                os.path.join(self.table.dir, tomb_rel),
+                                missing_ok=True,
+                            )
+                        else:
+                            deletes = {**deletes, tomb_rel: tomb_meta}
+                    REGISTRY.inc("merge.morCommits")
+                    nm = self._commit_next(
+                        manifest, "MERGE(MOR)", final_logical,
+                        {"mor": {"seq": seq_map, "deletes": deletes}},
+                        **manifest.replace_files((), new_files, new_stats),
+                    )
         finally:
-            live.unpersist()
-        # bound read amplification AND per-commit props metadata: past
-        # the threshold the debt materializes (visibility-applied full
-        # rewrite through compact(); tombstones retire at that commit)
-        if self.auto_compact and len(deletes) > MOR_AUTO_MATERIALIZE_DELETES:
+            raw.unpersist()
+        if not mor:
+            self._maybe_auto_compact(nm)
+        elif self.auto_compact and len(deletes) > MOR_AUTO_MATERIALIZE_DELETES:
+            # bound read amplification AND per-commit props metadata:
+            # past the threshold the debt materializes (a visibility-
+            # applied full rewrite; the tombstones retire at that commit)
             from .maintenance import compact
 
             with REGISTRY.timer("autoCompact"):
                 compact(self.table)
         return True
+
+    def _rewrite_files(
+        self,
+        manifest: Manifest,
+        src_parts: set,
+        overlap_by_part: dict,
+        src_keys: DataFrame,
+        bcast,
+    ) -> list[str]:
+        """The copy-on-write rewrite set: the overlap files of the
+        partitions the batch affects. Both sides of the membership test
+        go through ONE canonical encoding (canon_partition_value /
+        dir_key_to_canon_tuple): Python str() of a boolean/timestamp/
+        escaped value differs from the Hive directory token Spark
+        writes, and a raw-string compare would silently skip partitions
+        (old rows never rewritten → duplicate keys). Unpartitioned and
+        tiny manifests skip partition pruning: probing and rewriting
+        every overlap file is cheaper than planning."""
+        exprs = manifest.partition_exprs
+        part_cols = partition_column_names(exprs)
+        n_files_total = sum(len(v) for v in manifest.files.values())
+        flat = [f for v in overlap_by_part.values() for f in v]
+        if not part_cols or n_files_total <= MERGE_SMALL_MANIFEST_FILES:
+            return flat
+        affected = {tuple(canon_partition_value(v) for v in p) for p in src_parts}
+        # Old copies of updated keys may live in partitions the new rows
+        # don't touch (partition-value drift). Only files OUTSIDE the
+        # already-affected partitions can add to the rewrite set — scan
+        # just those; usually there are none and the job is skipped.
+        outside_files = [
+            f
+            for k, v in overlap_by_part.items()
+            if dir_key_to_canon_tuple(k, exprs) not in affected
+            for f in v
+        ]
+        if outside_files:
+            matched_parts = (
+                self._read_files(manifest, outside_files)
+                .select(*self.pk, *part_cols)
+                .join(bcast(src_keys), on=self.pk, how="left_semi")
+                .select(*part_cols)
+                .distinct()
+                .collect()
+            )
+            affected |= {
+                tuple(canon_partition_value(r[c]) for c in part_cols)
+                for r in matched_parts
+            }
+        if len(affected) > MAX_PRUNED_PARTITIONS:
+            return flat
+        return [
+            f
+            for k, v in overlap_by_part.items()
+            if dir_key_to_canon_tuple(k, exprs) in affected
+            for f in v
+        ]
 
     def _merge_arrow(
         self,
@@ -1917,7 +1757,9 @@ class LakeWriter:
             combined = pa.concat_tables([target, bt]) if n_t else bt
             n_b = bt.num_rows
             if any(combined.column(k).null_count for k in pk):
-                return _fallback("merge.arrowFallback", "null_pk")  # window null-group semantics
+                # a NULL key matches no row: the Spark merge's
+                # equi-joins insert it beside any stored NULL key
+                return _fallback("merge.arrowFallback", "null_pk")
 
             # ---- winner selection (the row_number window, in pandas) ----
             key_df = combined.select(pk).to_pandas()

@@ -2475,7 +2475,8 @@ def merge_many_group_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     each with a distinct payload) group-committed in one call. Final
     state must equal the oracle's precedence CASE — b3 over b2 over b1
     over base — proving batch-sequential semantics survive the single
-    window-merge. Exactly one commit lands (version advances by 1)."""
+    merge (its ephemeral batch ordinal orders last-write-wins). Exactly
+    one commit lands (version advances by 1)."""
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
     base = ev.filter(F.col("event_id") % 10 < 8)
     batches = [

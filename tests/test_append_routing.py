@@ -253,3 +253,21 @@ def test_append_routing_decision_table(
         assert got["delta"]["fallback"] == 0, got["delta"]
     if check:
         check(got)
+
+
+def test_unknown_size_first_append_counts_its_arrow_skip(spark, tmp_path):
+    """A small ``createDataFrame(list, ddl)`` batch has no size estimate,
+    and a new table has no inline limit to bound a probe: its first
+    append takes the Spark write, counted as
+    ``append.arrowSkip.unknown_size``."""
+
+    def skips():
+        return REGISTRY.snapshot()["counters"].get("append.arrowSkip.unknown_size", 0)
+
+    t = LakeCatalog(spark, str(tmp_path)).table("t")
+    before = skips()
+    LakeWriter(t, pk=["id"], partition_by="kind").append(
+        spark.createDataFrame([(1, "a"), (2, "b")], "id long, kind string"))
+    assert skips() - before == 1
+    assert sorted(tuple(r) for r in t.read().select("id", "kind").collect()) == [
+        (1, "a"), (2, "b")]

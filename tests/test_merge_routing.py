@@ -190,6 +190,11 @@ CASES = [
     ("partition_empty_string", _rename_to(""), "name", None, "arrow", None),
     ("partition_null", _rename_to(None), "name", None, "arrow", None),
     ("merge_on_read", _small, False, "merge-on-read", "mor", None),
+    # merge-on-read through the Spark prologue copy-on-write shares
+    ("mor_tombstones", _tombstones, False, "merge-on-read", "mor", None),
+    ("mor_merge_many", _merge_many, False, "merge-on-read", "mor", None),
+    ("mor_partition_drift", _partition_drift, True, "merge-on-read", "mor",
+     _one_row_per_key),
 ]
 
 
@@ -279,6 +284,30 @@ def test_merge_routing_decision_table(
         assert ref["kept"] <= got["kept"], f"{case}: rewrote a file the pruning merge keeps"
     if check:
         check(got)
+
+
+@pytest.mark.parametrize("path", ["default", "pruning", "merge-on-read"])
+def test_null_key_never_matches_a_target_row(spark, tmp_path, monkeypatch, path):
+    """A NULL key never matches a stored row, as in the reference's
+    ``MERGE INTO t USING tmp USING (pk)``, whatever the table's size or
+    merge mode: the batch's NULL-key row lands beside the stored one.
+    Within one batch, NULL keys still collapse to the last write."""
+    if path == "pruning":
+        monkeypatch.setattr(wmod.LakeWriter, "_merge_arrow", lambda self, *a, **k: None)
+    t = LakeCatalog(spark, str(tmp_path)).table("t")
+    mode = "merge-on-read" if path == "merge-on-read" else None
+    w = LakeWriter(t, pk=["id"], merge_mode=mode)
+    schema = "id long, v string"
+
+    def rows():
+        got = [tuple(r) for r in t.read().select("id", "v").collect()]
+        return sorted(got, key=lambda r: (r[0] is None, r[0] or 0, r[1]))
+
+    w.append(spark.createDataFrame([(1, "a"), (None, "n0")], schema))
+    w.merge(spark.createDataFrame([(None, "n1"), (1, "b")], schema))
+    assert rows() == [(1, "b"), (None, "n0"), (None, "n1")]
+    w.merge(spark.createDataFrame([(None, "x"), (None, "y")], schema))
+    assert rows() == [(1, "b"), (None, "n0"), (None, "n1"), (None, "y")]
 
 
 def _warm_upsert_jobs(spark, root, batch, group):

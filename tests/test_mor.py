@@ -198,6 +198,38 @@ def test_cow_merge_on_mor_state_materializes_incrementally(spark, tmp_path, monk
     assert t.read().filter("id = 3").count() == 1
 
 
+def test_tombstone_arrow_write_failure_is_a_counted_fallback(
+    spark, tmp_path, monkeypatch
+):
+    """A tombstone whose driver-side Arrow write fails is written by
+    Spark instead, counted as ``mor.tombstoneFallback.error``."""
+    import pyarrow.parquet as pq
+
+    from ducklake_kafka_connect_spark.metrics import REGISTRY
+
+    _, t, w = _mk(spark, tmp_path, rows=10)
+    real = pq.write_table
+
+    def failing(tbl, where, *a, **k):
+        if str(where).endswith("tombstones.parquet"):
+            raise OSError("injected tombstone write failure")
+        return real(tbl, where, *a, **k)
+
+    def fallbacks():
+        return REGISTRY.snapshot()["counters"].get("mor.tombstoneFallback.error", 0)
+
+    monkeypatch.setattr(pq, "write_table", failing)
+    before = fallbacks()
+    w.merge(spark.createDataFrame(
+        [(3, "u3", 9), (50, "n50", 0)], "id int, val string, grp int"))
+    assert fallbacks() - before == 1
+    _, deletes = mor_state(t.manifest())
+    assert [meta["rows"] for meta in deletes.values()] == [1]
+    vals = _vals(t)
+    assert vals[3] == "u3" and vals[50] == "n50" and len(vals) == 11
+    assert t.read().filter("id = 3").count() == 1
+
+
 def test_small_table_cow_path_respects_visibility(spark, tmp_path):
     _, t, w = _mk(spark, tmp_path, rows=10)
     w.merge(spark.createDataFrame([(3, "u3", 9)], "id int, val string, grp int"))
