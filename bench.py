@@ -53,9 +53,11 @@ def main() -> None:
         spark.catalog.clearCache()
 
     timings: dict[str, float] = {}
+    cold: dict[str, float] = {}
     for name, qd in QUERIES.items():
         # min of 2 runs: the first pass anywhere pays one-time JVM JIT /
-        # codegen / parquet-footer costs that are not plan cost.
+        # codegen / parquet-footer costs that are not plan cost. The
+        # first run alone is the query's cold time.
         best = None
         for _ in range(2):
             t0 = time.perf_counter()
@@ -64,13 +66,14 @@ def main() -> None:
                 df.collect()
                 elapsed = time.perf_counter() - t0
                 best = elapsed if best is None else min(best, elapsed)
+                cold.setdefault(name, round(elapsed, 3))
             except Exception as e:  # record failures without killing the run
                 best = -1.0
                 print(f"BENCH ERROR {name}: {e}", file=sys.stderr)
                 break
         timings[name] = round(best, 3)
-        # queries persist diamond-DAG intermediates; drop them so later
-        # queries aren't timed under another query's storage-memory churn
+        # drop anything a query cached so later queries aren't timed
+        # under another query's storage-memory churn
         spark.catalog.clearCache()
 
     probes["after_queries"] = mini_probe()
@@ -79,6 +82,7 @@ def main() -> None:
         "value": None,  # filled after the end-of-run second pass
         "unit": "sec",
         "queries": timings,
+        "queries_cold": cold,
         "split": split_harness(spark, sf_dir),
         "sf": sf,
         # min over 3 FRESH JVMs (VERDICT r9 #2): single-invocation ingest
@@ -1009,8 +1013,7 @@ def _run_query(
     """Time one query end-to-end; large-output queries write parquet
     instead of collecting through the Python driver. Min of ``runs``
     executions — the SAME protocol the sf0.1 surface uses, so
-    sf1/sf0.1 ratios compare warm against warm (operators memoize
-    built plans and persist intermediates; a single cold sf1 run
+    sf1/sf0.1 ratios compare warm against warm (a single cold sf1 run
     against a warm sf0.1 baseline would read as a phantom scale
     blowup)."""
     first = best = None

@@ -1484,7 +1484,7 @@ class LakeWriter:
             if mor:
                 layout = {"layout": "single"} if small else range_split
             else:
-                if small and not tombstone_col:
+                if small:
                     layout = range_split if n_out > 1 else {"layout": "single"}
                 elif est_bytes <= MERGE_REBALANCE_MAX_BYTES:
                     layout = {"layout": "rebalance"}  # right-sized files

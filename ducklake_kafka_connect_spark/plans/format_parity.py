@@ -41,8 +41,6 @@ from __future__ import annotations
 import json
 import os
 import struct
-import tempfile
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -51,7 +49,7 @@ from pyspark.sql import functions as F
 
 from ..lake import LakeCatalog
 from ..streaming.ingest import IngestConfig, IngestPipeline, TableSpec
-from .queries import _t, register
+from .queries import _fresh_catalog, _scratch_dir, _t, register
 from ..lake.relation_cache import local_rows_df
 
 AVRO_BAD_MOD = 97  # every 97th event framed under an unregistered id
@@ -68,13 +66,6 @@ EV_AVRO_SCHEMA = json.dumps(
         ],
     }
 )
-
-
-def _fresh_catalog(spark: SparkSession, tag: str) -> LakeCatalog:
-    return LakeCatalog(
-        spark,
-        os.path.join(tempfile.gettempdir(), f"ducklake_{tag}_{uuid.uuid4().hex[:8]}"),
-    )
 
 
 def _event_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -744,9 +735,7 @@ def lake_ops_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") * 100).cast("long").alias(col),
         )
 
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_lakeops_{uuid.uuid4().hex[:8]}"
-    )
+    root = _scratch_dir("lakeops")
     t = LakeTable(spark, root, "ops")
     w = LakeWriter(t)  # append-only, unpartitioned: add_files-eligible
     w.write(slice_df(1, "value_cents"))
@@ -919,9 +908,7 @@ def cas_backend_lake_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     eid = F.col("event_id")
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_cas_{uuid.uuid4().hex[:8]}"
-    )
+    root = _scratch_dir("cas")
     t = LakeTable(spark, root, "ops", backend="cas")
     w = LakeWriter(t, pk=["event_id"])
     w.write(cents_slice(eid % 9 == 1))
@@ -990,9 +977,7 @@ def lake_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_lake_datasource(spark)
     src = _event_source(spark, sf_dir)
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_ds_{uuid.uuid4().hex[:8]}"
-    )
+    root = _scratch_dir("ds")
     t = LakeTable(spark, root, "ev")
     LakeWriter(t).append(
         src.filter(F.col("event_id") % 7 == 2).select(
@@ -1047,9 +1032,7 @@ def lake_datasource_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
 
     register_lake_datasource(spark)
     src = _event_source(spark, sf_dir)
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_sink_{uuid.uuid4().hex[:8]}"
-    )
+    root = _scratch_dir("sink")
     half = src.filter(F.col("event_id") % 13 == 5).select(
         "event_id",
         "event_type",
@@ -1110,9 +1093,7 @@ def lake_datasource_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_lake_datasource(spark)
     src = _event_source(spark, sf_dir)
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_wide_{uuid.uuid4().hex[:8]}"
-    )
+    root = _scratch_dir("wide")
     t = LakeTable(spark, root, "wide")
     LakeWriter(t).append(
         src.filter(F.col("event_id") % 5 == 1).select(
@@ -1176,9 +1157,7 @@ def lake_datasource_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFr
         F.col("ts"),
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     ).filter(F.col("event_id") % 6 == 3)
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_psink_{uuid.uuid4().hex[:8]}"
-    )
+    root = _scratch_dir("psink")
     t = LakeTable(spark, root, "pev")
     t.create(ev.schema, pk=[], partition_by="month(ts)")
     (
@@ -1227,9 +1206,7 @@ def medallion_incremental_pipeline(spark: SparkSession, sf_dir: str) -> DataFram
 
     register_lake_datasource(spark)
     src = _event_source(spark, sf_dir)
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_med_{uuid.uuid4().hex[:8]}"
-    )
+    root = _scratch_dir("med")
     cp = os.path.join(root, "_checkpoint")
     slice_ = src.filter(F.col("event_id") % 5 == 1).select(
         "event_id",
@@ -1329,9 +1306,7 @@ def refs_chain_tag_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     eid = F.col("event_id")
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_refs_{uuid.uuid4().hex[:8]}"
-    )
+    root = _scratch_dir("refs")
     t = LakeTable(spark, root, "ops", backend="cas")
     w = LakeWriter(t, pk=["event_id"])
     w.write(cents_slice(eid % 11 == 3))
@@ -1415,9 +1390,7 @@ def connector_properties_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ducklake.table.<t>.id-columns)."""
     from ..connector_config import build_from_properties
 
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_props_{uuid.uuid4().hex[:8]}"
-    )
+    root = _scratch_dir("props")
     props = {
         "name": "ducklake-sink",
         "topics": "orders",
@@ -1494,9 +1467,7 @@ def lake_sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_sink_{uuid.uuid4().hex[:8]}"
-    )
+    root = _scratch_dir("sink")
     base = src.filter(F.col("event_id") % 10 < 8)
     batch = (
         src.filter(F.col("event_id") % 10 >= 5)
@@ -1554,9 +1525,7 @@ def lake_sink_upsert_evolving(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_sink_{uuid.uuid4().hex[:8]}"
-    )
+    root = _scratch_dir("sink")
 
     def sink(d):
         (
@@ -1611,9 +1580,7 @@ def sql_copy_into_import(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_copy_{uuid.uuid4().hex[:8]}"
-    )
+    root = _scratch_dir("copy")
     src = os.path.join(root, "src")
     ev.coalesce(2).write.parquet(src)
     cat = LakeCatalog(spark, os.path.join(root, "lake"))
@@ -1659,10 +1626,7 @@ def sql_delete_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_gdpr_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, root)
+    cat = _fresh_catalog(spark, "gdpr")
     LakeWriter(cat.table("ev_gdpr"), pk=["event_id"]).write(src)
     LakeWriter(cat.table("erasure_requests")).append(
         src.filter(F.col("user_id") % 37 == 0).select("user_id").distinct()
@@ -1706,10 +1670,7 @@ def sql_optimize_where_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
         (F.col("event_id") % 4).cast("int").alias("grp"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_opt_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, root)
+    cat = _fresh_catalog(spark, "opt")
     w = LakeWriter(cat.table("ev_hot"), pk=["event_id"], partition_by="grp")
     # three appends → several files per partition
     for r in (0, 1, 2):
@@ -1772,9 +1733,7 @@ def lake_replication_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_repl_{uuid.uuid4().hex[:8]}"
-    )
+    root = _scratch_dir("repl")
     primary, mirror = os.path.join(root, "primary"), os.path.join(root, "mirror")
     cat = LakeCatalog(spark, primary)
     t = cat.table("ev_repl")
@@ -1836,9 +1795,7 @@ def replica_fence_promote(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_fence_{uuid.uuid4().hex[:8]}"
-    )
+    root = _scratch_dir("fence")
     primary, mirror = os.path.join(root, "p"), os.path.join(root, "m")
     t = LakeCatalog(spark, primary).table("ev_f")
     LakeWriter(t, pk=["event_id"]).write(src)
@@ -2229,9 +2186,7 @@ def sql_export_import_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_expdb_{uuid.uuid4().hex[:8]}"
-    )
+    root = _scratch_dir("expdb")
     cat = LakeCatalog(spark, os.path.join(root, "src"))
     LakeWriter(cat.table("ev_exp"), pk=["event_id"]).write(src)
     cat.sql("CREATE MACRO bucket(c) AS c % 97")
@@ -2302,10 +2257,7 @@ def sql_column_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_dflt_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, root)
+    cat = _fresh_catalog(spark, "dflt")
     cat.sql(
         "CREATE TABLE ev_dflt (event_id BIGINT, event_type STRING, "
         "cents BIGINT, status STRING DEFAULT 'new' NOT NULL, "
@@ -2356,10 +2308,7 @@ def sql_snapshot_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_snap_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, root)
+    cat = _fresh_catalog(spark, "snap")
     cat.sql(
         "CREATE TABLE ev_snap (event_id BIGINT, event_type STRING, "
         "cents BIGINT, PRIMARY KEY (event_id))"
@@ -2431,9 +2380,7 @@ def multi_table_txn_atomic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ducklake_txn_{uuid.uuid4().hex[:8]}"
-    )
+    root = _scratch_dir("txn")
     cat = LakeCatalog(spark, root)
     outside = LakeCatalog(spark, root)
     wa = LakeWriter(cat.table("txn_ev"), pk=["event_id"])

@@ -19,16 +19,11 @@ topic routing are event_id arithmetic, mirrored 1:1 in the oracle.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..lake import LakeCatalog
 from ..streaming.ingest import IngestConfig, IngestPipeline, TableSpec
-from .queries import _t, register
+from .queries import _fresh_catalog, _t, register
 
 KEY_MOD = 500       # 500 is even → key parity == event parity → each
                     # key lives on exactly one topic (routing is clean)
@@ -99,10 +94,7 @@ def ingest_replay_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     until rows match).
     """
     frame = build_replay_frame(spark, sf_dir)
-    lake_dir = os.path.join(
-        tempfile.gettempdir(), f"ducklake_replay_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "replay")
     cfg = IngestConfig(
         topic2table={"ev_a": "events_replayed", "ev_b": "events_replayed"},
         tables={
@@ -167,10 +159,7 @@ def dlq_reprocess_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotent merge, single-commit DLQ swap
     (streaming/ingest.py::reprocess_dlq)."""
     frame = build_replay_frame(spark, sf_dir)
-    lake_dir = os.path.join(
-        tempfile.gettempdir(), f"ducklake_dlqfix_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "dlqfix")
 
     def spec(constraints):
         return TableSpec(

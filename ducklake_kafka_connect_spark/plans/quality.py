@@ -17,13 +17,12 @@ to 6 decimals (the same contract plans/timeseries.py keeps).
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .queries import _t, epoch_us_col, register
+from .queries import _scratch_dir, _t, epoch_us_col, register
 from .timeseries import US_PER_DAY
 
 CENTS_SQL = "CAST(floor(value * 100) AS BIGINT)"
@@ -786,7 +785,7 @@ def bucketed_join_frames(spark: SparkSession, sf_dir: str):
     """Build-phase: bucket orders and customer on the join key; return
     (joined_df, plain_join_df) for plan/equivalence checks."""
     tag = uuid.uuid4().hex[:8]
-    base = os.path.join(tempfile.gettempdir(), f"ducklake_bkt_{tag}")
+    base = _scratch_dir("bkt")
     orders = _t(spark, sf_dir, "orders").select(
         "o_custkey", F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents")
     )
@@ -830,18 +829,9 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange-free (scan → join). The build here is the one-time cost;
     the query plan over the bucketed tables contains no Exchange before
     the join (asserted in tests/test_bucketed.py). The final group-by
-    aggregates 5 segments — its exchange moves 5 rows per partition.
-    The one-time bucket build is memoized per source (repeat calls
-    reuse the session's bucketed tables — the point of bucketing)."""
-    from ..operators import dedup as dedup_ops
-
-    src = _t(spark, sf_dir, "orders")
-
-    def build() -> DataFrame:
-        joined, _ = bucketed_join_frames(spark, sf_dir)
-        return joined.groupBy("c_mktsegment").agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum("cents").alias("revenue_cents"),
-        )
-
-    return dedup_ops._memo_plan(src, "bucketed_join", (), build)
+    aggregates 5 segments — its exchange moves 5 rows per partition."""
+    joined, _ = bucketed_join_frames(spark, sf_dir)
+    return joined.groupBy("c_mktsegment").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum("cents").alias("revenue_cents"),
+    )

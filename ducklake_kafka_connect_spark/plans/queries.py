@@ -21,7 +21,9 @@ rows-only check).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import uuid
 import weakref
@@ -33,7 +35,6 @@ from pyspark.sql import functions as F
 
 from ..functions.timestamps import parse_iso_timestamp
 from ..lake import LakeCatalog, LakeWriter
-from ..operators import dedup as dedup_ops
 from ..operators.similarity import NUM_CELLS, _lcg_hyperplanes
 from ..schema.merge import unify_schemas
 from ..sources.parquet_loader import load_parquet
@@ -87,6 +88,24 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if token is not None:
         per[path] = (token, df)
     return df
+
+
+_SCRATCH_ROOT: str | None = None
+
+
+def _scratch_dir(tag: str) -> str:
+    """A new path for one plan's scratch lake. Every such path lives
+    under one ``ducklake_plans_*`` temp root per process, removed at
+    interpreter exit, so repeat calls never leave lakes behind."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="ducklake_plans_")
+        atexit.register(shutil.rmtree, _SCRATCH_ROOT, True)
+    return os.path.join(_SCRATCH_ROOT, f"{tag}_{uuid.uuid4().hex[:8]}")
+
+
+def _fresh_catalog(spark: SparkSession, tag: str) -> LakeCatalog:
+    return LakeCatalog(spark, _scratch_dir(tag))
 
 
 def epoch_us_col(df: DataFrame, col: str):
@@ -342,8 +361,7 @@ def merge_upsert_build(spark: SparkSession, sf_dir: str):
         .withColumn("value", F.col("value") + F.lit(1000.0))
         .withColumn("event_type", F.lit("updated"))
     )
-    lake_dir = os.path.join(tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}")
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     w = LakeWriter(cat.table("events_merged"), pk=["event_id"])
     w.write(base)   # create + insert
     return w, batch, cat
@@ -398,8 +416,7 @@ def sql_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
     base = ev.filter(F.col("event_id") % 10 < 8)
     batch = ev.filter(F.col("event_id") % 10 >= 5)
-    lake_dir = os.path.join(tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}")
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     LakeWriter(cat.table("events_sm"), pk=["event_id"]).write(base)
     view = f"sql_merge_batch_{uuid.uuid4().hex[:8]}"
     batch.createOrReplaceTempView(view)
@@ -444,8 +461,7 @@ def sql_merge_delete_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
     base = ev.filter(F.col("event_id") % 10 < 8)
     batch = ev.filter(F.col("event_id") % 10 >= 5)
-    lake_dir = os.path.join(tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}")
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     LakeWriter(cat.table("events_cdc"), pk=["event_id"]).write(base)
     view = f"sql_cdc_batch_{uuid.uuid4().hex[:8]}"
     batch.createOrReplaceTempView(view)
@@ -494,10 +510,7 @@ def mor_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("value", F.col("value") + F.lit(1000.0))
         .withColumn("event_type", F.lit("updated"))
     )
-    lake_dir = os.path.join(
-        tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     t = cat.table("events_mor")
     w = LakeWriter(t, pk=["event_id"], merge_mode=MODE_MOR)
     w.write(base)
@@ -541,10 +554,7 @@ def mor_optimize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("value", F.col("value") + F.lit(1000.0))
         .withColumn("event_type", F.lit("updated"))
     )
-    lake_dir = os.path.join(
-        tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     t = cat.table("events_morc")
     w = LakeWriter(t, pk=["event_id"], merge_mode=MODE_MOR)
     w.write(base)
@@ -575,8 +585,7 @@ def sql_merge_mirror_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
     base = ev.filter(F.col("event_id") % 10 < 8)
     batch = ev.filter(F.col("event_id") % 10 >= 5)
-    lake_dir = os.path.join(tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}")
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     LakeWriter(cat.table("events_mirror"), pk=["event_id"]).write(base)
     view = f"sql_mirror_batch_{uuid.uuid4().hex[:8]}"
     batch.createOrReplaceTempView(view)
@@ -621,8 +630,7 @@ def sql_insert_overwrite_replace(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    lake_dir = os.path.join(tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}")
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     LakeWriter(cat.table("events_ow")).append(ev.filter(F.col("event_id") % 4 == 1))
     cat.sql(
         "INSERT OVERWRITE events_ow "
@@ -669,8 +677,7 @@ def cdf_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = sl.filter(F.col("event_id") % 10 >= 5).withColumn(
         "value", F.col("value") + 1000.0
     )
-    lake_dir = os.path.join(tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}")
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     w = LakeWriter(cat.table("events_cdf"), pk=["event_id"])
     w.write(base)
     v1 = cat.table("events_cdf").current_version()
@@ -711,8 +718,7 @@ def sql_merge_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("value") + 1000.0).alias("value"),
         (F.col("event_id") % 1000).cast("long").alias("score"),
     )
-    lake_dir = os.path.join(tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}")
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     LakeWriter(cat.table("events_evo"), pk=["event_id"]).write(base)
     view = f"sql_evo_batch_{uuid.uuid4().hex[:8]}"
     batch.createOrReplaceTempView(view)
@@ -757,8 +763,7 @@ def sql_time_travel_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
         "event_id", F.floor(F.col("value") * 100).cast("long").alias("cents")
     )
-    lake_dir = os.path.join(tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}")
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     w = LakeWriter(cat.table("tt_ev"), pk=["event_id"])
     for r in (0, 1, 2):  # v1 = slice a, v2 = a+b, v3 = a+b+c
         w.write(ev.filter(F.col("event_id") % 3 == r))
@@ -793,8 +798,7 @@ def sql_time_travel_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sql_ctas_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    lake_dir = os.path.join(tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}")
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     view = f"ctas_src_{uuid.uuid4().hex[:8]}"
     ev.createOrReplaceTempView(view)
     cat.sql(
@@ -887,31 +891,11 @@ def asof_forward_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ASOF_CAT_MEMO: dict = {}
-
-
 def _asof_catalog(spark: SparkSession, sf_dir: str) -> LakeCatalog:
-    """One clicks/purchases lake per (session, sf_dir) for the ASOF SQL
-    surface query — the build is paid once across bench/driver runs."""
-    key = (id(spark), sf_dir)
-    cat = _ASOF_CAT_MEMO.get(key)
-    if cat is not None:
-        try:
-            cat.spark.sparkContext.applicationId  # session still alive?
-            if (
-                cat.table_exists("clicks")
-                and cat.table_exists("purchases")
-                and cat.table_exists("ev_small")
-            ):
-                return cat
-        except Exception:
-            pass
-        _ASOF_CAT_MEMO.pop(key, None)
+    """A fresh clicks/purchases/ev_small lake for the catalog-SQL
+    surface queries."""
     ev = _t(spark, sf_dir, "events")
-    lake_dir = os.path.join(
-        tempfile.gettempdir(), f"ducklake_asof_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "asof")
     LakeWriter(cat.table("clicks"), pk=["event_id"]).append(
         ev.filter(F.col("event_type") == "click").select(
             "event_id", "user_id", "ts"
@@ -925,7 +909,6 @@ def _asof_catalog(spark: SparkSession, sf_dir: str) -> LakeCatalog:
     LakeWriter(cat.table("ev_small"), pk=["event_id"]).append(
         ev.select("event_id", "user_id", "event_type", "value")
     )
-    _ASOF_CAT_MEMO[key] = cat
     return cat
 
 
@@ -956,20 +939,14 @@ def sql_asof_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The oracle's FROM/ON/GROUP BY text runs verbatim in both engines;
     only the CTE heads differ (the Spark side reads the pre-built lake
     tables the CTEs describe)."""
-    src = _t(spark, sf_dir, "events")
-    return dedup_ops._memo_plan(
-        src,
-        "sql_asof_attr",
-        (),
-        lambda: _asof_catalog(spark, sf_dir).sql(
-            """
-            SELECT c.user_id, count(*) AS n_attributed,
-                   ROUND(sum(p.purchase_value), 6) AS sum_purchase
-            FROM clicks c
-            ASOF JOIN purchases p ON c.user_id = p.user_id AND c.ts >= p.ts
-            GROUP BY c.user_id
-            """
-        ),
+    return _asof_catalog(spark, sf_dir).sql(
+        """
+        SELECT c.user_id, count(*) AS n_attributed,
+               ROUND(sum(p.purchase_value), 6) AS sum_purchase
+        FROM clicks c
+        ASOF JOIN purchases p ON c.user_id = p.user_id AND c.ts >= p.ts
+        GROUP BY c.user_id
+        """
     )
 
 
@@ -994,21 +971,15 @@ def sql_asof_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(lake/table.py _rewrite_duckdb_functions).",
 )
 def sql_duckdb_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _t(spark, sf_dir, "events")
-    return dedup_ops._memo_plan(
-        src,
-        "sql_fn_suite",
-        (),
-        lambda: _asof_catalog(spark, sf_dir).sql(
-            """
-            SELECT strftime(ts, '%a') AS dow, count(*) AS n_clicks,
-                   CAST(sum(array_length(string_split(strftime(ts, '%Y-%m-%d'), '-')))
-                     AS BIGINT) AS date_parts,
-                   CAST(sum(CASE WHEN regexp_matches(strftime(ts, '%d/%m'), '^0')
-                       THEN 1 ELSE 0 END) AS BIGINT) AS first9_days
-            FROM clicks GROUP BY dow
-            """
-        ),
+    return _asof_catalog(spark, sf_dir).sql(
+        """
+        SELECT strftime(ts, '%a') AS dow, count(*) AS n_clicks,
+               CAST(sum(array_length(string_split(strftime(ts, '%Y-%m-%d'), '-')))
+                 AS BIGINT) AS date_parts,
+               CAST(sum(CASE WHEN regexp_matches(strftime(ts, '%d/%m'), '^0')
+                   THEN 1 ELSE 0 END) AS BIGINT) AS first9_days
+        FROM clicks GROUP BY dow
+        """
     )
 
 
@@ -1032,13 +1003,7 @@ PIVOT (count(*) AS n, sum(value) AS sv
     "DuckDB's 0.",
 )
 def sql_std_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _t(spark, sf_dir, "events")
-    return dedup_ops._memo_plan(
-        src,
-        "sql_std_pivot",
-        (),
-        lambda: _asof_catalog(spark, sf_dir).sql(_STD_PIVOT_BODY % "ev_small"),
-    )
+    return _asof_catalog(spark, sf_dir).sql(_STD_PIVOT_BODY % "ev_small")
 
 
 @register(
@@ -1057,22 +1022,16 @@ def sql_std_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     "zero-shuffle Expand on the Spark side.",
 )
 def sql_std_unpivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _t(spark, sf_dir, "events")
-    return dedup_ops._memo_plan(
-        src,
-        "sql_std_unpivot",
-        (),
-        lambda: _asof_catalog(spark, sf_dir).sql(
-            """
-            WITH base AS (
-              SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-                     CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct
-              FROM clicks GROUP BY user_id
-            )
-            SELECT user_id, metric, val
-            FROM base UNPIVOT (val FOR metric IN (n_events, n_distinct))
-            """
-        ),
+    return _asof_catalog(spark, sf_dir).sql(
+        """
+        WITH base AS (
+          SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
+                 CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct
+          FROM clicks GROUP BY user_id
+        )
+        SELECT user_id, metric, val
+        FROM base UNPIVOT (val FOR metric IN (n_events, n_distinct))
+        """
     )
 
 
@@ -1100,30 +1059,23 @@ def sql_std_unpivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sql_attach_cross_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _t(spark, sf_dir, "events")
-
-    def build():
-        cat = _asof_catalog(spark, sf_dir)
-        side_dir = os.path.join(
-            tempfile.gettempdir(), f"ducklake_att_{uuid.uuid4().hex[:8]}"
-        )
-        side = LakeCatalog(spark, side_dir)
-        LakeWriter(side.table("user_totals"), pk=["user_id"]).append(
-            src.filter(F.col("event_type") == "purchase")
-            .groupBy("user_id")
-            .agg(F.round(F.sum("value"), 6).alias("total_purchase"))
-        )
-        if "stats" not in cat._attached:
-            cat.sql(f"ATTACH '{side_dir}' AS stats")
-        return cat.sql(
-            """
-            SELECT c.user_id, count(*) AS n_clicks,
-                   max(s.total_purchase) AS total_purchase
-            FROM clicks c JOIN stats.user_totals s ON c.user_id = s.user_id
-            GROUP BY c.user_id
-            """
-        )
-
-    return dedup_ops._memo_plan(src, "sql_attach_cross_lake", (), build)
+    cat = _asof_catalog(spark, sf_dir)
+    side_dir = _scratch_dir("att")
+    side = LakeCatalog(spark, side_dir)
+    LakeWriter(side.table("user_totals"), pk=["user_id"]).append(
+        src.filter(F.col("event_type") == "purchase")
+        .groupBy("user_id")
+        .agg(F.round(F.sum("value"), 6).alias("total_purchase"))
+    )
+    cat.sql(f"ATTACH '{side_dir}' AS stats")
+    return cat.sql(
+        """
+        SELECT c.user_id, count(*) AS n_clicks,
+               max(s.total_purchase) AS total_purchase
+        FROM clicks c JOIN stats.user_totals s ON c.user_id = s.user_id
+        GROUP BY c.user_id
+        """
+    )
 
 
 @register(
@@ -1143,20 +1095,15 @@ def sql_attach_cross_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(lake/table.py _expand_macros).",
 )
 def sql_macro_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _t(spark, sf_dir, "events")
-
-    def build():
-        cat = _asof_catalog(spark, sf_dir)
-        cat.sql(
-            "CREATE OR REPLACE MACRO hour_bucket(ts0) AS "
-            "CAST(strftime(ts0, '%H') AS INT)"
-        )
-        return cat.sql(
-            "SELECT hour_bucket(ts) AS hour, count(*) AS n_clicks "
-            "FROM clicks GROUP BY hour"
-        )
-
-    return dedup_ops._memo_plan(src, "sql_macro_expansion", (), build)
+    cat = _asof_catalog(spark, sf_dir)
+    cat.sql(
+        "CREATE OR REPLACE MACRO hour_bucket(ts0) AS "
+        "CAST(strftime(ts0, '%H') AS INT)"
+    )
+    return cat.sql(
+        "SELECT hour_bucket(ts) AS hour, count(*) AS n_clicks "
+        "FROM clicks GROUP BY hour"
+    )
 
 
 @register(
@@ -1177,18 +1124,12 @@ def sql_macro_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     "_rewrite_distinct_on).",
 )
 def sql_distinct_on_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _t(spark, sf_dir, "events")
-    return dedup_ops._memo_plan(
-        src,
-        "sql_distinct_on",
-        (),
-        lambda: _asof_catalog(spark, sf_dir).sql(
-            """
-            SELECT DISTINCT ON (user_id) user_id, event_id
-            FROM clicks
-            ORDER BY user_id, ts DESC, event_id
-            """
-        ),
+    return _asof_catalog(spark, sf_dir).sql(
+        """
+        SELECT DISTINCT ON (user_id) user_id, event_id
+        FROM clicks
+        ORDER BY user_id, ts DESC, event_id
+        """
     )
 
 
@@ -1207,25 +1148,19 @@ def sql_distinct_on_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_update_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Builds a purchases lake table, then runs ``UPDATE ... RETURNING``
     — the returned frame must equal the oracle's projection of the
-    updated rows. Memoized so repeat calls don't re-apply the bump."""
+    updated rows. Each call builds its own lake, so repeat calls never
+    re-apply the bump."""
     src = _t(spark, sf_dir, "events")
-
-    def build():
-        ev = src.filter(F.col("event_type") == "purchase").select(
-            "event_id", "user_id", "value"
-        )
-        lake_dir = os.path.join(
-            tempfile.gettempdir(), f"ducklake_ret_{uuid.uuid4().hex[:8]}"
-        )
-        cat = LakeCatalog(spark, lake_dir)
-        LakeWriter(cat.table("ev_ret"), pk=["event_id"]).append(ev)
-        return cat.sql(
-            "UPDATE ev_ret SET value = ROUND(value * 1.1, 6) "
-            "WHERE user_id % 10 = 3 "
-            "RETURNING event_id, user_id, value"
-        )
-
-    return dedup_ops._memo_plan(src, "sql_update_returning", (), build)
+    ev = src.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "value"
+    )
+    cat = _fresh_catalog(spark, "ret")
+    LakeWriter(cat.table("ev_ret"), pk=["event_id"]).append(ev)
+    return cat.sql(
+        "UPDATE ev_ret SET value = ROUND(value * 1.1, 6) "
+        "WHERE user_id % 10 = 3 "
+        "RETURNING event_id, user_id, value"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1397,8 +1332,7 @@ def zorder_build(spark: SparkSession, sf_dir: str):
     from ..lake.maintenance import compact
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    lake_dir = os.path.join(tempfile.gettempdir(), f"ducklake_z_{uuid.uuid4().hex[:8]}")
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "z")
     w = LakeWriter(cat.table("events_z"), pk=["event_id"])
     w.append(ev)
     compact(cat.table("events_z"), zorder_by=["user_id", "value"], target_files=8)
@@ -1437,12 +1371,8 @@ def zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     range predicate through read(where=...) — manifest-level data
     skipping feeding an ordinary aggregate. Result must equal the
     oracle's direct scan of the raw parquet. bench.py times
-    zorder_build / zorder_query separately. The one-time build is
-    memoized per source (repeat calls reuse the compacted table)."""
-    src = _t(spark, sf_dir, "events")
-    return dedup_ops._memo_plan(
-        src, "zorder_scan", (), lambda: zorder_query(_zorder_catalog(spark, sf_dir))
-    )
+    zorder_build / zorder_query separately."""
+    return zorder_query(zorder_build(spark, sf_dir))
 
 
 @register(
@@ -1461,25 +1391,19 @@ def zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(VERDICT r7 #1).",
 )
 def sql_pruned_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Loads events into a Z-ordered lake table (shared memoized build
-    with zorder_pruned_scan), then answers a selective aggregate through
+    """Loads events into a Z-ordered lake table (the same build as
+    zorder_pruned_scan), then answers a selective aggregate through
     ``LakeCatalog.sql`` — the SQL text itself is the only pruning input.
     Reference parity: the reference hands SQL to DuckDB whose optimizer
     prunes via ducklake file stats (`DucklakeTableManager.java:161-164`);
     here lake/sql_prune.py + lake/skipping.py perform that role."""
-    src = _t(spark, sf_dir, "events")
-    return dedup_ops._memo_plan(
-        src,
-        "sql_point_lookup",
-        (),
-        lambda: _zorder_catalog(spark, sf_dir).sql(
-            """
-            SELECT user_id, count(*) AS n, ROUND(sum(value), 6) AS sum_value
-            FROM events_z
-            WHERE user_id IN (5, 12) AND value >= 0.25
-            GROUP BY user_id
-            """
-        ),
+    return zorder_build(spark, sf_dir).sql(
+        """
+        SELECT user_id, count(*) AS n, ROUND(sum(value), 6) AS sum_value
+        FROM events_z
+        WHERE user_id IN (5, 12) AND value >= 0.25
+        GROUP BY user_id
+        """
     )
 
 
@@ -1510,52 +1434,25 @@ def sql_catalog_join_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     namespace prefix must resolve to the catalog's tables
     (`DucklakeTableManager.java:161-164` parity)."""
     src = _t(spark, sf_dir, "events")
-
-    def build():
-        cat = _zorder_catalog(spark, sf_dir)
-        if not cat.table_exists("users_z"):
-            users = src.groupBy("user_id").agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.floor(F.col("value") * 100).cast("long")).alias(
-                    "sum_cents"
-                ),
-            )
-            LakeWriter(cat.table("users_z"), pk=["user_id"]).append(users)
-        return cat.sql(
-            """
-            SELECT e.user_id, count(*) AS n, max(u.n_events) AS user_events,
-                   max(u.sum_cents) AS user_cents
-            FROM lake.main.events_z e JOIN lake.main.users_z u
-              ON e.user_id = u.user_id
-            WHERE e.user_id BETWEEN 5 AND 12 AND e.value >= 0.5
-              AND u.n_events >= 2
-            GROUP BY e.user_id
-            """
-        )
-
-    return dedup_ops._memo_plan(src, "sql_join_pruned", (), build)
-
-
-_ZORDER_CAT_MEMO: dict = {}
-
-
-def _zorder_catalog(spark: SparkSession, sf_dir: str) -> LakeCatalog:
-    """One Z-ordered events lake per (session, sf_dir): zorder_pruned_scan
-    and sql_pruned_point_lookup share the build so bench/driver runs pay
-    the layout once."""
-    key = (id(spark), sf_dir)
-    cat = _ZORDER_CAT_MEMO.get(key)
-    if cat is not None:
-        try:
-            cat.spark.sparkContext.applicationId  # session still alive?
-            if cat.table_exists("events_z"):
-                return cat
-        except Exception:
-            pass
-        _ZORDER_CAT_MEMO.pop(key, None)
     cat = zorder_build(spark, sf_dir)
-    _ZORDER_CAT_MEMO[key] = cat
-    return cat
+    users = src.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(F.floor(F.col("value") * 100).cast("long")).alias(
+            "sum_cents"
+        ),
+    )
+    LakeWriter(cat.table("users_z"), pk=["user_id"]).append(users)
+    return cat.sql(
+        """
+        SELECT e.user_id, count(*) AS n, max(u.n_events) AS user_events,
+               max(u.sum_cents) AS user_cents
+        FROM lake.main.events_z e JOIN lake.main.users_z u
+          ON e.user_id = u.user_id
+        WHERE e.user_id BETWEEN 5 AND 12 AND e.value >= 0.5
+          AND u.n_events >= 2
+        GROUP BY e.user_id
+        """
+    )
 
 
 @register(
@@ -1616,13 +1513,7 @@ def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(SinkRecordToArrowConverterTest.java:58-219 parity).",
 )
 def nested_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _t(spark, sf_dir, "events")
-    return dedup_ops._memo_plan(
-        src,
-        "nested_roundtrip",
-        (),
-        lambda: nested_roundtrip_query(nested_roundtrip_build(spark, sf_dir)),
-    )
+    return nested_roundtrip_query(nested_roundtrip_build(spark, sf_dir))
 
 
 def nested_roundtrip_build(spark: SparkSession, sf_dir: str) -> LakeCatalog:
@@ -1646,8 +1537,7 @@ def nested_roundtrip_build(spark: SparkSession, sf_dir: str) -> LakeCatalog:
             ).alias("kv"),
         ).alias("payload"),
     )
-    lake_dir = os.path.join(tempfile.gettempdir(), f"ducklake_n_{uuid.uuid4().hex[:8]}")
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "n")
     w = LakeWriter(cat.table("events_nested"), pk=["event_id"])
     w.append(nested)  # complex payload → JSON text column (B9)
     return cat
@@ -2055,27 +1945,17 @@ def user_session_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FAISS-layout composition of ann_ivf_indexed_topk (coarse
     pruning) and ann_pq_topk (code storage): query cost is independent
-    of corpus bytes — files prune by cell, rows cost M small ints.
-    Index build is memoized per source, same as ann_ivf_indexed_topk
-    (an index is built once, probed many times)."""
+    of corpus bytes — files prune by cell, rows cost M small ints."""
     from ..operators.similarity import build_ivfpq_index, ivfpq_indexed_topk
 
-    src = _t(spark, sf_dir, "embeddings")
-
-    def _build():
-        emb = src
-        query = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-        lake_dir = os.path.join(
-            tempfile.gettempdir(), f"ducklake_ivfpq_{uuid.uuid4().hex[:8]}"
-        )
-        cat = LakeCatalog(spark, lake_dir)
-        t = cat.table("emb_ivfpq")
-        build_ivfpq_index(t, emb, IVF_CENTROIDS)
-        return ivfpq_indexed_topk(
-            t, query, IVF_CENTROIDS, k=10, nprobe=2, exclude_ids=[0]
-        )
-
-    return dedup_ops._memo_plan(src, "ivfpq_indexed", (), _build)
+    emb = _t(spark, sf_dir, "embeddings")
+    query = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
+    cat = _fresh_catalog(spark, "ivfpq")
+    t = cat.table("emb_ivfpq")
+    build_ivfpq_index(t, emb, IVF_CENTROIDS)
+    return ivfpq_indexed_topk(
+        t, query, IVF_CENTROIDS, k=10, nprobe=2, exclude_ids=[0]
+    )
 
 
 def _attach_similarity_oracles() -> None:
@@ -2109,8 +1989,7 @@ def delete_where_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (file-pruned rewrite), reads the surviving snapshot back. floor()
     before the cents cast (Spark truncates double→long, DuckDB rounds)."""
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    lake_dir = os.path.join(tempfile.gettempdir(), f"ducklake_del_{uuid.uuid4().hex[:8]}")
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "del")
     w = LakeWriter(cat.table("events_del"), pk=["event_id"])
     w.append(ev)
     w.delete_where(DELETE_PRED)
@@ -2485,8 +2364,7 @@ def merge_many_group_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("event_type", F.lit(tag))
         for m, add, tag in ((3, 100.0, "b1"), (4, 200.0, "b2"), (5, 300.0, "b3"))
     ]
-    lake_dir = os.path.join(tempfile.gettempdir(), f"ducklake_gc_{uuid.uuid4().hex[:8]}")
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "gc")
     w = LakeWriter(cat.table("events_gc"), pk=["event_id"])
     w.write(base)
     v0 = cat.table("events_gc").current_version()
@@ -2527,21 +2405,12 @@ def update_where_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (file-pruned in-place rewrite doubling matching rows' cents), reads
     the final snapshot back. Values integerize to cents BEFORE the
     update so both engines double exact integers."""
-    import os
-    import tempfile
-    import uuid
-
-    from ..lake import LakeCatalog, LakeWriter
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("value_cents"),
     )
-    lake_dir = os.path.join(
-        tempfile.gettempdir(), f"ducklake_upd_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "upd")
     w = LakeWriter(cat.table("events_upd"), pk=["event_id"])
     w.append(ev)
     w.update_where(UPDATE_PRED, {"value_cents": "value_cents * 2"})
@@ -2600,10 +2469,7 @@ def cdc_upsert_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("seq"),
         (F.col("event_type") == "error").alias("_deleted"),
     )
-    lake_dir = os.path.join(
-        tempfile.gettempdir(), f"ducklake_cdc_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "cdc")
     w = LakeWriter(cat.table("user_state"), pk=["user_id"])
     w.write(base)
     w.merge(changelog, order_col="seq", tombstone_col="_deleted")
@@ -2652,12 +2518,7 @@ def cdc_upsert_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     "incremental consumer would run)",
 )
 def snapshot_diff_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import dedup as _dops
-
-    src = _t(spark, sf_dir, "events")
-    return _dops._memo_plan(
-        src, "snapshot_diff", (), lambda: _build_snapshot_diff(spark, sf_dir)
-    )
+    return _build_snapshot_diff(spark, sf_dir)
 
 
 def _build_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2721,12 +2582,7 @@ def _build_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle runs, including rows that migrate between group keys",
 )
 def incremental_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import dedup as _dops
-
-    src = _t(spark, sf_dir, "events")
-    return _dops._memo_plan(
-        src, "incr_agg_view", (), lambda: _build_incremental_agg_view(spark, sf_dir)
-    )
+    return _build_incremental_agg_view(spark, sf_dir)
 
 
 def _build_incremental_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2816,10 +2672,7 @@ def matview_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    lake_dir = os.path.join(
-        tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     w = LakeWriter(cat.table("events_mv"), pk=["event_id"])
     w.write(ev.filter(F.col("event_id") % 10 < 8))
     cat.sql(
@@ -2865,10 +2718,7 @@ def sql_view_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
         "value",
     )
-    lake_dir = os.path.join(
-        tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     LakeWriter(cat.table("events_v"), pk=["event_id"]).write(ev)
     cat.sql(
         "CREATE VIEW valuable AS SELECT event_type, cents FROM events_v "
@@ -2919,10 +2769,7 @@ def matview_avg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_id") % 13 != 0, F.floor(F.col("value") * 100)
         ).cast("long").alias("cents"),
     )
-    lake_dir = os.path.join(
-        tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     w = LakeWriter(cat.table("events_avg"), pk=["event_id"])
     w.write(ev.filter(F.col("event_id") % 10 < 8))
     cat.sql(
@@ -2975,10 +2822,7 @@ def cdf_over_mor_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    lake_dir = os.path.join(
-        tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     t = cat.table("events_cdfmor")
     w = LakeWriter(t, pk=["event_id"], merge_mode=MODE_MOR)
     w.write(ev.filter(F.col("event_id") % 10 < 8))
@@ -3033,10 +2877,7 @@ def matview_minmax_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    lake_dir = os.path.join(
-        tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     w = LakeWriter(cat.table("events_mm"), pk=["event_id"])
     w.write(ev.filter(F.col("event_id") % 10 < 8))
     cat.sql(
@@ -3083,10 +2924,7 @@ def sql_view_over_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    lake_dir = os.path.join(
-        tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     w = LakeWriter(cat.table("events_vm"), pk=["event_id"])
     w.write(ev.filter(F.col("event_id") % 3 != 0))
     cat.sql(
@@ -3133,10 +2971,7 @@ def sequence_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0).select(
         "doc_id", "lang"
     )
-    lake_dir = os.path.join(
-        tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     view = f"seq_src_{uuid.uuid4().hex[:8]}"
     docs.createOrReplaceTempView(view)
     cat.sql("CREATE SEQUENCE doc_sk")
@@ -3203,10 +3038,7 @@ def tvf_insertions_deletions(spark: SparkSession, sf_dir: str) -> DataFrame:
         sl.filter(F.col("event_id") % 10 >= 5)
         .withColumn("value", F.col("value") + 1000.0)
     )
-    lake_dir = os.path.join(
-        tempfile.gettempdir(), f"ducklake_q_{uuid.uuid4().hex[:8]}"
-    )
-    cat = LakeCatalog(spark, lake_dir)
+    cat = _fresh_catalog(spark, "q")
     w = LakeWriter(cat.table("events_tvf"), pk=["event_id"])
     w.write(base)
     v1 = cat.table("events_tvf").current_version()

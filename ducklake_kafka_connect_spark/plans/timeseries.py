@@ -22,11 +22,21 @@ sums) over the already-small aggregate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..operators.dedup import h60_col, h60_sql
 from .queries import _t, epoch_us_col, register
+
+
+def h60_col(c: Column) -> Column:
+    """First 60 bits of md5 as BIGINT — bit-identical to h60_sql, so
+    hash-based plans compare exactly against their oracle SQL."""
+    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
+
+
+def h60_sql(expr: str) -> str:
+    return f"CAST(CONCAT('0x', substr(md5({expr}), 1, 15)) AS BIGINT)"
+
 
 US_PER_HOUR = 3_600_000_000
 US_PER_DAY = 86_400_000_000
@@ -691,15 +701,12 @@ def event_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type stats are a tiny second aggregate broadcast back into the
     flagging join. Counts are integers, so mean/stddev are identical
     doubles on both engines."""
-    from ..operators import dedup as dedup_ops
-
     ev = _t(spark, sf_dir, "events")
     hourly = (
         ev.select("event_type", F.date_trunc("hour", "ts").alias("h"))
         .groupBy("event_type", "h")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    hourly = dedup_ops._persist(hourly)
     stats = hourly.groupBy("event_type").agg(
         F.avg("n").alias("mu"),
         F.stddev_samp("n").alias("sigma"),

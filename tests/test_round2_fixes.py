@@ -284,13 +284,23 @@ class TestMergeRangeSplitOutput:
         assert len(before) == 10
         return t, w, before
 
-    def test_range_split_bounds_later_rewrites(self, spark, tmp_path, monkeypatch):
-        # pins the pruning executor's estimate-based range layout
+    @pytest.mark.parametrize("merge", ["write", "tombstone"])
+    def test_range_split_bounds_later_rewrites(
+        self, spark, tmp_path, monkeypatch, merge
+    ):
+        # pins the pruning executor's estimate-based range layout, with
+        # and without a (never-set) tombstone column on the batch
         monkeypatch.setattr(wmod.LakeWriter, "_merge_arrow", lambda self, *a, **k: None)
         t, w, before = self._ten_range_files(spark, tmp_path)
 
+        def upsert(df):
+            if merge == "write":
+                w.write(df)
+            else:
+                w.merge(df.withColumn("del", F.lit(False)), tombstone_col="del")
+
         # merge spanning files 0-2 → rewrites those, range-splits output
-        w.write(
+        upsert(
             spark.range(0, 25_000).select(F.col("id"), F.lit("upd").alias("name"))
         )
         m1 = set(t.manifest().all_files())
@@ -300,7 +310,7 @@ class TestMergeRangeSplitOutput:
         assert len(new_files) >= 2, "55k-row output must be range-split"
 
         # point-range merge → only the low range-split file is rewritten
-        w.write(
+        upsert(
             spark.range(0, 100).select(F.col("id"), F.lit("upd2").alias("name"))
         )
         m2 = set(t.manifest().all_files())

@@ -1,6 +1,7 @@
-"""Streaming tests: file-source micro-batches through the event-time
-operators and the stateful latest-per-key, plus an end-to-end streamed
-ingestion into the lake (checkpointed foreachBatch)."""
+"""Streaming tests: a watermarked window aggregate of a file-source
+stream appended into the lake and run on the RocksDB state store, plus
+an end-to-end streamed ingestion into the lake (checkpointed
+foreachBatch)."""
 
 import json
 import os
@@ -18,12 +19,6 @@ from ducklake_kafka_connect_spark.streaming.ingest import (
     IngestPipeline,
     TableSpec,
 )
-from ducklake_kafka_connect_spark.streaming.windows import (
-    dedup_stream,
-    latest_per_key_stream,
-    sessionized_counts,
-    windowed_counts,
-)
 
 EVENTS = [
     # user 1: two sessions (gap > 30 min); user 2: one session
@@ -33,6 +28,17 @@ EVENTS = [
     (2, "2024-01-01T10:05:00", 20.0),
     (2, "2024-01-01T10:20:00", 21.0),
 ]
+
+
+def windowed_counts(events, window, watermark):
+    """Tumbling event-time windows with a watermark: count and value sum
+    per window, emitted in append mode once the watermark passes."""
+    return (
+        events.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window).alias("w"))
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
+        .select(F.col("w.start").alias("window_start"), "n", "sum_value")
+    )
 
 
 @pytest.fixture()
@@ -48,77 +54,6 @@ def event_stream(spark, tmp_path):
     return (
         spark.readStream.format("json").schema(schema).load(str(src))
     )
-
-
-def _run_to_memory(spark, df, name, mode):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.sql(f"SELECT * FROM {name}")
-
-
-class TestEventTime:
-    def test_windowed_counts(self, spark, event_stream):
-        # watermark = max_ts - 1s = 11:59:59 → the 10:00 window is closed
-        # and emitted; the 12:00 window stays open and is withheld (the
-        # late-data contract append mode guarantees).
-        out = _run_to_memory(
-            spark, windowed_counts(event_stream, "1 hour", "1 second"), "win_counts", "append"
-        )
-        rows = {str(r["window_start"]): (r["n"], r["sum_value"]) for r in out.collect()}
-        assert rows["2024-01-01 10:00:00"] == (4, 62.0)
-        assert "2024-01-01 12:00:00" not in rows
-
-    def test_sessionized_counts(self, spark, event_stream):
-        # sessions ending before the watermark emit; user 1's 12:00
-        # singleton is still open (gap not elapsed) and is withheld
-        out = _run_to_memory(
-            spark,
-            sessionized_counts(event_stream, gap="30 minutes", watermark="1 second"),
-            "sess_counts",
-            "append",
-        )
-        sessions = sorted((r["user_id"], r["n_events"]) for r in out.collect())
-        assert sessions == [(1, 2), (2, 2)]
-
-    def test_latest_per_key_stateful(self, spark, event_stream):
-        out = _run_to_memory(
-            spark, latest_per_key_stream(event_stream), "latest_keys", "update"
-        )
-        latest = {r["user_id"]: (str(r["ts"]), r["value"]) for r in out.collect()}
-        assert latest[1] == ("2024-01-01 12:00:00", 12.0)
-        assert latest[2] == ("2024-01-01 10:20:00", 21.0)
-
-
-    def test_dedup_stream_within_watermark(self, spark, tmp_path):
-        """At-least-once redelivery: the same event_id arrives twice
-        (second copy with a slightly later ingestion ts). The
-        within-watermark dedup emits exactly one row per id."""
-        src = tmp_path / "dedup_src"
-        src.mkdir()
-        rows = [
-            {"event_id": 1, "ts": "2024-01-01T10:00:00", "value": 10.0},
-            {"event_id": 2, "ts": "2024-01-01T10:01:00", "value": 20.0},
-            # redeliveries: same ids, ts drifted by a few seconds
-            {"event_id": 1, "ts": "2024-01-01T10:00:03", "value": 10.0},
-            {"event_id": 2, "ts": "2024-01-01T10:01:00", "value": 20.0},
-        ]
-        (src / "b0.json").write_text("\n".join(json.dumps(r) for r in rows))
-        stream = (
-            spark.readStream.format("json")
-            .schema("event_id long, ts timestamp, value double")
-            .load(str(src))
-        )
-        out = _run_to_memory(
-            spark, dedup_stream(stream, keys=("event_id",)), "dedup_stream_t", "append"
-        )
-        got = sorted((r["event_id"], r["value"]) for r in out.collect())
-        assert got == [(1, 10.0), (2, 20.0)]
 
 
 class TestWindowedAggToLake:
@@ -256,116 +191,3 @@ class TestRocksDBStateStore:
                 spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
             else:
                 spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
-class TestStreamStreamJoin:
-    def test_windowed_interval_join(self, spark, tmp_path):
-        """Clicks join purchases of the same user within 30 minutes
-        after the click; state is watermark-bounded on both sides."""
-        import json as _json
-
-        from ducklake_kafka_connect_spark.streaming.windows import stream_stream_join
-
-        lsrc = tmp_path / "l"
-        rsrc = tmp_path / "r"
-        lsrc.mkdir(); rsrc.mkdir()
-        clicks = [
-            {"user_id": 1, "ts": "2024-01-01T10:00:00", "value": 1.0},
-            {"user_id": 2, "ts": "2024-01-01T10:00:00", "value": 2.0},
-        ]
-        purchases = [
-            {"user_id": 1, "r_ts": "2024-01-01T10:10:00", "amount": 9.0},   # in window
-            {"user_id": 1, "r_ts": "2024-01-01T11:10:00", "amount": 8.0},   # too late
-            {"user_id": 2, "r_ts": "2024-01-01T09:50:00", "amount": 7.0},   # before click
-        ]
-        (lsrc / "b0.json").write_text("\n".join(_json.dumps(r) for r in clicks))
-        (rsrc / "b0.json").write_text("\n".join(_json.dumps(r) for r in purchases))
-        l = spark.readStream.format("json").schema(
-            "user_id long, ts timestamp, value double").load(str(lsrc))
-        r = spark.readStream.format("json").schema(
-            "user_id long, r_ts timestamp, amount double").load(str(rsrc))
-        q = (
-            stream_stream_join(l, r, join_window="30 minutes")
-            .writeStream.format("memory")
-            .queryName("ss_join")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = [
-            (r["user_id"], r["amount"])
-            for r in spark.sql("SELECT * FROM ss_join").collect()
-        ]
-        assert rows == [(1, 9.0)]
-
-
-class TestTransformWithState:
-    def test_plan_construction_and_output_schema(self, spark, tmp_path):
-        """Plan building needs no protobuf: the operator must construct
-        with the declared output schema even where the runtime gate
-        (below) is closed."""
-        from ducklake_kafka_connect_spark.streaming.windows import (
-            running_totals_stream,
-        )
-
-        src = tmp_path / "rt_schema_src"
-        src.mkdir()
-        schema = "event_type string, value double"
-        stream = spark.readStream.format("json").schema(schema).load(str(src))
-        out = running_totals_stream(stream)
-        assert out.isStreaming
-        assert [f.name for f in out.schema.fields] == [
-            "event_type", "n_events", "value_cents",
-        ]
-
-    @pytest.mark.skipif(
-        __import__("importlib.util", fromlist=["util"]).find_spec("google") is None,
-        reason="transformWithStateInPandas runtime needs protobuf "
-        "(pyspark's StateMessage proto); not installed in this env",
-    )
-    def test_running_totals_across_batches(self, spark, tmp_path):
-        """Two micro-batches; state carries totals across them and the
-        second emission reflects the cumulative sum."""
-        import json as _json
-
-        from ducklake_kafka_connect_spark.streaming.windows import (
-            running_totals_stream,
-        )
-
-        src = tmp_path / "rt_src"
-        src.mkdir()
-        b0 = [
-            {"event_type": "click", "value": 1.25},
-            {"event_type": "click", "value": 2.50},
-            {"event_type": "view", "value": 10.00},
-        ]
-        (src / "b0.json").write_text("\n".join(_json.dumps(r) for r in b0))
-        schema = "event_type string, value double"
-        stream = spark.readStream.format("json").schema(schema).load(str(src))
-        out = running_totals_stream(stream)
-        ckpt = str(tmp_path / "rt_ckpt")
-
-        def run_once(name):
-            q = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            return {
-                r["event_type"]: (r["n_events"], r["value_cents"])
-                for r in spark.sql(f"SELECT * FROM {name}").collect()
-            }
-
-        got = run_once("rt1")
-        assert got == {"click": (2, 375), "view": (1, 1000)}
-
-        b1 = [{"event_type": "click", "value": 0.25}]
-        (src / "b1.json").write_text("\n".join(_json.dumps(r) for r in b1))
-        got2 = run_once("rt2")
-        # only the touched key emits; totals are cumulative via state
-        assert got2 == {"click": (3, 400)}
