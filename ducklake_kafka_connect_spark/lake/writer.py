@@ -193,6 +193,14 @@ def _out_cols(final_logical: T.StructType, part_cols: Sequence[str]) -> list[str
 _PART_SQL = {"year": "year", "month": "month", "day": "dayofmonth"}
 
 
+def known_size(df: DataFrame) -> int | None:
+    """The optimizer's size estimate of ``df`` in bytes (no Spark job),
+    or None when it is unknown: an RDD-backed frame estimates at the
+    8-EiB sentinel."""
+    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return est if est < 1 << 60 else None
+
+
 def _eval_arrow(
     df: DataFrame,
     timer: str,
@@ -224,12 +232,11 @@ def _eval_arrow(
     with REGISTRY.timer(timer):
         tbl = local_plan_arrow(df)
         if tbl is None:
-            # the optimizer's size estimate (no Spark job)
-            est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            if max_bytes is None or est <= max_bytes:
-                small = est <= EVAL_COALESCE_MAX_BYTES
+            est = known_size(df)
+            if max_bytes is None or (est is not None and est <= max_bytes):
+                small = est is not None and est <= EVAL_COALESCE_MAX_BYTES
                 tbl = (df.coalesce(4) if small else df).toArrow()
-            elif est < 1 << 60:
+            elif est is not None:
                 return _fallback("append.arrowSkip", "batch_size")
             elif max_rows is None:
                 return _fallback("append.arrowSkip", "unknown_size")
@@ -292,6 +299,18 @@ def _align_arrow(tbl, schema):
     )
 
 
+def _table_bytes(manifest: Manifest) -> int:
+    """The table's file bytes from the manifest; a file without a
+    ``__bytes`` stat counts as ARROW_MERGE_MAX_BYTES."""
+    return sum(
+        int(
+            (manifest.file_stats.get(f) or {}).get("__bytes")
+            or ARROW_MERGE_MAX_BYTES
+        )
+        for f in manifest.all_files()
+    )
+
+
 def _arrow_merge_skip(manifest: Manifest) -> str | None:
     """Manifest-only half of the copy-on-write executor choice, checked
     before the batch is evaluated: the reason this merge cannot run on
@@ -300,20 +319,25 @@ def _arrow_merge_skip(manifest: Manifest) -> str | None:
     aligns every target table to the evolved schema."""
     from .mor import mor_state
 
-    table_bytes = sum(
-        int(
-            (manifest.file_stats.get(f) or {}).get("__bytes")
-            or ARROW_MERGE_MAX_BYTES
-        )
-        for f in manifest.all_files()
-    )
-    if table_bytes > ARROW_MERGE_MAX_BYTES:
+    if _table_bytes(manifest) > ARROW_MERGE_MAX_BYTES:
         return "table_size"
     if mor_state(manifest)[1]:
         # the Arrow executor reads files raw — live tombstones need
         # the visibility-applying read of the pruning executor
         return "mor_state"
     return None
+
+
+def arrow_merge_over_cap(manifest: Manifest, batch_bytes: int | None) -> bool:
+    """True when a batch of ``batch_bytes`` (None: unknown) and the
+    table's bytes together exceed ARROW_MERGE_MAX_BYTES — the bound
+    on what the Arrow merge, or ingest on its behalf, collects to the
+    driver. Checked on the optimizer's estimate before any job (an
+    unknown estimate is collected and checked after)."""
+    return (
+        batch_bytes is not None
+        and _table_bytes(manifest) + batch_bytes > ARROW_MERGE_MAX_BYTES
+    )
 
 
 def _qcol(name: str) -> Column:
@@ -601,7 +625,9 @@ class LakeWriter:
                 )
             )
 
-    def txn_applied(self, txn: tuple[str, int] | None) -> bool:
+    def txn_applied(
+        self, txn: tuple[str, int] | None, manifest: Manifest | None = None
+    ) -> bool:
         """True iff an idempotent-commit marker (app_id, epoch) is
         already recorded at or past ``epoch`` — i.e. this micro-batch
         landed in a previous run and must not be written again.
@@ -612,11 +638,16 @@ class LakeWriter:
         tables would duplicate. The marker travels in manifest props
         (whole through delta segments), so the check is one driver-side
         dict lookup. Single-writer-per-table deployment assumption as
-        documented in SCALE.md — the marker is re-checked nowhere else."""
-        if txn is None or not self.table.exists():
+        documented in SCALE.md — the marker is re-checked nowhere else.
+        ``manifest``, when given, is the caller's resolve of the table."""
+        if txn is None:
             return False
+        if manifest is None:
+            if not self.table.exists():
+                return False
+            manifest = self.table.manifest()
         app, epoch = txn
-        last = self.table.manifest().props.get("txns", {}).get(app)
+        last = manifest.props.get("txns", {}).get(app)
         return last is not None and int(last) >= int(epoch)
 
     def write(
@@ -624,18 +655,23 @@ class LakeWriter:
         df: DataFrame,
         order_col: str | None = None,
         txn: tuple[str, int] | None = None,
+        manifest: Manifest | None = None,
     ) -> None:
         """Reference routing (DucklakeWriter.java:85-96): MERGE when PKs
         are configured and the table pre-existed, else plain INSERT.
         ``txn=(app_id, epoch)`` makes the write idempotent: a replayed
-        epoch is skipped entirely (see :meth:`txn_applied`)."""
-        if self.txn_applied(txn):
+        epoch is skipped entirely (see :meth:`txn_applied`).
+        ``manifest`` is the caller's resolve of the existing table: the
+        txn check and the merge plan read it instead of resolving again
+        (a commit that lands after it replans under the table lock, as
+        for any merge)."""
+        if self.txn_applied(txn, manifest):
             return
         self._txn = txn
         try:
-            pre_existed = self.table.exists()
+            pre_existed = manifest is not None or self.table.exists()
             if self.pk and pre_existed:
-                self.merge(df, order_col=order_col)
+                self.merge(df, order_col=order_col, manifest=manifest)
             else:
                 self.append(df)
         finally:
@@ -646,21 +682,23 @@ class LakeWriter:
         dfs: Sequence[DataFrame],
         order_col: str | None = None,
         txn: tuple[str, int] | None = None,
+        manifest: Manifest | None = None,
     ) -> None:
         """Group-commit form of :meth:`write`: N batches → one commit.
         Routing mirrors write(); merge order is batch-sequential (later
         batches win per key). Falls back to sequential writes when the
         batches can't union (cross-batch type promotion goes through the
-        schema ladder one merge at a time). ``txn`` as in write() —
-        the whole group is one epoch, skipped wholesale on replay."""
+        schema ladder one merge at a time). ``txn`` and ``manifest`` as
+        in write() — the whole group is one epoch, skipped wholesale on
+        replay."""
         dfs = [d for d in dfs if d is not None]
         if not dfs:
             return
-        if self.txn_applied(txn):
+        if self.txn_applied(txn, manifest):
             return
         if len(dfs) == 1:
-            return self.write(dfs[0], order_col=order_col, txn=txn)
-        pre_existed = self.table.exists()
+            return self.write(dfs[0], order_col=order_col, txn=txn, manifest=manifest)
+        pre_existed = manifest is not None or self.table.exists()
         try:
             if self.pk:
                 if not pre_existed:
@@ -672,7 +710,7 @@ class LakeWriter:
                     self.write(dfs[0], order_col=order_col)
                     dfs = dfs[1:]
                 self._txn = txn
-                self.merge_many(dfs, order_col=order_col)
+                self.merge_many(dfs, order_col=order_col, manifest=manifest)
             else:
                 u = dfs[0]
                 for d in dfs[1:]:
@@ -1109,21 +1147,23 @@ class LakeWriter:
         df: DataFrame,
         order_col: str | None = None,
         tombstone_col: str | None = None,
+        manifest: Manifest | None = None,
     ) -> None:
         """Upsert ``df`` by PK. With ``tombstone_col`` (boolean), rows
         flagged true DELETE their key instead — the CDC extension the
         reference lacks (SURVEY §2.G: null-valued records are not
         deletes there). Tombstones participate in last-write-wins
         ordering, so delete-then-reinsert within a batch resolves by
-        ``order_col``."""
+        ``order_col``. ``manifest`` as in :meth:`write`."""
         with REGISTRY.timer("upsertWithMergeInto"):
-            self._merge(df, order_col, tombstone_col)
+            self._merge(df, order_col, tombstone_col, manifest=manifest)
 
     def merge_many(
         self,
         batches: Sequence[DataFrame],
         order_col: str | None = None,
         tombstone_col: str | None = None,
+        manifest: Manifest | None = None,
     ) -> None:
         """Group commit: apply N queued micro-batches as ONE merge — one
         planning pass, one write job, one commit — amortizing the fixed
@@ -1135,14 +1175,15 @@ class LakeWriter:
         ephemeral ``struct(batch_ordinal, order)`` column that rides the
         merge but never enters the table schema. Batches must be
         column-type-compatible (unionByName null-fills missing columns;
-        cross-batch type promotion should go through separate merges)."""
+        cross-batch type promotion should go through separate merges).
+        ``manifest`` as in :meth:`write`."""
         batches = [b for b in batches if b is not None]
         if not batches:
             return
         if len(batches) == 1 and order_col is not None:
             # single batch: the plain path needs no ephemeral ordinal
             with REGISTRY.timer("upsertWithMergeInto"):
-                self._merge(batches[0], order_col, tombstone_col)
+                self._merge(batches[0], order_col, tombstone_col, manifest=manifest)
             return
         with REGISTRY.timer("upsertWithMergeInto"):
             tagged = []
@@ -1166,6 +1207,7 @@ class LakeWriter:
                 order_col=EPHEMERAL_ORDER,
                 tombstone_col=tombstone_col,
                 ephemeral_order=True,
+                manifest=manifest,
             )
 
     def _chain_advanced(self, planned_version: int) -> bool:
@@ -1188,15 +1230,19 @@ class LakeWriter:
         order_col: str | None = None,
         tombstone_col: str | None = None,
         ephemeral_order: bool = False,
+        manifest: Manifest | None = None,
     ) -> None:
         if not self.pk:
             raise ValueError(f"merge() on table {self.table.name} requires pk columns")
         from .inline import inline_state
 
-        # one manifest resolve: the pre-lock planning manifest doubles as
-        # the constraint source and seeds the FIRST _merge_once attempt
-        # (replans after a commit conflict re-resolve, as they must)
-        pre = self.table.manifest() if self.table.exists() else None
+        # one manifest resolve (or the caller's): the pre-lock planning
+        # manifest doubles as the constraint source and seeds the FIRST
+        # _merge_once attempt (replans after a commit conflict
+        # re-resolve, as they must)
+        pre = manifest
+        if pre is None and self.table.exists():
+            pre = self.table.manifest()
         df = self._apply_sequence_defaults(df, pre)
         # tombstoned rows are DELETES — they carry no insertable values,
         # so constraints (incl. NOT NULL) must not judge them: a narrow
@@ -1233,6 +1279,19 @@ class LakeWriter:
             f"merge on {self.table.name}: manifest advanced during planning "
             f"{retries} times (max_retry_count={self.max_retry_count})"
         )
+
+    def arrow_merge_skip(self, manifest: Manifest) -> str | None:
+        """Why a merge into ``manifest`` would not run on the driver-side
+        Arrow executor, or None when it runs there first:
+        ``merge_on_read`` (this writer or the table merges on read), else
+        :func:`_arrow_merge_skip`'s manifest checks. ``_merge_once`` and
+        ingest, which evaluates such a table's batch on the driver ahead
+        of the merge, read this one predicate."""
+        from .mor import MODE_MOR, resolve_merge_mode
+
+        if resolve_merge_mode(manifest, self.merge_mode) == MODE_MOR:
+            return "merge_on_read"
+        return _arrow_merge_skip(manifest)
 
     def _plan_merge(
         self, manifest: Manifest, probe: DataFrame, part_cols: list[str]
@@ -1339,13 +1398,7 @@ class LakeWriter:
           O(batch); the only target read is a pk + ``_inserted_at``
           lookup over the pruned overlap files, and a provably
           insert-only batch reads nothing and writes no tombstone."""
-        from .mor import (
-            MODE_MOR,
-            MOR_AUTO_MATERIALIZE_DELETES,
-            mor_state,
-            resolve_merge_mode,
-            write_tombstones,
-        )
+        from .mor import MOR_AUTO_MATERIALIZE_DELETES, mor_state, write_tombstones
 
         # the tombstone flag and ephemeral order never enter the schema
         extra = [c for c in (tombstone_col,) if c]
@@ -1357,20 +1410,18 @@ class LakeWriter:
         final_logical = _logical_schema_of_batch(payload, manifest)
         exprs = manifest.partition_exprs
         part_cols = partition_column_names(exprs)
-        mor = resolve_merge_mode(manifest, self.merge_mode) == MODE_MOR
-
         # ---- executor choice: driver-side Arrow, else Spark ----
-        if not mor:
-            skip = _arrow_merge_skip(manifest)
-            if skip is None:
-                done = self._merge_arrow(
-                    df, manifest, final_logical, exprs, part_cols,
-                    order_col, tombstone_col, ephemeral_order,
-                )
-                if done is not None:
-                    return done
-            else:
-                REGISTRY.inc(f"merge.arrowSkip.{skip}")
+        skip = self.arrow_merge_skip(manifest)
+        mor = skip == "merge_on_read"
+        if skip is None:
+            done = self._merge_arrow(
+                df, manifest, final_logical, exprs, part_cols,
+                order_col, tombstone_col, ephemeral_order,
+            )
+            if done is not None:
+                return done
+        elif not mor:
+            REGISTRY.inc(f"merge.arrowSkip.{skip}")
 
         # ---- the one Spark prologue ----
         # Cap the batch's partition count at the session's parallelism:
@@ -1626,8 +1677,12 @@ class LakeWriter:
         ephemeral_order: bool,
     ):
         """Driver-side Arrow copy-on-write executor, for tables
-        :func:`_arrow_merge_skip` admits: ONE Spark job evaluates the
-        conformed batch (``toArrow``), then the whole merge — union,
+        :meth:`arrow_merge_skip` admits: the conformed batch is evaluated
+        once on the driver (:func:`_eval_arrow`: no job for a
+        LocalRelation, as ingest hands it over, else ONE ``toArrow``),
+        unless its known size estimate already puts table plus batch over
+        ARROW_MERGE_MAX_BYTES (:func:`arrow_merge_over_cap`, declined
+        before any job); then the whole merge — union,
         last-write-wins winner selection (a winning tombstone drops its
         key), ``_inserted_at`` carry-over, parquet write, stats harvest —
         happens in-process. This is the latency shape of the reference's
@@ -1692,6 +1747,10 @@ class LakeWriter:
                 raw = df.selectExpr(*proj)
             else:
                 raw = with_partition_columns(df.selectExpr(*proj), exprs)
+            # a batch the estimate already puts over the cap declines
+            # before any job or file read
+            if arrow_merge_over_cap(manifest, known_size(raw)):
+                return _fallback("merge.arrowFallback", "size_cap")
 
             # ---- target: the version-keyed cache, else the files ----
             # A successful Arrow merge KNOWS the table's full contents at

@@ -801,6 +801,11 @@ def bucketed_join_frames(spark: SparkSession, sf_dir: str):
     # test scale and never reads the bucket metadata; at 100 TB neither
     # side is broadcastable and SMJ-over-buckets is the real plan shape
     joined = bo.hint("merge").join(bc.hint("merge"), "o_custkey")
+    # the frames hold the resolved relations (files and bucket spec), so
+    # the catalog entries can go: repeated builds leave no table behind.
+    # Both are external (path=), so dropping them keeps their files.
+    for name in (ot, ct):
+        spark.sql(f"DROP TABLE {name}")
     plain = orders.join(
         cust.withColumnRenamed("c_custkey", "o_custkey"), "o_custkey"
     )

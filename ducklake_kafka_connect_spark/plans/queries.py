@@ -891,24 +891,28 @@ def asof_forward_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _asof_catalog(spark: SparkSession, sf_dir: str) -> LakeCatalog:
-    """A fresh clicks/purchases/ev_small lake for the catalog-SQL
-    surface queries."""
+def _asof_catalog(spark: SparkSession, sf_dir: str, *tables: str) -> LakeCatalog:
+    """A fresh lake holding the named tables of the catalog-SQL surface
+    queries (``clicks``, ``purchases``, ``ev_small``), built from
+    ``events``; each query builds only the tables it reads."""
     ev = _t(spark, sf_dir, "events")
     cat = _fresh_catalog(spark, "asof")
-    LakeWriter(cat.table("clicks"), pk=["event_id"]).append(
-        ev.filter(F.col("event_type") == "click").select(
-            "event_id", "user_id", "ts"
-        )
-    )
-    LakeWriter(cat.table("purchases"), pk=["user_id", "ts"]).append(
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("purchase_value"))
-    )
-    LakeWriter(cat.table("ev_small"), pk=["event_id"]).append(
-        ev.select("event_id", "user_id", "event_type", "value")
-    )
+    frames = {  # table → (pk, rows); a frame costs no job until appended
+        "clicks": (
+            ["event_id"],
+            ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts"),
+        ),
+        "purchases": (
+            ["user_id", "ts"],
+            ev.filter(F.col("event_type") == "purchase")
+            .groupBy("user_id", "ts")
+            .agg(F.max("value").alias("purchase_value")),
+        ),
+        "ev_small": (["event_id"], ev.select("event_id", "user_id", "event_type", "value")),
+    }
+    for t in tables:
+        pk, rows = frames[t]
+        LakeWriter(cat.table(t), pk=pk).append(rows)
     return cat
 
 
@@ -939,7 +943,7 @@ def sql_asof_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The oracle's FROM/ON/GROUP BY text runs verbatim in both engines;
     only the CTE heads differ (the Spark side reads the pre-built lake
     tables the CTEs describe)."""
-    return _asof_catalog(spark, sf_dir).sql(
+    return _asof_catalog(spark, sf_dir, "clicks", "purchases").sql(
         """
         SELECT c.user_id, count(*) AS n_attributed,
                ROUND(sum(p.purchase_value), 6) AS sum_purchase
@@ -971,7 +975,7 @@ def sql_asof_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(lake/table.py _rewrite_duckdb_functions).",
 )
 def sql_duckdb_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _asof_catalog(spark, sf_dir).sql(
+    return _asof_catalog(spark, sf_dir, "clicks").sql(
         """
         SELECT strftime(ts, '%a') AS dow, count(*) AS n_clicks,
                CAST(sum(array_length(string_split(strftime(ts, '%Y-%m-%d'), '-')))
@@ -1003,7 +1007,7 @@ PIVOT (count(*) AS n, sum(value) AS sv
     "DuckDB's 0.",
 )
 def sql_std_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _asof_catalog(spark, sf_dir).sql(_STD_PIVOT_BODY % "ev_small")
+    return _asof_catalog(spark, sf_dir, "ev_small").sql(_STD_PIVOT_BODY % "ev_small")
 
 
 @register(
@@ -1022,7 +1026,7 @@ def sql_std_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     "zero-shuffle Expand on the Spark side.",
 )
 def sql_std_unpivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _asof_catalog(spark, sf_dir).sql(
+    return _asof_catalog(spark, sf_dir, "clicks").sql(
         """
         WITH base AS (
           SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
@@ -1059,7 +1063,7 @@ def sql_std_unpivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sql_attach_cross_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _t(spark, sf_dir, "events")
-    cat = _asof_catalog(spark, sf_dir)
+    cat = _asof_catalog(spark, sf_dir, "clicks")
     side_dir = _scratch_dir("att")
     side = LakeCatalog(spark, side_dir)
     LakeWriter(side.table("user_totals"), pk=["user_id"]).append(
@@ -1095,7 +1099,7 @@ def sql_attach_cross_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(lake/table.py _expand_macros).",
 )
 def sql_macro_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cat = _asof_catalog(spark, sf_dir)
+    cat = _asof_catalog(spark, sf_dir, "clicks")
     cat.sql(
         "CREATE OR REPLACE MACRO hour_bucket(ts0) AS "
         "CAST(strftime(ts0, '%H') AS INT)"
@@ -1124,7 +1128,7 @@ def sql_macro_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     "_rewrite_distinct_on).",
 )
 def sql_distinct_on_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _asof_catalog(spark, sf_dir).sql(
+    return _asof_catalog(spark, sf_dir, "clicks").sql(
         """
         SELECT DISTINCT ON (user_id) user_id, event_id
         FROM clicks

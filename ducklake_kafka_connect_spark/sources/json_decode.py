@@ -24,11 +24,10 @@ from __future__ import annotations
 import json
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ..functions.timestamps import parse_iso_timestamp
+from ..functions.timestamps import ISO8601_SPARK_PATTERN
 from ..schema.inference import infer_record_schema
 from ..schema.merge import SchemaUnificationError, unify_schemas
 
@@ -97,6 +96,35 @@ def _parse_schema(schema: T.StructType) -> T.StructType:
     return T.StructType(fields)
 
 
+def sql_string(s: str) -> str:
+    """``s`` as Spark SQL text that evaluates to ``s`` under either
+    setting of ``spark.sql.parser.escapedStringLiterals``: raw literals
+    (no escape processing), joined by ``chr(39)`` around each quote."""
+    parts = s.split("'")
+    if len(parts) == 1:
+        return f"r'{s}'"
+    return "concat(" + ", chr(39), ".join(f"r'{p}'" for p in parts) + ")"
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as a backquoted SQL identifier, resolved literally:
+    schemaless field names may hold dots, quotes or backquotes."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+_ISO_MATCH = sql_string(ISO8601_SPARK_PATTERN)
+_COMPACT_OFFSET = sql_string(r"([+-]\d{2})(\d{2})$")
+
+
+def _iso_timestamp_sql(expr: str) -> str:
+    """SQL twin of ``functions.timestamps.parse_iso_timestamp``."""
+    return (
+        f"CASE WHEN regexp_like(trim({expr}), {_ISO_MATCH}) "
+        f"THEN try_to_timestamp(regexp_replace(trim({expr}), "
+        f"{_COMPACT_OFFSET}, '$1:$2')) END"
+    )
+
+
 def decode_json(
     df: DataFrame,
     value_col: str = "value",
@@ -111,42 +139,51 @@ def decode_json(
     through, e.g. kafka metadata) and ``_corrupt`` holding the raw value
     for rows that failed to parse (DLQ candidates). ``conflicts_out``
     (a dict) receives per-field conflict info from inference, for DLQ
-    error enrichment."""
+    error enrichment.
+
+    Both projections are SQL text (one Py4J call each): a Column per
+    field costs several round trips plus call-site capture. The parsed
+    struct sits in its own projection so ``from_json`` runs once per
+    row however many fields read it."""
     if schema is None:
         schema, _ = infer_batch_schema(df, value_col, sample_size, conflicts_out)
-    parse_schema = _parse_schema(schema)
-    parsed = df.withColumn(
-        "__rec",
-        F.from_json(
-            F.col(value_col).cast("string"),
-            parse_schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
-        ),
+    # the schema's JSON form as a raw literal; a quote inside a field
+    # name travels as the JSON escape \u0027
+    parse_schema = _parse_schema(schema).json().replace("'", "\\u0027")
+    keep = [quote_ident(k) for k in keep_cols or []]
+    parsed = df.selectExpr(
+        *keep,
+        f"CAST({quote_ident(value_col)} AS STRING) AS __raw",
+        f"from_json(CAST({quote_ident(value_col)} AS STRING), r'{parse_schema}', "
+        f"map('mode', 'PERMISSIVE', 'columnNameOfCorruptRecord', "
+        f"'{CORRUPT_COL}')) AS __rec",
     )
-    out_cols: list[Column] = []
-    rec = F.col("__rec")
+    out = list(keep)
     for f in schema.fields:
-        # getField resolves the name LITERALLY — schemaless JSON keys may
-        # contain dots/colons that a "__rec.name" path string would
-        # misparse as nested traversal (B11 identifier handling)
-        c = rec.getField(f.name)
+        c = f"__rec.{quote_ident(f.name)}"
         if isinstance(f.dataType, T.TimestampType):
-            c = parse_iso_timestamp(c)
-        out_cols.append(c.alias(f.name))
+            c = _iso_timestamp_sql(c)
+        out.append(f"{c} AS {quote_ident(f.name)}")
     # PERMISSIVE from_json accepts an empty/whitespace-only payload as an
     # all-null row with no corrupt marker; the reference's JsonConverter
     # rejects it → DLQ. NULL payloads stay untouched (Kafka tombstones
     # are not corrupt records).
-    raw = F.col(value_col).cast("string")
-    out_cols.append(
-        F.coalesce(
-            rec.getField(CORRUPT_COL),
-            F.when(F.trim(raw) == "", F.coalesce(raw, F.lit(""))),
-        ).alias(CORRUPT_COL)
+    out.append(
+        f"coalesce(__rec.{CORRUPT_COL}, "
+        f"CASE WHEN trim(__raw) = '' THEN __raw END) AS {CORRUPT_COL}"
     )
-    for k in keep_cols or []:
-        out_cols.insert(0, F.col(k))
-    return parsed.select(*out_cols)
+    return parsed.selectExpr(*out)
+
+
+def dlq_rows(rows: DataFrame, error_note: str | None = None) -> DataFrame:
+    """DLQ rows for ``rows``' ``_corrupt`` payloads: the raw value, the
+    error note (generic unless the caller passes the enriched
+    schema-conflict description) and the landing time."""
+    return rows.selectExpr(
+        f"{CORRUPT_COL} AS raw_value",
+        f"{sql_string(error_note or 'json_parse_or_schema_conflict')} AS error",
+        "current_timestamp() AS _dlq_at",
+    )
 
 
 def split_dlq(
@@ -154,18 +191,9 @@ def split_dlq(
     value_cols: list[str] | None = None,
     error_note: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Good rows (corrupt col dropped) vs DLQ rows (raw + error note).
-    ``error_note`` overrides the generic note — callers pass the
-    enriched schema-conflict description (field, types, sample values)."""
-    good = decoded.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    bad = (
-        decoded.filter(F.col(CORRUPT_COL).isNotNull())
-        .select(
-            F.col(CORRUPT_COL).alias("raw_value"),
-            F.lit(error_note or "json_parse_or_schema_conflict").alias("error"),
-            F.current_timestamp().alias("_dlq_at"),
-        )
-    )
+    """Good rows (corrupt col dropped) vs DLQ rows (:func:`dlq_rows`)."""
+    good = decoded.where(f"{CORRUPT_COL} IS NULL").drop(CORRUPT_COL)
+    bad = dlq_rows(decoded.where(f"{CORRUPT_COL} IS NOT NULL"), error_note)
     return good, bad
 
 

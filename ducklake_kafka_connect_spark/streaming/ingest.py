@@ -25,21 +25,35 @@ expressions (B12), auto-create flag default false (C8).
 Small micro-batches take one Spark job. ``process_batch`` persists the
 batch and probes it with ``limit(LOCAL_BATCH_MAX_ROWS + 1).toArrow()``
 (the job that fills the cache). A batch that fits is rebuilt on the
-driver as an Arrow-backed LocalRelation, and the unchanged decode → DLQ
-split → write code runs on it: Spark's ``ConvertToLocalRelation`` folds
-``from_json``, the split and the topic filters into local data, so the
-inference sample, the DLQ emptiness check and the Arrow merge's batch
-eval read driver-side rows with no job. Folded frames are not persisted
-(a persist would stop the folding) and skip the dedup window when their
-keys are already unique. The probe is bounded in bytes as well
-as rows: it ships a row's values only when the row is at most
+driver as an Arrow-backed LocalRelation and the decode runs on it:
+Spark's ``ConvertToLocalRelation`` folds ``from_json`` and the topic
+filters into local data, so the inference sample reads driver-side rows
+with no job. The probe is bounded in bytes as well as rows: it ships a
+row's values only when the row is at most
 ``ARROW_MERGE_MAX_BYTES // (LOCAL_BATCH_MAX_ROWS + 1)`` bytes (nulls
 otherwise), so it never moves more than about the Arrow merge's own
-byte cap to the driver. Counters: ``ingest.localBatch`` per batch on
-the local path, ``ingest.localSkip.<reason>`` per batch that keeps the
-distributed path (``rows`` over the gate, ``bytes`` a row over the
-per-row byte cap, ``schema`` the Arrow round trip cannot carry,
-``not_local`` a rebuild that did not plan as a LocalRelation).
+byte cap to the driver.
+
+Each decoded part is evaluated at most once. A folded decode is read as
+a pyarrow table with no job. A decode for a table that takes the
+driver-side Arrow merge (it exists, has a PK, is copy-on-write and
+``LakeWriter.arrow_merge_skip`` admits its manifest) is collected by one
+``toArrow`` job: the rows the merge would collect anyway, under the
+same byte bound. On the evaluated rows the DLQ split, the
+last-wins-by-offset dedup and the DLQ rows are computed on the driver;
+the good rows reach the writer as an Arrow-backed LocalRelation that it
+reads with no job, and the DLQ is appended only when it holds rows. A
+decode that did not fold and whose table does not take the Arrow merge
+(table creation, no PK, merge-on-read, a table or batch over the Arrow
+merge's cap) splits on Spark over a persisted decode.
+
+Counters: ``ingest.localBatch`` per batch on the local path,
+``ingest.localSkip.<reason>`` per batch that keeps the distributed path
+(``rows`` over the gate, ``bytes`` a row over the per-row byte cap,
+``schema`` the Arrow round trip cannot carry, ``not_local`` a rebuild
+that did not plan as a LocalRelation), ``ingest.arrowSkip.<reason>``
+per decoded part of an Arrow-merge table that splits on Spark
+(``schema``, ``size_cap`` or ``not_local``).
 """
 
 from __future__ import annotations
@@ -48,6 +62,7 @@ import json
 import re
 from dataclasses import dataclass, field
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
@@ -57,11 +72,17 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..lake import LakeCatalog, LakeWriter
 from ..lake.inline import DEFAULT_INLINING_ROW_LIMIT, parse_inlining_limit  # noqa: F401  (re-exported)
-from ..lake.relation_cache import is_local_plan, local_plan_arrow, local_rows_df
-from ..lake.writer import ARROW_MERGE_MAX_BYTES, _dedup_last_wins
+from ..lake.relation_cache import is_local_plan, local_plan_arrow
+from ..lake.writer import (
+    ARROW_MERGE_MAX_BYTES,
+    _dedup_last_wins,
+    _eval_arrow,
+    arrow_merge_over_cap,
+    known_size,
+)
 from ..metrics import REGISTRY
 from ..schema.reconcile import ReconcileError
-from ..sources.json_decode import CORRUPT_COL, decode_json, split_dlq
+from ..sources.json_decode import CORRUPT_COL, decode_json, dlq_rows, quote_ident, split_dlq
 
 _TOPIC_RE = re.compile(r"^[A-Za-z0-9._-]+$")
 
@@ -192,10 +213,6 @@ def _local_skip(reason: str) -> None:
     REGISTRY.inc(f"ingest.localSkip.{reason}")
 
 
-def _quote(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _has_map(dt: T.DataType) -> bool:
     if isinstance(dt, T.ArrayType):
         return _has_map(dt.elementType)
@@ -218,7 +235,7 @@ def _value_bytes(expr: str, dt: T.DataType, depth: int = 0) -> str:
         return f"coalesce(aggregate({expr}, 0L, ({acc}, {x}) -> {acc} + {inner}), 0L)"
     if isinstance(dt, T.StructType):
         return " + ".join(
-            [_value_bytes(f"{expr}.{_quote(f.name)}", f.dataType, depth) for f in dt.fields]
+            [_value_bytes(f"{expr}.{quote_ident(f.name)}", f.dataType, depth) for f in dt.fields]
         ) or "0"
     return "8"
 
@@ -234,23 +251,17 @@ def _local_batch(batch: DataFrame):
     and a flag instead of its values, so the probe moves at most about
     ARROW_MERGE_MAX_BYTES (the most the Arrow merge takes) whatever the
     record size."""
-    try:
-        to_arrow_schema(batch.schema)
-    except TypeError:  # a type the Arrow round trip cannot carry
-        _local_skip("schema")
-        return None
-    if _has_map(batch.schema):
-        # createDataFrame from Arrow reads a null map<_, array<_>> as {}
+    if not _arrow_carries(batch.schema):
         _local_skip("schema")
         return None
     row_cap = ARROW_MERGE_MAX_BYTES // (LOCAL_BATCH_MAX_ROWS + 1)
     size = " + ".join(
-        _value_bytes(_quote(f.name), f.dataType) for f in batch.schema.fields
+        _value_bytes(quote_ident(f.name), f.dataType) for f in batch.schema.fields
     )
     over = f"({size}) > {row_cap}"
     probe = batch.selectExpr(
         over,
-        *[f"if({over}, null, {_quote(c)}) AS {_quote(c)}" for c in batch.columns],
+        *[f"if({over}, null, {quote_ident(c)}) AS {quote_ident(c)}" for c in batch.columns],
     )
     rows = probe.limit(LOCAL_BATCH_MAX_ROWS + 1).toArrow()
     if rows.num_rows > LOCAL_BATCH_MAX_ROWS:
@@ -270,32 +281,156 @@ def _local_batch(batch: DataFrame):
             ]
         ),
     )
-    local = batch.sparkSession.createDataFrame(rows, schema=batch.schema)
-    # the Python frame echoes the requested schema; ask the JVM
-    if T.StructType.fromJson(json.loads(local._jdf.schema().json())) != batch.schema:
-        _local_skip("schema")
-        return None
-    if not is_local_plan(local):
-        _local_skip("not_local")
+    local, skip = _arrow_frame(batch.sparkSession, rows, batch.schema)
+    if local is None:
+        _local_skip(skip)
         return None
     REGISTRY.inc("ingest.localBatch")
     return local, rows
 
 
-def _unique_keys(df: DataFrame, id_columns: list[str]) -> bool:
-    """True when folded ``df`` holds no duplicate ``id_columns`` key —
-    null keys count as equal, as in the dedup window's grouping. Read
-    from driver-side rows, no Spark job. Float keys (NaN and -0.0
-    group differently in Arrow and Spark) and array keys (Arrow cannot
-    group them) always take the window."""
-    keys = df.select(*id_columns)
-    window_only = (T.FloatType, T.DoubleType, T.ArrayType)
-    if any(isinstance(f.dataType, window_only) for f in keys.schema):
+def _arrow_carries(schema: T.StructType) -> bool:
+    """False for a schema the Arrow round trip cannot carry: a type
+    with no Arrow mapping, or a map (createDataFrame from Arrow reads a
+    null map<_, array<_>> as {})."""
+    try:
+        to_arrow_schema(schema)
+    except TypeError:
         return False
-    tbl = local_plan_arrow(keys)
-    return tbl is not None and (
-        tbl.group_by(id_columns).aggregate([]).num_rows == tbl.num_rows
+    return not _has_map(schema)
+
+
+def _arrow_frame(spark: SparkSession, tbl: pa.Table, schema: T.StructType):
+    """→ (Arrow-backed LocalRelation of ``tbl`` under ``schema``, None),
+    or (None, reason) when the rebuild is not that: ``schema`` (the JVM
+    reads back another schema) or ``not_local``."""
+    local = spark.createDataFrame(tbl, schema=schema)
+    # the Python frame echoes the requested schema; ask the JVM
+    if T.StructType.fromJson(json.loads(local._jdf.schema().json())) != schema:
+        return None, "schema"
+    if not is_local_plan(local):
+        return None, "not_local"
+    return local, None
+
+
+def _arrow_skip(reason: str) -> None:
+    REGISTRY.inc(f"ingest.arrowSkip.{reason}")
+
+
+def _decoded_arrow(decoded: DataFrame, folded: bool, manifest):
+    """``decoded`` evaluated once on the driver as a pyarrow Table, or
+    None. A folded decode costs no job. ``manifest`` is given when the
+    table takes the Arrow merge, which would collect these rows anyway:
+    then a decode that did not fold is collected by one job, bounded
+    like the merge's own collect (:func:`arrow_merge_over_cap`, on the
+    optimizer's estimate before the job and on the rows after), and a
+    folded one whose types the zero-job read cannot map by one job too.
+    A decline there is counted as ``ingest.arrowSkip.<reason>``."""
+    if manifest is None:
+        if folded and _arrow_carries(decoded.schema):
+            return local_plan_arrow(decoded)
+        return None
+    if not _arrow_carries(decoded.schema):
+        return _arrow_skip("schema")
+    if not folded and arrow_merge_over_cap(manifest, known_size(decoded)):
+        return _arrow_skip("size_cap")
+    tbl = _eval_arrow(decoded, "ingest.arrowEval")
+    if not folded and arrow_merge_over_cap(manifest, tbl.nbytes):
+        return _arrow_skip("size_cap")
+    return tbl
+
+
+def _arrow_groups(dt: T.DataType) -> bool:
+    """True for key types Arrow groups as the dedup window does. Float
+    keys (NaN and -0.0 group differently in Arrow and Spark), collated
+    strings, and arrays, structs and maps (Arrow cannot group them)
+    keep the window."""
+    return dt == T.StringType() or isinstance(
+        dt,
+        (
+            T.IntegralType, T.BinaryType, T.BooleanType, T.DateType,
+            T.TimestampType, T.TimestampNTZType, T.DecimalType,
+        ),
     )
+
+
+def _last_wins(tbl: pa.Table, keys: list[str], order_col: str) -> pa.Table:
+    """:func:`_dedup_last_wins` on the driver: per ``keys`` value (NULL
+    keys group together, as in the window) the row with the largest
+    ``order_col`` (NULL lowest; a tie goes to the later row), in
+    arrival order."""
+    order = pc.sort_indices(
+        tbl, sort_keys=[(order_col, "ascending")], null_placement="at_start"
+    )
+    ranked = tbl.select(keys).take(order)
+    ranked = ranked.append_column("__pos", pa.array(np.arange(tbl.num_rows)))
+    wins = ranked.group_by(keys).aggregate([("__pos", "max")])
+    if wins.num_rows == tbl.num_rows:
+        return tbl
+    rows = order.to_numpy()[wins.column("__pos_max").to_numpy()]
+    return tbl.take(pa.array(np.sort(rows)))
+
+
+def _split_arrow(spark, tbl: pa.Table, schema: T.StructType, note, id_columns):
+    """The DLQ split and the offset dedup on ``tbl``, the decoded part
+    on the driver → (good, bad) as Arrow-backed frames, ``bad`` None
+    when no row failed to decode; or None when the good rows' round
+    trip is not a LocalRelation (counted as ``ingest.arrowSkip.<reason>``;
+    the caller splits on Spark)."""
+    bad = None
+    if CORRUPT_COL in tbl.column_names:
+        failed = pc.is_valid(tbl.column(CORRUPT_COL))
+        if pc.any(failed).as_py():
+            rows, skip = _arrow_frame(
+                spark,
+                tbl.filter(failed).select([CORRUPT_COL]),
+                T.StructType([schema[CORRUPT_COL]]),
+            )
+            if rows is None:
+                return _arrow_skip(skip)
+            bad = dlq_rows(rows, note)
+        tbl = tbl.filter(pc.invert(failed)).drop_columns([CORRUPT_COL])
+        schema = T.StructType([f for f in schema.fields if f.name != CORRUPT_COL])
+    window = False
+    if "offset" in tbl.column_names and id_columns:
+        names = set(schema.fieldNames())
+        if all(k in names and _arrow_groups(schema[k].dataType) for k in id_columns):
+            tbl = _last_wins(tbl, id_columns, "offset")
+        else:
+            window = True
+    good, skip = _arrow_frame(spark, tbl, schema)
+    if good is None:
+        return _arrow_skip(skip)
+    if window:
+        good = _dedup_last_wins(good, id_columns, "offset")
+    return good, bad
+
+
+def _split_spark(decoded: DataFrame, note, id_columns, folded: bool, cached: list):
+    """The DLQ split and the offset dedup as Spark plans → (good, bad),
+    ``bad`` None for a format that routes no row to the DLQ. A decode
+    that did not fold is persisted (appended to ``cached``, which the
+    caller releases): the split reads it twice, and the good and bad
+    sides feed the write, the constraint split and the DLQ append."""
+    if not folded:
+        decoded = decoded.persist()
+        cached.append(decoded)
+    good, bad = (
+        split_dlq(decoded, error_note=note)
+        if CORRUPT_COL in decoded.columns
+        else (decoded, None)
+    )
+    if "offset" in good.columns and id_columns:
+        # offset orders last-write-wins dedup within the batch (SURVEY
+        # risk #2); it is a transport column, dropped after routing
+        good = _dedup_last_wins(good, id_columns, "offset")
+    if not folded:
+        good = good.persist()
+        cached.append(good)
+        if bad is not None:
+            bad = bad.persist()
+            cached.append(bad)
+    return good, bad
 
 
 class IngestPipeline:
@@ -319,12 +454,13 @@ class IngestPipeline:
 
         Small batches run as one Spark job: a bounded probe collects at
         most ``LOCAL_BATCH_MAX_ROWS + 1`` rows, each capped in bytes, and
-        a batch that fits is rebuilt as a LocalRelation. Decode, DLQ
-        split, topic filters and the Arrow merge's batch eval then fold
-        into driver-side local data (``ingest.localBatch``). A batch over
-        the gate, a row over the byte cap, a schema the Arrow round trip
-        changes, or a rebuild that is not a LocalRelation keep the
-        distributed path (``ingest.localSkip.<reason>``)."""
+        a batch that fits is rebuilt as a LocalRelation. Decode and topic
+        filters then fold into driver-side local data
+        (``ingest.localBatch``). A batch over the gate, a row over the
+        byte cap, a schema the Arrow round trip changes, or a rebuild
+        that is not a LocalRelation keep the distributed path
+        (``ingest.localSkip.<reason>``). Either way each decoded part is
+        evaluated at most once (see the module docstring)."""
         # r14 (guide §5 cache only what's reused): the incoming frame is
         # consumed by the probe, the topic scan AND each topic slice's
         # decode — an expensive source (a decoder/synthesizer upstream)
@@ -372,41 +508,6 @@ class IngestPipeline:
         self, parts: list, table: str, epoch_id: int = -1
     ) -> None:
         spec = self.config.spec_for(table)
-        goods: list[DataFrame] = []
-        bads: list[DataFrame] = []
-        cached: list[DataFrame] = []
-        for part in parts:
-            keep = [c for c in ("offset",) if c in part.columns]
-            # a decode that folded to local data re-evaluates driver-
-            # side for free; a persist would swap in an InMemoryRelation
-            # and stop every later fold
-            good, bad, folded = self._decode(part, spec, keep, cached=cached)
-            order_col = "offset" if "offset" in good.columns else None
-            if (
-                order_col
-                and spec.id_columns
-                and not (folded and _unique_keys(good, spec.id_columns))
-            ):
-                # offset orders last-write-wins dedup within the batch
-                # (SURVEY risk #2); it is a transport column — dedup
-                # here, then drop it so it never enters the table schema.
-                good = _dedup_last_wins(good, spec.id_columns, order_col)
-            if not folded:
-                # multi-consumer point: the decoded frame feeds the MERGE
-                # planning aggregate, the write, the constraint split,
-                # and the DLQ append — each is its own Spark job, and
-                # without a persist every one re-runs the full decode.
-                # Micro-batches are threshold-bounded (E1), so
-                # MEMORY_AND_DISK is safe; released in the finally below.
-                good = good.persist()
-                bad = bad.persist()
-                cached += [good, bad]
-            if spec.check_constraints:
-                good, bad = self._route_constraint_violations(good, bad, spec)
-            if spec.transform is not None:
-                good = spec.transform(good)
-            goods.append(good.drop(*keep) if keep else good)
-            bads.append(bad)
         writer = LakeWriter(
             self.catalog.table(table),
             pk=spec.id_columns,
@@ -417,6 +518,44 @@ class IngestPipeline:
             max_retry_count=self.config.max_retry_count,
             merge_mode=spec.merge_mode,
         )
+        # the write's one manifest resolve: it picks the split below and
+        # the writer plans against it
+        manifest = writer.table.manifest() if writer.table.exists() else None
+        arrow_merge = (
+            bool(spec.id_columns)
+            and manifest is not None
+            and writer.arrow_merge_skip(manifest) is None
+        )
+        goods: list[DataFrame] = []
+        bads: list = []  # per part: its DLQ frame, or None
+        cached: list[DataFrame] = []
+        dlq_rows_known = False  # some part's DLQ frame surely holds rows
+        for part in parts:
+            keep = [c for c in ("offset",) if c in part.columns]
+            decoded, note = self._decode(part, spec, keep)
+            # a decode that folded to local data evaluates driver-side
+            # for free; one for a table taking the Arrow merge is
+            # evaluated once here, where the merge would collect it
+            folded = is_local_plan(decoded)
+            tbl = _decoded_arrow(decoded, folded, manifest if arrow_merge else None)
+            split = (
+                _split_arrow(
+                    decoded.sparkSession, tbl, decoded.schema, note, spec.id_columns
+                )
+                if tbl is not None
+                else None
+            )
+            if split is None:
+                good, bad = _split_spark(decoded, note, spec.id_columns, folded, cached)
+            else:
+                good, bad = split
+                dlq_rows_known |= bad is not None
+            if spec.check_constraints:
+                good, bad = self._route_constraint_violations(good, bad, spec)
+            if spec.transform is not None:
+                good = spec.transform(good)
+            goods.append(good.drop(*keep) if keep else good)
+            bads.append(bad)
         # idempotent epoch commit (E8 exactly-once upgrade): a replayed
         # foreachBatch epoch whose commit already landed is skipped at
         # the manifest-marker check — APPEND tables stop duplicating on
@@ -424,7 +563,7 @@ class IngestPipeline:
         txn = (f"ingest:{table}", epoch_id) if epoch_id >= 0 else None
         try:
             try:
-                writer.write_many(goods, txn=txn)
+                writer.write_many(goods, txn=txn, manifest=manifest)
             except ReconcileError:
                 # group write hit a schema conflict — replay batch-at-a-
                 # time so only the offending slices DLQ, not the whole
@@ -443,20 +582,23 @@ class IngestPipeline:
                         )
 
                         note = enriched_reconcile_message(e, good)
-                        bads[i] = bads[i].unionByName(
-                            good.select(
-                                F.to_json(F.struct(*good.columns)).alias(
-                                    "raw_value"
-                                ),
-                                F.lit(f"reconcile_error: {note}").alias("error"),
-                                F.current_timestamp().alias("_dlq_at"),
-                            ),
-                            allowMissingColumns=True,
+                        rejected = good.select(
+                            F.to_json(F.struct(*good.columns)).alias("raw_value"),
+                            F.lit(f"reconcile_error: {note}").alias("error"),
+                            F.current_timestamp().alias("_dlq_at"),
                         )
-            bad = bads[0]
-            for b in bads[1:]:
+                        bads[i] = (
+                            rejected
+                            if bads[i] is None
+                            else bads[i].unionByName(rejected, allowMissingColumns=True)
+                        )
+            present = [b for b in bads if b is not None]
+            if not present:
+                return
+            bad = present[0]
+            for b in present[1:]:
                 bad = bad.unionByName(b, allowMissingColumns=True)
-            if bad.isEmpty():
+            if not dlq_rows_known and bad.isEmpty():
                 return
             dlq_writer = LakeWriter(
                 self.catalog.table(f"{table}{self.config.dlq_suffix}"),
@@ -479,7 +621,8 @@ class IngestPipeline:
         names; NULL/UNKNOWN passes (standard SQL CHECK / Delta Lake
         semantics — only rows that provably break the constraint are
         rejected, matching LakeWriter._enforce_constraints). One
-        codegen'd filter pass each way — no extra job."""
+        codegen'd filter pass each way — no extra job. ``bad`` may be
+        None (no DLQ rows yet)."""
         fails = {
             name: ~F.coalesce(F.expr(pred), F.lit(True))
             for name, pred in spec.check_constraints.items()
@@ -497,37 +640,16 @@ class IngestPipeline:
         )
         return (
             good.filter(~any_fail),
-            bad.unionByName(viol, allowMissingColumns=True),
+            viol if bad is None else bad.unionByName(viol, allowMissingColumns=True),
         )
 
-    def _decode(
-        self,
-        part: DataFrame,
-        spec: TableSpec,
-        keep: list[str],
-        cached: "list | None" = None,
-    ):
+    def _decode(self, part: DataFrame, spec: TableSpec, keep: list[str]):
         """Per-table format dispatch (the reference's value.converter
         choice: JsonConverter / AvroConverter / ArrowIpcConverter, plus
-        the mixed per-batch sniff of A7) → (good, bad, folded), where
-        ``folded`` says the decoded frame planned as a LocalRelation.
-
-        ``cached`` (r14, guide §2.4): the good/bad DLQ split consumes
-        the SAME decoded frame twice, and each side's own persist used
-        to re-run the whole decode to materialize. Persisting the
-        pre-split decoded frame (appended to ``cached`` so the caller's
-        finally releases it) makes both sides cache reads — one decode
-        pass per batch part instead of two. A decoded frame that folded
-        to a LocalRelation is left unpersisted: both sides re-evaluate
-        it driver-side with no job."""
-
-        def _split(decoded, **kw):
-            folded = is_local_plan(decoded)
-            if cached is not None and not folded:
-                decoded = decoded.persist()
-                cached.append(decoded)
-            return (*split_dlq(decoded, **kw), folded)
-
+        the mixed per-batch sniff of A7) → (decoded, note): the decoded
+        frame, whose ``_corrupt`` column marks the rows bound for the DLQ
+        (absent when the format routes no row there), and the DLQ error
+        note for them (None: the generic one)."""
         if spec.format == "json":
             from ..sources.json_decode import conflict_note
 
@@ -538,7 +660,7 @@ class IngestPipeline:
             decoded = decode_json(
                 part, value_col="value", keep_cols=keep, conflicts_out=conflicts
             )
-            return _split(decoded, error_note=conflict_note(conflicts))
+            return decoded, conflict_note(conflicts)
         if spec.format == "avro_registry":
             from ..sources.schema_registry import decode_avro_registry
 
@@ -546,64 +668,50 @@ class IngestPipeline:
                 raise ValueError(
                     "format='avro_registry' requires IngestPipeline(registry=...)"
                 )
-            decoded = decode_avro_registry(
+            return decode_avro_registry(
                 part, self.registry, value_col="value", keep_cols=keep
-            )
-            return _split(decoded)
+            ), None
         if spec.format == "avro":
             # auto-selects the JVM from_avro fast path when the
             # spark-avro jar is present; pure-Python fallback otherwise
             from ..sources.avro_decode import decode_avro_auto
 
-            decoded = decode_avro_auto(
+            return decode_avro_auto(
                 part,
                 spec.avro_schema,
                 confluent_framing=spec.confluent_framing,
                 keep_cols=keep,
                 with_corrupt_col=True,
-            )
-            return _split(decoded)
+            ), None
         if spec.format == "csv":
             from ..sources.csv_decode import decode_csv
 
-            decoded = decode_csv(
+            return decode_csv(
                 part,
                 spec.csv_schema,
                 keep_cols=keep,
                 options=spec.csv_options,
-            )
-            return _split(decoded)
+            ), None
         if spec.format == "proto":
             from ..sources.proto_lite import decode_proto_lite
 
-            decoded = decode_proto_lite(
+            return decode_proto_lite(
                 part,
                 spec.proto_schema,
                 keep_cols=keep,
                 with_corrupt_col=True,
                 confluent_framing=spec.confluent_framing,
-            )
-            return _split(decoded)
+            ), None
         if spec.format == "arrow":
             from ..sources.arrow_ipc import decode_arrow_ipc
 
             # IPC payloads explode to many rows; transport columns do
             # not map 1:1 → no offset carry, no per-row DLQ (a corrupt
             # stream fails the batch, like the reference's converter)
-            good = decode_arrow_ipc(part.filter(F.col("value").isNotNull()), "value")
-            bad = local_rows_df(good.sparkSession, 
-                [], "raw_value string, error string, _dlq_at timestamp"
-            )
-            return good, bad, False
+            return decode_arrow_ipc(part.filter(F.col("value").isNotNull()), "value"), None
         from ..sources.mixed_format import decode_mixed
 
-        decoded = decode_mixed(part, value_col="value")
-        if CORRUPT_COL in decoded.columns:
-            return _split(decoded)
-        bad = local_rows_df(decoded.sparkSession, 
-            [], "raw_value string, error string, _dlq_at timestamp"
-        )
-        return decoded, bad, False
+        return decode_mixed(part, value_col="value"), None
 
     # -- DLQ reprocessing (operational replay loop) --
 

@@ -577,3 +577,46 @@ def test_arrow_append_error_is_a_named_fallback(spark, lake, monkeypatch):
     w.append(spark.range(10, 15).select(F.col("id"), F.lit("b").alias("name")))
     assert _append_fallbacks("error") == (total0 + 1, named0 + 1)
     assert cat.table("t").read().count() == 15
+
+
+def test_estimate_over_cap_declines_before_any_collect(spark, lake, monkeypatch):
+    """A batch whose known size estimate, with the table's bytes, is
+    over ARROW_MERGE_MAX_BYTES is declined before any job: no toArrow
+    runs, ``merge.arrowFallback.size_cap`` counts it, and its rows land
+    through the pruning executor."""
+    from ducklake_kafka_connect_spark.metrics import REGISTRY
+
+    t = LakeCatalog(spark, lake).table("t")
+    w = LakeWriter(t, pk=["id"])
+    w.write(_base(spark, 10))
+    batch = spark.range(5, 105).select(
+        F.col("id"),
+        F.lit("upd").alias("name"),
+        F.timestamp_seconds(1704067200 + F.col("id")).alias("created_at"),
+    )
+    # the optimizer's estimate (a range is sized without a job)
+    est = int(batch._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    assert est < 1 << 60
+    m = t.manifest()
+    table_bytes = sum(int(m.file_stats[f]["__bytes"]) for f in m.all_files())
+    # the table alone still fits: only table + batch is over the cap
+    monkeypatch.setattr(wmod, "ARROW_MERGE_MAX_BYTES", table_bytes + est - 1)
+    collects = []
+    frame_cls = type(batch)  # the concrete class defines toArrow
+    to_arrow = frame_cls.toArrow
+    monkeypatch.setattr(
+        frame_cls, "toArrow", lambda df: collects.append(1) or to_arrow(df)
+    )
+    counters = dict(REGISTRY.counters)
+    plans = getattr(REGISTRY.ops.get("merge.planAgg"), "count", 0)
+    w.write(batch)
+    monkeypatch.undo()
+
+    def delta(name):
+        return REGISTRY.counters.get(name, 0) - counters.get(name, 0)
+
+    assert collects == []
+    assert delta("merge.arrowFallback.size_cap") == 1
+    assert REGISTRY.ops["merge.planAgg"].count == plans + 1
+    got = dict(_rows(t.read(), "id", "name"))
+    assert got == {**{i: f"v{i}" for i in range(5)}, **{i: "upd" for i in range(5, 105)}}

@@ -19,3 +19,16 @@ def test_bucketed_join_has_no_exchange_and_matches_plain(spark):
     got = sorted(tuple(r) for r in joined.select("o_custkey", "cents", "c_mktsegment").collect())
     want = sorted(tuple(r) for r in plain.select("o_custkey", "cents", "c_mktsegment").collect())
     assert got == want and len(got) > 0
+
+
+def test_repeated_build_leaves_no_catalog_table(spark):
+    """Each build writes two bucketed tables through the session
+    catalog; the frames keep working once their entries are dropped, so
+    a second bucketed_colocated_join leaves the table count unchanged."""
+    from ducklake_kafka_connect_spark.plans.quality import bucketed_colocated_join
+
+    first = bucketed_colocated_join(spark, SF).collect()
+    n_tables = len(spark.catalog.listTables())
+    second = bucketed_colocated_join(spark, SF)
+    assert len(spark.catalog.listTables()) == n_tables
+    assert sorted(second.collect()) == sorted(first)

@@ -259,3 +259,39 @@ class TestJsonPrimitiveMatrix:
         good, bad = split_dlq(self._decode(spark, ['{"a": 1}', "   ", "not json"]))
         assert good.count() == 1
         assert bad.count() == 2
+
+
+def test_untrusted_field_names_decode_literally(spark):
+    """JSON keys are untrusted and decode_json/split_dlq put them (and
+    the conflict note quoting them) into SQL text: dots, backquotes,
+    quotes, backslashes, spaces and non-ASCII decode as themselves, a
+    sniffed timestamp under such a name parses, and the DLQ rows keep
+    the raw payloads and the note verbatim."""
+    import datetime
+
+    from ducklake_kafka_connect_spark.sources.json_decode import (
+        conflict_note,
+        decode_json,
+        split_dlq,
+        sql_string,
+    )
+
+    names = ["a.b", "back`tick", "it's", "back\\slash", "with space", "naïve 日本"]
+    good = {n: i for i, n in enumerate(names)}
+    good["it's when"] = "2024-01-02T03:04:05+0100"
+    conflict = json.dumps({"it's": {"x": "\\'"}})
+    truncated = '{"a.b": 1, "it\'s'
+    payloads = [json.dumps(good), conflict, truncated, "  "]
+    df = spark.createDataFrame([(p,) for p in payloads], "value string")
+    conflicts: dict = {}
+    decoded = decode_json(df, value_col="value", conflicts_out=conflicts)
+    note = conflict_note(conflicts)
+    assert "it's" in note
+    ok, bad = split_dlq(decoded, error_note=note)
+    assert ok.columns == names + ["it's when"]
+    [row] = ok.collect()
+    assert list(row) == list(range(len(names))) + [datetime.datetime(2024, 1, 2, 2, 4, 5)]
+    got_bad = sorted((r["raw_value"], r["error"]) for r in bad.collect())
+    assert got_bad == sorted((p, note) for p in (conflict, truncated, "  "))
+    for s in ("it's", "a\\b", "\\u0041", "x''y", "", "'", "line\nbreak"):
+        assert spark.sql(f"SELECT {sql_string(s)} AS s").collect()[0]["s"] == s

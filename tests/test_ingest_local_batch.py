@@ -2,22 +2,27 @@
 most LOCAL_BATCH_MAX_ROWS rows is collected once and decoded, split and
 merged on folded local plans.
 
-Pins (a) one Spark job for a warm single-topic upsert batch; (b) the
-same table and DLQ rows as the distributed path (forced by a gate of 0)
-across malformed/empty/null payloads, in-batch duplicate keys, schema
+Pins (a) one Spark job for a warm single-topic upsert batch, with or
+without an in-batch duplicate key; (b) the same table and DLQ rows as
+the distributed path (forced by a gate of 0), with and without the
+Arrow hand-off of a table taking the Arrow merge, across
+malformed/empty/null payloads, in-batch duplicate keys, schema
 evolution, two topics → two tables, a CHECK constraint plus an SMT, a
 decode that does not fold (proto: persisted, decoded once) and a
 replayed epoch; (c) a batch one row over the gate keeps the distributed
 path and counts ``ingest.localSkip.rows``, and a batch with one record
 over the per-row byte cap keeps it too and counts
-``ingest.localSkip.bytes``."""
+``ingest.localSkip.bytes``; (d) a batch over the gate into an existing
+small PK table is decoded once by ingest and runs no job inside the
+writer."""
 
 import json
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
-from ducklake_kafka_connect_spark.lake import LakeCatalog
+from ducklake_kafka_connect_spark.lake import LakeCatalog, LakeWriter
 from ducklake_kafka_connect_spark.metrics import REGISTRY
 from ducklake_kafka_connect_spark.sources import proto_lite
 from ducklake_kafka_connect_spark.sources.proto_lite import encode_proto, proto_schema
@@ -117,13 +122,24 @@ def test_local_path_matches_distributed_path(spark, tmp_path, monkeypatch):
         return out.mapInPandas(count, out.schema)
 
     monkeypatch.setattr(proto_lite, "decode_proto_lite", counted)
+    decoded_arrow = ingest._decoded_arrow
     first, second = _batches()
     got = {}
-    for mode, gate in (("local", ingest.LOCAL_BATCH_MAX_ROWS), ("spark", 0)):
+    # spark: over the gate, each part of a table taking the Arrow merge
+    # is evaluated once by ingest; spark_only: that hand-off barred too
+    for mode, gate in (
+        ("local", ingest.LOCAL_BATCH_MAX_ROWS), ("spark", 0), ("spark_only", 0)
+    ):
         monkeypatch.setattr(ingest, "LOCAL_BATCH_MAX_ROWS", gate)
+        monkeypatch.setattr(
+            ingest,
+            "_decoded_arrow",
+            (lambda *a: None) if mode == "spark_only" else decoded_arrow,
+        )
         cat = LakeCatalog(spark, str(tmp_path / mode))
         pipe = _pipeline(cat)
         local0 = REGISTRY.counters.get("ingest.localBatch", 0)
+        evals0 = getattr(REGISTRY.ops.get("ingest.arrowEval"), "count", 0)
         decoded0 = decoded_rows.value
         pipe.process_batch(spark.createDataFrame(first, KAFKA), 0)
         # the proto decode does not fold: it stays persisted, one pass
@@ -132,8 +148,11 @@ def test_local_path_matches_distributed_path(spark, tmp_path, monkeypatch):
         pipe.process_batch(spark.createDataFrame(second, KAFKA), 1)  # replay
         took_local = REGISTRY.counters.get("ingest.localBatch", 0) - local0
         assert took_local == (3 if mode == "local" else 0), mode
+        evals = getattr(REGISTRY.ops.get("ingest.arrowEval"), "count", 0) - evals0
+        # the second batch's two parts, in the batch and in its replay
+        assert evals == {"local": 4, "spark": 4, "spark_only": 0}[mode], mode
         got[mode] = _snapshot(cat)
-    assert got["local"] == got["spark"]
+    assert got["local"] == got["spark"] == got["spark_only"]
     events = {r[1]: r for r in got["local"]["events"]}  # (extra, id, name)
     assert events[1] == (1.5, 1, "late")
     # the null payload is not corrupt: it lands as an all-null row
@@ -147,22 +166,86 @@ def _trickle(offsets):
     return [_json("t1", o, {"id": o, "name": f"n{o}"}) for o in offsets]
 
 
-def test_warm_small_upsert_batch_is_one_spark_job(spark, tmp_path):
+def _jobs(sc, monkeypatch, fn):
+    """→ (the Spark jobs ``fn`` runs outside LakeWriter.write_many, the
+    ones it runs inside)."""
+    inside: list = []
+    write_many = LakeWriter.write_many
+
+    def tracked(self, *a, **kw):
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        group = f"writer-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            return write_many(self, *a, **kw)
+        finally:
+            inside.extend(sc.statusTracker().getJobIdsForGroup(group))
+            sc.setJobGroup(outer, outer)
+
+    monkeypatch.setattr(LakeWriter, "write_many", tracked)
+    group = f"ingest-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        monkeypatch.undo()
+    return list(sc.statusTracker().getJobIdsForGroup(group)), inside
+
+
+def test_warm_small_upsert_batch_is_one_spark_job(spark, tmp_path, monkeypatch):
+    """With or without an in-batch duplicate key: the offset dedup runs
+    on the batch's driver-side rows, so no window job comes on top."""
     cat = LakeCatalog(spark, str(tmp_path))
     pipe = _pipeline(cat)
     pipe.process_batch(spark.createDataFrame(_trickle(range(1000)), KAFKA), 0)
     pipe.process_batch(spark.createDataFrame(_trickle(range(900, 1100)), KAFKA), 1)
-    batch = spark.createDataFrame(_trickle(range(1050, 1250)), KAFKA)
-    sc = spark.sparkContext
-    sc.setJobGroup("ingest_local_batch_jobs", "one warm trickle batch")
-    try:
-        pipe.process_batch(batch, 2)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("ingest_local_batch_jobs")
-    assert len(jobs) == 1, jobs
-    assert cat.table("events").row_count() == 1250
+    dup = [_json("t1", 1400, {"id": 1300, "name": "again"})]
+    for epoch, rows in (
+        (2, _trickle(range(1050, 1250))),
+        (3, _trickle(range(1250, 1449)) + dup),
+    ):
+        batch = spark.createDataFrame(rows, KAFKA)
+        jobs, writer_jobs = _jobs(
+            spark.sparkContext, monkeypatch, lambda: pipe.process_batch(batch, epoch)
+        )
+        assert len(jobs) + len(writer_jobs) == 1, (epoch, jobs, writer_jobs)
+    got = dict(cat.table("events").read().select("id", "name").collect())
+    assert len(got) == 1449 and got[1300] == "again" and got[1448] == "n1448"
+
+
+def test_over_gate_batch_is_decoded_once_for_the_arrow_merge(
+    spark, tmp_path, monkeypatch
+):
+    """A batch over the gate into an existing small PK table: ingest
+    evaluates its decode once (the DLQ split, offset dedup and DLQ
+    append read that Arrow table), and the writer folds it with no job.
+    Six jobs in all: the probe, the topic scan (two), the JSON schema
+    inference sample (two) and the decode's one evaluation."""
+    cat = LakeCatalog(spark, str(tmp_path))
+    pipe = _pipeline(cat)
+    pipe.process_batch(spark.createDataFrame(_trickle(range(1000)), KAFKA), 0)
+    n = ingest.LOCAL_BATCH_MAX_ROWS + 1
+    rows = _trickle(range(2000, 2000 + n)) + [
+        _json("t1", 9000, {"id": 2000, "name": "again"}),
+        _json("t1", 9001, '{"id": 9, "na'),
+    ]
+    batch = spark.createDataFrame(rows, KAFKA)
+    before = dict(REGISTRY.counters)
+    jobs, writer_jobs = _jobs(
+        spark.sparkContext, monkeypatch, lambda: pipe.process_batch(batch, 1)
+    )
+    assert REGISTRY.counters.get("ingest.localSkip.rows", 0) == before.get(
+        "ingest.localSkip.rows", 0
+    ) + 1
+    assert writer_jobs == []
+    assert len(jobs) <= 6, jobs
+    got = dict(cat.table("events").read().select("id", "name").collect())
+    assert len(got) == 1000 + n and got[2000] == "again"
+    assert [r["raw_value"] for r in cat.table("events_dlq").read().collect()] == [
+        '{"id": 9, "na'
+    ]
 
 
 @pytest.mark.parametrize("over", [0, 1])
